@@ -44,12 +44,12 @@ def word_ngram_hashes(col: Column | str, n: int = 2) -> Column:
     clamp: a document with fewer than ``n`` tokens yields ONE gram
     covering all its tokens (chained-hash family, seeded 0 — disjoint
     from the n-token family except by collision, exactly as a short
-    gram STRING never equals a full n-gram string). NULL text yields a
-    NULL key (joins/groups never match it), where the string form
-    hashed NULL to the xxhash64 seed — a shared bucket that made every
-    NULL-text pair "similar"; no fixture contains NULL text (verified),
-    so no declared result changes, and the NULL-propagating behavior is
-    the defensible one at corpus scale."""
+    gram STRING never equals a full n-gram string). NULL text yields
+    ``[NULL]``, one NULL key: joins never match it, while a groupBy
+    does bucket NULL keys together. The string form hashed NULL to the
+    xxhash64 seed — a key that joined every NULL-text pair as
+    "similar"; no fixture contains NULL text (verified), so no declared
+    result changes."""
     return _let(
         _let(word_tokens(col), lambda t: F.transform(t, lambda x: F.xxhash64(x))),
         lambda th: F.when(

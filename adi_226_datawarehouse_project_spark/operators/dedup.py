@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import char_ngrams, word_ngram_hashes, word_ngrams, word_tokens
+from ..pin import pin, release
 
 
 def dedup_exact(df: DataFrame, keys: list[str], order_by: list[str] | None = None) -> DataFrame:
@@ -129,25 +130,19 @@ def minhash_near_dup_pairs(
     # The signature frame feeds FOUR plan branches (both band-join
     # sides through `banded`, plus both score re-attaches), and only
     # the map side of its aggregation was deduped by AQE stage reuse —
-    # the 64-column final aggregate re-ran per branch. localCheckpoint
-    # (lazy) materializes it once and truncates the plan to an RDD
-    # scan: measured on the 64× corpus the bench LSH union dropped
-    # 24.7s → 5.9s median (a DataFrame persist() only reached 15.7s —
-    # the in-memory COLUMNAR encode/decode of the 64-element signature
-    # arrays costs more than the row-format checkpoint blocks).
-    # r14's sf0.1 measurement ("persist slower — the barrier
-    # serializes what idle cores overlapped") was a local-mode
-    # artifact; at 64× the cores are busy and sharing wins 4×.
-    # Tradeoff, documented: checkpoint blocks are not fault-tolerant
-    # (executor loss ⇒ job retry from the checkpoint's parent is
-    # impossible — the job fails and the ACTION must be re-run), the
-    # standard localCheckpoint posture this codebase already uses for
-    # near_dup_clusters; and the stored plan hides the signature
-    # subtree from downstream explain/pushdown (nothing pushes into a
-    # whole-corpus signature aggregate anyway).
-    sig = minhash_signatures(
-        df, id_col, text_col, num_hashes, shingle_size, shingle
-    ).localCheckpoint(eager=False)
+    # the 64-column final aggregate re-ran per branch. A lazy
+    # lineage-cutting pin materializes it once and truncates the plan
+    # to an RDD scan: measured on the 64× corpus the bench LSH union
+    # dropped 24.7s → 5.9s median (a DataFrame persist() only reached
+    # 15.7s — the in-memory COLUMNAR encode/decode of the 64-element
+    # signature arrays costs more than the row-format checkpoint
+    # blocks). Fault tolerance follows the ``pin`` policy. The stored
+    # plan hides the signature subtree from downstream explain/pushdown
+    # (nothing pushes into a whole-corpus signature aggregate anyway).
+    sig = pin(
+        minhash_signatures(df, id_col, text_col, num_hashes, shingle_size, shingle),
+        truncate=True,
+    )
     banded = _band_rows(sig, id_col, num_hashes, bands)
     # Candidate pairs as bare (id_a, id_b): the bucket self-join and the
     # dedup shuffle move 16-byte rows, not 64-element signature arrays.
@@ -239,12 +234,11 @@ def simhash_near_dup_pairs(
     by 4-way 16-bit block LSH (a pair within Hamming≤3 of 64 bits must
     agree on at least one of 4 disjoint 16-bit blocks — pigeonhole).
 
-    The fingerprint frame is localCheckpoint-ed (lazy) for the same
+    The fingerprint frame gets a lazy lineage-cutting pin for the same
     reason as minhash_near_dup_pairs' signatures: it feeds both block-
     join sides, and the vote aggregation re-ran per side past the
-    reused exchange (same 64× measurement, same fault-tolerance
-    tradeoff)."""
-    fps = simhash(df, id_col, text_col).localCheckpoint(eager=False)
+    reused exchange (same 64× measurement)."""
+    fps = pin(simhash(df, id_col, text_col), truncate=True)
     blocked = fps.select(
         id_col,
         "simhash",
@@ -313,32 +307,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return relinked.unionByName(self_links).dropDuplicates(["hi", "lo"])
 
 
-def _checkpoint_rdd(df: DataFrame):
-    """The JVM RDD backing a ``localCheckpoint``-ed DataFrame (its
-    analyzed plan is a ``LogicalRDD`` scan of the persisted RDD), or
-    None when introspection fails (Spark Connect, plan-shape change).
-    Used to free superseded contraction rounds eagerly — without it the
-    checkpoint blocks of EVERY round stay in the block manager until
-    Python GC + ContextCleaner get around to them, so peak storage on a
-    large graph is ~rounds × |edges| instead of 2 × |edges|."""
-    try:
-        return df._jdf.queryExecution().analyzed().rdd()
-    except Exception:  # noqa: BLE001 - best-effort; ContextCleaner fallback
-        return None
-
-
-def _unpersist_rdd(jrdd) -> None:
-    """Blocking=False unpersist of a JVM RDD; swallows failures (the
-    block-manager cleanup is an optimization, never a correctness
-    dependency)."""
-    if jrdd is None:
-        return
-    try:
-        jrdd.unpersist(False)
-    except Exception:  # noqa: BLE001
-        pass
-
-
 def near_dup_clusters(
     ids: DataFrame,
     id_col: str,
@@ -365,26 +333,25 @@ def near_dup_clusters(
     graph-sized driver state; the only driver-side values per round
     are the convergence probe counts.
 
-    Edges are ``localCheckpoint(eager=True)``-ed every round — NOT
+    Edges are pinned eagerly with lineage cut every round — NOT
     merely persisted: each round's plan embeds the previous round's
     several times (two star passes + the convergence anti-join), so
     without lineage truncation the logical plan grows exponentially
     and the DRIVER dies of plan-analysis OOM (observed with the old
-    loop around iteration 8). The checkpoint materializes the round
-    and replaces its plan with a flat scan — how GraphX/GraphFrames
-    pace their iterative jobs; on a cluster with executor churn swap
-    in reliable ``checkpoint()`` against a checkpoint dir. Each round's
-    checkpoint blocks are explicitly unpersisted once the next round is
-    materialized and probed, so block-manager storage stays at
-    ~2 × |edges| instead of rounds × |edges|.
+    loop around iteration 8). The pin materializes the round and
+    replaces its plan with a flat scan — how GraphX/GraphFrames pace
+    their iterative jobs. Each round's pin is released once the next
+    round is materialized and probed, so block-manager storage stays
+    at ~2 × |edges| instead of rounds × |edges|.
 
     ``max_iter`` is a safety bound only (log-scale rounds make it
     generous for any real graph); exceeding it raises rather than
     returning partial clusters. ``_stats``, when a dict, receives
     ``{"rounds": n}`` — observability for tests and tuning.
 
-    The result is returned still checkpoint-backed — recomputing it
-    from scratch would replay every round.
+    The result is returned still pinned (its owner releases it, e.g.
+    via ``pin_scope``) — recomputing it from scratch would replay every
+    round.
     """
     # Edges touching ids ABSENT from `ids` are dropped (both-endpoint
     # semi joins): the contract is "cluster_id = the minimum id of the
@@ -394,7 +361,7 @@ def near_dup_clusters(
     # separate — the same semantics the previous label-propagation
     # implementation had (unknown nodes never relayed labels).
     known = ids.select(F.col(id_col).alias("__k"))
-    edges = (
+    edges = pin(
         pairs.filter(F.col("id_a") != F.col("id_b"))
         .join(known, F.col("id_a") == F.col("__k"), "left_semi")
         .join(known, F.col("id_b") == F.col("__k"), "left_semi")
@@ -402,14 +369,14 @@ def near_dup_clusters(
             F.greatest(F.col("id_a"), F.col("id_b")).alias("hi"),
             F.least(F.col("id_a"), F.col("id_b")).alias("lo"),
         )
-        .dropDuplicates(["hi", "lo"])
-        .localCheckpoint(eager=True)
+        .dropDuplicates(["hi", "lo"]),
+        truncate=True,
+        eager=True,
     )
     rounds = 0
     n_edges = edges.count()
-    prev_ck = _checkpoint_rdd(edges)
     for _ in range(max_iter):
-        nxt = _small_star(_large_star(edges)).localCheckpoint(eager=True)
+        nxt = pin(_small_star(_large_star(edges)), truncate=True, eager=True)
         rounds += 1
         # ONE-action set-equality probe: |nxt| and |nxt \ edges| from a
         # single left-join aggregate (both sides are (hi, lo)-distinct,
@@ -433,10 +400,9 @@ def near_dup_clusters(
         )
         n_nxt = int(probe["n"])
         changed = n_nxt != n_edges or int(probe["fresh"]) > 0
-        # the superseded round's checkpoint blocks are dead the moment
-        # the probe has run — free them now instead of waiting for GC
-        _unpersist_rdd(prev_ck)
-        prev_ck = _checkpoint_rdd(nxt)
+        # the superseded round is dead the moment the probe has run —
+        # free it now instead of waiting for GC
+        release(edges)
         edges, n_edges = nxt, n_nxt
         if not changed:
             break
@@ -585,7 +551,7 @@ def ngram_jaccard_pairs(
     per-doc rank window (keyed by doc — no skew); wins whenever hot
     shingles dominate the naive join's candidate volume.
 
-    The shingle frame is PERSISTED (r15; guide §5 "reused AND
+    The shingle frame is PINNED, as a persist (r15; guide §5 "reused AND
     recomputation more expensive"): it feeds 3 plan branches in naive
     mode and 5 in prefix mode (frequency, rank window, both join
     sides, sizes) plus the auto probe, and each branch re-derived the
@@ -608,12 +574,15 @@ def ngram_jaccard_pairs(
     # collision could not self-confirm). Measured on the 64× corpus:
     # the shingle stage's executor CPU drops ~5× vs hashing
     # word_ngrams strings.
-    sh = df.select(
-        F.col(id_col),
-        F.explode(
-            F.array_distinct(word_ngram_hashes(F.col(text_col), n))
-        ).alias("__g"),
-    ).persist()
+    sh = pin(
+        df.select(
+            F.col(id_col),
+            F.explode(
+                F.array_distinct(word_ngram_hashes(F.col(text_col), n))
+            ).alias("__g"),
+        ),
+        truncate=False,
+    )
     if max_shingle_freq is not None:
         # Broadcast the STOP list (shingles above the cap), not the keep
         # list: stop-shingles are a tiny head of the frequency
@@ -640,7 +609,7 @@ def ngram_jaccard_pairs(
         # sort/window/filter re-ran per side). Prefix rows are a subset
         # of the cached shingle frame, so the entry is strictly smaller
         # than sh's.
-        pref = _prefix_rows(sh, id_col, min_jaccard).persist()
+        pref = pin(_prefix_rows(sh, id_col, min_jaccard), truncate=False)
         cand = (
             pref.select(F.col(id_col).alias("id_a"), "__g")
             .join(pref.select(F.col(id_col).alias("id_b"), "__g"), "__g")

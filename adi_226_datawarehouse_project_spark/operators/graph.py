@@ -33,17 +33,15 @@ Scale design (100 TB):
 - One iteration = equi-join(ranks, edges on src) + groupBy(dst) —
   shuffle-bounded by the edge list, the same shape GraphX/Pregel
   lowers to. No driver-side adjacency, no collect.
-- The ranks frame is pinned per iteration (``localCheckpoint`` locally,
-  any ``pyspark.StorageLevel`` via the knob for clusters — same policy
-  as ``training.distributed_prefix_sum``), which also truncates the
-  otherwise exponentially-growing lineage.
+- The ranks frame is re-pinned every ``_PIN_EVERY`` rounds (``pin``
+  with lineage cut — same policy as ``training.distributed_prefix_sum``),
+  which truncates the otherwise exponentially-growing lineage.
 - High-degree hubs DON'T skew the groupBy(dst) the way they skew
   joins: map-side partial aggregation collapses a hot dst to one row
-  per map task before the shuffle (measured: salting the sum is a net
-  LOSS — see ``salt_buckets`` in :func:`pagerank`). The join side
-  (ranks ⋈ edges on src, hot src = mega-out-degree hub) is where skew
-  bites, and AQE's skew-join split handles that; the ``salt_buckets``
-  escape hatch covers engines without map-side combine.
+  per map task before the shuffle (measured: salting the sum was a net
+  LOSS, README §Measured). The join side (ranks ⋈ edges on src, hot
+  src = mega-out-degree hub) is where skew bites, and AQE's skew-join
+  split handles that.
 """
 
 from __future__ import annotations
@@ -51,10 +49,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .training import _pin
+from ..pin import pin, release
 
 SCALE_DEFAULT = 10**12
 DAMPING_PCT_DEFAULT = 85
+# Re-pin the ranks every 2nd round: pinning every round pays one job
+# launch per round, and two join+agg layers between pins sit well
+# inside Catalyst's comfort zone. The final round is always pinned.
+_PIN_EVERY = 2
 
 
 def pagerank(
@@ -64,9 +66,6 @@ def pagerank(
     iterations: int = 8,
     damping_pct: int = DAMPING_PCT_DEFAULT,
     scale: int = SCALE_DEFAULT,
-    storage_level: str | None = None,
-    pin_every: int = 2,
-    salt_buckets: int | None = None,
 ) -> DataFrame:
     """Integer PageRank over a directed edge list.
 
@@ -78,43 +77,25 @@ def pagerank(
     ``iterations`` is fixed-count (the oracle unrolls it); 8–20 covers
     practical convergence at damping 0.85.
 
-    ``pin_every`` controls how often the ranks frame is materialized:
-    every iteration is safest against lineage blow-up but pays one job
-    launch per round; the default re-pins every 2nd round (the plan
-    between pins is two join+agg layers — well inside Catalyst's
-    comfort zone) and always pins the final round.
-
-    ``salt_buckets`` turns the per-iteration contribution sum into the
-    two-phase salted aggregation (``operators.skew.salted_agg``).
-    BIGINT addition is order-independent, so ranks are bit-identical
-    with or without the salt — it is purely a shuffle-balance knob.
-    MEASURED (scripts/pagerank_salt_scale.py, 20M edges with 50% of
-    them on one hub, local[32]): plain 9.2s vs salted 12.8s — the
-    DEFAULT (None) wins, because the hot groupBy(dst) key is already
-    collapsed map-side by Spark's partial (hash) aggregation to one
-    row per map task before any shuffle, so there is no hot reducer
-    for salting to fix and the salt just buys an extra exchange. Keep
-    the knob for deployments where partial aggregation is ineffective
-    (e.g. ``spark.sql.aggregate.partialAggregationOptimization`` style
-    fallbacks on memory-starved executors, or engines without
-    map-side combine); everywhere else leave it None.
+    Superseded working-set pins are released as the loop goes; the
+    returned frame stays pinned (its owner releases it, e.g. via
+    ``pin_scope``).
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
     if not 0 < damping_pct < 100:
         raise ValueError("damping_pct must be in (0, 100)")
-    if pin_every < 1:
-        raise ValueError("pin_every must be >= 1")
 
     # The edge list re-derives from its upstream plan (often a
     # multi-join) — pin it once; every iteration reuses it twice
     # (degree already folded into `nodes`, contributions below).
-    e = _pin(
+    e = pin(
         edges.select(
             F.col(src_col).cast("bigint").alias("src"),
             F.col(dst_col).cast("bigint").alias("dst"),
         ),
-        storage_level,
+        truncate=True,
+        eager=True,
     )
 
     nodes = (
@@ -123,16 +104,17 @@ def pagerank(
         .distinct()
     )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    nodes = _pin(
+    nodes = pin(
         nodes.join(deg, nodes.node == deg.src, "left")
         .select("node", F.coalesce("out_deg", F.lit(0)).alias("out_deg")),
-        storage_level,
+        truncate=True,
+        eager=True,
     )
 
     # n and the teleport term are scalars; computing them via a 1-row
     # broadcast join keeps the plan collect-free.
     totals = nodes.agg(F.count(F.lit(1)).alias("__n"))
-    ranks = _pin(
+    ranks = pin(
         nodes.crossJoin(F.broadcast(totals)).select(
             "node",
             "out_deg",
@@ -142,10 +124,11 @@ def pagerank(
                 f" * (CAST({scale} AS BIGINT) DIV __n) DIV 100"
             ).alias("__teleport"),
         ),
-        storage_level,
+        truncate=True,
+        eager=True,
     )
 
-    pinned = [ranks]
+    pinned = ranks
     for it in range(1, iterations + 1):
         sent = (
             ranks.where(F.col("out_deg") > 0)
@@ -155,14 +138,7 @@ def pagerank(
                 F.expr("rank_units DIV out_deg").alias("__c"),
             )
         )
-        if salt_buckets:
-            from .skew import salted_agg
-
-            contrib = salted_agg(
-                sent, ["dst"], sums=["__c"], counts=False, buckets=salt_buckets
-            ).withColumnRenamed("sum___c", "__s")
-        else:
-            contrib = sent.groupBy("dst").agg(F.sum("__c").alias("__s"))
+        contrib = sent.groupBy("dst").agg(F.sum("__c").alias("__s"))
         ranks = ranks.join(contrib, ranks.node == contrib.dst, "left").select(
             "node",
             "out_deg",
@@ -172,21 +148,15 @@ def pagerank(
             ).alias("rank_units"),
             "__teleport",
         )
-        if it % pin_every == 0 or it == iterations:
-            ranks = _pin(ranks, storage_level)
-            if storage_level is not None:
-                for p in pinned:
-                    p.unpersist(blocking=False)
-            pinned = [ranks]
+        if it % _PIN_EVERY == 0 or it == iterations:
+            ranks = pin(ranks, truncate=True, eager=True)
+            release(pinned)
+            pinned = ranks
 
-    if storage_level is not None:
-        # Release the working-set pins; the FINAL ranks frame stays
-        # persisted (the caller owns it — unpersist when done). If it
-        # is later evicted+recomputed it re-derives from source, which
-        # is correct, just slower.
-        e.unpersist(blocking=False)
-        nodes.unpersist(blocking=False)
-
+    # the final ranks are a flat scan of their own pin: the working set
+    # is dead
+    release(e)
+    release(nodes)
     return ranks.select(
         "node",
         "out_deg",

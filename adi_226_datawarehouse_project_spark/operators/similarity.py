@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..pin import pin, release
+
 
 def _dot(a: Column, b: Column) -> Column:
     """Sequential fold dot-product — deterministic summation order."""
@@ -346,7 +348,7 @@ def train_ivf_centroids(
     matrix itself (a few KB) — the same driver-resident model state
     every distributed k-means keeps (e.g. Spark MLlib's). Nothing
     corpus-sized is ever collected. The (id, vec) projection is
-    ``persist()``-ed before the Lloyd loop and unpersisted after, so
+    pinned (persisted) before the Lloyd loop and released after, so
     the source table is scanned ONCE and each of the ``n_iter``
     iterations re-reads the cached two-column projection — at 100 TB
     that's the difference between n_iter full-table scans and one
@@ -397,14 +399,13 @@ def train_ivf_centroids(
     # None sum that crashes the Python-side divide AFTER the expensive
     # Lloyd iterations. Drop them up front — a wrong-dim vector can
     # never be assigned meaningfully anyway.
-    vecs = (
-        df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
-        .filter(
+    vecs = pin(
+        df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")).filter(
             F.col("__v").isNotNull()
             & (F.size("__v") == dim)
             & ~F.exists("__v", lambda x: x.isNull() | F.isnan(x))
-        )
-        .persist()
+        ),
+        truncate=False,
     )
     mean_aggs = [
         F.expr(f"sum(CAST(element_at(__v, {i + 1}) AS DOUBLE))").alias(f"__s{i}")
@@ -428,7 +429,7 @@ def train_ivf_centroids(
                 nxt[r["__c"]] = _l2([r[f"__s{i}"] / r["__n"] for i in range(dim)])
             cents = nxt
     finally:
-        vecs.unpersist()
+        release(vecs)
     spark = df.sparkSession
     return spark.createDataFrame(
         [(i, c) for i, c in enumerate(cents)], schema="centroid_id INT, centroid ARRAY<DOUBLE>"

@@ -37,8 +37,8 @@ Salt determinism — read this before using at cluster scale:
   identically — but "retry after partial fetch" is real on clusters.
   Rule: round-robin is safe when the salted input is scan-backed
   (files re-list deterministically) or in local mode; behind a
-  shuffle at cluster scale, pass ``salt_on`` or checkpoint /
-  localCheckpoint the input first.
+  shuffle at cluster scale, pass ``salt_on`` or pin the input first
+  (``pin.pin(df, truncate=True, eager=True)``).
 
 The salt column never leaves these operators: both drop it before
 returning and raise if the input already carries a column of the same

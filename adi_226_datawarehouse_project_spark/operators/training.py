@@ -38,6 +38,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import _let
+from ..pin import pin
 
 _HEX_WIDTH = 6  # 16^6 = 16.7M buckets: fraction granularity ~6e-8
 
@@ -105,32 +106,12 @@ def stratified_sample(
     return df.filter(pred)
 
 
-def _pin(df: DataFrame, storage_level: str | None) -> DataFrame:
-    """Materialize a frame BOTH phases of a two-phase scan will read.
-    Default (None) is ``localCheckpoint`` — right for local mode, where
-    it also truncates lineage. On a real cluster pass a
-    ``pyspark.StorageLevel`` name (``"MEMORY_AND_DISK"``): persist
-    survives executor loss via recompute (localCheckpoint does not) and
-    avoids writing the whole frame to local checkpoint storage."""
-    if storage_level is None:
-        return df.localCheckpoint(eager=True)
-    from pyspark import StorageLevel
-
-    level = getattr(StorageLevel, storage_level, None)
-    if level is None:
-        raise ValueError(f"unknown storage level: {storage_level!r}")
-    out = df.persist(level)
-    out.count()  # eager: both consumers must see ONE materialization
-    return out
-
-
 def distributed_prefix_sum(
     df: DataFrame,
     order_col: str,
     value_col: str,
     out_col: str = "prefix_sum",
     num_partitions: int | None = None,
-    storage_level: str | None = None,
 ) -> DataFrame:
     """EXCLUSIVE prefix sum of ``value_col`` over the total order given
     by ``order_col`` (must be unique — ties would make per-row
@@ -145,21 +126,20 @@ def distributed_prefix_sum(
     back. The result is invariant to the partition count/boundaries, so
     Spark's sampled range boundaries never affect values.
 
-    The ranged frame is pinned via :func:`_pin` (same rationale as
-    ``near_dup_clusters``): both phases consume it, and pinning the
-    materialized partitioning removes any recompute-alignment concern
-    between the totals branch and the main branch. Default is
-    ``localCheckpoint``; on a cluster pass
-    ``storage_level="MEMORY_AND_DISK"`` — a prefix scan is inherently
-    a two-pass barrier."""
+    The ranged frame is pinned eagerly with lineage cut (``pin``
+    policy; same rationale as ``near_dup_clusters``): both phases
+    consume it, and pinning the materialized partitioning removes any
+    recompute-alignment concern between the totals branch and the main
+    branch — a prefix scan is inherently a two-pass barrier."""
     n = num_partitions or int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
-    ranged = _pin(
+    ranged = pin(
         df.repartitionByRange(n, F.col(order_col)).withColumn(
             "__pid", F.spark_partition_id()
         ),
-        storage_level,
+        truncate=True,
+        eager=True,
     )
     w_intra = (
         Window.partitionBy("__pid")
@@ -269,7 +249,6 @@ def global_order_rank(
     order_cols: list[str],
     rank_col: str = "rank",
     num_partitions: int | None = None,
-    storage_level: str | None = None,
 ) -> DataFrame:
     """Dense 0-based global rank of every row in the total order given
     by ``order_cols`` (ascending; the combination must be unique — add
@@ -284,11 +263,12 @@ def global_order_rank(
     n = num_partitions or int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
-    ranged = _pin(
+    ranged = pin(
         df.repartitionByRange(n, *cols).withColumn(
             "__pid", F.spark_partition_id()
         ),
-        storage_level,
+        truncate=True,
+        eager=True,
     )
     w_intra = Window.partitionBy("__pid").orderBy(*order_cols)
     intra = ranged.withColumn(
@@ -315,7 +295,6 @@ def global_shuffle_rank(
     id_col: str,
     seed: str,
     num_partitions: int | None = None,
-    storage_level: str | None = None,
 ) -> DataFrame:
     """Deterministic global training-order shuffle: every row gets a
     dense 0-based rank in the pseudo-random order md5(seed:id) (id as
@@ -330,7 +309,6 @@ def global_shuffle_rank(
         order_cols=["__skey", id_col],
         rank_col="shuffle_rank",
         num_partitions=num_partitions,
-        storage_level=storage_level,
     ).drop("__skey")
 
 

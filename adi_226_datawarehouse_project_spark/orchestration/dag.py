@@ -79,7 +79,9 @@ class DagTask:
     re-attempts after the first try with ``retry_delay_s * backoff**i``
     pauses (Airflow ``retries=2, retry_delay=60s`` semantics —
     `nyc_ingestion_dag.py:134-136`). ``skip_if()`` true short-circuits
-    the task entirely (K8 idempotent skip)."""
+    the task entirely (K8 idempotent skip). Each attempt runs in a
+    ``pin_scope``: its pins are released when it returns or raises, so
+    ``fn`` hands downstream values (row counts), never frames over them."""
 
     name: str
     fn: Callable[[Mapping[str, Any]], Any]
@@ -132,11 +134,16 @@ def _run_one(
 ) -> TaskResult:
     if task.skip_if is not None and task.skip_if():
         return TaskResult(state="SKIPPED", attempts=0)
+    from ..pin import pin_scope
     from ..retry import call_with_retries
+
+    def attempt() -> Any:
+        with pin_scope():
+            return task.fn(upstream_results)
 
     try:
         value, attempts = call_with_retries(
-            lambda: task.fn(upstream_results),
+            attempt,
             task.retries,
             task.retry_delay_s,
             task.backoff,

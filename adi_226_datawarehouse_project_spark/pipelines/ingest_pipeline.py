@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as TX
 from ..operators.dedup import _band_rows, incremental_near_dup_filter, minhash_index
+from ..pin import pin, pin_scope
 from ..sources.observe import observed_write_parquet
 
 _NUM_HASHES = 64
@@ -117,56 +118,58 @@ def ingest_increment(
     if batch_id in ingested_batches(spark, corpus_dir):
         return {"batch_id": batch_id, "n_in": 0, "n_kept": 0, "skipped": True}
 
-    from pyspark import StorageLevel
-
     # The cleaned batch feeds FIVE consumers (two candidate joins, the
     # docs append, and both index-delta writes), and cleaning is regex-
     # heavy (lang-id + quality + PII scrub) — without a pin, each
-    # consumer re-runs the whole chain. Persist is batch-size state.
-    cleaned = (
-        batch_docs.filter(
-            (TX.lang_id("text") == lang)
-            & (TX.quality_score("text") >= min_quality)
-            & (TX.repeated_token_fraction("text") <= max_repetition)
+    # consumer re-runs the whole chain. Pins are batch-size state, held
+    # only until the appends below have run.
+    with pin_scope():
+        cleaned = pin(
+            batch_docs.filter(
+                (TX.lang_id("text") == lang)
+                & (TX.quality_score("text") >= min_quality)
+                & (TX.repeated_token_fraction("text") <= max_repetition)
+            )
+            .select(
+                "doc_id",
+                TX.scrub_pii(TX.normalize_text(F.col("text"))).alias("text"),
+                "lang",
+                "source",
+            )
+            .withColumn("n_tokens", TX.token_count("text").cast("bigint")),
+            truncate=False,
         )
-        .select(
-            "doc_id",
-            TX.scrub_pii(TX.normalize_text(F.col("text"))).alias("text"),
-            "lang",
-            "source",
-        )
-        .withColumn("n_tokens", TX.token_count("text").cast("bigint"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_in = batch_docs.count()
+        n_in = batch_docs.count()
 
-    index_bands = spark.read.parquet(_zone(corpus_dir, "index_bands"))
-    index_sigs = spark.read.parquet(_zone(corpus_dir, "index_sigs"))
-    # the batch's signatures are computed ONCE (the dominant per-doc
-    # CPU): the filter reuses them via new_index, and the index delta
-    # below is a plain semi-join of the same frames on survivor ids
-    _, batch_sigs = minhash_index(
-        cleaned, "doc_id", "text", _NUM_HASHES, _BANDS, shingle_size, "word"
-    )
-    # band rows are derived from the PERSISTED signatures (a narrow
-    # posexplode), so both consumers below read the pinned sigs instead
-    # of re-running the signature aggregation
-    batch_sigs = batch_sigs.persist(StorageLevel.MEMORY_AND_DISK)
-    batch_bands = _band_rows_of(batch_sigs)
-    survivors = incremental_near_dup_filter(
-        cleaned,
-        "doc_id",
-        "text",
-        index_bands,
-        index_sigs,
-        num_hashes=_NUM_HASHES,
-        bands=_BANDS,
-        shingle_size=shingle_size,
-        min_jaccard_est=min_jaccard_est,
-        shingle="word",
-        new_index=(batch_bands, batch_sigs),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+        index_bands = spark.read.parquet(_zone(corpus_dir, "index_bands"))
+        index_sigs = spark.read.parquet(_zone(corpus_dir, "index_sigs"))
+        # the batch's signatures are computed ONCE (the dominant per-doc
+        # CPU): the filter reuses them via new_index, and the index delta
+        # below is a plain semi-join of the same frames on survivor ids
+        _, batch_sigs = minhash_index(
+            cleaned, "doc_id", "text", _NUM_HASHES, _BANDS, shingle_size, "word"
+        )
+        # band rows are derived from the PINNED signatures (a narrow
+        # posexplode), so both consumers below read the pinned sigs
+        # instead of re-running the signature aggregation
+        batch_sigs = pin(batch_sigs, truncate=False)
+        batch_bands = _band_rows_of(batch_sigs)
+        survivors = pin(
+            incremental_near_dup_filter(
+                cleaned,
+                "doc_id",
+                "text",
+                index_bands,
+                index_sigs,
+                num_hashes=_NUM_HASHES,
+                bands=_BANDS,
+                shingle_size=shingle_size,
+                min_jaccard_est=min_jaccard_est,
+                shingle="word",
+                new_index=(batch_bands, batch_sigs),
+            ),
+            truncate=False,
+        )
         n_kept = observed_write_parquet(
             survivors, _zone(corpus_dir, "docs"), mode="append"
         )
@@ -188,10 +191,6 @@ def ingest_increment(
             _zone(corpus_dir, "index_bands"),
             mode="append",
         )
-    finally:
-        survivors.unpersist()
-        batch_sigs.unpersist()
-        cleaned.unpersist()
     # marker LAST: a crash anywhere above re-runs the batch and
     # converges (module docstring)
     observed_write_parquet(

@@ -52,6 +52,7 @@ from ..operators.training import (
     stratified_sample,
 )
 from ..operators.upsert import incremental_upsert
+from ..pin import pin
 from ..sources.catalog import load_table, register_base_views
 from ..sources.readers import read_csv, read_json, read_parquet
 from ..sources.writers import write_csv, write_json, write_parquet
@@ -75,10 +76,6 @@ def _sql(text: str, star: bool = False) -> Callable[[SparkSession, str], DataFra
         return spark.sql(text)
 
     return run
-
-
-def _df(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSession, str], DataFrame]:
-    return fn
 
 
 # ---- exact-sum helpers (see module docstring) ----
@@ -466,18 +463,18 @@ def _spark_merge_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Each apply's plan embeds the previous dimension several times
     # (four legs + the duplicate-key guard), so the RAW triple chain is
     # cubic in plan references and Catalyst analysis dominated the
-    # whole suite (measured 8.5s/eval at sf0.01). localCheckpoint
+    # whole suite (measured 8.5s/eval at sf0.01). A lineage-cutting pin
     # between applies truncates lineage to a flat scan — the
     # near_dup_clusters pacing pattern; the frames are nation-sized
     # (25–100 rows), so materialization is free next to analysis.
-    tri = scd2_apply(
-        dim0, nat.select("custkey", _attr(1).alias("address")),
-        "custkey", "address", batch_day,
-    ).localCheckpoint(eager=True)
-    tri = scd2_apply(
-        tri, nat.select("custkey", attr2.alias("address")),
-        "custkey", "address", batch_day,
-    ).localCheckpoint(eager=True)
+    tri = dim0
+    for attr in (_attr(1), attr2):
+        tri = pin(
+            scd2_apply(tri, nat.select("custkey", attr.alias("address")),
+                       "custkey", "address", batch_day),
+            truncate=True,
+            eager=True,
+        )
     tri = scd2_apply(
         tri, nat.select("custkey", _attr(3).alias("address")),
         "custkey", "address", batch_day,
@@ -535,7 +532,7 @@ def _spark_merge_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     folded = apply_cdc(
-        apply_cdc(base, fresh, ["k"], "seq").localCheckpoint(eager=True),
+        pin(apply_cdc(base, fresh, ["k"], "seq"), truncate=True, eager=True),
         stale, ["k"], "seq",
     )
     cdc_part = folded.select(
@@ -2840,10 +2837,11 @@ def _spark_text_token_features(
     # dedupes); footprint is the token arrays instead of the text
     # (same order of bytes) and MEMORY_AND_DISK spills gracefully at
     # replicated-corpus scale.
-    base = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "lang", TX.word_tokens("text").alias("tk"))
-        .persist()
+    base = pin(
+        load_table(spark, sf_dir, "documents").select(
+            "doc_id", "lang", TX.word_tokens("text").alias("tk")
+        ),
+        truncate=False,
     )
     # token_stats ≡ _spark_token_stats over the shared tokens:
     # token_count(text) = size(word_tokens(text)) guarded NULL-in/

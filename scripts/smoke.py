@@ -67,6 +67,26 @@ def main() -> int:
                         "— entry likely stale; fix or strike it"
                     )
 
+    # one way to pin: only pin.py materializes frames (model/star.py's
+    # cacheTable star-view cache is its own, already-owned lifecycle)
+    import ast
+
+    pkg = REPO / "adi_226_datawarehouse_project_spark"
+    pin_calls = {"persist", "cache", "localCheckpoint", "checkpoint"}
+    stray = [
+        f"{f.relative_to(REPO)}:{node.lineno} .{node.func.attr}("
+        for f in sorted(pkg.rglob("*.py"))
+        if f != pkg / "pin.py"
+        for node in ast.walk(ast.parse(f.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in pin_calls
+    ]
+    if stray:
+        print("pin outside pin.py (use pin.pin):\n  " + "\n  ".join(stray), file=sys.stderr)
+        return 1
+    print("pin gate OK: only pin.py materializes frames")
+
     rc = subprocess.run(
         [sys.executable, "-m", "pytest", "tests/", "--collect-only", "-q",
          "--no-header", "-p", "no:cacheprovider"],

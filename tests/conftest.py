@@ -1,4 +1,5 @@
 import sys
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -20,6 +21,30 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def pinned(spark) -> tuple[set, set]:
+    """(persistent RDD ids, CacheManager entry identities) of the
+    session. Released pins leave a subset of an earlier snapshot (a
+    subset, not equal: Spark's ContextCleaner may free older garbage
+    pins in between)."""
+    jvm = spark.sparkContext._jvm
+    cached = spark._jsparkSession.sharedState().cacheManager().cachedData()
+    entries = {jvm.System.identityHashCode(cached.apply(i)) for i in range(cached.length())}
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet()), entries
+
+
+@contextmanager
+def checkpoint_dir(spark, path):
+    """Set a checkpoint dir for the block only, so lineage-cutting pins
+    inside it are reliable checkpoints; later tests must keep the
+    localCheckpoint default, so the dir is unset again on exit."""
+    sc = spark.sparkContext
+    sc.setCheckpointDir(str(path))
+    try:
+        yield
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
 
 
 # Shared base for synthetic events fixtures: divisible by 60s so

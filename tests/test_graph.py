@@ -9,7 +9,7 @@ reference, the dangling-leak semantics, validation, and plan shape.
 import collections
 
 import pytest
-from pyspark.sql import functions as F
+from conftest import checkpoint_dir
 
 from adi_226_datawarehouse_project_spark.operators.graph import pagerank
 
@@ -79,58 +79,21 @@ def test_validation_errors(spark):
         pagerank(df, iterations=0)
     with pytest.raises(ValueError, match="damping_pct"):
         pagerank(df, damping_pct=100)
-    with pytest.raises(ValueError, match="storage level"):
-        pagerank(df, storage_level="NOT_A_LEVEL")
 
 
-def test_persist_storage_level_path(spark):
-    edges = [(1, 2), (2, 3), (3, 1)]
-    got = _run(spark, edges, iterations=3, storage_level="MEMORY_AND_DISK")
+def test_pagerank_reliable_checkpoint_path(spark, tmp_path):
+    """With a checkpoint dir set, the per-round pins are reliable
+    checkpoints (files under the dir) and the ranks still equal the
+    Python reference."""
+    edges = [(1, 2), (2, 3), (3, 1), (4, 3)]
+    with checkpoint_dir(spark, tmp_path):
+        got = _run(spark, edges, iterations=3)
     ref, _ = _py_pagerank(edges, iterations=3)
     assert {v: r.rank_units for v, r in got.items()} == ref
+    assert any(p.is_file() for p in tmp_path.rglob("*"))
 
 
 def test_no_python_udf_in_plan(spark):
     df = spark.createDataFrame([(1, 2), (2, 1)], "src BIGINT, dst BIGINT")
     plan = pagerank(df, iterations=1)._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_salted_hub_aggregation_is_bit_identical(spark):
-    """salt_buckets spreads a hub's contribution sum over two-phase
-    partial aggregates; BIGINT addition is order-independent, so ranks
-    must be BIT-identical to the unsalted plan and to the Python
-    reference — the knob is purely shuffle balance."""
-    # hub graph: every node points at node 0 (hot dst), plus a ring
-    n = 60
-    edges = [(i, 0) for i in range(1, n)] + [(i, (i + 1) % n) for i in range(n)]
-    ref, _ = _py_pagerank(edges, iterations=5)
-    plain = _run(spark, edges, iterations=5)
-    salted = _run(spark, edges, iterations=5, salt_buckets=8)
-    assert {v: r.rank_units for v, r in plain.items()} == ref
-    assert {v: r.rank_units for v, r in salted.items()} == ref
-
-
-def test_salted_plan_has_two_phase_aggregate(spark, monkeypatch):
-    """The salted plan really contains the extra (dst, salt) partial
-    aggregation layer. The per-round localCheckpoint pin flattens the
-    returned lineage to a LogicalRDD, so disable pinning to make the
-    logical plan inspectable."""
-    from adi_226_datawarehouse_project_spark.operators import graph as G
-
-    monkeypatch.setattr(G, "_pin", lambda df, sl: df)
-    df = spark.createDataFrame([(1, 2), (2, 1), (3, 1)], "src BIGINT, dst BIGINT")
-    plan = (
-        pagerank(df, iterations=1, salt_buckets=4)
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
-    assert "__salt" in plan
-    plain = (
-        pagerank(df, iterations=1)
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
-    assert "__salt" not in plain

@@ -192,3 +192,44 @@ def test_spark_etl_dag_end_to_end(spark, sf_dir):
     assert res["merge"].state == "SUCCESS"
     assert res["merge"].value == 25  # TPC-H nation count
     assert isinstance(res["load_customer"], TaskResult)
+
+
+def test_task_attempts_release_their_pins(spark):
+    """Each task attempt owns what it pins: a task that pins and
+    succeeds, and one whose first attempt pins and then raises before
+    a successful retry, both leave the session's cache at its
+    baseline. The two run in one wave, on separate threads."""
+    from conftest import pinned
+
+    from adi_226_datawarehouse_project_spark.pin import pin
+
+    base_rdds, base_entries = pinned(spark)
+    held = []
+
+    def pins(n_rows, fail_first):
+        attempts = []
+
+        def fn(upstream):
+            attempts.append(1)
+            df = spark.range(n_rows)
+            n = pin(df.selectExpr("id * 2 AS x"), truncate=False).count()
+            n += pin(df, truncate=True, eager=True).count()
+            held.append(pinned(spark))
+            if fail_first and len(attempts) == 1:
+                raise RuntimeError("transient")
+            return n
+
+        return fn
+
+    res = run_dag(
+        [
+            DagTask("ok", pins(50, fail_first=False)),
+            DagTask("flaky", pins(70, fail_first=True), retries=1),
+        ]
+    )
+    assert (res["ok"].state, res["ok"].attempts, res["ok"].value) == ("SUCCESS", 1, 100)
+    assert (res["flaky"].state, res["flaky"].attempts, res["flaky"].value) == ("SUCCESS", 2, 140)
+    assert len(held) == 3
+    assert all(rdds - base_rdds and entries - base_entries for rdds, entries in held)
+    rdds, entries = pinned(spark)
+    assert rdds <= base_rdds and entries <= base_entries

@@ -5,6 +5,7 @@ dims broadcast, no Python UDFs anywhere, parquet filter/column
 pushdown reaching the scan, AQE on.
 """
 
+import pytest
 from conftest import SF_SMALL
 
 import __spark_entry__ as entrymod
@@ -26,24 +27,29 @@ def test_golden_star_joins_broadcast_dims(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_no_python_udf_in_any_declared_query(spark):
-    qs = entrymod.queries()
-    for name, fn in qs.items():
-        df = fn(spark, SF_SMALL)
-        plan = _physical(df)
+@pytest.fixture(scope="module")
+def declared_plans(spark) -> dict[str, str]:
+    """Executed plan of every declared query, built once: eager pins
+    run jobs while a query is built, so each build is paid once for
+    all the plan gates below."""
+    return {
+        name: _physical(fn(spark, SF_SMALL)) for name, fn in entrymod.queries().items()
+    }
+
+
+def test_no_python_udf_in_any_declared_query(declared_plans):
+    for name, plan in declared_plans.items():
         assert "BatchEvalPython" not in plan, f"{name} uses a row-wise Python UDF"
 
 
-def test_no_cartesian_product_in_any_declared_query(spark):
+def test_no_cartesian_product_in_any_declared_query(declared_plans):
     """Every candidate generator must be an equi-join (LSH bands, SRP
     buckets, IVF cells, hashed shingles): no declared query's plan may
     contain a CartesianProduct. The one sanctioned all-pairs query
     (sim_near_dup_exact) runs as a broadcast nested-loop with the
     cosine threshold pushed into the join condition — also not a
     CartesianProduct node."""
-    qs = entrymod.queries()
-    for name, fn in qs.items():
-        plan = _physical(fn(spark, SF_SMALL))
+    for name, plan in declared_plans.items():
         assert "CartesianProduct" not in plan, f"{name} plans a cartesian product"
 
 

@@ -428,10 +428,12 @@ def test_group_sample_k_strict_is_noop_without_shortfall(spark):
     )
 
 
-def test_two_phase_scans_accept_storage_level(spark):
-    """storage_level='MEMORY_AND_DISK' swaps localCheckpoint for an
-    eager persist — values identical either way (cluster users keep
-    recompute-on-executor-loss semantics)."""
+def test_two_phase_scans_reliable_checkpoint_path(spark, tmp_path):
+    """With a checkpoint dir set, the two-phase scans pin through
+    reliable checkpoints (files under the dir) instead of
+    localCheckpoint, and give identical values either way."""
+    from conftest import checkpoint_dir
+
     from adi_226_datawarehouse_project_spark.operators.training import (
         distributed_prefix_sum,
         global_order_rank,
@@ -440,34 +442,24 @@ def test_two_phase_scans_accept_storage_level(spark):
     df = spark.createDataFrame(
         [(i, (i * 7) % 13 + 1) for i in range(200)], ["k", "v"]
     )
-    a = {
-        r["k"]: r["prefix_sum"]
-        for r in distributed_prefix_sum(df, "k", "v", num_partitions=4).collect()
-    }
-    b = {
-        r["k"]: r["prefix_sum"]
-        for r in distributed_prefix_sum(
-            df, "k", "v", num_partitions=4, storage_level="MEMORY_AND_DISK"
-        ).collect()
-    }
-    assert a == b
 
-    ra = {
-        r["k"]: r["rank"]
-        for r in global_order_rank(df, ["k"], num_partitions=4).collect()
-    }
-    rb = {
-        r["k"]: r["rank"]
-        for r in global_order_rank(
-            df, ["k"], num_partitions=4, storage_level="MEMORY_AND_DISK"
-        ).collect()
-    }
-    assert ra == rb
+    def scans():
+        return (
+            {
+                r["k"]: r["prefix_sum"]
+                for r in distributed_prefix_sum(df, "k", "v", num_partitions=4).collect()
+            },
+            {
+                r["k"]: r["rank"]
+                for r in global_order_rank(df, ["k"], num_partitions=4).collect()
+            },
+        )
 
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="storage level"):
-        distributed_prefix_sum(df, "k", "v", storage_level="NOPE").collect()
+    local = scans()
+    with checkpoint_dir(spark, tmp_path):
+        reliable = scans()
+    assert reliable == local
+    assert any(p.is_file() for p in tmp_path.rglob("*"))
 
 
 def test_group_sample_k_prefilter_fraction_ge_one_keeps_exact_k(spark):
