@@ -145,9 +145,3 @@ def sum_bigint(dialect: str, expr: str) -> str:
 
 def as_double(expr: str) -> str:
     return f"cast({expr} as double)"
-
-
-def hour_interval(expr: str) -> str:
-    """n-hours interval arithmetic, portable form (both engines accept
-    `ts + n * INTERVAL '1' HOUR`)."""
-    return f"({expr}) * INTERVAL '1' HOUR"

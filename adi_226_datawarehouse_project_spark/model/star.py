@@ -53,7 +53,6 @@ from __future__ import annotations
 
 import os
 import threading
-import time
 from collections.abc import Callable
 
 from pyspark.sql import SparkSession
@@ -388,8 +387,8 @@ def star_sql(d: str, name: str) -> str:
 # silently drop their cache, while a memo keyed by sf_dir alone made a
 # mid-session policy flip a silent no-op serving the previous layout
 # (round-9 judge finding). Any component change → clearCache + rebuild.
-# Labels: "views" (lazy temp views), "cache" (views + in-memory
-# columnar cache), "parquet"/"hybrid" (write-through zone).
+# Labels: "cache" (views + in-memory columnar cache), "parquet"
+# (write-through zone).
 _REGISTERED: dict[int, tuple[str, str, str | None]] = {}
 
 # id(spark) can be REUSED after a session is garbage-collected (CPython
@@ -403,16 +402,16 @@ _REGISTERED_REFS: dict[int, object] = {}
 
 
 # Per-session registration lock (r13 concurrency audit, VERDICT r12
-# #7): the memo transitions (cold registration, views→cache upgrade,
-# zone materialization, compression-flip clearCache) are multi-step
-# read-modify-write sequences over _REGISTERED + the Spark catalog.
+# #7): the memo transitions (cold registration, zone materialization,
+# layout rebuild) are multi-step read-modify-write sequences over
+# _REGISTERED + the Spark catalog.
 # The engine's OWN pools never call these from worker threads (workers
 # only cacheTable/count — audited r13), but a USER driving queries
 # from a thread pool hits register_star_views concurrently on first
 # use: without a lock, two threads can both take the cold path
 # (duplicated wave work) and one thread's clearCache can drop caches
-# the other is mid-filling. RLock because the entry points nest
-# (materialize_warehouse → register_star_views → _materialize_zone).
+# the other is mid-filling. RLock, so a re-entrant call from the
+# thread already holding it cannot deadlock.
 # Keyed by id(spark) like the memo, with the memo's weakref liveness
 # guard (VERDICT r13 watch item): retired sessions are pruned on the
 # next lock acquisition, so a long-lived multi-session driver does not
@@ -497,64 +496,41 @@ _CACHE_TABLES = (
 )
 
 
-def register_star_views(spark: SparkSession, sf_dir: str, cache: bool = True) -> None:
+def register_star_views(spark: SparkSession, sf_dir: str) -> None:
     """Register the base fixtures and the whole star schema as temp
-    views. Views are lazy — Catalyst collapses the full view chain into
-    one optimized plan per query (filter/column pruning reach the
-    parquet scans through every layer).
+    views, materialized in the layout ``resolve_warehouse_policy``
+    picks: ``cache`` (lazy cacheTable of every table) or ``parquet``
+    (the write-through zone, see ``materialize_warehouse``). Views hold
+    analyzed plans, so Catalyst collapses the chain into one optimized
+    plan per query (filter/column pruning reach the scans through
+    every layer).
 
-    Memo semantics: ANY existing registration for the same sf_dir
-    satisfies this call — the policies are pure physical strategy with
-    identical results, so a query-path call must never downgrade a
-    materialized parquet/hybrid zone back to plain views. The only
-    in-place transition is views→cache (lazy cacheTable, no rebuild).
-    Policy-changing rebuilds go through ``materialize_warehouse``.
-
-    The FIRST caching registration per (session, sf_dir) consults
-    ``resolve_warehouse_policy``: on a corpus the probe routes to the
-    parquet/hybrid zone (or when the env var forces one), the query
-    path builds that zone instead of unconditionally cacheTable-ing a
-    warehouse the heap can't hold — the driver's 50 registry queries
-    never call ``materialize_warehouse`` themselves, so policy
-    awareness must live here to take effect on the primary path. At
-    probe-says-cache scales (every test sf) this is a no-op.
+    The layout is decided here, at the first registration per
+    (session, sf_dir): the driver's 50 registry queries never call
+    ``materialize_warehouse``, so the probe must act on this path. Any
+    later call for the same sf_dir hits the memo without probing —
+    both layouts give identical results.
 
     Thread-safe per session: the whole transition runs under the
     session registration lock (see _SESSION_LOCKS), so concurrent
     first-use callers serialize — one does the work, the rest hit the
     memo."""
     with _session_lock(spark):
-        _register_star_views_locked(spark, sf_dir, cache)
+        memo = _memo_get(spark)
+        if memo is None or memo[0] != sf_dir:
+            _build_layout(spark, sf_dir, resolve_warehouse_policy(spark, sf_dir))
 
 
-def _register_star_views_locked(
-    spark: SparkSession, sf_dir: str, cache: bool
-) -> None:
-    key = id(spark)
-    memo = _memo_get(spark)
-    if memo is not None and memo[0] == sf_dir:
-        if cache and memo[1] == "views":
-            # The in-place views→cache upgrade is a CACHING registration
-            # too: it must consult the policy (an over-heap corpus routes
-            # to the zone, not cacheTable) and apply the compression
-            # flip, same as the cold path below.
-            policy = resolve_warehouse_policy(spark, sf_dir)
-            if policy in ("parquet", "hybrid"):
-                _materialize_zone(spark, sf_dir, cache_gold=(policy == "hybrid"))
-                return
-            _maybe_flip_cache_compression(spark, sf_dir)
-            _cache_tables_waved(spark)
-            _memo_set(spark, (sf_dir, "cache", None))
+def _build_layout(spark: SparkSession, sf_dir: str, policy: str) -> None:
+    """Build ``policy``'s layout for sf_dir unless the memo already
+    holds it; any other registration is dropped first. Caller holds the
+    session lock."""
+    if policy == "parquet":
+        _materialize_zone(spark, sf_dir)
         return
-    if cache:
-        policy = resolve_warehouse_policy(spark, sf_dir)
-        if policy in ("parquet", "hybrid"):
-            _materialize_zone(spark, sf_dir, cache_gold=(policy == "hybrid"))
-            return
-        # Forced-cache on an over-heap corpus: cache compressed (the
-        # measured 256× operating point), on THIS path too — the
-        # driver's registry queries never call materialize_warehouse.
-        _maybe_flip_cache_compression(spark, sf_dir)
+    memo = _memo_get(spark)
+    if memo == (sf_dir, "cache", None):
+        return
     if memo is not None:
         spark.catalog.clearCache()
     register_base_views(spark, sf_dir)
@@ -592,9 +568,8 @@ def _register_star_views_locked(
     for wave in _REGISTER_WAVES:
         with ThreadPoolExecutor(len(wave)) as ex:
             list(ex.map(_create, wave))
-    if cache:
-        _cache_tables_waved(spark)
-    _memo_set(spark, (sf_dir, "cache" if cache else "views", None))
+    _cache_tables_waved(spark)
+    _memo_set(spark, (sf_dir, "cache", None))
 
 
 def _cache_tables_waved(spark: SparkSession) -> None:
@@ -620,7 +595,7 @@ def _cache_tables_waved(spark: SparkSession) -> None:
             list(ex.map(spark.catalog.cacheTable, ts))
 
 
-# Warehouse inputs for the auto-policy size probe: complaints_raw
+# Warehouse inputs for the layout size probe: complaints_raw
 # derives from lineitem, listings_raw from customer (model/fixtures.py).
 _POLICY_PROBE_INPUTS = ("lineitem.parquet", "customer.parquet")
 
@@ -665,7 +640,7 @@ def _uncompressed_parquet_bytes(path: str) -> int:
         return 2 * os.path.getsize(path)
 
 
-_PROBE_CACHE: dict[object, tuple[tuple, int | None]] = {}
+_PROBE_CACHE: dict[str, tuple[tuple, int | None]] = {}
 
 
 def _probe_fingerprint(sf_dir: str) -> tuple:
@@ -673,7 +648,7 @@ def _probe_fingerprint(sf_dir: str) -> tuple:
     sweep, far cheaper than the footer reads it guards. Keys the probe
     memo so a corpus replaced or still being written at the SAME path
     (e.g. an in-place replication) re-probes instead of serving a
-    stale byte count into the policy/compression decisions."""
+    stale byte count into the layout decision."""
     fp: list[tuple] = []
     for name in _POLICY_PROBE_INPUTS:
         p = os.path.join(sf_dir, name)
@@ -692,43 +667,36 @@ def _probe_fingerprint(sf_dir: str) -> tuple:
     return tuple(fp)
 
 
-def _hadoop_probe(spark: SparkSession, sf_dir: str) -> tuple[tuple, int] | None:
+def _hadoop_probe(spark: SparkSession, sf_dir: str) -> int | None:
     """Size the probe inputs through Spark's own Hadoop FileSystem —
     the path OS-level ``os.stat`` can't see: ``file:``/``hdfs:``/
-    ``s3a:`` URIs and anything else the session can read. Returns
-    ``(fingerprint, disk_bytes)`` or None when the inputs don't exist
-    there either (or no Hadoop FS handles the scheme). Driver-side
-    metadata calls only (getContentSummary = a listing, bounded to the
-    two probe inputs and memoized by the caller); no Spark job."""
+    ``s3a:`` URIs and anything else the session can read. Returns the
+    on-disk bytes, or None when the inputs don't exist there either (or
+    no Hadoop FS handles the scheme). Driver-side metadata calls only
+    (getContentSummary = a listing of the two probe inputs); no Spark
+    job."""
     try:
         jvm = spark.sparkContext._jvm
         hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        fp: list[tuple] = []
         total = 0
         for name in _POLICY_PROBE_INPUTS:
             path = jvm.org.apache.hadoop.fs.Path(sf_dir.rstrip("/") + "/" + name)
             fs = path.getFileSystem(hconf)
             if not fs.exists(path):
                 return None
-            st = fs.getFileStatus(path)
-            cs = fs.getContentSummary(path)
-            fp.append(
-                (name, cs.getLength(), cs.getFileCount(), st.getModificationTime())
-            )
-            total += cs.getLength()
-        return tuple(fp), total
+            total += fs.getContentSummary(path).getLength()
+        return total
     except Exception:
         return None
 
 
-def _probe_input_bytes(
-    sf_dir: str, spark: SparkSession | None = None, fresh: bool = False
-) -> int | None:
+def _probe_input_bytes(sf_dir: str, spark: SparkSession | None = None) -> int | None:
     """UNCOMPRESSED bytes of the warehouse's fixture inputs, from
     parquet footers — a driver-side metadata stat, no Spark job. For
     multi-part directories, footers of the first ``_PROBE_SAMPLE_PARTS``
     parts are read and scaled by total disk bytes (replicated parts are
-    homogeneous).
+    homogeneous). Memoized per sf_dir under a (size, mtime) fingerprint
+    of the input files, so a corpus rewritten in place is re-probed.
 
     When the inputs aren't local stat-able paths and ``spark`` is
     given, the probe falls through to Spark's Hadoop FileSystem
@@ -738,50 +706,14 @@ def _probe_input_bytes(
     so the uncompressed estimate is 2× the on-disk bytes: the same
     conservative multiplier as the unreadable-footer fallback
     (over-predicting flips to the bounded-memory parquet zone early,
-    never evicts late). Returns None only when NEITHER probe can see
-    the inputs; ``resolve_warehouse_policy`` then picks the bounded
-    direction.
-
-    Memoized per sf_dir under a (size, mtime) fingerprint of the
-    input files — the policy and the compression decision both probe,
-    and a query-path registration must not pay repeated footer reads,
-    but a corpus rewritten in place must not be served a stale figure.
-    The remote route memoizes under a TTL instead (see inline comment:
-    the remote fingerprint is itself a listing, and the remote figure
-    is a pure function of that fingerprint, so within the TTL nothing
-    is lost but change-detection latency). Note: the remote
-    fingerprint's modtime is the top-level dir's, which S3A reports
-    as 0 — the TTL, not the modtime, is what bounds staleness there."""
+    never evicts late). That route lists the inputs on every call —
+    layout decisions happen once per registration, never per query.
+    Returns None only when NEITHER probe can see the inputs;
+    ``resolve_warehouse_policy`` then picks the bounded direction."""
     fp = _probe_fingerprint(sf_dir)
-    local_missing = any(size < 0 for _, size, _ in fp)
-    if local_missing and spark is not None:
-        # The remote fingerprint ITSELF costs a recursive listing
-        # (getContentSummary), so fingerprint-keyed memoization alone
-        # would still list S3 on every policy/compression consult. The
-        # derived figure is a pure function of the fingerprint (2×
-        # total length), so re-fingerprinting can only change the
-        # answer when the corpus bytes changed — a TTL memo that skips
-        # the listing entirely for SPARK_GRAFT_HADOOP_PROBE_TTL_S
-        # (default 60s) trades at most TTL seconds of staleness for
-        # zero remote listings on the hot query path. TTL=0 disables
-        # the time shortcut (every call re-lists and re-derives),
-        # which the in-place-rewrite pin uses.
-        key = ("hadoop", sf_dir)
-        hit = _PROBE_CACHE.get(key)
-        now = time.monotonic()
-        try:
-            ttl = float(os.environ.get("SPARK_GRAFT_HADOOP_PROBE_TTL_S", "60"))
-        except ValueError:  # malformed env value degrades to default
-            ttl = 60.0
-        # fresh=True bypasses the TTL shortcut (layout-FLIP decisions
-        # must not rest on a stale figure — see materialize_warehouse);
-        # the fresh listing still refreshes the memo for later callers.
-        if not fresh and hit is not None and len(hit) == 3 and now - hit[2] < ttl:
-            return hit[1]
-        h = _hadoop_probe(spark, sf_dir)
-        if h is not None:
-            hfp, disk = h
-            _PROBE_CACHE[key] = (hfp, 2 * disk, now)
+    if spark is not None and any(size < 0 for _, size, _ in fp):
+        disk = _hadoop_probe(spark, sf_dir)
+        if disk is not None:
             return 2 * disk
     hit = _PROBE_CACHE.get(sf_dir)
     if hit is None or hit[0] != fp:
@@ -822,100 +754,34 @@ def _heap_bytes(spark: SparkSession) -> int:
         return 1 << 30
 
 
-def _maybe_flip_cache_compression(spark: SparkSession, sf_dir: str) -> None:
-    """Auto cache-compression (same probe as the policy): the engine
-    session defaults compression OFF (encode CPU loses to space saved
-    while the warehouse fits — session.py). When the cache policy is
-    about to cache a corpus the probe says won't fit uncompressed,
-    flip compression on first — the measured 256× operating point for
-    the cache policy — unless ``SPARK_GRAFT_CACHE_COMPRESS`` pins it.
-    Shared by every caching route (register_star_views cold path,
-    views→cache upgrade, materialize_warehouse): cacheTable bakes the
-    compression flag into the InMemoryRelation at CREATE time, so if a
-    prior call already cached uncompressed, the existing cache is
-    dropped so the caller's re-registration caches compressed."""
-    if os.environ.get("SPARK_GRAFT_CACHE_COMPRESS") is not None:
-        return
+def resolve_warehouse_policy(spark: SparkSession, sf_dir: str) -> str:
+    """Pick the warehouse layout from one cheap probe: ``cache`` while
+    the projected cache (UNCOMPRESSED input bytes from parquet footers
+    × ``_CACHE_EXPANSION``) fits the JVM heap, ``parquet`` once it does
+    not. Non-local paths are sized through Spark's Hadoop FileSystem
+    (see ``_probe_input_bytes``); a corpus NEITHER probe can see
+    resolves ``parquet`` — the bounded-memory direction (the worst
+    case of guessing parquet is a slower first build, the worst case
+    of guessing cache is heap exhaustion)."""
     n = _probe_input_bytes(sf_dir, spark)
-    if n is None or n * _CACHE_EXPANSION <= _heap_bytes(spark):
-        return
-    ckey = "spark.sql.inMemoryColumnarStorage.compressed"
-    if spark.conf.get(ckey, "true") != "true":
-        spark.conf.set(ckey, "true")
-        memo = _memo_get(spark)
-        if memo is not None and memo[1] == "cache":
-            spark.catalog.clearCache()
-            _REGISTERED.pop(id(spark), None)
-
-
-def resolve_warehouse_policy(
-    spark: SparkSession, sf_dir: str, fresh: bool = False
-) -> str:
-    """Pick the materialization policy. ``SPARK_GRAFT_WAREHOUSE_POLICY``
-    is an explicit override (cache | parquet | hybrid); the default
-    ``auto`` mirrors the n-gram dedup auto-selector: one cheap probe
-    (UNCOMPRESSED input bytes from parquet footers × measured
-    expansion vs the JVM heap) picks
-    cache while the derived warehouse fits comfortably, parquet once
-    the projected cache would contend with execution memory. Non-local
-    paths are sized through Spark's Hadoop FileSystem (see
-    ``_probe_input_bytes``), so a readable corpus is never "unknown";
-    a corpus NEITHER probe can see resolves ``parquet`` — the bounded-
-    memory direction, consistent with every other fallback in this
-    feature (an unprobeable corpus is exactly the one that must not be
-    speculatively cached whole; the worst case of guessing parquet is
-    a slower first build, the worst case of guessing cache is heap
-    exhaustion at 100 TB).
-
-    ``hybrid`` is deliberately NOT an auto outcome (round-11 decision,
-    VERDICT r10 #5): the measurement matrix gives it no operating
-    window — at 128× its build (139.4s median,
-    measurements/wh_policy_x128.jsonl) loses to cache/nocomp (103.4s,
-    later 58.0s under the round-9 protocol) and at 256× the parquet
-    zone wins outright; its hypothetical window (heap fits the cached
-    GOLD tables but not the full chain) sits between measured
-    operating points and was never observed to win. It remains a
-    manual-only diagnostic via the env override — useful for
-    isolating whether a regression lives in the staging write or the
-    gold cache — until a measurement shows a window where it beats
-    both neighbors."""
-    policy = os.environ.get("SPARK_GRAFT_WAREHOUSE_POLICY", "auto")
-    if policy == "auto":
-        # keyword only on the fresh path: tests stub _probe_input_bytes
-        # with (sf, spark) signatures, and the steady-state call shape
-        # must keep honoring those stubs
-        n = (
-            _probe_input_bytes(sf_dir, spark, fresh=True)
-            if fresh
-            else _probe_input_bytes(sf_dir, spark)
-        )
-        if n is None:
-            return "parquet"
-        return "cache" if n * _CACHE_EXPANSION <= _heap_bytes(spark) else "parquet"
-    if policy not in ("cache", "parquet", "hybrid"):
-        raise ValueError(
-            f"SPARK_GRAFT_WAREHOUSE_POLICY={policy!r}: expected "
-            "auto | cache | parquet | hybrid"
-        )
-    return policy
+    if n is None or n * _CACHE_EXPANSION > _heap_bytes(spark):
+        return "parquet"
+    return "cache"
 
 
 def materialize_warehouse(spark: SparkSession, sf_dir: str) -> None:
-    """Materialize the derived warehouse. Policy is selected by
-    ``resolve_warehouse_policy`` (auto by default) and may be pinned via
-    ``SPARK_GRAFT_WAREHOUSE_POLICY``:
+    """Materialize the derived warehouse in the layout
+    ``resolve_warehouse_policy`` picks:
 
-    - ``cache`` (default): in-memory columnar cache of the whole chain
-      (raw + staging + dims + facts), materialized by driving one count
+    - ``cache``: in-memory columnar cache of the whole chain (raw +
+      staging + dims + facts), materialized by driving one count
       through each terminal table — the two fact chains and dim_date
       run as CONCURRENT Spark jobs (threads), so the 311 and Airbnb
       pipelines overlap on the executor pool instead of serializing
       (measured 16.6s → 10.5s at sf0.1 on local[32]). Safe under
       concurrency: cached RDD blocks are computed once behind
       BlockManager's per-block locks, so shared upstreams (staging
-      tables) are never built twice. On a cluster this is the same
-      pattern as submitting independent ETL stages into one scheduler
-      pool.
+      tables) are never built twice.
 
     - ``parquet``: write-through medallion zone — staging, dims and
       facts are written to local parquet
@@ -923,82 +789,43 @@ def materialize_warehouse(spark: SparkSession, sf_dir: str) -> None:
       ``/tmp/spark_graft_warehouse/<sf-basename>_<pathhash>_pid<pid>``,
       removed at exit) with facts hive-partitioned for pruning/DPP
       (see ``_ZONE_FACT_PARTITIONS``), and the views are repointed at
-      the files; nothing stays in the JVM cache. This is
-      the literal analog of the reference's S3 raw/staging/gold zones
-      and the operating point for corpora whose cache-fill saturates a
-      single JVM's memory bandwidth (the 256× warehouse_build wall —
-      see README §Measured): parquet-snappy encode is cheaper than the
-      in-memory columnar dict/RLE encode on string-heavy rows, the
-      zone doesn't compete with execution memory, and re-reads are
-      column-pruned scans through the OS page cache.
+      the files; nothing stays in the JVM cache. This is the literal
+      analog of the reference's S3 raw/staging/gold zones and the
+      operating point once the cache would contend with execution
+      memory: the zone doesn't compete for heap, and re-reads are
+      column-pruned scans through the OS page cache. The raw level is
+      cached TRANSIENTLY while staging derives from it (Catalyst's
+      alias substitution otherwise re-derives the lat/lon
+      string-construction chain per filter conjunct, measured 6×).
 
-    - ``hybrid``: parquet staging zone + in-memory gold (dims + facts
-      cached): pays the parquet write for the string-heavy staging
-      level only, keeps query-facing tables in columnar cache.
-
-    The raw level is cached TRANSIENTLY during the staging build in
-    the parquet/hybrid policies and unpersisted as soon as staging is
-    materialized — raw must be materialized while staging derives from
-    it (Catalyst's alias substitution otherwise re-derives the
-    lat/lon string-construction chain per filter conjunct, measured
-    6×), but nothing downstream of staging ever reads it again.
-
-    Unlike ``register_star_views``, this entry point honors a POLICY
-    CHANGE mid-session: if the memoized layout differs from the
-    resolved (sf_dir, policy, zone) in any component, the old layout is
-    dropped (clearCache) and rebuilt.
-
-    Flip freshness (r13, VERDICT r12 #7): a LAYOUT FLIP of an
-    already-materialized warehouse (zone↔cache) must not rest on a
-    TTL-stale remote probe figure — a corpus replaced in place within
-    the TTL window would otherwise read as its old size, and a
-    stale-small figure could drop a parquet zone to cache an over-heap
-    corpus. When the resolved policy's layout family differs from the
-    memoized one for the SAME sf_dir, the policy is re-resolved with
-    the TTL bypassed (one extra listing, only on flips); first
-    materializations and steady-state calls keep the memoized probe.
-    Thread-safe per session (same lock as register_star_views)."""
+    Unlike ``register_star_views``, this entry point probes on every
+    call and honors a layout change mid-session: if the memoized
+    (sf_dir, policy, zone) differs in any component, the old layout is
+    dropped (clearCache) and rebuilt. Thread-safe per session (same
+    lock as register_star_views)."""
     with _session_lock(spark):
-        _materialize_warehouse_locked(spark, sf_dir)
+        policy = resolve_warehouse_policy(spark, sf_dir)
+        _build_layout(spark, sf_dir, policy)
+        if policy == "parquet":
+            return
+        from concurrent.futures import ThreadPoolExecutor
 
-
-def _materialize_warehouse_locked(spark: SparkSession, sf_dir: str) -> None:
-    policy = resolve_warehouse_policy(spark, sf_dir)
-    memo = _memo_get(spark)
-    if memo is not None and memo[0] == sf_dir:
-        want = policy if policy in ("parquet", "hybrid") else "cache"
-        have = "cache" if memo[1] in ("views", "cache") else memo[1]
-        if want != have:  # layout flip → decide on a FRESH figure
-            policy = resolve_warehouse_policy(spark, sf_dir, fresh=True)
-    if policy in ("parquet", "hybrid"):
-        _materialize_zone(spark, sf_dir, cache_gold=(policy == "hybrid"))
-        return
-    from concurrent.futures import ThreadPoolExecutor
-
-    _maybe_flip_cache_compression(spark, sf_dir)
-
-    key = id(spark)
-    memo = _memo_get(spark)
-    if memo is not None and not (memo[0] == sf_dir and memo[1] in ("views", "cache")):
-        spark.catalog.clearCache()  # zone layout or other sf_dir → rebuild
-        _REGISTERED.pop(key, None)
-    register_star_views(spark, sf_dir)  # handles views→cache upgrade in place
-    # Terminals include the 8 gold dims, not just the facts + dim_date:
-    # a fact's first scan fills its dims' caches INLINE and mostly
-    # serially (measured: fact_311 fill 3.7s cold-dims vs 1.4s
-    # prefilled, the 4 dim fills 2.5s serial / ~1.1s concurrent — r12
-    # profile). Racing the dim counts against the fact counts is safe
-    # and never duplicates work: cached blocks are computed once behind
-    # BlockManager's per-block locks, so the fact job blocks on (then
-    # reads) whichever dim blocks the dim jobs are already computing.
-    terminals = (
-        "fact_311_complaint", "fact_airbnb_listings", "dim_date",
-        "dim_311_agency", "dim_311_borough", "dim_311_location",
-        "dim_311_complaint", "dim_airbnb_location", "dim_airbnb_property",
-        "dim_airbnb_host",
-    )
-    with ThreadPoolExecutor(len(terminals)) as ex:
-        list(ex.map(lambda t: spark.table(t).count(), terminals))
+        # Terminals include the 8 gold dims, not just the facts + dim_date:
+        # a fact's first scan fills its dims' caches INLINE and mostly
+        # serially (measured: fact_311 fill 3.7s cold-dims vs 1.4s
+        # prefilled, the 4 dim fills 2.5s serial / ~1.1s concurrent — r12
+        # profile). Racing the dim counts against the fact counts is safe
+        # and never duplicates work: cached blocks are computed once behind
+        # BlockManager's per-block locks, so the fact job blocks on (then
+        # reads) whichever dim blocks the dim jobs are already computing.
+        terminals = (
+            "fact_311_complaint", "fact_airbnb_listings", "dim_date",
+            "dim_311_agency", "dim_311_borough", "dim_311_location",
+            "dim_311_complaint", "dim_airbnb_location", "dim_airbnb_property",
+            "dim_airbnb_host",
+        )
+        with ThreadPoolExecutor(len(terminals)) as ex:
+            list(ex.map(lambda t: spark.table(t).count(), terminals))
 
 
 _RAW_TABLES = ("complaints_raw", "listings_raw")
@@ -1060,27 +887,19 @@ def _zone_dir(sf_dir: str) -> str:
     return process_scratch_dir("/tmp/spark_graft_warehouse", f"{base}_{tag}")
 
 
-def _materialize_zone(
-    spark: SparkSession, sf_dir: str, cache_gold: bool
-) -> None:
+def _materialize_zone(spark: SparkSession, sf_dir: str) -> None:
     """Write-through parquet materialization (see materialize_warehouse
-    docstring). Sequencing matters: temp views capture their ANALYZED
-    plan at CREATE time, so after each zone level is written the
-    DOWNSTREAM views must be re-created to resolve against the
-    repointed level — repointing staging alone would leave the dim/fact
-    views still bound to the original staging plan."""
-    with _session_lock(spark):
-        _materialize_zone_locked(spark, sf_dir, cache_gold)
-
-
-def _materialize_zone_locked(
-    spark: SparkSession, sf_dir: str, cache_gold: bool
-) -> None:
+    docstring); caller holds the session lock. Sequencing matters: temp
+    views capture their ANALYZED plan at CREATE time, so after each
+    zone level is written the DOWNSTREAM views must be re-created to
+    resolve against the repointed level — repointing staging alone
+    would leave the dim/fact views still bound to the original staging
+    plan."""
     from concurrent.futures import ThreadPoolExecutor
 
     key = id(spark)
     zone = _zone_dir(sf_dir)
-    want = (sf_dir, "hybrid" if cache_gold else "parquet", zone)
+    want = (sf_dir, "parquet", zone)
     memo = _memo_get(spark)
     if memo == want:
         return
@@ -1142,31 +961,23 @@ def _materialize_zone_locked(
     gold = [t for t in STAR_TABLES if t not in _RAW_TABLES + _STAGING_TABLES]
     for t in gold:  # re-resolve against the parquet staging level
         _create(t)
-    if cache_gold:
-        for t in gold:
-            spark.catalog.cacheTable(t)
-        terminals = ("fact_311_complaint", "fact_airbnb_listings", "dim_date")
-        with ThreadPoolExecutor(len(terminals)) as ex:
-            list(ex.map(lambda t: spark.table(t).count(), terminals))
-    else:
-        # Lift the parallel-discovery threshold around the partitioned
-        # fact re-reads: below it the driver schedules a one-task-per-
-        # directory Spark job to list partition dirs (measured 2,027
-        # tasks / ~15s of pure task overhead at daily grain) where a
-        # sequential local-fs listing is sub-second. Set/restore ONCE
-        # around the pool — the conf is session-global, and doing it
-        # per-thread let one writer capture another's lifted value as
-        # "prev" and restore 100000 permanently. This tunes only the
-        # build-time read; the restored default governs user reads (on
-        # an object store the distributed listing wins again).
-        threshold_key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-        prev = spark.conf.get(threshold_key)
-        spark.conf.set(threshold_key, "100000")
-        try:
-            with ThreadPoolExecutor(8) as ex:
-                list(ex.map(_write_and_repoint, gold))
-        finally:
-            spark.conf.set(threshold_key, prev)
+    # Lift the parallel-discovery threshold around the partitioned fact
+    # re-reads: below it the driver schedules a one-task-per-directory
+    # Spark job to list partition dirs (measured 2,027 tasks / ~15s of
+    # pure task overhead at daily grain) where a sequential local-fs
+    # listing is sub-second. Set/restore ONCE around the pool — the conf
+    # is session-global, and doing it per-thread let one writer capture
+    # another's lifted value as "prev" and restore 100000 permanently.
+    # This tunes only the build-time read; the restored default governs
+    # user reads (on an object store the distributed listing wins again).
+    threshold_key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    prev = spark.conf.get(threshold_key)
+    spark.conf.set(threshold_key, "100000")
+    try:
+        with ThreadPoolExecutor(8) as ex:
+            list(ex.map(_write_and_repoint, gold))
+    finally:
+        spark.conf.set(threshold_key, prev)
     _memo_set(spark, want)
 
 

@@ -114,15 +114,10 @@ def get_spark(
         # encoding of high-cardinality string columns; with ample
         # executor memory the encode CPU outweighs the space saved
         # (measured: warehouse materialization 23s → 13s at sf0.1).
-        # SPARK_GRAFT_CACHE_COMPRESS=true re-enables it for memory-
-        # tight runs — at a 128×-replicated corpus the uncompressed
-        # cache starved execution memory (UNABLE_TO_ACQUIRE) in a 16g
-        # heap; compressed cache + a bigger heap is that scale's
-        # operating point.
-        .config(
-            "spark.sql.inMemoryColumnarStorage.compressed",
-            _env_bool("SPARK_GRAFT_CACHE_COMPRESS", "false"),
-        )
+        # The warehouse size probe (model/star.resolve_warehouse_policy)
+        # picks the cache layout only when the UNCOMPRESSED cache fits
+        # the heap; larger corpora get the parquet zone instead.
+        .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
         # ANSI off: the engine's cleaning layer relies on null-on-error
         # cast semantics (reference TRY_CAST behavior); explicit
         # try_* functions are still used where intent matters.

@@ -164,15 +164,6 @@ def read_run_manifest(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.json(path)
 
 
-def overwrite_table(df: DataFrame, name: str) -> None:
-    """Truncate-and-reload staging semantics (K6/K7: TRUNCATE + COPY →
-    overwrite). With a real catalog this is saveAsTable(overwrite); in
-    the session-local engine it replaces the temp view. (The unused
-    SparkSession parameter is gone — the view registers on the frame's
-    own session.)"""
-    df.createOrReplaceTempView(name)
-
-
 # ---- Z-order layout + compaction -----------------------------------
 
 

@@ -3,7 +3,7 @@
 Mimics bench.py's protocol (same session factory, same warm-up, same
 teardown between trials) but times each phase separately:
 
-  policy    — resolve_warehouse_policy + compression consult
+  policy    — resolve_warehouse_policy (the size probe)
   register  — view CREATEs (wave-parallel plan analysis)
   <table>   — first .count() per chain table, in dependency order,
               so each figure is that table's own cache-fill cost

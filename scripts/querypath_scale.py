@@ -1,12 +1,12 @@
 """Measure the POLICY-AWARE QUERY PATH at scale (round-10 follow-up to
 VERDICT r9 #2): the driver's registry queries never call
 materialize_warehouse — they reach the warehouse through
-register_star_views, which as of round 10 resolves the auto policy on
-the first caching registration and routes parquet/hybrid corpora to the
-zone build. This script validates that path at the scale where it
-matters: a fresh JVM runs golden queries DIRECTLY (exactly what the
-driver does), so the first query pays the policy-resolved build and the
-rest hit the materialized layout.
+register_star_views, which resolves the layout on the first
+registration and routes parquet corpora to the zone build. This script
+validates that path at the scale where it matters: a fresh JVM runs
+golden queries DIRECTLY (exactly what the driver does), so the first
+query pays the policy-resolved build and the rest hit the materialized
+layout.
 
 Reports, as one JSON line:
 - resolved_policy (the probe's decision — parquet expected at 256×/64g)
@@ -70,15 +70,7 @@ def child(sf_dir: str) -> None:
         steady[q] = ts
     print(json.dumps({
         "sf_dir": sf_dir,
-        "policy_env": os.environ.get("SPARK_GRAFT_WAREHOUSE_POLICY", "auto"),
         "resolved_policy": resolved,
-        # The auto compression flip is part of the query path too
-        # (round-10 tail fix): a forced cache policy on an over-heap
-        # corpus must show "true" here, or the cache is running
-        # uncompressed into the eviction wall.
-        "cache_compressed": spark.conf.get(
-            "spark.sql.inMemoryColumnarStorage.compressed", "true"
-        ),
         "memo_layout": memo and [memo[0], memo[1], bool(memo[2])],
         "driver_mem": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
         "first_query_incl_build_s": first,

@@ -3,16 +3,18 @@
 (α≈1.36 across 64×→256×; named cause: the 3× in-memory cache-fill of
 the string-heavy staging chain saturating single-JVM memory bandwidth).
 
-Four configs, each in a FRESH subprocess (its own JVM, so no cache or
+Three configs, each in a FRESH subprocess (its own JVM, so no cache or
 heap state leaks between configs):
 
-- base    : policy=cache,   cache compression ON (the documented ≥128×
-            operating point)
-- nocomp  : policy=cache,   cache compression OFF (lever b — trade
-            heap for encode CPU)
-- parquet : policy=parquet  (lever c — write-through medallion zone,
-            no resident JVM cache)
-- hybrid  : policy=hybrid   (parquet staging + cached gold)
+- cache   : in-memory columnar cache of the whole chain (uncompressed)
+- parquet : write-through medallion zone, no resident JVM cache
+- auto    : whichever layout the size probe picks
+
+The package has no layout option: the child forces ``cache`` or
+``parquet`` by replacing ``star.resolve_warehouse_policy`` in its own
+process. Runs of the retired ``base``/``nocomp``/``hybrid`` configs
+(cache compression, parquet staging + cached gold) stay recorded in
+``measurements/wh_policy_x*.jsonl``.
 
 Per config: N build trials with FULL teardown (registration memo
 popped, cache cleared, zone dir removed — every trial pays the whole
@@ -23,7 +25,7 @@ slower is not a win). One JSON line per config on stdout.
 Usage:
   python scripts/warehouse_policy_scale.py <sf_dir> [configs...]
   SPARK_GRAFT_DRIVER_MEM=48g python scripts/warehouse_policy_scale.py \
-      /tmp/spark_graft_sf_x128 base parquet
+      /tmp/spark_graft_sf_x128 cache parquet
 """
 
 from __future__ import annotations
@@ -39,15 +41,9 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
 
-CONFIGS = {
-    "base": {"SPARK_GRAFT_WAREHOUSE_POLICY": "cache", "SPARK_GRAFT_CACHE_COMPRESS": "true"},
-    "nocomp": {"SPARK_GRAFT_WAREHOUSE_POLICY": "cache", "SPARK_GRAFT_CACHE_COMPRESS": "false"},
-    "parquet": {"SPARK_GRAFT_WAREHOUSE_POLICY": "parquet", "SPARK_GRAFT_CACHE_COMPRESS": "true"},
-    "hybrid": {"SPARK_GRAFT_WAREHOUSE_POLICY": "hybrid", "SPARK_GRAFT_CACHE_COMPRESS": "true"},
-    # Probe-selected policy + probe-selected compression (round-10 auto
-    # path) — the child records which policy the probe actually picked.
-    "auto": {"SPARK_GRAFT_WAREHOUSE_POLICY": "auto"},
-}
+# Config → forced layout; None keeps the probe's choice (the child
+# records which layout it actually resolved).
+CONFIGS = {"cache": "cache", "parquet": "parquet", "auto": None}
 QUERIES = ("g01_complaints_by_borough_pct", "g07_airbnb_complaint_ratio",
            "g09_quarterly_trend", "op_topk_orders_per_customer")
 TRIALS = 3
@@ -61,6 +57,8 @@ def run_config(sf_dir: str, name: str) -> None:
 
     import __spark_entry__ as entry
 
+    if CONFIGS[name] is not None:
+        star.resolve_warehouse_policy = lambda _spark, _sf, p=CONFIGS[name]: p
     zone = f"/tmp/spark_graft_warehouse/{os.path.basename(os.path.normpath(sf_dir))}"
     # Pin the zone explicitly: the round-10 default is (path-hash, pid)
     # suffixed, so the teardown rmtree below would otherwise miss it.
@@ -98,7 +96,6 @@ def run_config(sf_dir: str, name: str) -> None:
     print(json.dumps({
         "config": name,
         "sf_dir": sf_dir,
-        "env": CONFIGS[name],
         "resolved_policy": star.resolve_warehouse_policy(spark, sf_dir),
         "driver_mem": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
         "build_trials": builds,
@@ -113,10 +110,9 @@ def main() -> int:
     sf_dir = sys.argv[1]
     names = sys.argv[2:] or list(CONFIGS)
     for name in names:
-        env = dict(os.environ, **CONFIGS[name])
         r = subprocess.run(
             [sys.executable, __file__, "--child", sf_dir, name],
-            env=env, cwd=REPO, text=True, capture_output=True,
+            cwd=REPO, text=True, capture_output=True,
         )
         for ln in r.stdout.splitlines():
             if ln.startswith("{"):

@@ -7,7 +7,7 @@ import pytest
 from adi_226_datawarehouse_project_spark.session import _env_bool, get_spark
 
 
-def test_get_spark_returns_existing_session_unchanged(spark, monkeypatch):
+def test_get_spark_returns_existing_session_unchanged(spark):
     """builder.getOrCreate APPLIES every .config to a reused session —
     a second get_spark() call used to silently flip shuffle partitions
     / ANSI / cache compression mid-run on the shared session (the
@@ -18,18 +18,16 @@ def test_get_spark_returns_existing_session_unchanged(spark, monkeypatch):
     prev, cprev = spark.conf.get(key), spark.conf.get(ckey)
     try:
         spark.conf.set(key, "7")
-        # env re-read must not mutate the live session either: force the
-        # env to the OPPOSITE of the current conf before the call.
-        monkeypatch.setenv(
-            "SPARK_GRAFT_CACHE_COMPRESS",
-            "false" if spark.conf.get(ckey) == "true" else "true",
-        )
+        # the opposite of the builder's constant "false", so a re-applied
+        # builder conf would show
+        spark.conf.set(ckey, "true")
         s2 = get_spark(shuffle_partitions=99)
         assert s2 is spark
         assert spark.conf.get(key) == "7"  # not 99, not re-defaulted
-        assert spark.conf.get(ckey) == cprev
+        assert spark.conf.get(ckey) == "true"
     finally:
         spark.conf.set(key, prev)
+        spark.conf.set(ckey, cprev)
 
 
 def test_get_spark_warns_when_explicit_args_ignored(spark):

@@ -1,13 +1,13 @@
-"""Warehouse materialization policies (SPARK_GRAFT_WAREHOUSE_POLICY):
-the cache / parquet / hybrid paths must produce IDENTICAL golden-query
-results — the policy is pure physical strategy (where the derived
-zones live), never semantics. Round 10 additions: the memo is keyed by
-the FULL (sf_dir, policy, zone) layout, so a mid-session env flip
-rebuilds through the PUBLIC API (no private `_REGISTERED` pops — the
-round-9 judge finding); the default policy is `auto` (size-probe vs
-heap, calibrated on the round-9 measurement matrix); and the parquet
-zone hive-partitions the facts (daily date-key for fact_311 → DPP on
-the dim_date goldens; scrape-year for fact_airbnb)."""
+"""Warehouse layouts: the size probe (uncompressed input bytes ×
+_CACHE_EXPANSION vs the heap) picks `cache` or `parquet`, and both
+layouts must produce IDENTICAL golden-query results — the layout is
+pure physical strategy (where the derived zones live), never
+semantics. The memo is keyed by the FULL (sf_dir, policy, zone)
+layout, so a mid-session layout change rebuilds through the PUBLIC
+API (no private `_REGISTERED` pops); the parquet zone hive-partitions
+the facts (daily date-key for fact_311 → DPP on the dim_date goldens;
+scrape-year for fact_airbnb). Tests force a layout by stubbing the
+probe (`_probe_input_bytes`) and the heap (`_heap_bytes`)."""
 
 import glob
 
@@ -22,6 +22,13 @@ GOLDENS = (
     "g07_airbnb_complaint_ratio",
     "g09_quarterly_trend",
 )
+
+
+def _force_layout(monkeypatch, layout):
+    """Stub the probe so resolve_warehouse_policy returns `layout`."""
+    n = 1 if layout == "cache" else 1 << 40
+    monkeypatch.setattr(star, "_probe_input_bytes", lambda _sf, _spark=None: n)
+    monkeypatch.setattr(star, "_heap_bytes", lambda _s: 1 << 30)
 
 
 def _fingerprints(spark):
@@ -39,18 +46,18 @@ def _fingerprints(spark):
 
 
 def test_policy_flip_lifecycle(spark, monkeypatch, tmp_path):
-    """cache → parquet → hybrid → cache, flipped ONLY via the env var +
+    """cache → parquet → cache, flipped ONLY via the probe's answer +
     materialize_warehouse: every flip must rebuild (the old memo keyed
     by sf_dir alone made this a silent no-op) and serve identical
     goldens; the parquet zone must be fact-partitioned and DPP-active."""
     zone = str(tmp_path / "zone")
     monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE_DIR", zone)
-    monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE_POLICY", "cache")
+    _force_layout(monkeypatch, "cache")
     star.materialize_warehouse(spark, SF)
     assert star._REGISTERED[id(spark)] == (SF, "cache", None)
     want = _fingerprints(spark)
 
-    monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE_POLICY", "parquet")
+    _force_layout(monkeypatch, "parquet")
     threshold_key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
     threshold_before = spark.conf.get(threshold_key)
     star.materialize_warehouse(spark, SF)
@@ -73,24 +80,18 @@ def test_policy_flip_lifecycle(spark, monkeypatch, tmp_path):
     plan = g09._jdf.queryExecution().executedPlan().toString()
     assert "dynamicpruning" in plan.lower(), plan
 
-    monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE_POLICY", "hybrid")
-    star.materialize_warehouse(spark, SF)
-    assert star._REGISTERED[id(spark)][1] == "hybrid"
-    assert _fingerprints(spark) == want
-
     # Flip back to cache: leaves no zone-backed views behind (the
     # tmp_path zone is deleted when this test ends).
-    monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE_POLICY", "cache")
+    _force_layout(monkeypatch, "cache")
     star.materialize_warehouse(spark, SF)
     assert star._REGISTERED[id(spark)] == (SF, "cache", None)
     assert _fingerprints(spark) == want
 
 
 def test_auto_policy_matches_measured_operating_points(spark, monkeypatch):
-    """The default `auto` policy must reproduce the round-9 measured
-    table (measurements/wh_policy_x{128,256}.jsonl): cache at ≤128×
-    with the prescribed heaps, parquet at 256×."""
-    monkeypatch.delenv("SPARK_GRAFT_WAREHOUSE_POLICY", raising=False)
+    """The probe rule must reproduce the round-9 measured table
+    (measurements/wh_policy_x{128,256}.jsonl): cache at ≤128× with the
+    prescribed heaps, parquet at 256×."""
     gb = 1 << 30
     # Probe values are UNCOMPRESSED input bytes (round-10: parquet
     # footers, ≈1.35× the disk bytes the round-9 matrix was keyed on).
@@ -108,34 +109,6 @@ def test_auto_policy_matches_measured_operating_points(spark, monkeypatch):
     # the failure mode the feature exists to prevent (VERDICT r10 #2).
     monkeypatch.setattr(star, "_probe_input_bytes", lambda _sf, _spark=None: None)
     assert star.resolve_warehouse_policy(spark, SF) == "parquet"
-    # Explicit env var always overrides the probe.
-    monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE_POLICY", "hybrid")
-    assert star.resolve_warehouse_policy(spark, SF) == "hybrid"
-
-
-def test_forced_cache_policy_auto_enables_compression(spark, monkeypatch):
-    """Forcing policy=cache on a corpus the probe says won't fit
-    uncompressed must flip in-memory cache compression ON (the measured
-    256× cache-policy operating point) — unless SPARK_GRAFT_CACHE_COMPRESS
-    pins it explicitly."""
-    monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE_POLICY", "cache")
-    monkeypatch.delenv("SPARK_GRAFT_CACHE_COMPRESS", raising=False)
-    gb = 1 << 30
-    monkeypatch.setattr(star, "_probe_input_bytes", lambda _sf, _spark=None: 3 * gb)
-    monkeypatch.setattr(star, "_heap_bytes", lambda _s: 16 * gb)
-    key = "spark.sql.inMemoryColumnarStorage.compressed"
-    prev = spark.conf.get(key)
-    try:
-        spark.conf.set(key, "false")
-        star.materialize_warehouse(spark, SF)
-        assert spark.conf.get(key) == "true"
-        # explicit env pin wins: no silent flip
-        spark.conf.set(key, "false")
-        monkeypatch.setenv("SPARK_GRAFT_CACHE_COMPRESS", "false")
-        star.materialize_warehouse(spark, SF)
-        assert spark.conf.get(key) == "false"
-    finally:
-        spark.conf.set(key, prev)
 
 
 def test_probe_reads_real_input_sizes(spark):
@@ -150,11 +123,7 @@ def test_probe_reads_real_input_sizes(spark):
     )
     assert n > disk
     assert star._probe_input_bytes("/nonexistent/sf") is None
-    assert star.resolve_warehouse_policy(spark, SF) in (
-        "cache",
-        "parquet",
-        "hybrid",
-    )
+    assert star.resolve_warehouse_policy(spark, SF) in ("cache", "parquet")
 
 
 def test_probe_is_compression_invariant(tmp_path):
@@ -199,48 +168,6 @@ def test_probe_is_compression_invariant(tmp_path):
     assert unc_dir is not None and unc / 2 <= unc_dir <= unc * 2, (unc, unc_dir)
 
 
-def test_unknown_policy_raises(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE_POLICY", "mystery")
-    with pytest.raises(ValueError, match="mystery"):
-        star.materialize_warehouse(spark, SF)
-
-
-def test_forced_cache_compression_flip_rebuilds_existing_cache(spark, monkeypatch):
-    """Setting the compression conf AFTER an uncompressed cache exists
-    is a no-op for the already-built InMemoryRelations (cacheTable bakes
-    the flag in at CREATE time) — the auto flip must drop that cache and
-    re-cache, or the 256× forced-cache operating point silently runs
-    uncompressed (round-10 review finding)."""
-    monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE_POLICY", "cache")
-    monkeypatch.delenv("SPARK_GRAFT_CACHE_COMPRESS", raising=False)
-    key = "spark.sql.inMemoryColumnarStorage.compressed"
-    prev = spark.conf.get(key)
-    try:
-        spark.conf.set(key, "false")
-        # Seed the query-path registration: an uncompressed cache memo.
-        star._REGISTERED.pop(id(spark), None)
-        spark.catalog.clearCache()
-        star.register_star_views(spark, SF)
-        assert star._REGISTERED[id(spark)][1] == "cache"
-        gb = 1 << 30
-        monkeypatch.setattr(star, "_probe_input_bytes", lambda _sf, _spark=None: 3 * gb)
-        monkeypatch.setattr(star, "_heap_bytes", lambda _s: 16 * gb)
-        recached = []
-        orig = spark.catalog.cacheTable
-        monkeypatch.setattr(
-            spark.catalog,
-            "cacheTable",
-            lambda t: (recached.append(t), orig(t))[1],
-        )
-        star.materialize_warehouse(spark, SF)
-        assert spark.conf.get(key) == "true"
-        assert recached, "existing uncompressed cache was not rebuilt"
-    finally:
-        spark.conf.set(key, prev)
-        spark.catalog.clearCache()
-        star._REGISTERED.pop(id(spark), None)
-
-
 def test_query_path_consults_policy(spark, monkeypatch, tmp_path):
     """The driver's registry queries never call materialize_warehouse —
     register_star_views itself must route a parquet-resolved corpus to
@@ -248,7 +175,6 @@ def test_query_path_consults_policy(spark, monkeypatch, tmp_path):
     the heap can't hold (round-10 review finding)."""
     zone = str(tmp_path / "qzone")
     monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE_DIR", zone)
-    monkeypatch.delenv("SPARK_GRAFT_WAREHOUSE_POLICY", raising=False)
     gb = 1 << 30
     monkeypatch.setattr(star, "_probe_input_bytes", lambda _sf, _spark=None: 4 * gb)
     monkeypatch.setattr(star, "_heap_bytes", lambda _s: 16 * gb)
@@ -260,56 +186,6 @@ def test_query_path_consults_policy(spark, monkeypatch, tmp_path):
         import glob as _glob
 
         assert _glob.glob(f"{zone}/fact_311_complaint/created_date_key=*")
-    finally:
-        spark.catalog.clearCache()
-        star._REGISTERED.pop(id(spark), None)
-
-
-def test_query_path_forced_cache_flips_compression(spark, monkeypatch):
-    """The compression flip must act on the QUERY PATH too: a forced
-    cache policy on an over-heap corpus reaching the warehouse through
-    register_star_views (the driver's route — materialize_warehouse is
-    never called there) must cache compressed, not uncompressed
-    (round-10 second-review finding)."""
-    monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE_POLICY", "cache")
-    monkeypatch.delenv("SPARK_GRAFT_CACHE_COMPRESS", raising=False)
-    gb = 1 << 30
-    monkeypatch.setattr(star, "_probe_input_bytes", lambda _sf, _spark=None: 3 * gb)
-    monkeypatch.setattr(star, "_heap_bytes", lambda _s: 16 * gb)
-    key = "spark.sql.inMemoryColumnarStorage.compressed"
-    prev = spark.conf.get(key)
-    star._REGISTERED.pop(id(spark), None)
-    spark.catalog.clearCache()
-    try:
-        spark.conf.set(key, "false")
-        star.register_star_views(spark, SF)  # cold query-path caching
-        assert spark.conf.get(key) == "true"
-        assert star._REGISTERED[id(spark)][1] == "cache"
-    finally:
-        spark.conf.set(key, prev)
-        spark.catalog.clearCache()
-        star._REGISTERED.pop(id(spark), None)
-
-
-def test_views_to_cache_upgrade_consults_policy(spark, monkeypatch, tmp_path):
-    """register_star_views(cache=False) → register_star_views(cache=True)
-    is the FIRST caching registration for the session: the in-place
-    upgrade branch must consult the policy like the cold path does, so
-    a parquet-resolved corpus routes to the zone instead of cacheTable
-    (round-10 second-review finding)."""
-    zone = str(tmp_path / "uzone")
-    monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE_DIR", zone)
-    monkeypatch.delenv("SPARK_GRAFT_WAREHOUSE_POLICY", raising=False)
-    gb = 1 << 30
-    monkeypatch.setattr(star, "_probe_input_bytes", lambda _sf, _spark=None: 4 * gb)
-    monkeypatch.setattr(star, "_heap_bytes", lambda _s: 16 * gb)
-    star._REGISTERED.pop(id(spark), None)
-    spark.catalog.clearCache()
-    try:
-        star.register_star_views(spark, SF, cache=False)
-        assert star._REGISTERED[id(spark)] == (SF, "views", None)
-        star.register_star_views(spark, SF, cache=True)  # upgrade
-        assert star._REGISTERED[id(spark)] == (SF, "parquet", zone)
     finally:
         spark.catalog.clearCache()
         star._REGISTERED.pop(id(spark), None)
@@ -338,14 +214,11 @@ def test_probe_refreshes_when_inputs_change(tmp_path):
     assert n_big is not None and n_big > 10 * n_small, (n_small, n_big)
 
 
-def test_hadoop_probe_refreshes_when_inputs_change(spark, tmp_path, monkeypatch):
-    """Remote-route twin of test_probe_refreshes_when_inputs_change
-    (VERDICT r11 task 5): a corpus rewritten IN PLACE behind a `file:`
-    URI must re-probe once the TTL memo expires. TTL=0 forces every
-    call through the Hadoop listing (the change-detection path);
-    within a live TTL the memo serves the figure WITHOUT a listing —
-    pinned by feeding it a corpus change it must (by design) not see
-    until expiry."""
+def test_hadoop_probe_refreshes_when_inputs_change(spark, tmp_path):
+    """Remote-route twin of test_probe_refreshes_when_inputs_change: a
+    corpus rewritten IN PLACE behind a `file:` URI must be seen on the
+    very next consult — the Hadoop route lists the inputs every time,
+    so there is no stale figure to serve."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -354,23 +227,41 @@ def test_hadoop_probe_refreshes_when_inputs_change(spark, tmp_path, monkeypatch)
     for name in star._POLICY_PROBE_INPUTS:
         pq.write_table(small, tmp_path / name)
     uri = "file:" + str(tmp_path)
-    monkeypatch.setenv("SPARK_GRAFT_HADOOP_PROBE_TTL_S", "0")
     n_small = star._probe_input_bytes(uri, spark)
     assert n_small is not None and n_small > 0
     for name in star._POLICY_PROBE_INPUTS:
         pq.write_table(big, tmp_path / name)
     n_big = star._probe_input_bytes(uri, spark)
     assert n_big is not None and n_big > 10 * n_small, (n_small, n_big)
-    # With a live TTL the memo answers without re-listing: shrink the
-    # corpus back and the figure must NOT move until expiry.
-    monkeypatch.setenv("SPARK_GRAFT_HADOOP_PROBE_TTL_S", "3600")
-    assert star._probe_input_bytes(uri, spark) == n_big
     for name in star._POLICY_PROBE_INPUTS:
         pq.write_table(small, tmp_path / name)
-    assert star._probe_input_bytes(uri, spark) == n_big
-    # Back to TTL=0: the rewrite is visible again.
-    monkeypatch.setenv("SPARK_GRAFT_HADOOP_PROBE_TTL_S", "0")
     assert star._probe_input_bytes(uri, spark) == n_small
+
+
+def test_query_path_probes_once(spark, monkeypatch):
+    """The remote probe lists the inputs on every consult, so consults
+    must stay off the per-query path: a cold registration probes once,
+    and golden queries served from the memo never probe again."""
+    import __spark_entry__ as entry
+    from adi_226_datawarehouse_project_spark.plans.golden import GOLDEN_QUERIES
+
+    calls = []
+    real = star._probe_input_bytes
+
+    def counting(sf, spark_=None):
+        calls.append(sf)
+        return real(sf, spark_)
+
+    monkeypatch.setattr(star, "_probe_input_bytes", counting)
+    star._REGISTERED.pop(id(spark), None)
+    star._REGISTERED_REFS.pop(id(spark), None)
+    spark.catalog.clearCache()
+    star.register_star_views(spark, SF)
+    qs = entry.queries()
+    assert len(GOLDEN_QUERIES) == 10
+    for g in GOLDEN_QUERIES:
+        qs[g](spark, SF).collect()
+    assert calls == [SF]
 
 
 def test_star_memo_survives_session_id_reuse(spark):
@@ -389,8 +280,8 @@ def test_star_memo_survives_session_id_reuse(spark):
         assert star._memo_get(spark) is None  # stale entry invalidated
         assert key not in star._REGISTERED
         # A fresh registration records a ref to THIS session.
-        star.register_star_views(spark, SF, cache=False)
-        assert star._memo_get(spark) == (SF, "views", None)
+        star.register_star_views(spark, SF)
+        assert star._memo_get(spark) == (SF, "cache", None)
         assert star._REGISTERED_REFS[key]() is spark
     finally:
         star._REGISTERED.pop(key, None)
@@ -402,19 +293,18 @@ def test_star_memo_survives_session_id_reuse(spark):
         spark.catalog.clearCache()
 
 
-def test_non_statable_sf_dir_resolves_bounded(spark, monkeypatch):
+def test_non_statable_sf_dir_resolves_bounded(spark):
     """VERDICT r10 top-next: a corpus NEITHER os.stat nor the Hadoop
     FS can see must resolve `parquet` (bounded memory), not `cache` —
     the unprobeable corpus is precisely the one that must never be
     speculatively cached whole."""
-    monkeypatch.delenv("SPARK_GRAFT_WAREHOUSE_POLICY", raising=False)
     assert (
         star.resolve_warehouse_policy(spark, "/nonexistent/sf_dir_r11")
         == "parquet"
     )
 
 
-def test_hadoop_probe_sizes_file_scheme_uris(spark, monkeypatch):
+def test_hadoop_probe_sizes_file_scheme_uris(spark):
     """A `file:`-scheme sf_dir is invisible to os.stat but readable by
     Spark: the Hadoop-FS probe must size it (2× disk, the conservative
     unreadable-footer multiplier), so "unknown size" disappears for
@@ -422,7 +312,6 @@ def test_hadoop_probe_sizes_file_scheme_uris(spark, monkeypatch):
     exactly like its plain-path twin."""
     import os
 
-    monkeypatch.delenv("SPARK_GRAFT_WAREHOUSE_POLICY", raising=False)
     uri = "file:" + SF
     n = star._probe_input_bytes(uri, spark)
     disk = sum(
@@ -430,71 +319,11 @@ def test_hadoop_probe_sizes_file_scheme_uris(spark, monkeypatch):
     )
     assert n == 2 * disk
     assert star.resolve_warehouse_policy(spark, uri) == "cache"
-    # memoized: the second call serves the cached figure under the
-    # remote fingerprint (length/file-count/modtime)
+    # a repeat consult re-lists and reports the same figure
     assert star._probe_input_bytes(uri, spark) == n
     # without a session to reach the Hadoop FS, the local probe alone
     # still (correctly) reports unknown
     assert star._probe_input_bytes(uri) is None
-
-
-def test_ttl_stale_figure_cannot_flip_materialized_zone(spark, monkeypatch):
-    """r13 audit pin (VERDICT r12 #7): a layout FLIP of an
-    already-materialized warehouse must not rest on a TTL-stale remote
-    probe figure. Fixture: the memo says a parquet zone is live for a
-    remote-only corpus; the TTL memo still holds a stale SMALL figure
-    (says: fits in cache) while a fresh listing reports an over-heap
-    corpus. materialize_warehouse must re-probe FRESH on the flip
-    decision and keep the zone — caching would blow the heap the zone
-    exists to protect."""
-    import time as _time
-
-    gb = 1 << 30
-    sf = "/definitely/not/a/local/path/sfX"  # local probe misses → hadoop route
-    monkeypatch.delenv("SPARK_GRAFT_WAREHOUSE_POLICY", raising=False)
-    monkeypatch.setattr(star, "_heap_bytes", lambda _s: 16 * gb)
-
-    # stale TTL entry: tiny corpus (auto → cache); fresh listing: huge
-    monkeypatch.setitem(
-        star._PROBE_CACHE, ("hadoop", sf), ((("x", 1, 1, 0),), 1 * gb // 64, _time.monotonic())
-    )
-    fresh_calls = []
-
-    def fake_hadoop_probe(_spark, _sf):
-        fresh_calls.append(_sf)
-        return ((("x", 1, 1, 0),), 8 * gb)  # 2x disk = 16g unc, x21 >> heap
-
-    monkeypatch.setattr(star, "_hadoop_probe", fake_hadoop_probe)
-
-    # sanity: the stale figure really does mis-resolve to cache
-    assert star.resolve_warehouse_policy(spark, sf) == "cache"
-    assert fresh_calls == []  # TTL served it without a listing
-
-    # an already-materialized zone for the SAME sf_dir
-    saved = star._memo_get(spark)
-    zone_calls = []
-    monkeypatch.setattr(
-        star,
-        "_materialize_zone",
-        lambda _s, _sf, cache_gold: zone_calls.append(cache_gold),
-    )
-    cleared = []
-    monkeypatch.setattr(
-        spark.catalog, "clearCache", lambda: cleared.append(1), raising=False
-    )
-    try:
-        star._memo_set(spark, (sf, "parquet", "/tmp/fake_zone"))
-        star.materialize_warehouse(spark, sf)
-    finally:
-        if saved is not None:
-            star._memo_set(spark, saved)
-        else:
-            star._REGISTERED.pop(id(spark), None)
-            star._REGISTERED_REFS.pop(id(spark), None)
-    # the flip decision re-listed (fresh) and stayed on the zone:
-    assert fresh_calls == [sf]
-    assert zone_calls == [False]  # parquet zone kept (cache_gold=False)
-    assert cleared == []  # never dropped the zone registration
 
 
 def test_concurrent_first_use_registration_runs_once(spark, monkeypatch):
