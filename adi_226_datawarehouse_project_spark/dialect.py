@@ -10,7 +10,7 @@ common ANSI subset both engines accept.
 Conventions enforced for oracle-comparability:
 - every numeric output column is BIGINT or DOUBLE (never DECIMAL/
   HUGEINT: DuckDB SUM(int)->HUGEINT and Spark decimal-literal division
-  both break schema parity) — use :func:`sum_bigint` / ``as_double``;
+  both break schema parity);
 - timestamps are compared after CAST to STRING or DATE where feasible;
 - day_of_week follows the Redshift convention (0=Sunday..6=Saturday,
   reference `nyc_hybrid_etl_pipeline.py:94-95`).
@@ -136,12 +136,3 @@ def hash_key(dialect: str, *parts: str) -> str:
             f"CAST(conv(substr(md5(concat_ws('|', {joined})), 1, 15), 16, 10) AS BIGINT)"
         )
     return f"CAST('0x' || substr(md5(concat_ws('|', {joined})), 1, 15) AS BIGINT)"
-
-
-def sum_bigint(dialect: str, expr: str) -> str:
-    """SUM over integers with BIGINT (not HUGEINT) output."""
-    return f"cast(sum({expr}) as bigint)"
-
-
-def as_double(expr: str) -> str:
-    return f"cast({expr} as double)"

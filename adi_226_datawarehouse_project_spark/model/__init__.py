@@ -1,3 +1,3 @@
-from .star import STAR_TABLES, oracle_with_chain, register_star_views, star_sql
+from .star import STAR_TABLES, oracle_with_chain, register_star_views
 
-__all__ = ["STAR_TABLES", "oracle_with_chain", "register_star_views", "star_sql"]
+__all__ = ["STAR_TABLES", "oracle_with_chain", "register_star_views"]

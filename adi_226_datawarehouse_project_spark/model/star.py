@@ -378,10 +378,6 @@ STAR_TABLES: dict[str, Callable[[str], str]] = {
 }
 
 
-def star_sql(d: str, name: str) -> str:
-    return STAR_TABLES[name](d)
-
-
 # One registration per session, memoized by the FULL resolved layout
 # (sf_dir, policy-label, zone-dir): re-creating cached views would
 # silently drop their cache, while a memo keyed by sf_dir alone made a

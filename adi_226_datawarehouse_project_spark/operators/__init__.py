@@ -18,20 +18,17 @@ from .similarity import (
     tune_ivf_probes,
     tune_srp_bands,
 )
-from .sketches import build_sketches, heavy_hitters, merge_sketches
 from .upsert import incremental_upsert
 from .urls import blocklist_filter, normalize_url, url_dedup
 
 __all__ = [
     "apply_cdc",
     "blocklist_filter",
-    "build_sketches",
     "cosine",
     "cosine_self_topk",
     "dedup_exact",
     "dsir_select",
     "embedding_near_dup_pairs",
-    "heavy_hitters",
     "importance_weights",
     "incremental_upsert",
     "ivf_topk",
@@ -39,7 +36,6 @@ __all__ = [
     "lsh_bucket_topk",
     "tune_ivf_probes",
     "tune_srp_bands",
-    "merge_sketches",
     "minhash_near_dup_pairs",
     "minhash_signatures",
     "ngram_jaccard_pairs",

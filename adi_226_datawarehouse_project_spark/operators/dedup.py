@@ -665,102 +665,10 @@ def minhash_index(
     - **signature sidecar** ``(id, signature)`` — re-attached only to
       candidate pairs for estimator scoring, never shuffled wholesale.
 
-    Write both with ``write_parquet`` (bucketed on the join keys at
-    scale) and hand them to :func:`incremental_near_dup_filter` as new
-    batches arrive; append the surviving batch's rows to keep the
-    index current. This is what turns corpus dedup from a full-corpus
-    O(n²-candidates) recompute per ingest into an O(batch) lookup."""
+    A new batch's own index joins the stored band index on
+    ``(band, band_hash)`` and is scored on the re-attached signatures
+    (the ``dedup_incremental`` query's batch-vs-index lookup). That
+    turns corpus dedup from a full-corpus O(n²-candidates) recompute
+    per ingest into an O(batch) lookup."""
     sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_size, shingle)
     return _band_rows(sig, id_col, num_hashes, bands), sig
-
-
-def incremental_near_dup_filter(
-    new_docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    index_bands: DataFrame,
-    index_sigs: DataFrame,
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_size: int = 3,
-    min_jaccard_est: float = 0.5,
-    shingle: str = "char",
-    new_index: tuple[DataFrame, DataFrame] | None = None,
-) -> DataFrame:
-    """Append-time dedup: drop every row of ``new_docs`` that is a
-    near-duplicate of the INDEXED corpus or of an earlier-id row in the
-    same batch; return the surviving rows unchanged.
-
-    ``new_index`` optionally supplies the batch's own (band rows,
-    signatures) — the :func:`minhash_index` output over ``new_docs`` —
-    so a caller that also needs them (e.g. the ingest pipeline's
-    index-delta append) computes the 64-hash signature aggregation
-    ONCE instead of once here and once for the delta. Must be derived
-    from ``new_docs`` with the same num_hashes/bands/shingle settings.
-
-    Candidates come from two equi-joins, both O(batch), never a
-    corpus-sized shuffle: new-vs-index on the persisted (band,
-    band_hash) table, and new-vs-new banding within the batch. Every
-    candidate is scored with the minhash Jaccard estimator before it
-    can kill a row (same operating point as
-    :func:`minhash_near_dup_pairs`).
-
-    Within-batch policy is conservative greedy: a row matching ANY
-    earlier-id batch row is dropped, even if that earlier row is itself
-    dropped against the index — near-dup similarity is transitive
-    enough at real operating points (est ≥ 0.5) that keeping such a row
-    would usually re-admit a near-copy of indexed content. The cost is
-    over-dropping on long borderline chains, which batch-local
-    :func:`near_dup_clusters` handles when exactness matters more than
-    one-pass throughput.
-
-    Index consistency contract: after a batch, append the survivors'
-    band/signature rows (from :func:`minhash_index` over the survivors)
-    to the two index tables; re-running the same batch then drops every
-    row (idempotent ingest — tested)."""
-    if new_index is not None:
-        new_bands, new_sig = new_index
-    else:
-        new_sig = minhash_signatures(
-            new_docs, id_col, text_col, num_hashes, shingle_size, shingle
-        )
-        new_bands = _band_rows(new_sig, id_col, num_hashes, bands)
-
-    def _est(sig_a, sig_b) -> Column:
-        agree = F.size(
-            F.filter(
-                F.zip_with(sig_a, sig_b, lambda a, b: (a == b).cast("int")),
-                lambda x: x == 1,
-            )
-        )
-        return agree.cast("double") / F.lit(float(num_hashes))
-
-    # new vs indexed corpus
-    nb = new_bands.select(F.col(id_col).alias("__nid"), "band", "band_hash")
-    ib = index_bands.select(F.col(id_col).alias("__oid"), "band", "band_hash")
-    cand_old = (
-        nb.join(ib, ["band", "band_hash"])
-        .select("__nid", "__oid")
-        .dropDuplicates(["__nid", "__oid"])
-        .join(new_sig.select(F.col(id_col).alias("__nid"), F.col("signature").alias("__ns")), "__nid")
-        .join(index_sigs.select(F.col(id_col).alias("__oid"), F.col("signature").alias("__os")), "__oid")
-        .filter(_est(F.col("__ns"), F.col("__os")) >= min_jaccard_est)
-        .select(F.col("__nid").alias(id_col))
-        .distinct()
-    )
-    # new vs earlier-id new
-    a = new_bands.select(F.col(id_col).alias("__keep"), "band", "band_hash")
-    b = new_bands.select(F.col(id_col).alias("__drop"), "band", "band_hash")
-    cand_new = (
-        a.join(b, ["band", "band_hash"])
-        .filter(F.col("__keep") < F.col("__drop"))
-        .select("__keep", "__drop")
-        .dropDuplicates(["__keep", "__drop"])
-        .join(new_sig.select(F.col(id_col).alias("__keep"), F.col("signature").alias("__ks")), "__keep")
-        .join(new_sig.select(F.col(id_col).alias("__drop"), F.col("signature").alias("__ds")), "__drop")
-        .filter(_est(F.col("__ks"), F.col("__ds")) >= min_jaccard_est)
-        .select(F.col("__drop").alias(id_col))
-        .distinct()
-    )
-    dropped = cand_old.unionByName(cand_new).distinct()
-    return new_docs.join(dropped, id_col, "left_anti")

@@ -135,23 +135,19 @@ def _run_one(
     if task.skip_if is not None and task.skip_if():
         return TaskResult(state="SKIPPED", attempts=0)
     from ..pin import pin_scope
-    from ..retry import call_with_retries
 
-    def attempt() -> Any:
-        with pin_scope():
-            return task.fn(upstream_results)
-
-    try:
-        value, attempts = call_with_retries(
-            attempt,
-            task.retries,
-            task.retry_delay_s,
-            task.backoff,
-            sleep,
-        )
-        return TaskResult(state="SUCCESS", value=value, attempts=attempts)
-    except Exception as e:  # noqa: BLE001 — task boundary
-        return TaskResult(state="FAILED", error=e, attempts=task.retries + 1)
+    # Airflow task-retry parity (`nyc_ingestion_dag.py:135-136`): bounded
+    # re-attempts, each after a delay; backoff=1.0 is Airflow's fixed delay.
+    for attempt in range(task.retries + 1):
+        if attempt:
+            sleep(task.retry_delay_s * task.backoff ** (attempt - 1))
+        try:
+            with pin_scope():
+                value = task.fn(upstream_results)
+            return TaskResult(state="SUCCESS", value=value, attempts=attempt + 1)
+        except Exception as e:  # noqa: BLE001 — task boundary
+            last = e
+    return TaskResult(state="FAILED", error=last, attempts=task.retries + 1)
 
 
 def run_dag(

@@ -1,3 +1,3 @@
-from .golden import GOLDEN_QUERIES, golden_query_sql
+from .golden import GOLDEN_QUERIES
 
-__all__ = ["GOLDEN_QUERIES", "golden_query_sql"]
+__all__ = ["GOLDEN_QUERIES"]

@@ -37,13 +37,6 @@ def _cents(expr: str) -> str:
     return f"CAST(round(({expr}) * 100, 0) AS BIGINT)"
 
 
-def _avg_money(expr: str, alias: str) -> str:
-    return (
-        f"round(CAST(CAST(sum({_cents(expr)}) AS BIGINT) AS DOUBLE)"
-        f" / count({expr}) / 100.0, 2) AS {alias}"
-    )
-
-
 _PRICE = "try_cast(f.price AS DOUBLE)"
 _PRICE_OK = (
     "f.price NOT IN ('NaN', 'nan', '', 'INF', '-INF')"
@@ -265,7 +258,3 @@ GROUP BY CASE WHEN d.is_weekend THEN 'Weekend' ELSE 'Weekday' END, l311.borough
 ORDER BY l311.borough NULLS FIRST, day_type
 """,
 }
-
-
-def golden_query_sql(name: str) -> str:
-    return GOLDEN_QUERIES[name]

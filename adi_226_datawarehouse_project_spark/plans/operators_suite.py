@@ -3718,8 +3718,8 @@ ORDER BY part, lang, doc_id
 
 
 # --- dedup_incremental: batch-vs-stored-index near-dup curation
-# (operators/dedup.py::minhash_index + incremental_near_dup_filter —
-# the persisted-LSH-index ingest path), verified by the same
+# (operators/dedup.py::minhash_index plus the banded lookup in
+# _inc_flags — the persisted-LSH-index ingest path), verified by the same
 # differential-contract style as dedup_lsh_pairs, over a corpus/batch
 # split (doc_id % 5). Parts:
 #   inc_recall    — every CROSS truth pair (batch doc × corpus doc at
@@ -3742,10 +3742,10 @@ def _inc_flags(
     min_jaccard_est: float,
 ) -> DataFrame:
     """(new_id, corpus_id, jaccard_est) — the batch-vs-index candidate
-    lookup `incremental_near_dup_filter` runs internally, exposed here
-    with its per-pair scores so the contract parts can inspect them.
-    Same shape: banded equi-join on the persisted (band, band_hash)
-    table, signatures re-attached only to surviving candidates."""
+    lookup over two `minhash_index` outputs, with its per-pair scores
+    so the contract parts can inspect them: banded equi-join on the
+    persisted (band, band_hash) table, signatures re-attached only to
+    surviving candidates."""
     nb = new_bands.select(F.col("doc_id").alias("new_id"), "band", "band_hash")
     ib = idx_bands.select(F.col("doc_id").alias("corpus_id"), "band", "band_hash")
     agree = F.size(

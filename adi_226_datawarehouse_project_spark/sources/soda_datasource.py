@@ -1,7 +1,6 @@
 """SODA REST endpoint as a REAL Spark data source (Spark 4 Python
-DataSource API) — the scale upgrade of ``ingest.ingest_soda``: that
-helper pulls pages sequentially ON THE DRIVER (the reference DAG's
-loop, fine for its bounded yearly pull), while this source maps every
+DataSource API) — the engine's one SODA ingest path. The reference DAG
+pulls pages in a sequential loop; this source maps every
 ``$limit/$offset`` page to an ``InputPartition`` so the fetches run
 ON THE EXECUTORS, in parallel, with the usual Spark task retry
 machinery around each page.
@@ -20,9 +19,9 @@ Usage::
 
 ``url_template`` carries ``{limit}``/``{offset}`` placeholders — which
 also makes the source OFFLINE-TESTABLE with ``file://`` templates
-(recorded page files), the same policy as ``ingest.py``. ``n_pages``
-bounds the partition count (SODA offers no cheap row-count probe;
-pages past the end return empty and cost one fetch). Fields are
+(recorded page files). ``n_pages`` bounds the partition count (SODA
+offers no cheap row-count probe; pages past the end return empty and
+cost one fetch). Fields are
 extracted from each JSON record by schema field NAME; SODA's
 everything-is-a-string payloads mean a string-typed schema + the
 engine's ``try_cast`` cleaning ops downstream (the P15 path).

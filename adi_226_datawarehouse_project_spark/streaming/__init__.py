@@ -1,5 +1,4 @@
 from .cdc_sink import apply_cdc_batch, read_cdc_snapshot, read_cdc_stored, stream_cdc_apply
-from .enrich import enrich_stream
 from .events_stream import (
     run_windowed_counts_once,
     session_window_counts,
@@ -10,7 +9,6 @@ from .observe_stream import collect_observed, observe_stream, progress_summary
 __all__ = [
     "apply_cdc_batch",
     "collect_observed",
-    "enrich_stream",
     "observe_stream",
     "progress_summary",
     "read_cdc_snapshot",

@@ -87,6 +87,45 @@ def main() -> int:
         return 1
     print("pin gate OK: only pin.py materializes frames")
 
+    # reachability: every package module is imported by some non-test
+    # file; `__init__` re-exports and a module's own imports don't count
+    keep = {
+        "plans.golden_df": "the DataFrame twin the goldens are compared against",
+        "pipelines.corpus_pipeline": "a pipeline entry point",
+        "operators.skew": "salting, the candidate fix for the hot-key items",
+    }
+    def dotted(f: Path) -> str:
+        return ".".join(f.relative_to(REPO).with_suffix("").parts)
+
+    mods = sorted(dotted(f) for f in pkg.rglob("*.py") if f.name != "__init__.py")
+    roots = [
+        *pkg.rglob("*.py"), REPO / "__spark_entry__.py", REPO / "bench.py",
+        *(REPO / "perfbench").glob("*.py"), *(REPO / "scripts").glob("*.py"),
+    ]
+    imported: set[str] = set()
+    for f in roots:
+        if f.name == "__init__.py" or f.name.startswith("test_"):
+            continue
+        here = dotted(f)
+        for node in ast.walk(ast.parse(f.read_text())):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                # level 1 is the importer's own package
+                parts = here.split(".")[: -node.level] if node.level else []
+                base = ".".join(parts + ([node.module] if node.module else []))
+                names = [base, *(f"{base}.{a.name}" for a in node.names)]
+            else:
+                continue
+            imported.update(n for n in names if n != here)
+    short = {m: m.removeprefix(f"{pkg.name}.") for m in mods}
+    unreached = [short[m] for m in mods if m not in imported and short[m] not in keep]
+    if unreached:
+        print("modules no non-test file imports:\n  " + "\n  ".join(unreached), file=sys.stderr)
+        return 1
+    print(f"reachability gate OK: {len(mods) - len(keep)} modules imported outside "
+          f"tests, {len(keep)} kept ({', '.join(sorted(keep))})")
+
     rc = subprocess.run(
         [sys.executable, "-m", "pytest", "tests/", "--collect-only", "-q",
          "--no-header", "-p", "no:cacheprovider"],

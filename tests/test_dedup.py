@@ -275,82 +275,6 @@ def test_simhash_lane_overflow_guard(spark):
     assert rows[0]["simhash"] == h
 
 
-def test_incremental_near_dup_filter(spark):
-    from adi_226_datawarehouse_project_spark.operators.dedup import (
-        incremental_near_dup_filter,
-        minhash_index,
-    )
-
-    def _doc(i, text):
-        return (i, text)
-
-    base_text = "the quick brown fox jumps over the lazy dog again and again today"
-    corpus = spark.createDataFrame(
-        [
-            _doc(1, base_text),
-            _doc(2, "completely different content about spark shuffles and joins"),
-        ],
-        "doc_id BIGINT, text STRING",
-    )
-    idx_bands, idx_sigs = minhash_index(corpus, "doc_id", "text", shingle="word")
-
-    batch = spark.createDataFrame(
-        [
-            _doc(10, base_text),  # exact dup of indexed doc 1
-            _doc(11, base_text + " tonight"),  # near-dup of indexed doc 1
-            _doc(12, "a wholly novel sentence with unique words nobody wrote"),
-            _doc(13, "a wholly novel sentence with unique words nobody wrote"),  # dup of 12
-        ],
-        "doc_id BIGINT, text STRING",
-    )
-    out = incremental_near_dup_filter(
-        batch, "doc_id", "text", idx_bands, idx_sigs, shingle="word"
-    )
-    assert sorted(r["doc_id"] for r in out.collect()) == [12]
-    # full rows survive untouched
-    assert out.columns == ["doc_id", "text"]
-
-    # idempotent ingest: append the survivors to the index, re-run the
-    # SAME batch -> everything is now a duplicate
-    sb, ss = minhash_index(out, "doc_id", "text", shingle="word")
-    again = incremental_near_dup_filter(
-        batch,
-        "doc_id",
-        "text",
-        idx_bands.unionByName(sb),
-        idx_sigs.unionByName(ss),
-        shingle="word",
-    )
-    # 10/11 drop vs the old index, 12 drops vs its own indexed copy,
-    # 13 drops vs indexed 12 (and vs earlier-id 12 in-batch)
-    assert again.count() == 0
-
-
-def test_incremental_filter_no_corpus_sized_shuffle(spark):
-    """Plan gate: the batch joins against the index with hash joins,
-    no cartesian/BNLJ and no Python."""
-    from adi_226_datawarehouse_project_spark.operators.dedup import (
-        incremental_near_dup_filter,
-        minhash_index,
-    )
-
-    corpus = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta")],
-        "doc_id BIGINT, text STRING",
-    )
-    idx_bands, idx_sigs = minhash_index(corpus, "doc_id", "text", shingle="word")
-    batch = spark.createDataFrame(
-        [(10, "iota kappa lambda mu nu xi omicron pi")], "doc_id BIGINT, text STRING"
-    )
-    plan = (
-        incremental_near_dup_filter(batch, "doc_id", "text", idx_bands, idx_sigs)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "BatchEvalPython" not in plan
-
-
 def test_ngram_jaccard_prefix_filter_is_exact(spark):
     """PPJoin prefix filtering must return the IDENTICAL pair set and
     jaccard values as the naive inverted-index self-join, across

@@ -95,6 +95,21 @@ def test_retries_exhausted_marks_failed_and_propagates():
     assert res["further"].state == "UPSTREAM_FAILED"
     assert res["independent"].state == "SUCCESS"  # other branch unharmed
 
+    # exhaustion keeps the LAST attempt's error; delays grow by backoff
+    calls, delays = [], []
+
+    def distinct(upstream):
+        calls.append(1)
+        raise OSError(f"attempt {len(calls)}")
+
+    res = run_dag(
+        [DagTask("d", distinct, retries=2, retry_delay_s=1.0, backoff=2.0)],
+        sleep=delays.append,
+    )
+    assert res["d"].state == "FAILED" and res["d"].attempts == 3
+    assert str(res["d"].error) == "attempt 3"
+    assert delays == [1.0, 2.0]
+
 
 def test_skip_if_short_circuits_but_satisfies_downstream():
     """K8 idempotent skip: the skipped task never runs, downstream
