@@ -15,26 +15,6 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-_BOOL_STRINGS = {
-    "1": "true", "true": "true", "yes": "true", "on": "true",
-    "0": "false", "false": "false", "no": "false", "off": "false",
-}
-
-
-def _env_bool(name: str, default: str) -> str:
-    """Normalize a boolean env var to the 'true'/'false' Spark's conf
-    parser accepts — SPARK_GRAFT_UI=1 passed through raw crashes
-    session creation with an IllegalArgumentException that never
-    mentions the env var."""
-    v = os.environ.get(name)
-    if v is None:
-        return default
-    norm = _BOOL_STRINGS.get(v.strip().lower())
-    if norm is None:
-        raise ValueError(f"{name}={v!r}: expected a boolean (true/false)")
-    return norm
-
-
 def _is_live(session: SparkSession | None) -> bool:
     """True when the session's SparkContext is still usable. Mirrors
     builder.getOrCreate's own reuse guard (it skips a session whose
@@ -137,7 +117,7 @@ def get_spark(
             "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
             "true",
         )
-        .config("spark.ui.enabled", _env_bool("SPARK_GRAFT_UI", "false"))
+        .config("spark.ui.enabled", "false")
     )
     builder = builder.master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"))
     builder = builder.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))

@@ -35,6 +35,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from adi_226_datawarehouse_project_spark.measure import hash_consume  # noqa: E402
 from adi_226_datawarehouse_project_spark.session import get_spark  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
@@ -107,36 +108,24 @@ def build_queries() -> dict:
     return qs
 
 
-def main() -> None:
-    # Optional subset (comma-separated names) for targeted scale runs —
-    # e.g. the skewed-corpus comparison times only the star queries the
-    # skew actually stresses. The headline series always runs the full
-    # list (the driver sets no subset). Unknown names are a hard error
-    # (a typo'd subset silently timing nothing would emit a bogus
-    # datapoint), and a subset run is labeled with a DIFFERENT metric
-    # name so it can never be mistaken for a headline-series point.
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    metric = "headline_suite_total_wall"
-    bench_queries = BENCH_QUERIES
-    if only:
-        wanted = [s.strip() for s in only.split(",") if s.strip()]
-        if not wanted:
-            # e.g. SPARK_GRAFT_BENCH_ONLY="," parses to nothing — that
-            # would time an empty query list and emit a bogus subset
-            # datapoint, the exact failure the unknown-name check exists
-            # to prevent.
-            raise ValueError(
-                "SPARK_GRAFT_BENCH_ONLY set but parsed to an empty list: "
-                f"{only!r}"
-            )
-        unknown = [s for s in wanted if s not in BENCH_QUERIES]
-        if unknown:
-            raise ValueError(
-                f"SPARK_GRAFT_BENCH_ONLY names not in BENCH_QUERIES: {unknown}"
-            )
-        bench_queries = [q for q in BENCH_QUERIES if q in set(wanted)]
-        metric = "bench_subset_total_wall"
+# Row-per-doc suites are consumed via a hash-reduce (methodology
+# documented at adi_226_datawarehouse_project_spark/measure.py — the
+# single shared implementation): full evaluation executor-side, one row
+# across py4j.
+_HASH_CONSUME = {"text_token_features", "op_topk_orders_per_customer"}
 
+
+def consume(name: str, df) -> int:
+    """Run bench query ``name``'s result ``df`` to completion the way
+    bench times it; returns its row count (or the hash-reduce's)."""
+    if name.startswith(("dedup_", "sim_")):
+        return df.count()
+    if name in _HASH_CONSUME:
+        return hash_consume(df)
+    return len(df.collect())
+
+
+def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
@@ -185,25 +174,11 @@ def main() -> None:
         file=sys.stderr,
     )
 
-    # Row-per-doc suites are consumed via a hash-reduce (methodology
-    # documented at adi_226_datawarehouse_project_spark/measure.py —
-    # the single shared implementation): full evaluation executor-side,
-    # one row across py4j.
-    _HASH_CONSUME = {"text_token_features", "op_topk_orders_per_customer"}
-
-    from adi_226_datawarehouse_project_spark.measure import hash_consume as _consume
-
-    for name in bench_queries:
+    for name in BENCH_QUERIES:
         ts, n = [], 0
         for _ in range(TRIALS):
             t0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
-            if name.startswith(("dedup_", "sim_")):
-                n = df.count()
-            elif name in _HASH_CONSUME:
-                n = _consume(df)
-            else:
-                n = len(df.collect())
+            n = consume(name, qs[name](spark, sf_dir))
             ts.append(round(time.perf_counter() - t0, 3))
         trials[name] = ts
         times[name] = round(statistics.median(ts), 3)
@@ -213,7 +188,7 @@ def main() -> None:
     print(
         json.dumps(
             {
-                "metric": metric,
+                "metric": "headline_suite_total_wall",
                 "value": total,
                 "unit": "sec",
                 "queries": times,

@@ -126,6 +126,62 @@ def main() -> int:
     print(f"reachability gate OK: {len(mods) - len(keep)} modules imported outside "
           f"tests, {len(keep)} kept ({', '.join(sorted(keep))})")
 
+    # oracle independence in the registry module: a Spark side never
+    # reaches DuckDB text, an oracle never reaches Spark code. Functions
+    # taking the dialect `d` render shared SQL for both engines and are
+    # neither followed nor flagged.
+    suite = pkg / "plans" / "operators_suite.py"
+    tree = ast.parse(suite.read_text())
+    defs: dict[str, ast.AST] = {}
+    for node in tree.body:
+        if isinstance(node, ast.FunctionDef):
+            defs[node.name] = node
+        elif isinstance(node, ast.Assign):
+            defs.update((t.id, node) for t in node.targets if isinstance(t, ast.Name))
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            for a in node.names:
+                defs[(a.asname or a.name).split(".")[0]] = node
+    shared = {
+        n for n, node in defs.items()
+        if isinstance(node, ast.FunctionDef) and any(a.arg == "d" for a in node.args.args)
+    }
+
+    def reach(roots: list[str]) -> dict[str, str]:
+        """Module-level names reachable from `roots` -> the name that reached each."""
+        seen = {r: r for r in roots}
+        todo = list(roots)
+        while todo:
+            cur = todo.pop()
+            node = defs[cur]
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            for sub in ast.walk(node):
+                n = sub.id if isinstance(sub, ast.Name) else None
+                if n in defs and n not in seen and n not in shared:
+                    seen[n] = cur
+                    todo.append(n)
+        return seen
+
+    def is_oracle(n: str) -> bool:
+        return n.startswith(("_duck_", "_DUCK_")) or n.endswith(("_ORACLE", "_oracle"))
+
+    spark_roots = sorted(n for n in defs if n.startswith(("_spark_", "_bench_")))
+    oracle_roots = sorted(n for n in defs if is_oracle(n) and n not in shared)
+    crossed = [
+        f"spark side {via} -> {n}"
+        for n, via in reach(spark_roots).items() if is_oracle(n)
+    ] + [
+        f"oracle side {via} -> {n}"
+        for n, via in reach(oracle_roots).items()
+        if n in {"F", "pin", "load_table"} or n.startswith("_spark_")
+    ]
+    if crossed:
+        print("oracle-independence breaches in operators_suite.py:\n  "
+              + "\n  ".join(sorted(crossed)), file=sys.stderr)
+        return 1
+    print(f"oracle-independence gate OK: {len(spark_roots)} Spark sides, "
+          f"{len(oracle_roots)} oracle names, {len(shared)} dialect-rendered shared")
+
     rc = subprocess.run(
         [sys.executable, "-m", "pytest", "tests/", "--collect-only", "-q",
          "--no-header", "-p", "no:cacheprovider"],

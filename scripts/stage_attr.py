@@ -24,31 +24,18 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-os.environ["SPARK_GRAFT_UI"] = "1"
-
 import bench  # noqa: E402
-from adi_226_datawarehouse_project_spark.measure import hash_consume  # noqa: E402
 from adi_226_datawarehouse_project_spark.model.star import (  # noqa: E402
     materialize_warehouse,
 )
 from adi_226_datawarehouse_project_spark.session import get_spark  # noqa: E402
-
-_HASH_CONSUME = {"text_token_features", "op_topk_orders_per_customer"}
-
-
-def _consume(name, df):
-    if name.startswith(("dedup_", "sim_")):
-        return df.count()
-    if name in _HASH_CONSUME:
-        return hash_consume(df)
-    return len(df.collect())
 
 
 def main() -> None:
     name = sys.argv[1]
     trials = int(sys.argv[2]) if len(sys.argv) > 2 else 2
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("stage-attr")
+    spark = get_spark("stage-attr", extra_conf={"spark.ui.enabled": "true"})
     ui = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId
     qs = bench.build_queries()
@@ -71,7 +58,7 @@ def main() -> None:
             first_stage_after = _n_stages(ui, app_id)
             t0 = time.perf_counter()
             df = qs[name](spark, sf_dir)
-            _consume(name, df)
+            bench.consume(name, df)
             walls.append(round(time.perf_counter() - t0, 3))
     stages = _stages(ui, app_id)
     # keep only the last trial's stages (submitted after the marker)

@@ -65,59 +65,6 @@ def test_all_oracles_parse_in_duckdb(name):
     con.execute(f"PREPARE __q AS {entrymod.oracle_sql()[name]}")
 
 
-def test_bench_subset_env_rejects_unknown_names(monkeypatch):
-    """SPARK_GRAFT_BENCH_ONLY with a typo'd name must fail FAST (before
-    any Spark session), not silently time nothing and emit a bogus
-    headline datapoint."""
-    import sys
-    from pathlib import Path
-
-    import pytest
-
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
-    import bench
-
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_ONLY", "g01_typo, g07_also_wrong")
-    with pytest.raises(ValueError, match="g01_typo.*g07_also_wrong"):
-        bench.main()
-
-
-def test_bench_subset_env_rejects_empty_parse(monkeypatch):
-    """SPARK_GRAFT_BENCH_ONLY that parses to NOTHING (separators/
-    whitespace only, e.g. ',') must fail fast — an empty subset would
-    time an empty query list and emit a bogus subset datapoint."""
-    import sys
-    from pathlib import Path
-
-    import pytest
-
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
-    import bench
-
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_ONLY", " , ,")
-    with pytest.raises(ValueError, match="empty"):
-        bench.main()
-
-
-def test_bench_subset_env_accepts_known_names_and_strips(monkeypatch):
-    """Whitespace-padded valid names parse; validation passes and the
-    subset resolves (checked without running main's Spark phase by
-    reusing the same parse)."""
-    only = " g01_complaints_by_borough_pct , g07_airbnb_complaint_ratio "
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
-    import bench
-
-    wanted = [s.strip() for s in only.split(",") if s.strip()]
-    assert all(w in bench.BENCH_QUERIES for w in wanted)
-    assert [q for q in bench.BENCH_QUERIES if q in set(wanted)] == [
-        "g01_complaints_by_borough_pct",
-        "g07_airbnb_complaint_ratio",
-    ]
-
-
 def test_pivot_part_handles_null_orderdate(spark, tmp_path):
     """Adversarial fixture: orders containing NULL o_orderdate. Spark's
     groupBy(year).pivot() emits a real NULL-year row, so the suite

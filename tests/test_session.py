@@ -1,10 +1,9 @@
 """Session-factory contracts: get_spark must never rewrite a live
-session's runtime confs, and boolean env vars must normalize to what
-Spark's conf parser accepts."""
+session's runtime confs, and never hands back a stopped session."""
 
 import pytest
 
-from adi_226_datawarehouse_project_spark.session import _env_bool, get_spark
+from adi_226_datawarehouse_project_spark.session import get_spark
 
 
 def test_get_spark_returns_existing_session_unchanged(spark):
@@ -66,20 +65,3 @@ def test_is_live_rejects_stopped_or_absent_contexts(spark):
     assert not _is_live(None)
     assert not _is_live(_DeadSession())
     assert not _is_live(_Exploding())
-
-
-def test_env_bool_normalizes_and_rejects(monkeypatch):
-    """SPARK_GRAFT_UI=1 passed raw into spark.ui.enabled crashed
-    session creation with an IllegalArgumentException that never named
-    the env var; common spellings normalize, garbage raises by name."""
-    monkeypatch.delenv("X_BOOL", raising=False)
-    assert _env_bool("X_BOOL", "false") == "false"
-    for raw, want in [
-        ("1", "true"), ("true", "true"), ("YES", "true"), ("On", "true"),
-        ("0", "false"), ("False", "false"), ("no", "false"), ("OFF", "false"),
-    ]:
-        monkeypatch.setenv("X_BOOL", raw)
-        assert _env_bool("X_BOOL", "false") == want, raw
-    monkeypatch.setenv("X_BOOL", "maybe")
-    with pytest.raises(ValueError, match="X_BOOL"):
-        _env_bool("X_BOOL", "false")
