@@ -517,6 +517,38 @@ def register_star_views(spark: SparkSession, sf_dir: str) -> None:
             _build_layout(spark, sf_dir, resolve_warehouse_policy(spark, sf_dir))
 
 
+def _create_view(spark: SparkSession, name: str) -> None:
+    """Register star table ``name`` as a temp view over its analyzed
+    plan; both layouts build their views through this."""
+    # DataFrame-backed view, not `CREATE TEMPORARY VIEW ... AS sql`:
+    # a SQL-created temp view stores the PARSED plan, so every query
+    # re-ANALYZES the whole upstream view chain (fixture expression
+    # trees + the geohash/timestamp cleaning expressions, expanded
+    # once per dim/fact reference) — measured 0.8-1.0s of driver
+    # time per golden query at sf0.1, as large as the execution
+    # itself (guide §3.3/§7.3: enormous plans make planning the
+    # bottleneck). createOrReplaceTempView on the analyzed DataFrame
+    # stores the ANALYZED plan: the chain is analyzed once here
+    # (wave-parallel), and per-query analysis drops ~15× (g01 build
+    # 0.999s → 0.067s) while CacheManager substitution still fires
+    # (the stored plan IS the plan cacheTable registered).
+    #
+    # INVARIANTS this trades away (vs self-healing parsed views):
+    # 1. Upstream replacement: the stored plan embeds the upstream
+    #    views' plan INSTANCES at analysis time, so any path that
+    #    replaces an upstream view must re-run _create_view for every
+    #    DOWNSTREAM view in wave order (_materialize_zone does
+    #    exactly this after repointing staging; a new code path
+    #    that swaps a view in place must do the same or serve
+    #    silently stale star views).
+    # 2. Frozen session conf: analysis-time conf that shapes the
+    #    plan (e.g. spark.sql.session.timeZone inside timestamp
+    #    parsing) is baked in at _create_view; flipping such conf
+    #    mid-session requires a re-registration (clearCache + memo
+    #    pop), not just spark.conf.set.
+    spark.sql(STAR_TABLES[name](D.SPARK)).createOrReplaceTempView(name)
+
+
 def _build_layout(spark: SparkSession, sf_dir: str, policy: str) -> None:
     """Build ``policy``'s layout for sf_dir unless the memo already
     holds it; any other registration is dropped first. Caller holds the
@@ -532,38 +564,9 @@ def _build_layout(spark: SparkSession, sf_dir: str, policy: str) -> None:
     register_base_views(spark, sf_dir)
     from concurrent.futures import ThreadPoolExecutor
 
-    def _create(name: str) -> None:
-        # DataFrame-backed view, not `CREATE TEMPORARY VIEW ... AS sql`:
-        # a SQL-created temp view stores the PARSED plan, so every query
-        # re-ANALYZES the whole upstream view chain (fixture expression
-        # trees + the geohash/timestamp cleaning expressions, expanded
-        # once per dim/fact reference) — measured 0.8-1.0s of driver
-        # time per golden query at sf0.1, as large as the execution
-        # itself (guide §3.3/§7.3: enormous plans make planning the
-        # bottleneck). createOrReplaceTempView on the analyzed DataFrame
-        # stores the ANALYZED plan: the chain is analyzed once here
-        # (wave-parallel), and per-query analysis drops ~15× (g01 build
-        # 0.999s → 0.067s) while CacheManager substitution still fires
-        # (the stored plan IS the plan cacheTable registered).
-        #
-        # INVARIANTS this trades away (vs self-healing parsed views):
-        # 1. Upstream replacement: the stored plan embeds the upstream
-        #    views' plan INSTANCES at analysis time, so any path that
-        #    replaces an upstream view must re-run _create for every
-        #    DOWNSTREAM view in wave order (_materialize_zone does
-        #    exactly this after repointing staging; a new code path
-        #    that swaps a view in place must do the same or serve
-        #    silently stale star views).
-        # 2. Frozen session conf: analysis-time conf that shapes the
-        #    plan (e.g. spark.sql.session.timeZone inside timestamp
-        #    parsing) is baked in at _create; flipping such conf
-        #    mid-session requires a re-registration (clearCache + memo
-        #    pop), not just spark.conf.set.
-        spark.sql(STAR_TABLES[name](D.SPARK)).createOrReplaceTempView(name)
-
     for wave in _REGISTER_WAVES:
         with ThreadPoolExecutor(len(wave)) as ex:
-            list(ex.map(_create, wave))
+            list(ex.map(lambda name: _create_view(spark, name), wave))
     _cache_tables_waved(spark)
     _memo_set(spark, (sf_dir, "cache", None))
 
@@ -904,14 +907,6 @@ def _materialize_zone(spark: SparkSession, sf_dir: str) -> None:
         _REGISTERED.pop(key, None)
     register_base_views(spark, sf_dir)
 
-    def _create(name: str) -> None:
-        # analyzed-plan view — same rationale AND the same two
-        # invariants as the cache-path _create (upstream replacement
-        # must re-create downstream views, which the gold loop below
-        # does after repointing staging; analysis-time conf is frozen
-        # into the stored plan)
-        spark.sql(STAR_TABLES[name](D.SPARK)).createOrReplaceTempView(name)
-
     def _write_and_repoint(name: str) -> None:
         part = _ZONE_FACT_PARTITIONS.get(name)
         if part is None:
@@ -946,7 +941,7 @@ def _materialize_zone(spark: SparkSession, sf_dir: str) -> None:
         ).createOrReplaceTempView(name)
 
     for t in _RAW_TABLES + _STAGING_TABLES:
-        _create(t)
+        _create_view(spark, t)
     for t in _RAW_TABLES:
         spark.catalog.cacheTable(t)
     with ThreadPoolExecutor(len(_STAGING_TABLES)) as ex:
@@ -956,7 +951,7 @@ def _materialize_zone(spark: SparkSession, sf_dir: str) -> None:
 
     gold = [t for t in STAR_TABLES if t not in _RAW_TABLES + _STAGING_TABLES]
     for t in gold:  # re-resolve against the parquet staging level
-        _create(t)
+        _create_view(spark, t)
     # Lift the parallel-discovery threshold around the partitioned fact
     # re-reads: below it the driver schedules a one-task-per-directory
     # Spark job to list partition dirs (measured 2,027 tasks / ~15s of

@@ -15,8 +15,6 @@ from .similarity import (
     ivf_topk,
     lsh_bucket_topk,
     semantic_dedup,
-    tune_ivf_probes,
-    tune_srp_bands,
 )
 from .upsert import incremental_upsert
 from .urls import blocklist_filter, normalize_url, url_dedup
@@ -34,8 +32,6 @@ __all__ = [
     "ivf_topk",
     "latest_changes",
     "lsh_bucket_topk",
-    "tune_ivf_probes",
-    "tune_srp_bands",
     "minhash_near_dup_pairs",
     "minhash_signatures",
     "ngram_jaccard_pairs",

@@ -8,7 +8,7 @@ vector is 4 KB/row, and every candidate join ships it. PQ stores each
 vector as ``m`` small codes (here m bytes-ish: one argmin index per
 subspace), a 100-1000× compression, and scores queries against codes
 via an ADC lookup table WITHOUT decompressing — so the candidate scan
-streams codes, not vectors, and only the final re-rank touches floats.
+streams codes, not vectors.
 
 Distributed shape:
 
@@ -17,21 +17,17 @@ Distributed shape:
   differential oracle re-derives them bit-identically with zero
   training state); they are driver-resident model state of
   ``m·ksub·dsub`` doubles — the same kind MLlib keeps;
-- encoding is a NARROW literal-inlined argmin per subspace (the
-  k-means `_nearest_centroid_lit` pattern): zero shuffles, zero UDFs,
-  the corpus streams once and emits ``(id, codes array<int>)``;
+- encoding is a NARROW literal-inlined argmin per subspace: zero
+  shuffles, zero UDFs, the corpus streams once and emits
+  ``(id, codes array<int>)``;
 - each probe row computes its ADC lookup table ONCE (``m·ksub``
   dot products as one literal expression), then every candidate is
   scored with ``m`` array lookups + adds — not ``dim`` multiplies;
-- candidate generation composes with the IVF coarse quantizer
-  (`centroids=`): probes hit their ``n_probe`` cells and the code
-  table joins on ``centroid_id`` — the full IVF-PQ pipeline. Without
-  centroids the probe side broadcasts and the code table streams once
-  (brute-force ADC — still never a corpus×corpus cross join).
+- the probe side broadcasts and the code table streams once
+  (brute-force ADC — never a corpus×corpus cross join).
 
 Vectors are L2-normalized before everything, so ADC dot approximates
-cosine and the exact re-rank (`rerank` in :func:`pq_adc_topk`) agrees
-with `cosine_self_topk` semantics.
+cosine.
 
 All floats follow the module's determinism rule: sequential
 index-order folds (literal-expression sums associate left-to-right),
@@ -44,11 +40,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import _let
-from .similarity import _norm, cosine
+from .similarity import _norm
 
-# Codegen guard (the `_INLINE_MAX_TERMS` lesson): the encode expression
-# materializes m·ksub·dsub multiply-add terms; past ~10^4 Catalyst falls
-# back to interpreted eval or trips JVM method limits. 4×16×16 = 1024
+# Codegen guard: the encode expression materializes m·ksub·dsub
+# multiply-add terms; past ~10^4 Catalyst falls back to interpreted
+# eval or trips JVM method limits. 4×16×16 = 1024
 # terms sits comfortably inside; production-width models should raise m
 # (more, smaller subspaces) rather than ksub.
 _INLINE_MAX_TERMS = 10_000
@@ -84,8 +80,8 @@ def pq_codebooks(
         .limit(max(ksub * 4, ksub))
         .collect()
     )
-    # majority dim over the candidate sample (the train_ivf_centroids
-    # rule): a lone ragged row at the smallest id must not set dsub
+    # majority dim over the candidate sample: a lone ragged row at the
+    # smallest id must not set dsub
     length_counts: dict[int, int] = {}
     for r in cand:
         n = len(r["__nv"])
@@ -181,20 +177,11 @@ def pq_adc_topk(
     m: int = 4,
     ksub: int = 16,
     codebooks: list[list[list[float]]] | None = None,
-    centroids: DataFrame | None = None,
-    n_probe: int = 4,
-    rerank: int | None = None,
 ) -> DataFrame:
     """Approximate top-k by ADC score: ``(query_id, neighbor_id, adc,
-    rank)`` (+ ``cosine`` when ``rerank`` is set: the top ``rerank``
-    ADC candidates are re-scored exactly and re-ranked, FAISS-style).
-
-    ``centroids`` (``(centroid_id, centroid)``) switches on the IVF
-    coarse stage: corpus codes carry their cell, probes expand to
-    their ``n_probe`` best cells, and candidates come from the
-    ``centroid_id`` equi-join. Without it the probe side broadcasts
-    against the full code table (codes, not vectors — the scan is
-    ~dim/m of the exact brute-force bytes)."""
+    rank)``. The probe side broadcasts against the full code table
+    (codes, not vectors — the scan is ~dim/m of the exact brute-force
+    bytes)."""
     if codebooks is None:
         codebooks = pq_codebooks(df, id_col, vec_col, m=m, ksub=ksub)
     mm = len(codebooks)
@@ -214,37 +201,9 @@ def pq_adc_topk(
         "query_id", F.expr(_lut_expr(codebooks, "__pq_nq")).alias("__lut")
     )
 
-    if centroids is not None:
-        from .similarity import assign_cells
-
-        cell_corpus = assign_cells(df, id_col, vec_col, centroids).select(
-            F.col(id_col).alias("neighbor_id"), F.col("centroid_id")
-        )
-        codes = codes.join(cell_corpus, "neighbor_id")
-        cent = centroids.select("centroid_id", F.col("centroid").alias("__cv"))
-        probe_vec = df.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-        )
-        if probe_ids is not None:
-            probe_vec = probe_vec.filter(F.col("query_id").isin(probe_ids))
-        scored = probe_vec.join(F.broadcast(cent)).withColumn(
-            "__ccos", cosine(F.col("__qv"), F.col("__cv"))
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("__ccos").desc(), F.col("centroid_id").asc()
-        )
-        probe_cells = (
-            scored.withColumn("__crank", F.row_number().over(w))
-            .filter(F.col("__crank") <= n_probe)
-            .select("query_id", "centroid_id")
-        )
-        cand = codes.join(
-            probes.join(probe_cells, "query_id"), "centroid_id"
-        ).filter(F.col("neighbor_id") != F.col("query_id"))
-    else:
-        cand = codes.join(F.broadcast(probes)).filter(
-            F.col("neighbor_id") != F.col("query_id")
-        )
+    cand = codes.join(F.broadcast(probes)).filter(
+        F.col("neighbor_id") != F.col("query_id")
+    )
 
     adc = F.expr(
         f"aggregate(sequence(0, {mm - 1}), CAST(0 AS DOUBLE),"
@@ -255,26 +214,8 @@ def pq_adc_topk(
     w = Window.partitionBy("query_id").orderBy(
         F.col("adc").desc(), F.col("neighbor_id").asc()
     )
-    ranked = scored.withColumn("rank", F.row_number().over(w))
-    if rerank is None:
-        return ranked.filter(F.col("rank") <= k).select(
-            "query_id", "neighbor_id", "adc", "rank"
-        )
-    shortlist = ranked.filter(F.col("rank") <= max(rerank, k)).select(
-        "query_id", "neighbor_id", "adc"
-    )
-    qv = df.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
-    nv = df.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__nv"))
-    exact = (
-        shortlist.join(qv, "query_id")
-        .join(nv, "neighbor_id")
-        .withColumn("cosine", cosine(F.col("__qv"), F.col("__nv")))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
     return (
-        exact.withColumn("rank", F.row_number().over(w2))
+        scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc", "cosine", "rank")
+        .select("query_id", "neighbor_id", "adc", "rank")
     )

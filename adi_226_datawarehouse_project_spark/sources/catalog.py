@@ -226,22 +226,22 @@ def load_table(
 # A weakref to the memoized session guards against that: a hit only
 # counts when the stored ref still points at THIS session object (the
 # weakref also keeps the memo from pinning dead sessions alive).
-_BASE_REGISTERED: dict[int, tuple[str, tuple[str, ...]]] = {}
+_BASE_REGISTERED: dict[int, str] = {}
 _BASE_REGISTERED_REFS: dict[int, "weakref.ref"] = {}
 
 
-def register_base_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
-    """Register every base table as a temp view so both the DataFrame
-    and ``spark.sql`` surfaces see the same catalog."""
+def register_base_views(spark: SparkSession, sf_dir: str) -> None:
+    """Register every base table (``TABLES``) as a temp view so both
+    the DataFrame and ``spark.sql`` surfaces see the same catalog."""
     import weakref
 
     key = id(spark)
     ref = _BASE_REGISTERED_REFS.get(key)
-    if _BASE_REGISTERED.get(key) == (sf_dir, names) and ref is not None and ref() is spark:
+    if _BASE_REGISTERED.get(key) == sf_dir and ref is not None and ref() is spark:
         return
-    for name in names:
+    for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-    _BASE_REGISTERED[key] = (sf_dir, names)
+    _BASE_REGISTERED[key] = sf_dir
     try:
         _BASE_REGISTERED_REFS[key] = weakref.ref(spark)
     except TypeError:  # pragma: no cover - session not weakref-able

@@ -9,10 +9,11 @@ at any corpus size.
 Protocol: Q evenly-spaced query ids (deterministic — id ≡ 0 mod
 ⌊n/Q⌋), exact truth via cosine_self_topk (broadcast probes, corpus
 streams once), ANN via lsh_bucket_topk / ivf_topk with probe_ids at
-the REGISTRY's own configurations (k=5, 16 planes / 4 bands; 16 cells
-/ 4 probes) plus a recall-lever leg (8 bands / 8 probes). recall@k =
+four static operating points: 16 planes / 4 and 8 bands, 16 cells / 4
+and 8 probes (8 bands and 8 probes are the defaults). recall@k =
 mean over queries of |ANN ∩ exact| / k, ties broken identically on
-both sides (cosine desc, id asc).
+both sides (cosine desc, id asc). Each leg also counts its candidate
+pairs for the probe set (`probe_candidates`).
 
 Usage: PYSPARK_SUBMIT_OPTS/ARGS for heap, then
     python scripts/ann_recall_scale.py [/tmp/spark_graft_x64] [Q=100]
@@ -38,11 +39,7 @@ from adi_226_datawarehouse_project_spark.operators.similarity import (  # noqa: 
     ivf_candidates,
     ivf_topk,
     lsh_bucket_topk,
-    sample_centroids,
     srp_candidates,
-    train_ivf_centroids,
-    tune_ivf_probes,
-    tune_srp_bands,
 )
 from adi_226_datawarehouse_project_spark.sources.catalog import load_table  # noqa: E402
 
@@ -99,12 +96,7 @@ def main() -> None:
 
     # r14: defaults moved to 8 bands / 8 probes (r13 verdict task #1);
     # the 4-band/4-probe rungs stay in the sweep as the cost curve's
-    # cheap end. Each leg also counts its candidate pairs for the probe
-    # set — the re-rank cost the config buys.
-    kmeans_cents = train_ivf_centroids(
-        emb, "vec_id", "embedding", n_clusters=16, n_iter=5
-    )
-    sample_cents = sample_centroids(emb, "vec_id", "embedding", 16)
+    # cheap end.
     legs = {
         "srp_16p_4b": (
             lambda: lsh_bucket_topk(
@@ -129,7 +121,7 @@ def main() -> None:
                 probe_ids=probe_ids,
             ),
             lambda: ivf_candidates(
-                emb, "vec_id", "embedding", 16, 4, probe_ids, sample_cents
+                emb, "vec_id", "embedding", 16, 4, probe_ids
             ),
         ),
         "ivf_16c_8p_DEFAULT": (
@@ -137,16 +129,7 @@ def main() -> None:
                 emb, "vec_id", "embedding", k=K, probe_ids=probe_ids
             ),
             lambda: ivf_candidates(
-                emb, "vec_id", "embedding", 16, 8, probe_ids, sample_cents
-            ),
-        ),
-        "ivf_16c_8p_kmeans": (
-            lambda: ivf_topk(
-                emb, "vec_id", "embedding", k=K, n_clusters=16, n_probe=8,
-                probe_ids=probe_ids, centroids=kmeans_cents,
-            ),
-            lambda: ivf_candidates(
-                emb, "vec_id", "embedding", 16, 8, probe_ids, kmeans_cents
+                emb, "vec_id", "embedding", 16, 8, probe_ids
             ),
         ),
     }
@@ -167,40 +150,6 @@ def main() -> None:
             "probe_candidates": cand_fn().count(),
         }
 
-    # auto-tune legs: the target_recall contract, with the calibration
-    # curve the tuner actually walked
-    t = time.time()
-    srp_rep = tune_srp_bands(
-        emb, "vec_id", "embedding", k=K, target_recall=0.9, sample_queries=50
-    )
-    srp_tuned = _topk_sets(
-        lsh_bucket_topk(
-            emb, "vec_id", "embedding", k=K, bands=srp_rep["chosen_bands"],
-            probe_ids=probe_ids,
-        )
-    )
-    out["srp_autotune_t90"] = {
-        "recall_at_k": _recall(truth, srp_tuned),
-        "wall_s": round(time.time() - t, 1),
-        "report": srp_rep,
-    }
-    t = time.time()
-    ivf_rep = tune_ivf_probes(
-        emb, "vec_id", "embedding", k=K, target_recall=0.9, n_clusters=16,
-        centroids=kmeans_cents, sample_queries=50,
-    )
-    ivf_tuned = _topk_sets(
-        ivf_topk(
-            emb, "vec_id", "embedding", k=K, n_clusters=16,
-            n_probe=ivf_rep["chosen_n_probe"], probe_ids=probe_ids,
-            centroids=kmeans_cents,
-        )
-    )
-    out["ivf_autotune_t90_kmeans"] = {
-        "recall_at_k": _recall(truth, ivf_tuned),
-        "wall_s": round(time.time() - t, 1),
-        "report": ivf_rep,
-    }
     out["total_wall_s"] = round(time.time() - t0, 1)
     print(json.dumps(out))
 

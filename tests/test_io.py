@@ -217,7 +217,7 @@ def test_base_view_memo_survives_session_id_reuse(spark):
         spark.catalog.dropTempView("nation")
         # Simulate id reuse: memo matches, but the ref points elsewhere
         # (a dead session object would give ref() is None — same miss).
-        catalog._BASE_REGISTERED[key] = (SF_SMALL, catalog.TABLES)
+        catalog._BASE_REGISTERED[key] = SF_SMALL
         other = type("NotThisSession", (), {})()
         catalog._BASE_REGISTERED_REFS[key] = __import__("weakref").ref(other)
         catalog.register_base_views(spark, SF_SMALL)

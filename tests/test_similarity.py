@@ -141,130 +141,6 @@ def test_ivf_recall_vs_exact(spark):
     assert _recall(exact, wide) >= _recall(exact, got)
 
 
-def test_ivf_kmeans_centroids_recall(spark):
-    """k-means cells must not degrade recall vs the deterministic
-    sample at identical (n_clusters, n_probe); trainer output is
-    unit-norm with exactly n_clusters rows."""
-    from adi_226_datawarehouse_project_spark.operators.similarity import (
-        ivf_topk,
-        train_ivf_centroids,
-    )
-
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    cents = train_ivf_centroids(emb, "vec_id", "embedding", n_clusters=16, n_iter=4)
-    rows = cents.collect()
-    assert len(rows) == 16
-    assert sorted(r["centroid_id"] for r in rows) == list(range(16))
-    for r in rows:
-        assert abs(sum(x * x for x in r["centroid"]) - 1.0) < 1e-9
-
-    probes = list(range(20))
-    exact = cosine_self_topk(emb, "vec_id", "embedding", k=10, probe_ids=probes).collect()
-    sampled = ivf_topk(emb, "vec_id", "embedding", k=10, probe_ids=probes).collect()
-    trained = ivf_topk(
-        emb, "vec_id", "embedding", k=10, probe_ids=probes, centroids=cents
-    ).collect()
-    assert _recall(exact, trained) >= _recall(exact, sampled) - 0.05
-    assert _recall(exact, trained) >= 0.7
-
-
-def test_train_ivf_caches_projection_across_iterations(spark, monkeypatch):
-    """Lloyd iterations must scan the cached (id, vec) projection, not
-    re-scan the source each pass: train_ivf_centroids persists the
-    projection exactly once before the loop and unpersists it after —
-    at 100 TB that's one table scan instead of n_iter."""
-    from adi_226_datawarehouse_project_spark.operators.similarity import (
-        train_ivf_centroids,
-    )
-
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    # patch the CONCRETE class (pyspark 4 routes the public
-    # pyspark.sql.DataFrame through a classic/connect subclass whose
-    # overrides would bypass a base-class patch)
-    cls = type(emb)
-    persisted: list[list[str]] = []
-    unpersisted: list[list[str]] = []
-    orig_p, orig_u = cls.persist, cls.unpersist
-
-    def rec_persist(self, *a, **k):
-        persisted.append(self.columns)
-        return orig_p(self, *a, **k)
-
-    def rec_unpersist(self, *a, **k):
-        unpersisted.append(self.columns)
-        return orig_u(self, *a, **k)
-
-    monkeypatch.setattr(cls, "persist", rec_persist)
-    monkeypatch.setattr(cls, "unpersist", rec_unpersist)
-    cents = train_ivf_centroids(emb, "vec_id", "embedding", n_clusters=4, n_iter=3)
-    assert cents.count() == 4
-    assert ["__id", "__v"] in persisted, "the (id, vec) projection must be persisted"
-    assert ["__id", "__v"] in unpersisted, "and unpersisted after the loop"
-    # cached once, not once per iteration
-    assert persisted.count(["__id", "__v"]) == 1
-
-
-def test_kmeans_assignment_plan_is_shuffle_free(spark):
-    """The assignment pass inlines centroids as literals — the plan
-    must contain no Exchange (no join, no window)."""
-    from adi_226_datawarehouse_project_spark.operators.similarity import (
-        _nearest_centroid_lit,
-    )
-
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    dim = len(emb.select("embedding").first()[0])
-    cents = [[1.0 if i == j else 0.0 for i in range(dim)] for j in range(4)]
-    assign = emb.select(_nearest_centroid_lit("embedding", cents, dim).alias("c"))
-    plan = assign._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    assert assign.count() == emb.count()
-
-
-def test_kmeans_assignment_thresholds_to_broadcast_join(spark):
-    """Past _INLINE_MAX_TERMS (k×dim), literal inlining would blow
-    codegen — assignment must switch to the broadcast-join argmax and
-    produce IDENTICAL centroids to the literal path at any width."""
-    import numpy as np
-
-    from adi_226_datawarehouse_project_spark.operators.similarity import (
-        _assign_join,
-        train_ivf_centroids,
-    )
-
-    rng = np.random.default_rng(7)
-
-    # Path equivalence at a width where the literal path is feasible:
-    # dim=64 k=32 (2048 terms -> literal by default; force join with
-    # inline_max_terms=0) must yield bit-compatible centroids.
-    dim, n, k = 64, 300, 32
-    rows = [(i, rng.standard_normal(dim).tolist()) for i in range(n)]
-    emb = spark.createDataFrame(rows, "vec_id INT, embedding ARRAY<DOUBLE>")
-    lits = train_ivf_centroids(emb, "vec_id", "embedding", n_clusters=k, n_iter=2)
-    joined = train_ivf_centroids(
-        emb, "vec_id", "embedding", n_clusters=k, n_iter=2, inline_max_terms=0
-    )
-    got = {r["centroid_id"]: r["centroid"] for r in joined.collect()}
-    want = {r["centroid_id"]: r["centroid"] for r in lits.collect()}
-    assert got.keys() == want.keys()
-    for cid in want:
-        assert np.allclose(got[cid], want[cid], atol=1e-12), f"centroid {cid} differs"
-
-    # Production width (dim=256, k*dim=12288 > _INLINE_MAX_TERMS): the
-    # auto path must train without a literal blowup (the forced-literal
-    # form OOMs codegen here) and the assignment plan must be a
-    # broadcast join, never a sort-merge join of the corpus.
-    dim_w, k_w = 256, 48
-    wide_rows = [(i, rng.standard_normal(dim_w).tolist()) for i in range(150)]
-    wide = spark.createDataFrame(wide_rows, "vec_id INT, embedding ARRAY<DOUBLE>")
-    cents_wide = train_ivf_centroids(wide, "vec_id", "embedding", n_clusters=k_w, n_iter=1)
-    assert cents_wide.count() == k_w
-    vecs = wide.select(F.col("vec_id").alias("__id"), F.col("embedding").alias("__v"))
-    cents = [r["centroid"] for r in cents_wide.collect()]
-    plan = _assign_join(vecs, cents)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
 def test_cosine_self_topk_guards_full_scan(spark):
     """probe_ids=None is an O(n²) all-pairs scan — must be an explicit
     opt-in, not a silent default."""
@@ -309,42 +185,26 @@ def test_semantic_dedup_within_cell_collapse(spark):
 
 
 def test_semantic_dedup_misses_cross_cell_pairs_by_design(spark):
-    from adi_226_datawarehouse_project_spark.operators.similarity import (
-        sample_centroids,
-        semantic_dedup,
-    )
+    from adi_226_datawarehouse_project_spark.operators.similarity import semantic_dedup
 
     # Centroids are the two smallest ids = the dup pair itself, so each
     # member is its own cell's centroid and the pair straddles cells:
     # SemDeDup must NOT examine it (the documented approximation).
     rows = [(0, [1.0, 0.0]), (1, [0.9999, 0.0141]), (5, [0.0, 1.0])]
     df = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
-    cents = sample_centroids(df, "vec_id", "embedding", 2)
-    cl = semantic_dedup(
-        df, "vec_id", "embedding", min_cosine=0.99, n_clusters=2, centroids=cents
-    )
+    cl = semantic_dedup(df, "vec_id", "embedding", min_cosine=0.99, n_clusters=2)
     got = {r["vec_id"]: r["cluster_id"] for r in cl.collect()}
     assert got == {0: 0, 1: 1, 5: 5}
-    # multi-probe is the recall lever for exactly this case: with
-    # n_probe=2 each member also probes its second-nearest cell, the
-    # probe sets intersect, the pair is re-scored and collapses.
-    cl2 = semantic_dedup(
-        df, "vec_id", "embedding", min_cosine=0.99, n_clusters=2,
-        centroids=cents, n_probe=2,
-    )
-    got2 = {r["vec_id"]: r["cluster_id"] for r in cl2.collect()}
-    assert got2 == {0: 0, 1: 0, 5: 5}
 
 
-def test_semantic_dedup_multi_probe_preserves_single_probe_results(spark):
-    """n_probe=1 must stay bit-identical to the oracle-pinned path,
-    and raising n_probe may only ADD pairs (superset clusters) — here
-    the fully-within-cell corpus collapses identically at 1, 2, 4."""
+def test_assign_cells_multi_single_probe_matches_assign_cells(spark):
+    """n_probe=1 must be exactly assign_cells (the cells ivf_topk's
+    corpus side and semantic_dedup use), and n_probe=m emits one row
+    per (vector, probed cell)."""
     from adi_226_datawarehouse_project_spark.operators.similarity import (
         assign_cells,
         assign_cells_multi,
         sample_centroids,
-        semantic_dedup,
     )
 
     rows = [
@@ -365,13 +225,6 @@ def test_semantic_dedup_multi_probe_preserves_single_probe_results(spark):
     # n_probe=2 over 2 cells: every vector probes both cells
     multi2 = assign_cells_multi(df, "vec_id", "embedding", cents, n_probe=2)
     assert len(key(multi2)) == 2 * len(rows)
-    want = {0: 0, 1: 1, 100: 0, 101: 0, 110: 1}
-    for npb in (1, 2, 4):
-        cl = semantic_dedup(
-            df, "vec_id", "embedding", min_cosine=0.99, n_clusters=2,
-            centroids=cents, n_probe=npb,
-        )
-        assert {r["vec_id"]: r["cluster_id"] for r in cl.collect()} == want
 
 
 def test_srp_band_buckets_match_signature_shift_mask(spark):
@@ -481,36 +334,17 @@ def test_srp_band_validation(spark):
         srp_signature("v", 0)
 
 
-def test_ivf_training_survives_ragged_and_nan_vectors(spark):
-    from adi_226_datawarehouse_project_spark.operators.similarity import (
-        train_ivf_centroids,
-    )
-
-    nan = float("nan")
-    rows = [(i, [float(i % 3), 1.0, 0.5]) for i in range(12)]
-    rows += [(100, [1.0]), (101, None), (102, [nan, 0.0, 0.0])]  # poison
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    cents = train_ivf_centroids(df, "vec_id", "embedding", n_clusters=3, n_iter=2)
-    got = cents.collect()
-    assert len(got) == 3
-    import math
-
-    for r in got:
-        assert all(math.isfinite(x) for x in r["centroid"])
-
-
 def test_model_sampling_skips_corrupt_low_id_vectors(spark):
     """The deterministic-sample model paths collect the SMALLEST-id
     vectors as driver-resident state; corrupt rows at low ids used to
     crash training (float(None)) or silently seed a dead centroid /
     fix the wrong dim. finite_vectors must screen them out of
-    sample_centroids, train_ivf_centroids seeds, and pq_codebooks —
-    while staying a no-op on clean corpora (oracle re-derivation)."""
+    sample_centroids and pq_codebooks — while staying a no-op on clean
+    corpora (oracle re-derivation)."""
     from adi_226_datawarehouse_project_spark.operators.pq import pq_codebooks
     from adi_226_datawarehouse_project_spark.operators.similarity import (
         finite_vectors,
         sample_centroids,
-        train_ivf_centroids,
     )
 
     clean = [(10 + i, [float((i * 7 + j * 3) % 5 + 1) for j in range(4)]) for i in range(8)]
@@ -531,89 +365,8 @@ def test_model_sampling_skips_corrupt_low_id_vectors(spark):
         clean[1][1],
     ]
 
-    # k-means training: seeds skip NULL/NaN, and dim is the MAJORITY
-    # length over the candidate sample — the lone ragged row at id=3
-    # must not set dim=2 for the whole model
-    trained = train_ivf_centroids(df, "id", "vec", n_clusters=3, n_iter=2)
-    got = trained.collect()
-    assert len(got) == 3 and all(len(r["centroid"]) == 4 for r in got)
-
     # PQ codebooks: NULL/NaN/zero-norm all excluded (zero-norm
     # normalizes to all-NULL, which used to crash float())
     books = pq_codebooks(df, "id", "vec", m=2, ksub=4)
     assert len(books) == 2 and len(books[0]) == 4
     assert all(all(x == x for x in entry) for sub in books for entry in sub)
-
-
-def test_train_ivf_raises_when_no_finite_vectors(spark):
-    from adi_226_datawarehouse_project_spark.operators.similarity import (
-        train_ivf_centroids,
-    )
-
-    df = spark.createDataFrame(
-        [(1, None), (2, [float("nan"), 1.0])], "id BIGINT, vec ARRAY<DOUBLE>"
-    )
-    with pytest.raises(ValueError, match="no finite vectors"):
-        train_ivf_centroids(df, "id", "vec", n_clusters=2, n_iter=1)
-
-
-def test_tune_srp_bands_reaches_target(spark):
-    """Self-calibration (r13 verdict task #1): the band ladder walks
-    until sampled recall@k reaches the target; the report records the
-    recall/candidate-cost curve for every rung it tried."""
-    from adi_226_datawarehouse_project_spark.operators.similarity import (
-        tune_srp_bands,
-    )
-
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    rep = tune_srp_bands(
-        emb, "vec_id", "embedding", k=5, target_recall=0.9, sample_queries=25
-    )
-    assert rep["met"] is True
-    assert rep["chosen_bands"] in (4, 8, 16)
-    assert rep["curve"][-1]["recall_at_k"] >= 0.9
-    for point in rep["curve"]:
-        assert point["sample_candidates"] > 0
-    # deterministic: same corpus + params → same report
-    rep2 = tune_srp_bands(
-        emb, "vec_id", "embedding", k=5, target_recall=0.9, sample_queries=25
-    )
-    assert rep == rep2
-
-
-def test_tune_ivf_probes_exact_endpoint(spark):
-    """The IVF ladder ends at n_probe == n_clusters (probe every cell),
-    which is brute force — recall 1.0 by construction, so any target is
-    reachable and ``met`` can only be False for SRP, never IVF."""
-    from adi_226_datawarehouse_project_spark.operators.similarity import (
-        tune_ivf_probes,
-    )
-
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    rep = tune_ivf_probes(
-        emb, "vec_id", "embedding", k=5, target_recall=1.0, n_clusters=8,
-        probe_ladder=(2, 8), sample_queries=15,
-    )
-    assert rep["met"] is True
-    assert rep["curve"][-1]["recall_at_k"] == 1.0
-    # candidate cost grows with probes (candidate set is monotone in
-    # n_probe for fixed centroids)
-    cands = [p["sample_candidates"] for p in rep["curve"]]
-    assert cands == sorted(cands)
-
-
-def test_lsh_topk_target_recall_end_to_end(spark):
-    """lsh_bucket_topk(target_recall=) must deliver the calibrated
-    recall on the very sample it calibrated with — and stay a normal
-    top-k frame."""
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    probes = list(range(20))
-    exact = cosine_self_topk(
-        emb, "vec_id", "embedding", k=5, probe_ids=probes
-    ).collect()
-    tuned = lsh_bucket_topk(
-        emb, "vec_id", "embedding", k=5, probe_ids=probes,
-        target_recall=0.9, sample_queries=25,
-    ).collect()
-    assert _recall(exact, tuned) >= 0.8  # calibration sample ≠ probe set
-    assert {r["rank"] for r in tuned} <= set(range(1, 6))
