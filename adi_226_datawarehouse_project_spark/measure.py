@@ -1,5 +1,5 @@
-"""Measurement consumption helper shared by bench.py and the
-scripts/*_scale.py harnesses.
+"""Measurement helpers shared by bench.py and the scripts/*_scale.py
+harnesses: the hash-reduce consume and the codegen compile counter.
 
 Hash-reduce methodology (single source of truth; previously four
 verbatim copies across bench.py / new_ops_scale.py /
@@ -30,3 +30,13 @@ def hash_consume(df: DataFrame) -> int:
         F.sum(F.xxhash64(*[F.col(c) for c in df.columns])).alias("h"),
     ).collect()[0]
     return int(row["n"])
+
+
+def codegen_compiles(spark) -> int:
+    """How many classes the driver JVM's codegen has compiled so far
+    (Spark's CodegenMetrics compilation-time histogram count). A delta
+    over a run that stays near zero means the generated-class cache
+    holds the run's working set; one that grows with every repeat
+    means the cache thrashes and each repeat pays Janino again."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

@@ -92,18 +92,8 @@ def cosine_self_topk(
     if probe_ids is not None:
         probes = probes.filter(F.col("query_id").isin(probe_ids))
     corpus = df.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__nv"))
-    scored = (
-        corpus.join(F.broadcast(probes), F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", cosine(F.col("__qv"), F.col("__nv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    cand = corpus.join(F.broadcast(probes), F.col("neighbor_id") != F.col("query_id"))
+    return _rerank_topk(cand, k)
 
 
 def _srp_plane_bit(vec_col: str, p: int, weight: int) -> str:
@@ -214,7 +204,8 @@ def srp_candidates(
 
 def _rerank_topk(cand: DataFrame, k: int) -> DataFrame:
     """Exact-cosine re-rank of a candidate-pair frame to per-query
-    top-k (shared tail of every ANN path; ties cosine desc, id asc)."""
+    top-k (shared tail of the exact and every ANN path; ties cosine
+    desc, id asc)."""
     scored = cand.withColumn("cosine", cosine(F.col("__qv"), F.col("__nv")))
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()

@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -28,25 +29,25 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Parquet scans parallelize at row-group granularity: a file with one
-# row group is ONE task no matter how many splits Spark assigns, and
-# every expression fused into that scan stage (fixture generation,
-# shingling, per-row decode) then runs on a single core. The driver's
-# local fixtures are single-row-group files, so pipelines that fuse
-# EXPENSIVE per-row work above such a scan opt into an explicit
-# repartition (`parallelize=True`). It is deliberately opt-in: for
-# cheap scan→aggregate queries the extra full-table exchange costs
-# more than the single-task scan (measured +0.2-0.5s per query at
-# sf0.1), while for generation/shingling pipelines it is a 4-10x win.
-# No-op at scale: production tables are many files × many row groups,
-# where row-group count >= core count and no exchange is added.
-_MIN_ROWS_TO_REPARTITION = 1_000
-# Footer-probe memos are keyed on (size, mtime_ns) of the probed file so
-# a fixture rewritten IN PLACE (regenerated at a larger scale, compacted
-# to different row groups) re-probes instead of serving a stale figure —
-# same contract as model/star.py's policy-probe fingerprint.
-_rowgroup_memo: dict[str, tuple[tuple, tuple[int, int]]] = {}
+# Footer-probe and schema memos are keyed on (size, mtime_ns) of the
+# file so a fixture rewritten IN PLACE (regenerated at a larger scale,
+# compacted, given a new column) is probed again instead of serving a
+# stale answer — same contract as model/star.py's policy-probe
+# fingerprint.
 _ts_layout_memo: dict[str, tuple[tuple, str]] = {}
+
+# Inferring a parquet schema runs a Spark job that reads the footer:
+# `spark.read.parquet(documents)` took 0.29-0.54 s at sf0.1 on a 4-core
+# box, 0.09-0.15 s with the schema given, and every text op loads its
+# input afresh (about 0.5 s of a 10.2 s `text_dedup` round). The
+# inferred schema is a function of the file and of these session confs,
+# so both key the memo.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_schema_memo: dict[tuple, tuple[tuple, StructType]] = {}
 
 # Serializes the nanosAsLong set/read/restore in load_table — see the
 # comment there. A module-level lock (not per-session) is fine: the
@@ -61,28 +62,21 @@ def _stat_key(path: str) -> tuple:
     return (st.st_size, st.st_mtime_ns)
 
 
-def _scan_parallelism(path: str) -> tuple[int, int]:
-    """(row_groups, rows) of a local parquet file, memoized per
-    (path, size, mtime)."""
-    key = _stat_key(path)
-    hit = _rowgroup_memo.get(path)
-    if hit is None or hit[0] != key:
-        import pyarrow.parquet as pq
-
-        f = pq.ParquetFile(path)
-        _rowgroup_memo[path] = (key, (f.num_row_groups, f.metadata.num_rows))
-    return _rowgroup_memo[path][1]
-
-
-def _parallelize_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
-    cores = spark.sparkContext.defaultParallelism
-    try:
-        groups, rows = _scan_parallelism(path)
-    except Exception:  # non-local / multi-file path: leave the scan alone
-        return df
-    if groups >= cores or rows < _MIN_ROWS_TO_REPARTITION:
-        return df
-    return df.repartition(cores)
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a single file's schema
+    once per (size, mtime_ns). The file is still listed on every call.
+    Directories are read as they are: their part files can change
+    without the directory's own stat moving."""
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    key = (path, *(spark.conf.get(c) for c in _SCHEMA_CONFS))
+    stat = _stat_key(path)
+    hit = _schema_memo.get(key)
+    if hit is not None and hit[0] == stat:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _schema_memo[key] = (stat, df.schema)
+    return df
 
 
 def events_ts_storage(path: str) -> str:
@@ -150,13 +144,10 @@ def _events_ts_storage_uncached(path: str, pa, pq) -> str:
     return "timestamp"
 
 
-def load_table(
-    spark: SparkSession, sf_dir: str, name: str, parallelize: bool = False
-) -> DataFrame:
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar parquet scan; filters/projections placed on the result
-    push down into the scan (verify via PushedFilters in .explain).
-    `parallelize=True` restores task parallelism under CPU-heavy fused
-    work when the file has fewer row groups than cores (see above).
+    push down into the scan (verify via PushedFilters in .explain). A
+    single-file table's schema is inferred once (see _read_parquet).
 
     ``events.ts`` always comes back as a (naive) TIMESTAMP column
     regardless of the file's physical layout (see events_ts_storage)."""
@@ -200,7 +191,7 @@ def load_table(
         if isinstance(df.schema["ts"].dataType, T.LongType):
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     else:
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
     if name == "events":
         # Whatever layout the file had, ``ts`` leaves here as TIMESTAMP:
         # TIMESTAMP_NTZ (Spark 4's default inference for non-tz parquet)
@@ -212,7 +203,7 @@ def load_table(
             from pyspark.sql import functions as F
 
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return _parallelize_scan(spark, df, path) if parallelize else df
+    return df
 
 
 # One registration per (session, sf_dir): every query entry point calls

@@ -4,7 +4,8 @@
 
     {"metric": "...", "value": <total_sec>, "unit": "sec",
      "queries": {"q1": sec, ...}, "sf": ...,
-     "protocol": "median-of-3", "trials": {...}, "loadavg": {...}}
+     "protocol": "median-of-3", "trials": {...},
+     "codegen": {"q1": compiles, ...}, "loadavg": {...}}
 
 Protocol (round 8, replacing min-of-2): every query runs THREE trials
 after a session warm-up; the recorded figure is the MEDIAN, and the
@@ -13,7 +14,10 @@ in the JSON. Two rounds running, per-query deltas were litigated as
 "probably co-tenant noise" (±20–30% swings on identical code); the
 median defends against one contended trial in either direction, and
 the recorded spread makes a future delta decidable — a change is real
-only if it lands outside the prior round's trial envelope. Timing is
+only if it lands outside the prior round's trial envelope. ``codegen``
+is each entry's change in the driver's codegen compile count over its
+trials: a query whose repeats keep compiling is thrashing the
+generated-class cache, which shows here without a re-run. Timing is
 end-to-end (plan + execute + consume) per trial, which is what a user
 of the engine experiences.
 
@@ -35,7 +39,10 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from adi_226_datawarehouse_project_spark.measure import hash_consume  # noqa: E402
+from adi_226_datawarehouse_project_spark.measure import (  # noqa: E402
+    codegen_compiles,
+    hash_consume,
+)
 from adi_226_datawarehouse_project_spark.session import get_spark  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
@@ -150,6 +157,7 @@ def main() -> None:
 
     times: dict[str, float] = {}
     trials: dict[str, list[float]] = {}
+    compiles: dict[str, int] = {}
 
     # Materialize the derived warehouse (the ETL "load" phase —
     # cleaning, dedup, dims, facts, caching), timed with the SAME
@@ -160,6 +168,7 @@ def main() -> None:
     from adi_226_datawarehouse_project_spark.model import star as _star
 
     ts: list[float] = []
+    c0 = codegen_compiles(spark)
     for attempt in range(TRIALS):
         if attempt:
             _star._REGISTERED.pop(id(spark), None)
@@ -168,6 +177,7 @@ def main() -> None:
         materialize_warehouse(spark, sf_dir)
         ts.append(round(time.perf_counter() - t0, 3))
     trials["warehouse_build"] = ts
+    compiles["warehouse_build"] = codegen_compiles(spark) - c0
     times["warehouse_build"] = round(statistics.median(ts), 3)
     print(
         f"# warehouse_build: {times['warehouse_build']:.3f}s trials={ts}",
@@ -176,11 +186,13 @@ def main() -> None:
 
     for name in BENCH_QUERIES:
         ts, n = [], 0
+        c0 = codegen_compiles(spark)
         for _ in range(TRIALS):
             t0 = time.perf_counter()
             n = consume(name, qs[name](spark, sf_dir))
             ts.append(round(time.perf_counter() - t0, 3))
         trials[name] = ts
+        compiles[name] = codegen_compiles(spark) - c0
         times[name] = round(statistics.median(ts), 3)
         print(f"# {name}: {times[name]:.3f}s rows={n} trials={ts}", file=sys.stderr)
 
@@ -195,6 +207,7 @@ def main() -> None:
                 "sf": sf,
                 "protocol": f"median-of-{TRIALS}",
                 "trials": trials,
+                "codegen": compiles,
                 "loadavg": {
                     "start": [round(x, 2) for x in load_start],
                     "end": [round(x, 2) for x in os.getloadavg()],

@@ -278,3 +278,68 @@ def test_compact_table_inplace_guard_resolves_paths(spark, tmp_path):
     sneaky = str(tmp_path / "other" / ".." / "zone")
     with pytest.raises(ValueError, match="out_path must differ"):
         compact_table(spark, str(zone), sneaky)
+
+
+def _write_pq(path, **cols):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table(cols), str(path))
+
+
+def _load_jobs(spark, group, sf_dir, name):
+    """(frame, jobs submitted) of one load_table call, jobs counted
+    once the listener bus has caught up with them."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        df = load_table(spark, sf_dir, name)
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_infers_file_schema_once(spark, tmp_path):
+    """Schema inference is a Spark job; an unchanged file's second load
+    reuses the first load's schema (StructField equality includes
+    nullability) and submits no job at all."""
+    _write_pq(tmp_path / "t.parquet", k=[1, 2, None], s=["a", None, "c"])
+    first, jobs1 = _load_jobs(spark, "schema_memo_miss", str(tmp_path), "t")
+    second, jobs2 = _load_jobs(spark, "schema_memo_hit", str(tmp_path), "t")
+    assert jobs1 >= 1
+    assert jobs2 == 0
+    inferred = spark.read.parquet(str(tmp_path / "t.parquet")).schema
+    assert second.schema == first.schema == inferred
+    assert set(map(tuple, second.collect())) == {(1, "a"), (2, None), (None, "c")}
+
+
+def test_load_table_sees_in_place_rewrite(spark, tmp_path):
+    """A file rewritten in place with a new column is re-inferred on the
+    next load, not read through the stale memo schema."""
+    path = tmp_path / "t.parquet"
+    _write_pq(path, k=[1, 2])
+    assert load_table(spark, str(tmp_path), "t").columns == ["k"]
+    _write_pq(path, k=[1, 2], extra=["x", "y"])
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["k", "extra"]
+    assert sorted(r["extra"] for r in df.collect()) == ["x", "y"]
+
+
+def test_load_table_schema_follows_inference_confs(spark, tmp_path):
+    """The inferred type of an unannotated parquet BINARY column depends
+    on spark.sql.parquet.binaryAsString, so flipping it re-infers."""
+    from pyspark.sql import types as T
+
+    _write_pq(tmp_path / "t.parquet", b=[b"ab", b"cd"])
+    key = "spark.sql.parquet.binaryAsString"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        assert isinstance(load_table(spark, str(tmp_path), "t").schema["b"].dataType, T.BinaryType)
+        spark.conf.set(key, "true")
+        df = load_table(spark, str(tmp_path), "t")
+        assert isinstance(df.schema["b"].dataType, T.StringType)
+        assert sorted(r["b"] for r in df.collect()) == ["ab", "cd"]
+    finally:
+        spark.conf.set(key, prev)

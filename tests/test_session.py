@@ -65,3 +65,22 @@ def test_is_live_rejects_stopped_or_absent_contexts(spark):
     assert not _is_live(None)
     assert not _is_live(_DeadSession())
     assert not _is_live(_Exploding())
+
+
+def test_codegen_cache_holds_a_text_round(spark):
+    """One text round compiles about 190 classes, above Spark's default
+    100-entry generated-class cache. The session holds more: after 150
+    distinct one-literal projections the first one is still cached, so
+    re-running it compiles nothing."""
+    from adi_226_datawarehouse_project_spark.measure import codegen_compiles
+
+    def project(i):
+        spark.range(4).selectExpr(f"id * {i + 100_003} AS v").collect()
+
+    before = codegen_compiles(spark)
+    for i in range(150):
+        project(i)
+    assert codegen_compiles(spark) - before >= 150  # each one compiled
+    before = codegen_compiles(spark)
+    project(0)
+    assert codegen_compiles(spark) == before
