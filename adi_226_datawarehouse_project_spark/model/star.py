@@ -59,7 +59,7 @@ from pyspark.sql import SparkSession
 
 from .. import dialect as D
 from ..functions.geohash import geohash_sql
-from ..sources.catalog import register_base_views
+from ..sources.catalog import SessionMemo, register_base_views
 from .fixtures import complaints_raw_sql, listings_raw_sql
 
 
@@ -384,112 +384,25 @@ STAR_TABLES: dict[str, Callable[[str], str]] = {
 # mid-session policy flip a silent no-op serving the previous layout
 # (round-9 judge finding). Any component change → clearCache + rebuild.
 # Labels: "cache" (views + in-memory columnar cache), "parquet"
-# (write-through zone).
-_REGISTERED: dict[int, tuple[str, str, str | None]] = {}
+# (write-through zone). Keyed by id(spark) → (sf_dir, policy, zone);
+# reads go through ``live``, which guards against a reused id(spark)
+# (see catalog.SessionMemo).
+_REGISTERED = SessionMemo()
 
-# id(spark) can be REUSED after a session is garbage-collected (CPython
-# address reuse) — a stale memo would then skip registration on a brand
-# new session and every query would fail TABLE_OR_VIEW_NOT_FOUND. Reads
-# go through _memo_get, which only honors an entry whose recorded
-# weakref still points at THIS session (same guard as
-# sources/catalog._BASE_REGISTERED). Tests that inject/pop _REGISTERED
-# entries directly keep working: a missing ref is trusted.
-_REGISTERED_REFS: dict[int, object] = {}
-
-
-# Per-session registration lock (r13 concurrency audit, VERDICT r12
-# #7): the memo transitions (cold registration, zone materialization,
-# layout rebuild) are multi-step read-modify-write sequences over
-# _REGISTERED + the Spark catalog.
+# Registration lock (r13 concurrency audit, VERDICT r12 #7): the memo
+# transitions (cold registration, zone materialization, layout rebuild)
+# are multi-step read-modify-write sequences over _REGISTERED + the
+# Spark catalog.
 # The engine's OWN pools never call these from worker threads (workers
 # only cacheTable/count — audited r13), but a USER driving queries
 # from a thread pool hits register_star_views concurrently on first
 # use: without a lock, two threads can both take the cold path
 # (duplicated wave work) and one thread's clearCache can drop caches
 # the other is mid-filling. RLock, so a re-entrant call from the
-# thread already holding it cannot deadlock.
-# Keyed by id(spark) like the memo, with the memo's weakref liveness
-# guard (VERDICT r13 watch item): retired sessions are pruned on the
-# next lock acquisition, so a long-lived multi-session driver does not
-# accumulate one RLock per dead session — and an id() reused by a NEW
-# session after GC cannot inherit the old session's lock entry.
-_SESSION_LOCKS: dict[int, threading.RLock] = {}
-_SESSION_LOCK_REFS: dict[int, object] = {}
-_SESSION_LOCKS_GUARD = threading.Lock()
-
-
-def _session_lock(spark: SparkSession) -> threading.RLock:
-    import weakref
-
-    key = id(spark)
-    with _SESSION_LOCKS_GUARD:
-        ref = _SESSION_LOCK_REFS.get(key)
-        if ref is not None and ref() is not spark:  # type: ignore[operator]
-            _SESSION_LOCKS.pop(key, None)
-            _SESSION_LOCK_REFS.pop(key, None)
-        for k in [k for k, r in _SESSION_LOCK_REFS.items() if r() is None]:  # type: ignore[operator]
-            _SESSION_LOCKS.pop(k, None)
-            _SESSION_LOCK_REFS.pop(k, None)
-        lk = _SESSION_LOCKS.get(key)
-        if lk is None:
-            lk = _SESSION_LOCKS[key] = threading.RLock()
-            try:
-                _SESSION_LOCK_REFS[key] = weakref.ref(spark)
-            except TypeError:  # pragma: no cover - session not weakref-able
-                pass
-        return lk
-
-
-def _memo_get(spark: SparkSession) -> tuple[str, str, str | None] | None:
-    key = id(spark)
-    ref = _REGISTERED_REFS.get(key)
-    if ref is not None and ref() is not spark:  # type: ignore[operator]
-        _REGISTERED.pop(key, None)
-        _REGISTERED_REFS.pop(key, None)
-        return None
-    return _REGISTERED.get(key)
-
-
-def _memo_set(spark: SparkSession, value: tuple[str, str, str | None]) -> None:
-    import weakref
-
-    _REGISTERED[id(spark)] = value
-    try:
-        _REGISTERED_REFS[id(spark)] = weakref.ref(spark)
-    except TypeError:  # pragma: no cover - session not weakref-able
-        _REGISTERED_REFS.pop(id(spark), None)
-
-
-# Cache the whole derived warehouse (raw + staging + dims + facts) once
-# per session: cacheTable is LAZY, so unused tables cost nothing, while
-# the 10-query golden suite reuses the materialized gold layer instead
-# of re-running the cleaning+join pipeline per query. This is the local
-# analog of the reference's medallion materialization (raw/staging/gold
-# S3 zones) — at 100 TB these are partitioned parquet/Iceberg writes.
-#
-# The raw zone MUST be materialized, not just lazily viewed: Catalyst
-# pushes the staging bbox predicates down through the fixture projection
-# by alias substitution, so with a lazy raw view each of the 6 filter
-# conjuncts re-derives the full lat/lon string-construction chain per
-# row (measured 6× re-eval ⇒ staging_311 20s → 3.4s at sf0.1 once raw
-# is materialized). Same at scale: filters over columns derived by
-# expensive expressions should scan a materialized zone, not recompute.
-_CACHE_TABLES = (
-    "complaints_raw",
-    "listings_raw",
-    "staging_311",
-    "staging_airbnb",
-    "dim_date",
-    "dim_311_agency",
-    "dim_311_borough",
-    "dim_311_location",
-    "dim_311_complaint",
-    "fact_311_complaint",
-    "dim_airbnb_location",
-    "dim_airbnb_property",
-    "dim_airbnb_host",
-    "fact_airbnb_listings",
-)
+# thread already holding it cannot deadlock. One lock for all sessions:
+# two sessions registering at the same moment wait on each other, which
+# costs a wait, never a wrong result.
+_REGISTRATION_LOCK = threading.RLock()
 
 
 def register_star_views(spark: SparkSession, sf_dir: str) -> None:
@@ -507,12 +420,11 @@ def register_star_views(spark: SparkSession, sf_dir: str) -> None:
     later call for the same sf_dir hits the memo without probing —
     both layouts give identical results.
 
-    Thread-safe per session: the whole transition runs under the
-    session registration lock (see _SESSION_LOCKS), so concurrent
-    first-use callers serialize — one does the work, the rest hit the
-    memo."""
-    with _session_lock(spark):
-        memo = _memo_get(spark)
+    Thread-safe: the whole transition runs under the registration lock
+    (see _REGISTRATION_LOCK), so concurrent first-use callers
+    serialize — one does the work, the rest hit the memo."""
+    with _REGISTRATION_LOCK:
+        memo = _REGISTERED.live(spark)
         if memo is None or memo[0] != sf_dir:
             _build_layout(spark, sf_dir, resolve_warehouse_policy(spark, sf_dir))
 
@@ -552,11 +464,11 @@ def _create_view(spark: SparkSession, name: str) -> None:
 def _build_layout(spark: SparkSession, sf_dir: str, policy: str) -> None:
     """Build ``policy``'s layout for sf_dir unless the memo already
     holds it; any other registration is dropped first. Caller holds the
-    session lock."""
+    registration lock."""
     if policy == "parquet":
         _materialize_zone(spark, sf_dir)
         return
-    memo = _memo_get(spark)
+    memo = _REGISTERED.live(spark)
     if memo == (sf_dir, "cache", None):
         return
     if memo is not None:
@@ -568,9 +480,23 @@ def _build_layout(spark: SparkSession, sf_dir: str, policy: str) -> None:
         with ThreadPoolExecutor(len(wave)) as ex:
             list(ex.map(lambda name: _create_view(spark, name), wave))
     _cache_tables_waved(spark)
-    _memo_set(spark, (sf_dir, "cache", None))
+    _REGISTERED.put(spark, (sf_dir, "cache", None))
 
 
+# Cache the whole derived warehouse (raw + staging + dims + facts) once
+# per session: cacheTable is LAZY, so unused tables cost nothing, while
+# the 10-query golden suite reuses the materialized gold layer instead
+# of re-running the cleaning+join pipeline per query. This is the local
+# analog of the reference's medallion materialization (raw/staging/gold
+# S3 zones) — at 100 TB these are partitioned parquet/Iceberg writes.
+#
+# The raw zone MUST be materialized, not just lazily viewed: Catalyst
+# pushes the staging bbox predicates down through the fixture projection
+# by alias substitution, so with a lazy raw view each of the 6 filter
+# conjuncts re-derives the full lat/lon string-construction chain per
+# row (measured 6× re-eval ⇒ staging_311 20s → 3.4s at sf0.1 once raw
+# is materialized). Same at scale: filters over columns derived by
+# expensive expressions should scan a materialized zone, not recompute.
 def _cache_tables_waved(spark: SparkSession) -> None:
     """cacheTable every warehouse table, parallel WITHIN a dependency
     wave. cacheTable is driver-side plan work (analysis + optimization
@@ -585,13 +511,9 @@ def _cache_tables_waved(spark: SparkSession) -> None:
     the lock)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    cacheable = set(_CACHE_TABLES)
     for wave in _REGISTER_WAVES:
-        ts = [t for t in wave if t in cacheable]
-        if not ts:
-            continue
-        with ThreadPoolExecutor(len(ts)) as ex:
-            list(ex.map(spark.catalog.cacheTable, ts))
+        with ThreadPoolExecutor(len(wave)) as ex:
+            list(ex.map(spark.catalog.cacheTable, wave))
 
 
 # Warehouse inputs for the layout size probe: complaints_raw
@@ -639,88 +561,19 @@ def _uncompressed_parquet_bytes(path: str) -> int:
         return 2 * os.path.getsize(path)
 
 
-_PROBE_CACHE: dict[str, tuple[tuple, int | None]] = {}
-
-
-def _probe_fingerprint(sf_dir: str) -> tuple:
-    """(name, size, mtime_ns) of every probe-input part — an os.stat
-    sweep, far cheaper than the footer reads it guards. Keys the probe
-    memo so a corpus replaced or still being written at the SAME path
-    (e.g. an in-place replication) re-probes instead of serving a
-    stale byte count into the layout decision."""
-    fp: list[tuple] = []
-    for name in _POLICY_PROBE_INPUTS:
-        p = os.path.join(sf_dir, name)
-        try:
-            if os.path.isdir(p):
-                for f in sorted(os.listdir(p)):
-                    if f.startswith((".", "_")):
-                        continue
-                    st = os.stat(os.path.join(p, f))
-                    fp.append((f, st.st_size, st.st_mtime_ns))
-            else:
-                st = os.stat(p)
-                fp.append((name, st.st_size, st.st_mtime_ns))
-        except OSError:
-            fp.append((name, -1, -1))
-    return tuple(fp)
-
-
-def _hadoop_probe(spark: SparkSession, sf_dir: str) -> int | None:
-    """Size the probe inputs through Spark's own Hadoop FileSystem —
-    the path OS-level ``os.stat`` can't see: ``file:``/``hdfs:``/
-    ``s3a:`` URIs and anything else the session can read. Returns the
-    on-disk bytes, or None when the inputs don't exist there either (or
-    no Hadoop FS handles the scheme). Driver-side metadata calls only
-    (getContentSummary = a listing of the two probe inputs); no Spark
-    job."""
-    try:
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        total = 0
-        for name in _POLICY_PROBE_INPUTS:
-            path = jvm.org.apache.hadoop.fs.Path(sf_dir.rstrip("/") + "/" + name)
-            fs = path.getFileSystem(hconf)
-            if not fs.exists(path):
-                return None
-            total += fs.getContentSummary(path).getLength()
-        return total
-    except Exception:
-        return None
-
-
 def _probe_input_bytes(sf_dir: str, spark: SparkSession | None = None) -> int | None:
     """UNCOMPRESSED bytes of the warehouse's fixture inputs, from
-    parquet footers — a driver-side metadata stat, no Spark job. For
+    parquet footers — a driver-side metadata read, no Spark job. For
     multi-part directories, footers of the first ``_PROBE_SAMPLE_PARTS``
     parts are read and scaled by total disk bytes (replicated parts are
-    homogeneous). Memoized per sf_dir under a (size, mtime) fingerprint
-    of the input files, so a corpus rewritten in place is re-probed.
+    homogeneous). The footers are read on every consult (under 1 ms warm
+    at sf0.1), so a corpus rewritten in place is seen at once; consults
+    happen once per registration and per ``materialize_warehouse``
+    call, never per query. ``spark`` is unused.
 
-    When the inputs aren't local stat-able paths and ``spark`` is
-    given, the probe falls through to Spark's Hadoop FileSystem
-    (``_hadoop_probe``) so "unknown size" disappears for any
-    Spark-readable corpus — object stores included, exactly the
-    100 TB deployment shape. Footers aren't readable cheaply there,
-    so the uncompressed estimate is 2× the on-disk bytes: the same
-    conservative multiplier as the unreadable-footer fallback
-    (over-predicting flips to the bounded-memory parquet zone early,
-    never evicts late). That route lists the inputs on every call —
-    layout decisions happen once per registration, never per query.
-    Returns None only when NEITHER probe can see the inputs;
-    ``resolve_warehouse_policy`` then picks the bounded direction."""
-    fp = _probe_fingerprint(sf_dir)
-    if spark is not None and any(size < 0 for _, size, _ in fp):
-        disk = _hadoop_probe(spark, sf_dir)
-        if disk is not None:
-            return 2 * disk
-    hit = _PROBE_CACHE.get(sf_dir)
-    if hit is None or hit[0] != fp:
-        _PROBE_CACHE[sf_dir] = (fp, _probe_input_bytes_uncached(sf_dir))
-    return _PROBE_CACHE[sf_dir][1]
-
-
-def _probe_input_bytes_uncached(sf_dir: str) -> int | None:
+    Returns None when the inputs are not local files (a URI, a missing
+    path, a directory with no part files); ``resolve_warehouse_policy``
+    then picks the bounded direction."""
     total = 0
     for name in _POLICY_PROBE_INPUTS:
         p = os.path.join(sf_dir, name)
@@ -757,9 +610,8 @@ def resolve_warehouse_policy(spark: SparkSession, sf_dir: str) -> str:
     """Pick the warehouse layout from one cheap probe: ``cache`` while
     the projected cache (UNCOMPRESSED input bytes from parquet footers
     × ``_CACHE_EXPANSION``) fits the JVM heap, ``parquet`` once it does
-    not. Non-local paths are sized through Spark's Hadoop FileSystem
-    (see ``_probe_input_bytes``); a corpus NEITHER probe can see
-    resolves ``parquet`` — the bounded-memory direction (the worst
+    not. A corpus the probe cannot see (``_probe_input_bytes`` returns
+    None) resolves ``parquet`` — the bounded-memory direction (the worst
     case of guessing parquet is a slower first build, the worst case
     of guessing cache is heap exhaustion)."""
     n = _probe_input_bytes(sf_dir, spark)
@@ -800,35 +652,29 @@ def materialize_warehouse(spark: SparkSession, sf_dir: str) -> None:
     Unlike ``register_star_views``, this entry point probes on every
     call and honors a layout change mid-session: if the memoized
     (sf_dir, policy, zone) differs in any component, the old layout is
-    dropped (clearCache) and rebuilt. Thread-safe per session (same
-    lock as register_star_views)."""
-    with _session_lock(spark):
+    dropped (clearCache) and rebuilt. Thread-safe (same lock as
+    register_star_views)."""
+    with _REGISTRATION_LOCK:
         policy = resolve_warehouse_policy(spark, sf_dir)
         _build_layout(spark, sf_dir, policy)
         if policy == "parquet":
             return
         from concurrent.futures import ThreadPoolExecutor
 
-        # Terminals include the 8 gold dims, not just the facts + dim_date:
-        # a fact's first scan fills its dims' caches INLINE and mostly
-        # serially (measured: fact_311 fill 3.7s cold-dims vs 1.4s
-        # prefilled, the 4 dim fills 2.5s serial / ~1.1s concurrent — r12
-        # profile). Racing the dim counts against the fact counts is safe
-        # and never duplicates work: cached blocks are computed once behind
-        # BlockManager's per-block locks, so the fact job blocks on (then
-        # reads) whichever dim blocks the dim jobs are already computing.
-        terminals = (
-            "fact_311_complaint", "fact_airbnb_listings", "dim_date",
-            "dim_311_agency", "dim_311_borough", "dim_311_location",
-            "dim_311_complaint", "dim_airbnb_location", "dim_airbnb_property",
-            "dim_airbnb_host",
-        )
+        # Terminals are the whole gold level (waves 3 + 4), not just the
+        # facts + dim_date: a fact's first scan fills its dims' caches
+        # INLINE and mostly serially (measured: fact_311 fill 3.7s
+        # cold-dims vs 1.4s prefilled, the 4 dim fills 2.5s serial /
+        # ~1.1s concurrent — r12 profile). Racing the dim counts against
+        # the fact counts is safe and never duplicates work: cached
+        # blocks are computed once behind BlockManager's per-block locks,
+        # so the fact job blocks on (then reads) whichever dim blocks the
+        # dim jobs are already computing.
+        _, _, dims, facts = _REGISTER_WAVES
+        terminals = dims + facts
         with ThreadPoolExecutor(len(terminals)) as ex:
             list(ex.map(lambda t: spark.table(t).count(), terminals))
 
-
-_RAW_TABLES = ("complaints_raw", "listings_raw")
-_STAGING_TABLES = ("staging_311", "staging_airbnb")
 
 # Facts are hive-partitioned in the zone (the reference's
 # partition-prunable gold layout, SURVEY §4; same intent as
@@ -888,23 +734,22 @@ def _zone_dir(sf_dir: str) -> str:
 
 def _materialize_zone(spark: SparkSession, sf_dir: str) -> None:
     """Write-through parquet materialization (see materialize_warehouse
-    docstring); caller holds the session lock. Sequencing matters: temp
-    views capture their ANALYZED plan at CREATE time, so after each
-    zone level is written the DOWNSTREAM views must be re-created to
-    resolve against the repointed level — repointing staging alone
-    would leave the dim/fact views still bound to the original staging
-    plan."""
+    docstring); caller holds the registration lock. Sequencing
+    matters: temp views capture their ANALYZED plan at CREATE time, so
+    after each zone level is written the DOWNSTREAM views must be
+    re-created to resolve against the repointed level — repointing
+    staging alone would leave the dim/fact views still bound to the
+    original staging plan."""
     from concurrent.futures import ThreadPoolExecutor
 
-    key = id(spark)
     zone = _zone_dir(sf_dir)
     want = (sf_dir, "parquet", zone)
-    memo = _memo_get(spark)
+    memo = _REGISTERED.live(spark)
     if memo == want:
         return
     if memo is not None:
         spark.catalog.clearCache()
-        _REGISTERED.pop(key, None)
+        _REGISTERED.pop(id(spark), None)
     register_base_views(spark, sf_dir)
 
     def _write_and_repoint(name: str) -> None:
@@ -940,16 +785,17 @@ def _materialize_zone(spark: SparkSession, sf_dir: str) -> None:
             ]
         ).createOrReplaceTempView(name)
 
-    for t in _RAW_TABLES + _STAGING_TABLES:
+    raw, staging, dims, facts = _REGISTER_WAVES
+    for t in raw + staging:
         _create_view(spark, t)
-    for t in _RAW_TABLES:
+    for t in raw:
         spark.catalog.cacheTable(t)
-    with ThreadPoolExecutor(len(_STAGING_TABLES)) as ex:
-        list(ex.map(_write_and_repoint, _STAGING_TABLES))
-    for t in _RAW_TABLES:
+    with ThreadPoolExecutor(len(staging)) as ex:
+        list(ex.map(_write_and_repoint, staging))
+    for t in raw:
         spark.catalog.uncacheTable(t)
 
-    gold = [t for t in STAR_TABLES if t not in _RAW_TABLES + _STAGING_TABLES]
+    gold = dims + facts
     for t in gold:  # re-resolve against the parquet staging level
         _create_view(spark, t)
     # Lift the parallel-discovery threshold around the partitioned fact
@@ -969,7 +815,7 @@ def _materialize_zone(spark: SparkSession, sf_dir: str) -> None:
             list(ex.map(_write_and_repoint, gold))
     finally:
         spark.conf.set(threshold_key, prev)
-    _memo_set(spark, want)
+    _REGISTERED.put(spark, want)
 
 
 def oracle_with_chain(query_sql: str) -> str:

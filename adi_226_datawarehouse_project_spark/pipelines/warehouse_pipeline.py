@@ -34,24 +34,11 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import quality_checks as QC
-from ..model.star import register_star_views
+from ..model.star import _REGISTER_WAVES, register_star_views
 from ..orchestration.dag import DagTask, TaskResult, run_dag
 from ..plans.golden import GOLDEN_QUERIES
 from ..sources.observe import observed_write_parquet
 from ..sources.writers import write_run_manifest
-
-_STAGING = ("staging_311", "staging_airbnb")
-_DIMS = (
-    "dim_date",
-    "dim_311_agency",
-    "dim_311_borough",
-    "dim_311_location",
-    "dim_311_complaint",
-    "dim_airbnb_location",
-    "dim_airbnb_property",
-    "dim_airbnb_host",
-)
-_FACTS = ("fact_311_complaint", "fact_airbnb_listings")
 
 
 def _done(path: str) -> bool:
@@ -71,6 +58,8 @@ def run_warehouse_pipeline(
     ``run_utc`` is caller-supplied so runs are reproducible (no hidden
     clock read); pass a real timestamp in production."""
     register_star_views(spark, sf_dir)
+    # The star's dependency waves after raw: staging, dims, facts.
+    _, staging, dims, facts = _REGISTER_WAVES
 
     def _writer(
         table: str,
@@ -110,7 +99,7 @@ def run_warehouse_pipeline(
         return DagTask(
             name=f"gold_{name}",
             fn=fn,
-            upstream=list(_FACTS) + ["dim_date"],
+            upstream=list(facts),  # the facts already wait on every dim
             skip_if=(None if force else lambda p=path: _done(p)),
         )
 
@@ -169,15 +158,15 @@ def run_warehouse_pipeline(
 
     tasks: list[DagTask] = [DagTask("start", lambda u: None)]
     # wave 1: parallel staging fan-out (the `[trigger_airbnb, run_glue_311]` branch)
-    for t in _STAGING:
+    for t in staging:
         task = _writer(t, "staging")
         task.upstream = ["start"]
         tasks.append(task)
     # wave 1.5: staging validation gate (no skip_if — the gate re-runs
     # every time; it is cheap relative to the loads it protects)
-    tasks.append(DagTask("validate_staging", _validate, upstream=list(_STAGING)))
+    tasks.append(DagTask("validate_staging", _validate, upstream=list(staging)))
     # wave 2: dims — barrier on both staging branches via the gate
-    for t in _DIMS:
+    for t in dims:
         task = _writer(t, "warehouse")
         task.upstream = ["validate_staging"]
         tasks.append(task)
@@ -186,9 +175,9 @@ def run_warehouse_pipeline(
         "fact_311_complaint": ("created_year", "created_date_key DIV 10000"),
         "fact_airbnb_listings": ("scrape_year", "year(scraped_date)"),
     }
-    for t in _FACTS:
+    for t in facts:
         task = _writer(t, "warehouse", partition_expr=fact_parts[t])
-        task.upstream = list(_DIMS)
+        task.upstream = list(dims)
         tasks.append(task)
     # wave 4: gold publication
     tasks.extend(_golden(g) for g in goldens)

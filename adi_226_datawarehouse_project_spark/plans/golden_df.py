@@ -30,12 +30,6 @@ def _cents(expr: Column) -> Column:
     return F.round(expr * 100, 0).cast("bigint")
 
 
-def _avg_money(expr: Column, alias: str) -> Column:
-    return F.round(
-        F.sum(_cents(expr)).cast("bigint").cast("double") / F.count(expr) / 100.0, 2
-    ).alias(alias)
-
-
 def _price() -> Column:
     return F.expr("try_cast(price AS DOUBLE)")
 

@@ -10,6 +10,7 @@ identical — Catalyst handles partition pruning and predicate pushdown.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -206,37 +207,54 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+class SessionMemo(dict):
+    """A dict keyed on ``id(spark)`` whose entries count only for the
+    session that stored them.
+
+    CPython reuses addresses, so a NEW session allocated where a
+    garbage-collected one lived would otherwise inherit its entry, skip
+    registration and fail every query with TABLE_OR_VIEW_NOT_FOUND.
+    ``put`` records a weakref to the session (which also keeps the memo
+    from pinning dead sessions alive); ``live`` drops an entry whose ref
+    points elsewhere. An entry injected or popped through the plain
+    dict interface has no ref and is trusted."""
+
+    def __init__(self) -> None:
+        super().__init__()
+        self.refs: dict[int, weakref.ref] = {}
+
+    def live(self, spark: SparkSession):
+        key = id(spark)
+        ref = self.refs.get(key)
+        if ref is not None and ref() is not spark:
+            self.pop(key, None)
+            self.refs.pop(key, None)
+            return None
+        return self.get(key)
+
+    def put(self, spark: SparkSession, value) -> None:
+        self[id(spark)] = value
+        try:
+            self.refs[id(spark)] = weakref.ref(spark)
+        except TypeError:  # pragma: no cover - session not weakref-able
+            self.refs.pop(id(spark), None)
+
+
 # One registration per (session, sf_dir): every query entry point calls
 # this, and re-running 10 parquet schema reads per query is pure
 # overhead. Registering a DIFFERENT sf_dir invalidates the memo (and
 # star-view caching layers above handle their own invalidation).
-#
-# The memo key is id(spark) — but CPython reuses addresses, so a NEW
-# session allocated where a garbage-collected one lived would silently
-# skip registration and fail every query with TABLE_OR_VIEW_NOT_FOUND.
-# A weakref to the memoized session guards against that: a hit only
-# counts when the stored ref still points at THIS session object (the
-# weakref also keeps the memo from pinning dead sessions alive).
-_BASE_REGISTERED: dict[int, str] = {}
-_BASE_REGISTERED_REFS: dict[int, "weakref.ref"] = {}
+_BASE_REGISTERED = SessionMemo()
 
 
 def register_base_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every base table (``TABLES``) as a temp view so both
     the DataFrame and ``spark.sql`` surfaces see the same catalog."""
-    import weakref
-
-    key = id(spark)
-    ref = _BASE_REGISTERED_REFS.get(key)
-    if _BASE_REGISTERED.get(key) == sf_dir and ref is not None and ref() is spark:
+    if _BASE_REGISTERED.live(spark) == sf_dir:
         return
     for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-    _BASE_REGISTERED[key] = sf_dir
-    try:
-        _BASE_REGISTERED_REFS[key] = weakref.ref(spark)
-    except TypeError:  # pragma: no cover - session not weakref-able
-        _BASE_REGISTERED_REFS.pop(key, None)
+    _BASE_REGISTERED.put(spark, sf_dir)
 
 
 def table_exists(spark: SparkSession, name: str) -> bool:

@@ -115,18 +115,18 @@ def build_queries() -> dict:
     return qs
 
 
-# Row-per-doc suites are consumed via a hash-reduce (methodology
-# documented at adi_226_datawarehouse_project_spark/measure.py — the
-# single shared implementation): full evaluation executor-side, one row
-# across py4j.
-_HASH_CONSUME = {"text_token_features", "op_topk_orders_per_customer"}
+# Results with one row per entity are consumed via a hash-reduce
+# (methodology documented at adi_226_datawarehouse_project_spark/
+# measure.py — the single shared implementation): full evaluation
+# executor-side, one row across py4j. Everything else is collected.
+# The same set as perfbench/workloads.py's, so both harnesses time the
+# same work under one op name.
+_HASH_CONSUME = {"op_topk_orders_per_customer", "text_token_features", "dedup_lsh_pairs"}
 
 
 def consume(name: str, df) -> int:
     """Run bench query ``name``'s result ``df`` to completion the way
     bench times it; returns its row count (or the hash-reduce's)."""
-    if name.startswith(("dedup_", "sim_")):
-        return df.count()
     if name in _HASH_CONSUME:
         return hash_consume(df)
     return len(df.collect())

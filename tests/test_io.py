@@ -205,29 +205,29 @@ def test_events_probe_handles_hive_partitioned_directory(spark, tmp_path):
 def test_base_view_memo_survives_session_id_reuse(spark):
     """_BASE_REGISTERED keys on id(spark); CPython reuses addresses, so
     a stale entry from a garbage-collected session must NOT satisfy a
-    new session at the same address — the weakref identity check forces
-    re-registration (a false hit fails every query with
-    TABLE_OR_VIEW_NOT_FOUND)."""
+    new session at the same address — the shared weakref identity check
+    (SessionMemo.live) forces re-registration (a false hit fails every
+    query with TABLE_OR_VIEW_NOT_FOUND)."""
     from adi_226_datawarehouse_project_spark.sources import catalog
     from tests.conftest import SF_SMALL
 
     key = id(spark)
-    saved = (catalog._BASE_REGISTERED.get(key), catalog._BASE_REGISTERED_REFS.get(key))
+    saved = (catalog._BASE_REGISTERED.get(key), catalog._BASE_REGISTERED.refs.get(key))
     try:
         spark.catalog.dropTempView("nation")
         # Simulate id reuse: memo matches, but the ref points elsewhere
         # (a dead session object would give ref() is None — same miss).
         catalog._BASE_REGISTERED[key] = SF_SMALL
         other = type("NotThisSession", (), {})()
-        catalog._BASE_REGISTERED_REFS[key] = __import__("weakref").ref(other)
+        catalog._BASE_REGISTERED.refs[key] = __import__("weakref").ref(other)
         catalog.register_base_views(spark, SF_SMALL)
         assert spark.catalog.tableExists("nation")
-        assert catalog._BASE_REGISTERED_REFS[key]() is spark
+        assert catalog._BASE_REGISTERED.refs[key]() is spark
     finally:
         if saved[0] is not None:
             catalog._BASE_REGISTERED[key] = saved[0]
         if saved[1] is not None:
-            catalog._BASE_REGISTERED_REFS[key] = saved[1]
+            catalog._BASE_REGISTERED.refs[key] = saved[1]
 
 
 def test_run_manifest_empty_inputs_omits_field(spark, tmp_path):

@@ -55,6 +55,12 @@ def test_policy_flip_lifecycle(spark, monkeypatch, tmp_path):
     _force_layout(monkeypatch, "cache")
     star.materialize_warehouse(spark, SF)
     assert star._REGISTERED[id(spark)] == (SF, "cache", None)
+    # One inventory: the waves name every star table exactly once, and
+    # the cache layout caches each of them.
+    flat = [t for wave in star._REGISTER_WAVES for t in wave]
+    assert sorted(flat) == sorted(star.STAR_TABLES)
+    uncached = [t for t in star.STAR_TABLES if not spark.catalog.isCached(t)]
+    assert not uncached, uncached
     want = _fingerprints(spark)
 
     _force_layout(monkeypatch, "parquet")
@@ -87,6 +93,22 @@ def test_policy_flip_lifecycle(spark, monkeypatch, tmp_path):
     assert star._REGISTERED[id(spark)] == (SF, "cache", None)
     assert _fingerprints(spark) == want
 
+    # The medallion pipeline's staging, dim and fact tasks are waves 2,
+    # 3 and 4, in order (its DAG is built, not run).
+    from adi_226_datawarehouse_project_spark.pipelines import warehouse_pipeline as wp
+
+    monkeypatch.setattr(wp, "register_star_views", lambda *_: None)
+    monkeypatch.setattr(wp, "run_dag", lambda tasks: {t.name: t for t in tasks})
+    tasks = wp.run_warehouse_pipeline(spark, SF, str(tmp_path / "pipeline"))
+    _, staging, dims, facts = star._REGISTER_WAVES
+
+    def waiting_on(upstream):
+        return tuple(n for n, t in tasks.items() if t.upstream == list(upstream))
+
+    assert waiting_on(["start"]) == staging
+    assert waiting_on(["validate_staging"]) == dims
+    assert waiting_on(dims) == facts
+
 
 def test_auto_policy_matches_measured_operating_points(spark, monkeypatch):
     """The probe rule must reproduce the round-9 measured table
@@ -104,7 +126,7 @@ def test_auto_policy_matches_measured_operating_points(spark, monkeypatch):
         monkeypatch.setattr(star, "_probe_input_bytes", lambda _sf, _spark=None, n=n: n)
         monkeypatch.setattr(star, "_heap_bytes", lambda _s, h=heap: h)
         assert star.resolve_warehouse_policy(spark, SF) == expect, (n, heap)
-    # Unknown input size (NEITHER probe can see the corpus) → the
+    # Unknown input size (the probe cannot see the corpus) → the
     # BOUNDED direction: caching 14 tables of an unsizable corpus is
     # the failure mode the feature exists to prevent (VERDICT r10 #2).
     monkeypatch.setattr(star, "_probe_input_bytes", lambda _sf, _spark=None: None)
@@ -192,11 +214,9 @@ def test_query_path_consults_policy(spark, monkeypatch, tmp_path):
 
 
 def test_probe_refreshes_when_inputs_change(tmp_path):
-    """The probe memo is fingerprinted on the input files' (size,
-    mtime): a corpus rewritten IN PLACE (e.g. an in-progress
-    replication at the same path) must re-probe instead of serving the
-    stale byte count into the policy decision (round-10 tail-review
-    finding)."""
+    """A corpus rewritten IN PLACE (e.g. an in-progress replication at
+    the same path) must be re-probed instead of serving a stale byte
+    count into the policy decision (round-10 tail-review finding)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -206,7 +226,7 @@ def test_probe_refreshes_when_inputs_change(tmp_path):
         pq.write_table(small, tmp_path / name)
     n_small = star._probe_input_bytes(str(tmp_path))
     assert n_small is not None and n_small > 0
-    # Same result from the memo while the files are untouched.
+    # Same result on a repeat consult while the files are untouched.
     assert star._probe_input_bytes(str(tmp_path)) == n_small
     for name in star._POLICY_PROBE_INPUTS:
         pq.write_table(big, tmp_path / name)
@@ -214,34 +234,10 @@ def test_probe_refreshes_when_inputs_change(tmp_path):
     assert n_big is not None and n_big > 10 * n_small, (n_small, n_big)
 
 
-def test_hadoop_probe_refreshes_when_inputs_change(spark, tmp_path):
-    """Remote-route twin of test_probe_refreshes_when_inputs_change: a
-    corpus rewritten IN PLACE behind a `file:` URI must be seen on the
-    very next consult — the Hadoop route lists the inputs every time,
-    so there is no stale figure to serve."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    small = pa.table({"s": ["a" * 100 + str(i) for i in range(50)]})
-    big = pa.table({"s": ["b" * 4000 + str(i) for i in range(5000)]})
-    for name in star._POLICY_PROBE_INPUTS:
-        pq.write_table(small, tmp_path / name)
-    uri = "file:" + str(tmp_path)
-    n_small = star._probe_input_bytes(uri, spark)
-    assert n_small is not None and n_small > 0
-    for name in star._POLICY_PROBE_INPUTS:
-        pq.write_table(big, tmp_path / name)
-    n_big = star._probe_input_bytes(uri, spark)
-    assert n_big is not None and n_big > 10 * n_small, (n_small, n_big)
-    for name in star._POLICY_PROBE_INPUTS:
-        pq.write_table(small, tmp_path / name)
-    assert star._probe_input_bytes(uri, spark) == n_small
-
-
 def test_query_path_probes_once(spark, monkeypatch):
-    """The remote probe lists the inputs on every consult, so consults
-    must stay off the per-query path: a cold registration probes once,
-    and golden queries served from the memo never probe again."""
+    """The probe reads the footers on every consult, so consults must
+    stay off the per-query path: a cold registration probes once, and
+    golden queries served from the memo never probe again."""
     import __spark_entry__ as entry
     from adi_226_datawarehouse_project_spark.plans.golden import GOLDEN_QUERIES
 
@@ -254,7 +250,6 @@ def test_query_path_probes_once(spark, monkeypatch):
 
     monkeypatch.setattr(star, "_probe_input_bytes", counting)
     star._REGISTERED.pop(id(spark), None)
-    star._REGISTERED_REFS.pop(id(spark), None)
     spark.catalog.clearCache()
     star.register_star_views(spark, SF)
     qs = entry.queries()
@@ -268,67 +263,45 @@ def test_star_memo_survives_session_id_reuse(spark):
     """_REGISTERED keys on id(spark); a stale entry left by a
     garbage-collected session at a reused address must NOT satisfy a
     new session (it would skip registration and fail every query) —
-    the weakref identity check in _memo_get invalidates it."""
+    the shared weakref identity check (catalog.SessionMemo.live)
+    invalidates it."""
     import weakref
 
     key = id(spark)
-    saved = (star._REGISTERED.get(key), star._REGISTERED_REFS.get(key))
+    saved = (star._REGISTERED.get(key), star._REGISTERED.refs.get(key))
     try:
         star._REGISTERED[key] = (SF, "cache", None)
         other = type("NotThisSession", (), {})()
-        star._REGISTERED_REFS[key] = weakref.ref(other)
-        assert star._memo_get(spark) is None  # stale entry invalidated
+        star._REGISTERED.refs[key] = weakref.ref(other)
+        assert star._REGISTERED.live(spark) is None  # stale entry invalidated
         assert key not in star._REGISTERED
         # A fresh registration records a ref to THIS session.
         star.register_star_views(spark, SF)
-        assert star._memo_get(spark) == (SF, "cache", None)
-        assert star._REGISTERED_REFS[key]() is spark
+        assert star._REGISTERED.live(spark) == (SF, "cache", None)
+        assert star._REGISTERED.refs[key]() is spark
     finally:
         star._REGISTERED.pop(key, None)
-        star._REGISTERED_REFS.pop(key, None)
+        star._REGISTERED.refs.pop(key, None)
         if saved[0] is not None:
             star._REGISTERED[key] = saved[0]
         if saved[1] is not None:
-            star._REGISTERED_REFS[key] = saved[1]
+            star._REGISTERED.refs[key] = saved[1]
         spark.catalog.clearCache()
 
 
 def test_non_statable_sf_dir_resolves_bounded(spark):
-    """VERDICT r10 top-next: a corpus NEITHER os.stat nor the Hadoop
-    FS can see must resolve `parquet` (bounded memory), not `cache` —
-    the unprobeable corpus is precisely the one that must never be
-    speculatively cached whole."""
-    assert (
-        star.resolve_warehouse_policy(spark, "/nonexistent/sf_dir_r11")
-        == "parquet"
-    )
-
-
-def test_hadoop_probe_sizes_file_scheme_uris(spark):
-    """A `file:`-scheme sf_dir is invisible to os.stat but readable by
-    Spark: the Hadoop-FS probe must size it (2× disk, the conservative
-    unreadable-footer multiplier), so "unknown size" disappears for
-    Spark-readable paths and the tiny test corpus resolves `cache`
-    exactly like its plain-path twin."""
-    import os
-
-    uri = "file:" + SF
-    n = star._probe_input_bytes(uri, spark)
-    disk = sum(
-        os.path.getsize(os.path.join(SF, t)) for t in star._POLICY_PROBE_INPUTS
-    )
-    assert n == 2 * disk
-    assert star.resolve_warehouse_policy(spark, uri) == "cache"
-    # a repeat consult re-lists and reports the same figure
-    assert star._probe_input_bytes(uri, spark) == n
-    # without a session to reach the Hadoop FS, the local probe alone
-    # still (correctly) reports unknown
-    assert star._probe_input_bytes(uri) is None
+    """VERDICT r10 top-next: a corpus the local footer probe cannot see
+    must resolve `parquet` (bounded memory), not `cache` — the
+    unprobeable corpus is precisely the one that must never be
+    speculatively cached whole. A `file:` URI is one such path, even
+    over a corpus that exists."""
+    for sf_dir in ("/nonexistent/sf_dir_r11", "file:" + SF):
+        assert star.resolve_warehouse_policy(spark, sf_dir) == "parquet", sf_dir
 
 
 def test_concurrent_first_use_registration_runs_once(spark, monkeypatch):
     """r13 audit pin: concurrent first-use callers of
-    register_star_views serialize on the per-session lock — exactly one
+    register_star_views serialize on the registration lock — exactly one
     thread takes the cold path (one register_base_views, one view-wave
     build), the rest hit the memo. Without the lock both threads build
     the waves and can clearCache mid-fill of the other."""
@@ -336,9 +309,8 @@ def test_concurrent_first_use_registration_runs_once(spark, monkeypatch):
 
     import adi_226_datawarehouse_project_spark.model.star as star_mod
 
-    saved = star_mod._memo_get(spark)
+    saved = star_mod._REGISTERED.live(spark)
     star_mod._REGISTERED.pop(id(spark), None)
-    star_mod._REGISTERED_REFS.pop(id(spark), None)
     spark.catalog.clearCache()
 
     calls = []
@@ -363,35 +335,27 @@ def test_concurrent_first_use_registration_runs_once(spark, monkeypatch):
         if saved is not None and saved[0] != SF:
             # restore the pre-test layout for subsequent tests
             star_mod._REGISTERED.pop(id(spark), None)
-            star_mod._REGISTERED_REFS.pop(id(spark), None)
             spark.catalog.clearCache()
 
 
-def test_session_lock_of_collected_session_is_pruned():
-    """A retired session's RLock must not live forever in the
-    module-level dict (VERDICT r13 watch item): the weakref liveness
-    guard prunes dead entries on the next acquisition, and an id()
-    reused by a new session cannot inherit the old lock."""
-    import gc
+def test_two_sessions_register_concurrently(spark):
+    """The registration lock is shared by every session: two sessions
+    of one context registering at the same moment wait on each other,
+    and both end with working star views that agree."""
+    from concurrent.futures import ThreadPoolExecutor
 
-    class FakeSession:  # weakref-able stand-in; _session_lock only id()s it
-        pass
-
-    s = FakeSession()
-    lk = star._session_lock(s)
-    assert lk is star._session_lock(s)  # stable while alive
-    key = id(s)
-    assert key in star._SESSION_LOCKS
-    del s
-    gc.collect()
-    other = FakeSession()
-    lk2 = star._session_lock(other)  # any later acquisition prunes
+    other = spark.newSession()
+    star._REGISTERED.pop(id(spark), None)
+    spark.catalog.clearCache()
     try:
-        assert lk2 is not lk
-        assert lk not in star._SESSION_LOCKS.values()
+        with ThreadPoolExecutor(2) as ex:
+            list(ex.map(lambda s: star.register_star_views(s, SF), (spark, other)))
+        for s in (spark, other):
+            assert star._REGISTERED.live(s) == (SF, "cache", None)
+        counts = [s.table("fact_311_complaint").count() for s in (spark, other)]
+        assert counts[0] == counts[1] > 0, counts
     finally:
-        star._SESSION_LOCKS.pop(id(other), None)
-        star._SESSION_LOCK_REFS.pop(id(other), None)
+        star._REGISTERED.pop(id(other), None)
 
 
 def test_dim_date_explode_matches_union_derivation(spark):
