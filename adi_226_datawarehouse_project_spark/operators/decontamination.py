@@ -95,6 +95,15 @@ def decontaminate(
     return train.join(F.broadcast(bad), id_col, "left_anti")
 
 
+# Fuzzy detection's LSH bands over dedup.NUM_HASHES positions. Its
+# OPERATING POINT differs from dedup's 16 bands: contamination
+# thresholds sit far lower than near-dup thresholds, and 32 bands × 2
+# rows gives candidate recall 1−(1−J²)³² ≈ 0.996 at J=0.4 (vs ≈0.34
+# for 16×4); the extra low-J candidates the looser bands admit die at
+# the exact ``jaccard_est`` re-score, costing join width, not precision.
+_FUZZY_BANDS = 32
+
+
 def fuzzy_contamination_pairs(
     train: DataFrame,
     bench: DataFrame,
@@ -102,15 +111,12 @@ def fuzzy_contamination_pairs(
     text_col: str,
     bench_id_col: str,
     bench_text_col: str | None = None,
-    num_hashes: int = 64,
-    bands: int = 32,
     shingle_size: int = 5,
-    shingle: str = "word",
     min_jaccard_est: float = 0.5,
 ) -> DataFrame:
     """FUZZY contamination detection: ``(train id, bench id,
     jaccard_est)`` for every train/bench pair whose MinHash-estimated
-    shingle Jaccard reaches ``min_jaccard_est`` — the approximate
+    word-shingle Jaccard reaches ``min_jaccard_est`` — the approximate
     complement of the exact n-gram overlap above. The two are
     complementary by construction: the exact detector needs an intact
     ``n``-gram (blind to benchmark items SHORTER than n words and to
@@ -120,68 +126,22 @@ def fuzzy_contamination_pairs(
 
     Scale shape: both corpora get signatures from the SAME seeded
     xxhash64 family (``dedup.minhash_signatures``); the benchmark's
-    band rows are tiny (eval sets are thousands of docs) and
-    ``broadcast()``, so the training corpus streams through a map-side
-    band join with zero corpus shuffle; candidates dedupe as bare id
-    pairs before signatures re-attach for scoring (the
-    ``minhash_near_dup_pairs`` pattern, cross-corpus).
+    band rows and signatures are tiny (eval sets are thousands of
+    docs) and ``broadcast()``, so the training corpus streams through
+    a map-side band join with zero corpus shuffle. The lookup itself is
+    ``dedup.minhash_lookup`` with the benchmark as the index."""
+    from .dedup import _band_rows, minhash_lookup, minhash_signatures
 
-    OPERATING POINT: contamination thresholds sit far lower than
-    near-dup thresholds, so the banding defaults differ from dedup's
-    64/16 — 32 bands × 2 rows gives candidate recall
-    1−(1−J²)³² ≈ 0.996 at J=0.4 (vs ≈0.34 for 16×4), and the extra
-    low-J candidates the looser bands admit die at the exact
-    ``jaccard_est`` re-score, costing join width, not precision."""
-    from .dedup import _band_rows, minhash_signatures
-
-    bench_text = bench_text_col or text_col
-    t_sig = minhash_signatures(
-        train, id_col, text_col, num_hashes, shingle_size, shingle
-    )
-    b_sig = minhash_signatures(
-        bench, bench_id_col, bench_text, num_hashes, shingle_size, shingle
-    )
-    t_bands = _band_rows(t_sig, id_col, num_hashes, bands).select(
-        F.col(id_col).alias("__tid"), "band", "band_hash"
-    )
-    b_bands = _band_rows(b_sig, bench_id_col, num_hashes, bands).select(
-        F.col(bench_id_col).alias("__bid"), "band", "band_hash"
-    )
-    cand = (
-        t_bands.join(F.broadcast(b_bands), ["band", "band_hash"])
-        .select("__tid", "__bid")
-        .dropDuplicates(["__tid", "__bid"])
-    )
-    scored = (
-        cand.join(
-            t_sig.select(F.col(id_col).alias("__tid"), F.col("signature").alias("__sa")),
-            "__tid",
-        )
-        .join(
-            F.broadcast(
-                b_sig.select(
-                    F.col(bench_id_col).alias("__bid"), F.col("signature").alias("__sb")
-                )
-            ),
-            "__bid",
-        )
-    )
-    agree = F.size(
-        F.filter(
-            F.zip_with(F.col("__sa"), F.col("__sb"), lambda a, b: (a == b).cast("int")),
-            lambda x: x == 1,
-        )
-    )
-    return (
-        scored.withColumn(
-            "jaccard_est", agree.cast("double") / F.lit(float(num_hashes))
-        )
-        .filter(F.col("jaccard_est") >= min_jaccard_est)
-        .select(
-            F.col("__tid").alias(id_col),
-            F.col("__bid").alias(bench_id_col),
-            "jaccard_est",
-        )
+    t_sig = minhash_signatures(train, id_col, text_col, shingle_size)
+    b_sig = minhash_signatures(bench, bench_id_col, bench_text_col or text_col, shingle_size)
+    return minhash_lookup(
+        (_band_rows(t_sig, id_col, _FUZZY_BANDS), t_sig),
+        (F.broadcast(_band_rows(b_sig, bench_id_col, _FUZZY_BANDS)), F.broadcast(b_sig)),
+        id_col,
+        bench_id_col,
+        min_jaccard_est,
+    ).select(
+        F.col("id_a").alias(id_col), F.col("id_b").alias(bench_id_col), "jaccard_est"
     )
 
 
@@ -193,11 +153,13 @@ def fuzzy_decontaminate(
     bench_id_col: str,
     bench_text_col: str | None = None,
     min_jaccard_est: float = 0.5,
-    **minhash_kwargs,
+    *,
+    shingle_size: int,
 ) -> DataFrame:
     """Survivor form: drop every train doc that fuzzy-matches ANY
-    benchmark doc at ``min_jaccard_est``. Same left-anti shape as
-    :func:`decontaminate`; run BOTH for a production scrub."""
+    benchmark doc at ``min_jaccard_est`` on word ``shingle_size``-gram
+    shingles. Same left-anti shape as :func:`decontaminate`; run BOTH
+    for a production scrub."""
     bad = (
         fuzzy_contamination_pairs(
             train,
@@ -206,8 +168,8 @@ def fuzzy_decontaminate(
             text_col,
             bench_id_col,
             bench_text_col,
+            shingle_size=shingle_size,
             min_jaccard_est=min_jaccard_est,
-            **minhash_kwargs,
         )
         .select(id_col)
         .distinct()

@@ -14,16 +14,19 @@ implemented as pure DataFrame compositions — explode/groupBy/self-join
 relational plan.
 
 Scale notes (the whole point of these ops):
-- MinHash: |docs|×|shingles| explode → groupBy doc. Map-side partial
-  aggregation collapses the explode before the shuffle; signature
-  width k=64 costs k aggregates, not k passes.
+- MinHash: |docs|×|word shingles| explode → groupBy doc. Map-side
+  partial aggregation collapses the explode before the shuffle;
+  signature width k=64 (``NUM_HASHES``) costs k aggregates, not k
+  passes.
 - LSH banding: candidate pairs come from equi-joins on (band,
   band_hash) buckets — never a cross join. Bucket skew (a hot bucket)
-  is bounded by band width choice and AQE skew-join.
+  is bounded by band width choice and AQE skew-join. The self-join
+  (:func:`minhash_near_dup_pairs`) and the batch-vs-stored-index
+  lookup (:func:`minhash_lookup`) share one scoring tail.
 - n-gram Jaccard: inverted-index self-join on shingle, the classic
   |pairs sharing a shingle| blow-up is bounded by first DISTINCT-ing
-  (doc, shingle) and optionally dropping ultra-frequent shingles
-  (stop-shingle cap, like suffix-array dedup pipelines do).
+  (doc, shingle) and, on stopword-hot corpora, by exact PPJoin prefix
+  filtering.
 """
 
 from __future__ import annotations
@@ -31,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import char_ngrams, word_ngram_hashes, word_ngrams, word_tokens
+from ..functions.text import word_ngram_hashes, word_ngrams, word_tokens
 from ..pin import pin, release
 
 
@@ -50,20 +53,17 @@ def dedup_exact(df: DataFrame, keys: list[str], order_by: list[str] | None = Non
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 64,
-    shingle_size: int = 3,
-    shingle: str = "char",
-) -> DataFrame:
-    """(id, signature array<bigint>[num_hashes]) via min-over-shingles.
+# MinHash signature width (estimator standard error ~0.06) and the LSH
+# bands of the near-dup self-join and the stored index (4 rows each).
+NUM_HASHES = 64
+_LSH_BANDS = 16
 
-    ``shingle`` picks the shingle unit: "char" n-grams (fine-grained,
-    classic Broder resemblance) or "word" n-grams (the GPT-3/Gopher
-    -style unit — far fewer shingles per document and much sharper
-    separation between near-dups and merely same-language text).
+
+def minhash_signatures(
+    df: DataFrame, id_col: str, text_col: str, shingle_size: int = 3
+) -> DataFrame:
+    """(id, signature array<bigint>[NUM_HASHES]) via min-over-shingles
+    of word ``shingle_size``-grams (the GPT-3/Gopher-style unit).
 
     The hash family is seeded xxhash64 — one independent 64-bit hash
     per signature position, wrapped INSIDE the JVM hash kernel (no
@@ -78,33 +78,28 @@ def minhash_signatures(
     costs k long-hashes, not k string traversals. Documents with no
     shingles are dropped. All JVM-side codegen'd expressions, never a
     Python UDF."""
-    grams = (
-        word_ngrams(F.col(text_col), shingle_size)
-        if shingle == "word"
-        else char_ngrams(F.col(text_col), shingle_size)
-    )
     # Wide aggregate lists are built as F.expr text, not per-op Column
     # calls: each Python Column op is a py4j round trip, and at k=64
     # that client-side construction tax rivals the query itself (see
     # simhash docstring; same finding).
     shingled = df.select(
         F.col(id_col),
-        F.explode(F.array_distinct(grams)).alias("__sh"),
+        F.explode(F.array_distinct(word_ngrams(F.col(text_col), shingle_size))).alias("__sh"),
     ).selectExpr(id_col, "xxhash64(__sh) AS __shh")
     aggs = [
         F.expr(f"min(xxhash64(__shh, {seed}))").alias(f"__h{seed}")
-        for seed in range(num_hashes)
+        for seed in range(NUM_HASHES)
     ]
     sig = shingled.groupBy(id_col).agg(*aggs)
-    arr = ", ".join(f"__h{s}" for s in range(num_hashes))
+    arr = ", ".join(f"__h{s}" for s in range(NUM_HASHES))
     return sig.selectExpr(id_col, f"array({arr}) AS signature")
 
 
-def _band_rows(sig: DataFrame, id_col: str, num_hashes: int, bands: int) -> DataFrame:
+def _band_rows(sig: DataFrame, id_col: str, bands: int) -> DataFrame:
     """Explode a (id, signature) frame into LSH band rows
     ``(id, band, band_hash)`` — the shape both the self-join path and
     the persisted incremental index use."""
-    rows_per_band = num_hashes // bands
+    rows_per_band = NUM_HASHES // bands
     return sig.selectExpr(
         id_col,
         f"""posexplode(transform(sequence(0, {bands - 1}),
@@ -114,15 +109,38 @@ def _band_rows(sig: DataFrame, id_col: str, num_hashes: int, bands: int) -> Data
     )
 
 
+def _scored(
+    pair_ids: DataFrame, sig_a: DataFrame, id_a: str, sig_b: DataFrame, id_b: str, min_j: float
+) -> DataFrame:
+    """Score bare ``(id_a, id_b)`` candidates by the estimated Jaccard —
+    the share of the NUM_HASHES positions that agree — on signatures
+    re-attached from ``sig_a`` (keyed by column ``id_a``) and ``sig_b``
+    (keyed by ``id_b``); keep those at or above ``min_j``. One row per
+    document per side — small next to the pair set; AQE broadcasts it
+    when it fits and falls back to a shuffle join where it can't."""
+    a = sig_a.select(F.col(id_a).alias("id_a"), F.col("signature").alias("sig_a"))
+    b = sig_b.select(F.col(id_b).alias("id_b"), F.col("signature").alias("sig_b"))
+    agree = F.size(
+        F.filter(
+            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: (x == y).cast("int")),
+            lambda x: x == 1,
+        )
+    )
+    return (
+        pair_ids.join(a, "id_a")
+        .join(b, "id_b")
+        .withColumn("jaccard_est", agree.cast("double") / F.lit(float(NUM_HASHES)))
+        .filter(F.col("jaccard_est") >= min_j)
+        .select("id_a", "id_b", "jaccard_est")
+    )
+
+
 def minhash_near_dup_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    num_hashes: int = 64,
-    bands: int = 16,
     shingle_size: int = 3,
     min_jaccard_est: float = 0.5,
-    shingle: str = "char",
 ) -> DataFrame:
     """Candidate near-duplicate pairs via LSH banding, scored by the
     estimated Jaccard (fraction of agreeing minhashes). Returns
@@ -139,11 +157,8 @@ def minhash_near_dup_pairs(
     # blocks). Fault tolerance follows the ``pin`` policy. The stored
     # plan hides the signature subtree from downstream explain/pushdown
     # (nothing pushes into a whole-corpus signature aggregate anyway).
-    sig = pin(
-        minhash_signatures(df, id_col, text_col, num_hashes, shingle_size, shingle),
-        truncate=True,
-    )
-    banded = _band_rows(sig, id_col, num_hashes, bands)
+    sig = pin(minhash_signatures(df, id_col, text_col, shingle_size), truncate=True)
+    banded = _band_rows(sig, id_col, _LSH_BANDS)
     # Candidate pairs as bare (id_a, id_b): the bucket self-join and the
     # dedup shuffle move 16-byte rows, not 64-element signature arrays.
     left = banded.select(F.col(id_col).alias("id_a"), "band", "band_hash")
@@ -154,27 +169,11 @@ def minhash_near_dup_pairs(
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    # Re-attach signatures for scoring. One row per document — small
-    # next to the pair set; AQE broadcasts it when it fits and falls
-    # back to a shuffle join at corpus scales where it can't.
-    sig_a = sig.select(F.col(id_col).alias("id_a"), F.col("signature").alias("sig_a"))
-    sig_b = sig.select(F.col(id_col).alias("id_b"), F.col("signature").alias("sig_b"))
-    pairs = pair_ids.join(sig_a, "id_a").join(sig_b, "id_b")
-    agree = F.size(
-        F.filter(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda a, b: (a == b).cast("int")),
-            lambda x: x == 1,
-        )
-    )
-    return (
-        pairs.withColumn("jaccard_est", agree.cast("double") / F.lit(float(num_hashes)))
-        .filter(F.col("jaccard_est") >= min_jaccard_est)
-        .select("id_a", "id_b", "jaccard_est")
-    )
+    return _scored(pair_ids, sig, id_col, sig, id_col, min_jaccard_est)
 
 
-def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 64) -> DataFrame:
-    """Charikar simhash fingerprint: per-bit majority vote over token
+def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """64-bit Charikar simhash fingerprint: per-bit majority vote over token
     hashes, composed from explode + LANE-PACKED sums (one shuffle).
 
     Two engine-level optimizations, both semantics-preserving:
@@ -195,6 +194,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 64) -> DataFr
       (measured 2.5s → 0.5s per fresh call at sf0.1 — the JVM parses
       the text in one call). Catalyst sees the identical tree.
     """
+    bits = 64
     lanes_per_long = 4  # 4 × 16-bit lanes per bigint
     n_longs = bits // lanes_per_long
     toks = df.select(
@@ -512,15 +512,12 @@ def ngram_jaccard_pairs(
     text_col: str,
     n: int = 2,
     min_jaccard: float = 0.5,
-    max_shingle_freq: int | None = None,
     prefix_filter: bool | None = None,
     _stats: dict | None = None,
 ) -> DataFrame:
     """Exact word-n-gram Jaccard similarity for every pair sharing at
     least one n-gram (inverted-index self-join). Returns (id_a, id_b,
-    jaccard). `max_shingle_freq` drops ultra-common shingles before
-    the join — the stop-shingle cap that keeps the self-join bounded
-    at corpus scale, at the cost of APPROXIMATING the shingle sets.
+    jaccard).
 
     ``prefix_filter`` picks the join strategy; BOTH strategies return
     the identical exact pair set (pinned in tests, and the per-round
@@ -583,18 +580,7 @@ def ngram_jaccard_pairs(
         ),
         truncate=False,
     )
-    if max_shingle_freq is not None:
-        # Broadcast the STOP list (shingles above the cap), not the keep
-        # list: stop-shingles are a tiny head of the frequency
-        # distribution by construction, while the keep list is nearly
-        # every distinct shingle — broadcasting it would OOM the driver
-        # at corpus scale. left_anti keeps exactly the capped set.
-        stop = sh.groupBy("__g").count().filter(F.col("count") > max_shingle_freq)
-        sh = sh.join(F.broadcast(stop.select("__g")), "__g", "left_anti")
     if prefix_filter is None:
-        # auto: measured AFTER the stop-shingle cap (the cap already
-        # decapitates the frequency head, so the probe sees the
-        # distribution the join will actually face)
         prefix_filter = _should_prefix_filter(sh, _stats)
     if _stats is not None:
         _stats["prefix_filter"] = bool(prefix_filter)
@@ -648,13 +634,7 @@ def ngram_jaccard_pairs(
 
 
 def minhash_index(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_size: int = 3,
-    shingle: str = "char",
+    df: DataFrame, id_col: str, text_col: str, shingle_size: int = 3
 ) -> tuple[DataFrame, DataFrame]:
     """The persisted LSH index of an existing corpus, as the two tables
     a production deployment stores side by side:
@@ -665,10 +645,37 @@ def minhash_index(
     - **signature sidecar** ``(id, signature)`` — re-attached only to
       candidate pairs for estimator scoring, never shuffled wholesale.
 
-    A new batch's own index joins the stored band index on
-    ``(band, band_hash)`` and is scored on the re-attached signatures
-    (the ``dedup_incremental`` query's batch-vs-index lookup). That
-    turns corpus dedup from a full-corpus O(n²-candidates) recompute
-    per ingest into an O(batch) lookup."""
-    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_size, shingle)
-    return _band_rows(sig, id_col, num_hashes, bands), sig
+    A new batch's own index is looked up against it with
+    :func:`minhash_lookup`. That turns corpus dedup from a full-corpus
+    O(n²-candidates) recompute per ingest into an O(batch) lookup."""
+    sig = minhash_signatures(df, id_col, text_col, shingle_size)
+    return _band_rows(sig, id_col, _LSH_BANDS), sig
+
+
+def minhash_lookup(
+    batch: tuple[DataFrame, DataFrame],
+    index: tuple[DataFrame, DataFrame],
+    batch_id_col: str,
+    index_id_col: str,
+    min_jaccard_est: float,
+) -> DataFrame:
+    """Batch-vs-stored-index near-duplicate lookup: ``(id_a, id_b,
+    jaccard_est)`` with ``id_a`` a batch id and ``id_b`` an index id,
+    for every pair that shares an LSH bucket and whose estimate reaches
+    ``min_jaccard_est``. ``batch`` and ``index`` are ``(band rows,
+    signatures)`` as :func:`minhash_index` returns them, banded alike.
+    Bucket matches dedupe as bare id pairs before the signatures
+    re-attach. A caller marks a small side with ``F.broadcast``; the
+    hint survives the renaming selects."""
+    bands, sig = batch
+    index_bands, index_sig = index
+    pair_ids = (
+        bands.select(F.col(batch_id_col).alias("id_a"), "band", "band_hash")
+        .join(
+            index_bands.select(F.col(index_id_col).alias("id_b"), "band", "band_hash"),
+            ["band", "band_hash"],
+        )
+        .select("id_a", "id_b")
+        .dropDuplicates(["id_a", "id_b"])
+    )
+    return _scored(pair_ids, sig, batch_id_col, index_sig, index_id_col, min_jaccard_est)

@@ -6,11 +6,10 @@ blocks, navigation chrome — while keeping the surrounding prose).
 
 Doc-level near-dup (MinHash/SimHash, `operators/dedup.py`) drops whole
 documents; this operator edits WITHIN documents: any word ``n``-gram
-appearing in ≥ ``min_docs`` distinct documents marks its ``n`` token
-positions as duplicated, and duplicated positions are scrubbed from
-every occurrence ("all" mode) or every occurrence except the
-lowest-id owning document ("first" mode — the published keep-one
-semantic).
+appearing in ≥ 2 distinct documents marks its ``n`` token positions
+as duplicated, and duplicated positions are scrubbed from every
+occurrence except the one in the lowest-id owning document (the
+published keep-one semantic).
 
 Distributed shape (suffix arrays need not apply at 100 TB):
 
@@ -21,7 +20,7 @@ Distributed shape (suffix arrays need not apply at 100 TB):
 - the gram→doc-frequency table reuses the per-doc-distinct rows (the
   tfidf trick: ``(id, gram)`` is already distinct, so doc frequency
   is a count, not a countDistinct);
-- flagged grams (df ≥ min_docs) are a small table joined back on the
+- flagged grams (df ≥ 2) are a small table joined back on the
   hashed key — broadcast-able when rare, AQE-skew-splittable when a
   boilerplate gram is corpus-hot;
 - covered positions explode only FLAGGED starts (``n``× a small set),
@@ -97,19 +96,14 @@ def repeated_passage_spans(
     id_col: str,
     text_col: str,
     n: int = 8,
-    min_docs: int = 2,
-    keep: str = "all",
     tokens_col: str | None = None,
 ) -> DataFrame:
     """Flagged duplicated-span starts: ``(id, start)`` rows where the
-    word ``n``-gram at ``start`` occurs in ≥ ``min_docs`` distinct
-    docs. ``keep="first"`` exempts the lowest-id document containing
-    each gram (its occurrence survives); ``keep="all"`` flags every
-    occurrence. ``tokens_col`` optionally names a pre-tokenized
-    ``word_tokens`` array column to derive grams from (``text_col``
-    is then ignored)."""
-    if keep not in ("all", "first"):
-        raise ValueError(f"unknown keep mode: {keep!r}")
+    word ``n``-gram at ``start`` occurs in ≥ 2 distinct docs, except in
+    the lowest-id document containing it (its occurrence survives).
+    ``tokens_col`` optionally names a pre-tokenized ``word_tokens``
+    array column to derive grams from (``text_col`` is then
+    ignored)."""
     # ONE linear pass over the gram occurrences (r15; guide §2.3/§2.4).
     # The previous shape consumed the occurrence frame TWICE — once for
     # the doc-frequency aggregate and once for the flagged-gram
@@ -129,7 +123,7 @@ def repeated_passage_spans(
     #       → Exchange(gram) → window [count(*), min(id) per gram]
     #       → filter → explode(starts) → distinct
     # count(*) per gram over the (id, gram)-distinct rows IS the
-    # distinct-doc frequency, and min(id) the keep="first" owner —
+    # distinct-doc frequency, and min(id) the keep-one owner —
     # exactly what the aggregate+join derived. collect_set is safe:
     # starts are distinct per (id, gram) by construction and order is
     # irrelevant (the exploded hits feed a distinct()).
@@ -142,9 +136,7 @@ def repeated_passage_spans(
     w = Window.partitionBy("gram")
     hits = per_doc.withColumn("__df", F.count(F.lit(1)).over(w)).withColumn(
         "__owner", F.min(id_col).over(w)
-    ).filter(F.col("__df") >= min_docs)
-    if keep == "first":
-        hits = hits.filter(F.col(id_col) != F.col("__owner"))
+    ).filter(F.col("__df") >= 2).filter(F.col(id_col) != F.col("__owner"))
     return hits.select(
         id_col, F.explode("__starts").alias("start")
     ).distinct()
@@ -155,8 +147,6 @@ def remove_repeated_passages(
     id_col: str,
     text_col: str,
     n: int = 8,
-    min_docs: int = 2,
-    keep: str = "all",
     tokens_col: str | None = None,
 ) -> DataFrame:
     """Scrub duplicated spans: every token position covered by a
@@ -172,7 +162,7 @@ def remove_repeated_passages(
     pre-tokenized ``word_tokens`` array column (shared-tokenization
     path: gram derivation AND the rebuild read it; ``text_col`` is
     ignored) — output values are identical either way."""
-    spans = repeated_passage_spans(df, id_col, text_col, n, min_docs, keep, tokens_col)
+    spans = repeated_passage_spans(df, id_col, text_col, n, tokens_col)
     covered = (
         spans.select(
             id_col,

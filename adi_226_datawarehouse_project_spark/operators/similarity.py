@@ -68,29 +68,15 @@ def finite_vectors(df: DataFrame, vec_col: str) -> DataFrame:
 
 
 def cosine_self_topk(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 10,
-    probe_ids: list[int] | None = None,
-    allow_full_scan: bool = False,
+    df: DataFrame, id_col: str, vec_col: str, probe_ids: list[int], k: int = 10
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each probe row. The probe side
     is broadcast: the big side streams once, no shuffle of the corpus.
-
-    `probe_ids=None` means ALL rows probe — an O(n²) all-pairs scan
-    that is only sane on small corpora, so it must be opted into with
-    `allow_full_scan=True`; the scale paths for the no-probe-set case
-    are `lsh_bucket_topk` / `ivf_topk`."""
-    if probe_ids is None and not allow_full_scan:
-        raise ValueError(
-            "cosine_self_topk with probe_ids=None is an O(n²) all-pairs scan; "
-            "pass allow_full_scan=True explicitly, or use lsh_bucket_topk/"
-            "ivf_topk for sublinear candidate generation"
-        )
-    probes = df.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
-    if probe_ids is not None:
-        probes = probes.filter(F.col("query_id").isin(probe_ids))
+    Without a probe set this would be an O(n²) all-pairs scan; the
+    scale paths for that case are `lsh_bucket_topk` / `ivf_topk`."""
+    probes = df.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")).filter(
+        F.col("query_id").isin(probe_ids)
+    )
     corpus = df.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__nv"))
     cand = corpus.join(F.broadcast(probes), F.col("neighbor_id") != F.col("query_id"))
     return _rerank_topk(cand, k)

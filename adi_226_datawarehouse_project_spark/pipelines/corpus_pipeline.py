@@ -119,7 +119,7 @@ def run_corpus_pipeline(
 
         docs = spark.read.parquet(_zone("clean"))
         scrubbed = remove_repeated_passages(
-            docs, "doc_id", "text", n=passage_n, min_docs=2, keep="first"
+            docs, "doc_id", "text", n=passage_n
         ).select(
             "doc_id",
             F.col("clean_text").alias("text"),

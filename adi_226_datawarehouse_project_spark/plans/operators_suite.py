@@ -2884,8 +2884,7 @@ def _spark_text_token_features(
 
     docs = base.select("doc_id", "tk")
     scrub = remove_repeated_passages(
-        docs, "doc_id", "tk", n=_PASSAGE_N, min_docs=2, keep="first",
-        tokens_col="tk",
+        docs, "doc_id", "tk", n=_PASSAGE_N, tokens_col="tk"
     ).select(
         F.lit("passage_scrub").alias("part"),
         F.col("doc_id").cast("string").alias("k"),
@@ -3551,9 +3550,7 @@ def _spark_dedup_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = loose.filter(F.col("jaccard") >= _LSH_TRUTH_MIN_J)
     # One signature/banding lineage: candidates (pre-threshold) feed the
     # recall check; the est>=0.7-filtered subset feeds precision.
-    mh_all = minhash_near_dup_pairs(
-        docs, "doc_id", "text", shingle="word", min_jaccard_est=0.0
-    )
+    mh_all = minhash_near_dup_pairs(docs, "doc_id", "text", min_jaccard_est=0.0)
     cands = mh_all.select("id_a", "id_b")
     mh = mh_all.filter(F.col("jaccard_est") >= 0.7).select("id_a", "id_b")
     sh = simhash_near_dup_pairs(docs, "doc_id", "text", max_hamming=8).select("id_a", "id_b")
@@ -3641,8 +3638,8 @@ ORDER BY part, lang, doc_id
 
 
 # --- dedup_incremental: batch-vs-stored-index near-dup curation
-# (operators/dedup.py::minhash_index plus the banded lookup in
-# _inc_flags — the persisted-LSH-index ingest path), verified by the same
+# (operators/dedup.py::minhash_index plus dedup.minhash_lookup — the
+# persisted-LSH-index ingest path), verified by the same
 # differential-contract style as dedup_lsh_pairs, over a corpus/batch
 # split (doc_id % 5). Parts:
 #   inc_recall    — every CROSS truth pair (batch doc × corpus doc at
@@ -3657,55 +3654,17 @@ ORDER BY part, lang, doc_id
 #                   an increment sees exactly what a rescan would see. ---
 
 
-def _inc_flags(
-    new_sig: DataFrame,
-    new_bands: DataFrame,
-    idx_sig: DataFrame,
-    idx_bands: DataFrame,
-    min_jaccard_est: float,
-) -> DataFrame:
-    """(new_id, corpus_id, jaccard_est) — the batch-vs-index candidate
-    lookup over two `minhash_index` outputs, with its per-pair scores
-    so the contract parts can inspect them: banded equi-join on the
-    persisted (band, band_hash) table, signatures re-attached only to
-    surviving candidates."""
-    nb = new_bands.select(F.col("doc_id").alias("new_id"), "band", "band_hash")
-    ib = idx_bands.select(F.col("doc_id").alias("corpus_id"), "band", "band_hash")
-    agree = F.size(
-        F.filter(
-            F.zip_with(F.col("__ns"), F.col("__cs"), lambda a, b: (a == b).cast("int")),
-            lambda x: x == 1,
-        )
-    )
-    return (
-        nb.join(ib, ["band", "band_hash"])
-        .select("new_id", "corpus_id")
-        .dropDuplicates(["new_id", "corpus_id"])
-        .join(
-            new_sig.select(F.col("doc_id").alias("new_id"), F.col("signature").alias("__ns")),
-            "new_id",
-        )
-        .join(
-            idx_sig.select(F.col("doc_id").alias("corpus_id"), F.col("signature").alias("__cs")),
-            "corpus_id",
-        )
-        .withColumn("jaccard_est", agree.cast("double") / F.lit(64.0))
-        .filter(F.col("jaccard_est") >= min_jaccard_est)
-        .select("new_id", "corpus_id", "jaccard_est")
-    )
-
-
 def _spark_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import minhash_index
+    from ..operators.dedup import minhash_index, minhash_lookup
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
     batch = docs.filter(F.col("doc_id") % 5 == 0)
-    idx_bands, idx_sig = minhash_index(
-        corpus, "doc_id", "text", 64, 16, _NGRAM_N, "word"
-    )
-    new_bands, bsig = minhash_index(batch, "doc_id", "text", 64, 16, _NGRAM_N, "word")
-    cand = _inc_flags(bsig, new_bands, idx_sig, idx_bands, min_jaccard_est=0.0)
+    cand = minhash_lookup(
+        minhash_index(batch, "doc_id", "text", _NGRAM_N),
+        minhash_index(corpus, "doc_id", "text", _NGRAM_N),
+        "doc_id", "doc_id", 0.0,
+    ).toDF("new_id", "corpus_id", "jaccard_est")
 
     # exact-Jaccard truth over cross pairs, reoriented (batch, corpus)
     loose = ngram_jaccard_pairs(
@@ -3727,8 +3686,7 @@ def _spark_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     inc05 = cand.filter(F.col("jaccard_est") >= 0.5).select("new_id", "corpus_id")
     full = minhash_near_dup_pairs(
-        docs, "doc_id", "text", shingle="word", shingle_size=_NGRAM_N,
-        min_jaccard_est=0.5,
+        docs, "doc_id", "text", shingle_size=_NGRAM_N, min_jaccard_est=0.5
     )
     full_cross = full.filter(
         (F.col("id_a") % 5 == 0) != (F.col("id_b") % 5 == 0)

@@ -5,6 +5,11 @@ prefixes read with ``spark.read.parquet``, e.g. `Glue job to merge 311
 Airbnb.py:77-80`) as a single view registry. At 100 TB each of these is
 a partitioned parquet (or Iceberg/Delta) table; the reader path is
 identical — Catalyst handles partition pruning and predicate pushdown.
+
+``sf_dir`` is a LOCAL directory: the loader stats files and opens
+parquet footers with the driver's own file APIs (schema memo, events
+``ts`` layout probe), so a URI (``file:``, ``hdfs:``, ``s3a:``) is
+refused with a ``ValueError`` rather than read.
 """
 
 from __future__ import annotations
@@ -96,10 +101,13 @@ def events_ts_storage(path: str) -> str:
     on every events read, and the two pyarrow footer opens are blocking
     driver I/O on the hot query-entry path."""
     import glob
+    import re
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    if re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", path):
+        raise ValueError(f"sf_dir must be a local directory, not a URI: {path}")
     if os.path.isdir(path):
         # Spark-written tables are directories of part files; every part
         # shares one schema, so probe the first (sorted for determinism).
@@ -146,9 +154,11 @@ def _events_ts_storage_uncached(path: str, pa, pq) -> str:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Columnar parquet scan; filters/projections placed on the result
-    push down into the scan (verify via PushedFilters in .explain). A
-    single-file table's schema is inferred once (see _read_parquet).
+    """Columnar parquet scan of ``<sf_dir>/<name>.parquet``, where
+    ``sf_dir`` is a local directory (see the module docstring);
+    filters/projections placed on the result push down into the scan
+    (verify via PushedFilters in .explain). A single-file table's
+    schema is inferred once (see _read_parquet).
 
     ``events.ts`` always comes back as a (naive) TIMESTAMP column
     regardless of the file's physical layout (see events_ts_storage)."""

@@ -47,38 +47,6 @@ def events_schema(sf_dir: str) -> T.StructType:
     )
 
 
-def _is_dir(spark: SparkSession, path: str) -> bool:
-    """Directory probe through the session's Hadoop FileSystem, so the
-    layout branch below works for ANY configured filesystem (HDFS,
-    S3A, ...), not just the driver's local disk — `os.path.isdir`
-    returns False for every remote URI, which silently picked the
-    glob branch. Falls back to the local probe ONLY when no JVM
-    gateway is reachable (Spark Connect); a missing path is False,
-    and any other FS error (auth, network, unknown scheme, missing
-    connector jar) propagates LOUDLY — a silent local fallback on a
-    remote URI would re-introduce the zero-rows bug this probe exists
-    to fix. Only the GATEWAY probe sits inside the try: Path and
-    FileSystem construction happen outside it, so "No FileSystem for
-    scheme"/config errors are never swallowed into the local branch."""
-    try:
-        jvm = spark._jvm
-        jconf = spark._jsc.hadoopConfiguration()
-    except Exception:  # noqa: BLE001 - no JVM gateway (Spark Connect)
-        return os.path.isdir(path)
-    if jvm is None or jconf is None:  # Connect exposes the attrs as None
-        return os.path.isdir(path)
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(jconf)
-    try:
-        return bool(fs.getFileStatus(hpath).isDirectory())
-    except Exception as e:  # noqa: BLE001 - inspect the Java class
-        j = getattr(e, "java_exception", None)
-        cls = j.getClass().getName() if j is not None else type(e).__name__
-        if "FileNotFoundException" in cls:
-            return False
-        raise
-
-
 def read_events_stream(spark: SparkSession, sf_dir: str, **options: str) -> DataFrame:
     """File-source readStream over the events parquet with ``ts``
     normalized to a (naive) TIMESTAMP column, whatever the file's
@@ -100,7 +68,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str, **options: str) -> Data
     # layout and would silently stream ZERO rows from a directory.
     events_path = os.path.join(sf_dir, "events.parquet")
     reader = spark.readStream.schema(schema).format("parquet")
-    if _is_dir(spark, events_path):
+    if os.path.isdir(events_path):
         reader = reader.option("path", events_path)
     else:
         reader = reader.option("path", sf_dir).option(

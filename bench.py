@@ -84,9 +84,7 @@ def _bench_lsh_pairs(spark, sf_dir):
     from adi_226_datawarehouse_project_spark.sources.catalog import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    mh = minhash_near_dup_pairs(
-        docs, "doc_id", "text", shingle="word", min_jaccard_est=0.7
-    ).select(
+    mh = minhash_near_dup_pairs(docs, "doc_id", "text", min_jaccard_est=0.7).select(
         F.lit("minhash").alias("part"), "id_a", "id_b",
         F.round("jaccard_est", 6).cast("double").alias("score"),
     )

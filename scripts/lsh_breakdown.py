@@ -23,6 +23,7 @@ sys.path.insert(0, _repo)
 from pyspark.sql import functions as F  # noqa: E402
 
 from adi_226_datawarehouse_project_spark.operators.dedup import (  # noqa: E402
+    _band_rows,
     minhash_near_dup_pairs,
     minhash_signatures,
     simhash,
@@ -31,16 +32,9 @@ from adi_226_datawarehouse_project_spark.session import get_spark  # noqa: E402
 from adi_226_datawarehouse_project_spark.sources.catalog import load_table  # noqa: E402
 
 
-def minhash_funnel(docs, num_hashes=64, bands=16, shingle_size=3) -> dict[str, int]:
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures(docs, "doc_id", "text", num_hashes, shingle_size, "word")
-    banded = sig.selectExpr(
-        "doc_id",
-        f"""posexplode(transform(sequence(0, {bands - 1}),
-            b -> xxhash64(array_join(transform(
-                   slice(signature, b * {rows_per_band} + 1, {rows_per_band}),
-                   x -> CAST(x AS STRING)), ',')))) AS (band, band_hash)""",
-    )
+def minhash_funnel(docs, bands=16, shingle_size=3) -> dict[str, int]:
+    sig = minhash_signatures(docs, "doc_id", "text", shingle_size)
+    banded = _band_rows(sig, "doc_id", bands)
     left = banded.select(F.col("doc_id").alias("id_a"), "band", "band_hash")
     right = banded.select(F.col("doc_id").alias("id_b"), "band", "band_hash")
     raw = (
@@ -53,9 +47,7 @@ def minhash_funnel(docs, num_hashes=64, bands=16, shingle_size=3) -> dict[str, i
         .dropDuplicates(["id_a", "id_b"])
         .count()
     )
-    survivors = minhash_near_dup_pairs(
-        docs, "doc_id", "text", shingle="word", min_jaccard_est=0.7
-    ).count()
+    survivors = minhash_near_dup_pairs(docs, "doc_id", "text", min_jaccard_est=0.7).count()
     return {"raw_candidates": raw, "deduped_pairs": deduped, "survivors": survivors}
 
 

@@ -36,17 +36,18 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from adi_226_datawarehouse_project_spark.operators.dedup import (  # noqa: E402
     _band_rows,
+    _scored,
     minhash_signatures,
     simhash,
 )
 from adi_226_datawarehouse_project_spark.session import get_spark  # noqa: E402
 from adi_226_datawarehouse_project_spark.sources.catalog import load_table  # noqa: E402
 
-NUM_HASHES, BANDS, SHINGLE_SIZE, MIN_J, MAX_HAM = 64, 16, 3, 0.7, 8
+BANDS, SHINGLE_SIZE, MIN_J, MAX_HAM = 16, 3, 0.7, 8
 
 
 def _minhash_pairs_from_sig(sig, id_col):
-    banded = _band_rows(sig, id_col, NUM_HASHES, BANDS)
+    banded = _band_rows(sig, id_col, BANDS)
     left = banded.select(F.col(id_col).alias("id_a"), "band", "band_hash")
     right = banded.select(F.col(id_col).alias("id_b"), "band", "band_hash")
     pair_ids = (
@@ -55,19 +56,8 @@ def _minhash_pairs_from_sig(sig, id_col):
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    sig_a = sig.select(F.col(id_col).alias("id_a"), F.col("signature").alias("sig_a"))
-    sig_b = sig.select(F.col(id_col).alias("id_b"), F.col("signature").alias("sig_b"))
-    pairs = pair_ids.join(sig_a, "id_a").join(sig_b, "id_b")
-    agree = F.size(
-        F.filter(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda a, b: (a == b).cast("int")),
-            lambda x: x == 1,
-        )
-    )
-    return (
-        pairs.withColumn("jaccard_est", agree.cast("double") / F.lit(float(NUM_HASHES)))
-        .filter(F.col("jaccard_est") >= MIN_J)
-        .select("id_a", "id_b", F.round("jaccard_est", 6).cast("double").alias("score"))
+    return _scored(pair_ids, sig, id_col, sig, id_col, MIN_J).select(
+        "id_a", "id_b", F.round("jaccard_est", 6).cast("double").alias("score")
     )
 
 
@@ -102,7 +92,7 @@ def _simhash_pairs_from_fps(fps, id_col):
 
 
 def _run(docs, variant: str) -> tuple[float, int, int]:
-    sig = minhash_signatures(docs, "doc_id", "text", NUM_HASHES, SHINGLE_SIZE, "word")
+    sig = minhash_signatures(docs, "doc_id", "text", SHINGLE_SIZE)
     fps = simhash(docs, "doc_id", "text")
     handles = []
     if variant == "persist":

@@ -123,7 +123,7 @@ def ops(spark: SparkSession, d: str) -> dict[str, callable]:
     return {
         "dedup_exact": lambda: dedup_exact(docs(), ["text"], order_by=["doc_id"]).count(),
         "minhash_lsh_pairs": lambda: minhash_near_dup_pairs(
-            docs(), "doc_id", "text", shingle="word", min_jaccard_est=0.7
+            docs(), "doc_id", "text", min_jaccard_est=0.7
         ).count(),
         "simhash_pairs": lambda: simhash_near_dup_pairs(
             docs(), "doc_id", "text", max_hamming=8
@@ -179,9 +179,7 @@ def _passage_scrub_count(spark: SparkSession, d: str) -> int:
     )
 
     docs = load_table(spark, d, "documents").select("doc_id", "text")
-    return remove_repeated_passages(
-        docs, "doc_id", "text", n=5, min_docs=2, keep="first"
-    ).count()
+    return remove_repeated_passages(docs, "doc_id", "text", n=5).count()
 
 
 def _dsir_count(spark: SparkSession, d: str) -> int:
@@ -231,6 +229,7 @@ def _fuzzy_count(spark: SparkSession, d: str) -> int:
         "text",
         "bench_id",
         min_jaccard_est=0.5,
+        shingle_size=5,
     ).count()
 
 

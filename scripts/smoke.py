@@ -68,6 +68,56 @@ def main() -> int:
     inspect.signature(star._probe_input_bytes).bind("sf_dir", None)
     print(f"perfbench coupling OK: {len(used)} star names resolve")
 
+    # call-site binding: every call in bench.py and scripts/*.py to a
+    # package function (imported by name, or as `module.fn` through an
+    # imported package module) must bind the signature it reaches —
+    # positional count and keyword names; `*`/`**` calls are skipped.
+    # A removed or renamed parameter fails here, not in a script run.
+    import importlib
+    import types
+
+    pkg_name = "adi_226_datawarehouse_project_spark"
+    stale: list[str] = []
+    n_calls = 0
+    for f in [REPO / "bench.py", *sorted((REPO / "scripts").glob("*.py"))]:
+        tree = ast.parse(f.read_text())
+        names: dict[str, object] = {}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(pkg_name):
+                mod = importlib.import_module(node.module)
+                for a in node.names:
+                    names[a.asname or a.name] = getattr(mod, a.name, None) or (
+                        importlib.import_module(f"{node.module}.{a.name}")
+                    )
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func
+            if isinstance(fn, ast.Name):
+                target = names.get(fn.id)
+            elif isinstance(fn, ast.Attribute) and isinstance(fn.value, ast.Name):
+                owner = names.get(fn.value.id)
+                target = getattr(owner, fn.attr, None) if isinstance(owner, types.ModuleType) else None
+            else:
+                continue
+            if not isinstance(target, types.FunctionType):
+                continue
+            if any(isinstance(a, ast.Starred) for a in node.args) or any(
+                k.arg is None for k in node.keywords
+            ):
+                continue
+            n_calls += 1
+            try:
+                inspect.signature(target).bind(
+                    *[None] * len(node.args), **{k.arg: None for k in node.keywords}
+                )
+            except TypeError as e:
+                stale.append(f"{f.relative_to(REPO)}:{node.lineno} {target.__name__}: {e}")
+    if stale:
+        print("call sites that no longer bind:\n  " + "\n  ".join(stale), file=sys.stderr)
+        return 1
+    print(f"call-site binding OK: {n_calls} package calls in bench.py and scripts/ bind")
+
     # ADVICE hygiene (VERDICT r8 #5): an entry NOT annotated as fixed
     # (not struck through) must cite a path:line that still resolves —
     # two rounds running, ADVICE described already-fixed findings. A

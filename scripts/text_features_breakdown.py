@@ -95,8 +95,6 @@ def main() -> None:
             "doc_id",
             "text",
             n=_PASSAGE_N,
-            min_docs=2,
-            keep="first",
         ).count()
     )
     parts["passage_scrub"] = {"rows": n, "sec": t}

@@ -72,7 +72,7 @@ def main() -> None:
     if "lsh" in modes:
         t0 = time.perf_counter()
         out["lsh_pairs"] = minhash_near_dup_pairs(
-            docs, "doc_id", "text", shingle="word", min_jaccard_est=0.7
+            docs, "doc_id", "text", min_jaccard_est=0.7
         ).count()
         out["lsh_wall"] = round(time.perf_counter() - t0, 2)
         print(f"# {sf_dir}: lsh wall={out['lsh_wall']}s "

@@ -125,9 +125,7 @@ def test_corpus_pipeline_optional_scrub_and_lm_stages(spark, sf_dir, tmp_path):
         repeated_passage_spans,
     )
 
-    residual = repeated_passage_spans(
-        scrubbed, "doc_id", "text", n=5, min_docs=2, keep="first"
-    ).count()
+    residual = repeated_passage_spans(scrubbed, "doc_id", "text", n=5).count()
     assert residual == 0
 
     # LM gate: every survivor satisfies the bits/token ceiling the

@@ -6,6 +6,8 @@ from pyspark.sql import functions as F
 
 from adi_226_datawarehouse_project_spark.operators.dedup import (
     dedup_exact,
+    minhash_index,
+    minhash_lookup,
     minhash_near_dup_pairs,
     ngram_jaccard_pairs,
     simhash,
@@ -15,7 +17,9 @@ from adi_226_datawarehouse_project_spark.operators.dedup import (
 DOCS = [
     (1, "the quick brown fox jumps over the lazy dog"),
     (2, "the quick brown fox jumps over the lazy dog"),  # exact dup of 1
-    (3, "the quick brown fox jumped over the lazy dogs"),  # near dup of 1
+    # near dup of 1 under word 3-gram shingles: all 7 of doc 1's grams
+    # plus 3 more, J = 7/10
+    (3, "the quick brown fox jumps over the lazy dog near the river"),
     (4, "completely different content about spark engines and parquet files"),
     (5, "zzz qqq xxx vvv kkk www uuu mmm nnn ooo"),
 ]
@@ -48,17 +52,18 @@ def test_minhash_identical_docs_score_one(spark):
 
 
 def test_minhash_estimates_true_jaccard(spark):
-    """The minhash estimate must track the exact character-shingle
+    """The minhash estimate must track the exact word 3-gram shingle
     Jaccard within sketch tolerance (64 hashes → se ≈ 0.06)."""
-    from adi_226_datawarehouse_project_spark.functions.text import char_ngrams
+    from adi_226_datawarehouse_project_spark.functions.text import word_ngrams
 
     df = _docs(spark)
     sh = df.select(
-        "doc_id", F.explode(F.array_distinct(char_ngrams(F.col("text"), 3))).alias("g")
+        "doc_id", F.explode(F.array_distinct(word_ngrams(F.col("text"), 3))).alias("g")
     )
     a = sh.toPandas()
     sets = {i: set(g["g"]) for i, g in a.groupby("doc_id")}
     true_j = len(sets[1] & sets[3]) / len(sets[1] | sets[3])
+    assert abs(true_j - 0.7) < 1e-9
     est = {
         (r["id_a"], r["id_b"]): r["jaccard_est"]
         for r in minhash_near_dup_pairs(
@@ -66,6 +71,30 @@ def test_minhash_estimates_true_jaccard(spark):
         ).collect()
     }[(1, 3)]
     assert abs(est - true_j) < 0.2
+
+
+def test_minhash_lookup_matches_self_join_cross_pairs(spark):
+    """A batch looked up against an index of the other docs finds the
+    same cross pairs, at the same estimates, as the self-join over all
+    docs at the same threshold."""
+    df = _docs(spark)
+    in_batch = F.col("doc_id").isin(2, 3)
+    got = {
+        (r["id_a"], r["id_b"]): r["jaccard_est"]
+        for r in minhash_lookup(
+            minhash_index(df.filter(in_batch), "doc_id", "text"),
+            minhash_index(df.filter(~in_batch), "doc_id", "text"),
+            "doc_id", "doc_id", 0.3,
+        ).collect()
+    }
+    batch = {2, 3}
+    want = {}
+    for r in minhash_near_dup_pairs(df, "doc_id", "text", min_jaccard_est=0.3).collect():
+        a, b = r["id_a"], r["id_b"]
+        if (a in batch) != (b in batch):
+            want[(a, b) if a in batch else (b, a)] = r["jaccard_est"]
+    assert got == want
+    assert got[(2, 1)] == 1.0 and (3, 1) in got
 
 
 def test_simhash_identical_docs_distance_zero(spark):
@@ -90,39 +119,6 @@ def test_ngram_jaccard_exact_value(spark):
         for r in ngram_jaccard_pairs(df, "doc_id", "text", n=2, min_jaccard=0.1).collect()
     }
     assert pairs == {(1, 2): 0.5}
-
-
-def test_ngram_stop_shingle_cap(spark):
-    df = spark.createDataFrame(
-        [(i, "common shingle here") for i in range(10)] + [(99, "rare pair one"), (98, "rare pair one")],
-        ["doc_id", "text"],
-    )
-    capped = ngram_jaccard_pairs(df, "doc_id", "text", n=2, min_jaccard=0.9, max_shingle_freq=5)
-    got = {(r["id_a"], r["id_b"]) for r in capped.collect()}
-    assert got == {(98, 99)}  # hot shingle dropped, rare pair kept
-
-
-def test_ngram_cap_broadcasts_stop_list_at_sf001(spark):
-    """The stop-shingle cap must broadcast the TINY above-cap stop list
-    (left_anti), never the nearly-all-shingles keep list: on the real
-    documents table the capped run must match the uncapped run minus
-    pairs touching stopped shingles, and the plan must show a broadcast
-    left-anti join."""
-    from conftest import SF_DIR
-    from adi_226_datawarehouse_project_spark.sources.catalog import load_table
-
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    capped = ngram_jaccard_pairs(docs, "doc_id", "text", n=5, min_jaccard=0.5,
-                                 max_shingle_freq=50)
-    plan = capped._jdf.queryExecution().executedPlan().toString()
-    assert "LeftAnti" in plan, plan[:2000]
-    assert "Broadcast" in plan, plan[:2000]
-    # With a generous cap no 5-gram in this corpus exceeds 50 docs, so
-    # the capped result must equal the uncapped one (pure plan change).
-    uncapped = ngram_jaccard_pairs(docs, "doc_id", "text", n=5, min_jaccard=0.5)
-    got = sorted(map(tuple, capped.collect()))
-    want = sorted(map(tuple, uncapped.collect()))
-    assert got == want
 
 
 def test_simhash_matches_python_reference(spark):

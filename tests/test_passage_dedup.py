@@ -1,5 +1,5 @@
-"""Repeated-passage removal vs an independent Python reference, both
-keep modes, edge cases, and plan-shape gates."""
+"""Repeated-passage removal vs an independent Python reference, the
+keep-one rule, edge cases, and plan-shape gates."""
 
 from __future__ import annotations
 
@@ -20,14 +20,13 @@ _DOCS = [
     (5, ""),  # empty
 ]
 _N = 4
-_MIN_DOCS = 2
 
 
 def _tokens(text):
     return [t for t in text.lower().strip().split() if t]
 
 
-def _py_reference(docs, n, min_docs, keep):
+def _py_reference(docs, n):
     toks = {i: _tokens(t) for i, t in docs}
     occ = {
         i: [tuple(ts[s : s + n]) for s in range(len(ts) - n + 1)]
@@ -37,13 +36,13 @@ def _py_reference(docs, n, min_docs, keep):
     for i, grams in occ.items():
         for g in set(grams):
             docs_with.setdefault(g, set()).add(i)
-    flagged = {g for g, ds in docs_with.items() if len(ds) >= min_docs}
+    flagged = {g for g, ds in docs_with.items() if len(ds) >= 2}
     out = {}
     for i, ts in toks.items():
         starts = {
             s
             for s, g in enumerate(occ[i])
-            if g in flagged and (keep == "all" or i != min(docs_with[g]))
+            if g in flagged and i != min(docs_with[g])
         }
         covered = {p for s in starts for p in range(s, s + n)}
         clean = " ".join(t for p, t in enumerate(ts) if p not in covered)
@@ -56,21 +55,16 @@ def docs_df(spark):
     return spark.createDataFrame(_DOCS, "doc_id BIGINT, text STRING")
 
 
-@pytest.mark.parametrize("keep", ["all", "first"])
-def test_matches_python_reference(spark, docs_df, keep):
-    want = _py_reference(_DOCS, _N, _MIN_DOCS, keep)
-    spans = repeated_passage_spans(
-        docs_df, "doc_id", "text", n=_N, min_docs=_MIN_DOCS, keep=keep
-    ).collect()
+def test_matches_python_reference(spark, docs_df):
+    want = _py_reference(_DOCS, _N)
+    spans = repeated_passage_spans(docs_df, "doc_id", "text", n=_N).collect()
     got_starts: dict[int, set] = {i: set() for i, _ in _DOCS}
     for r in spans:
         got_starts[r["doc_id"]].add(r["start"])
     assert got_starts == {i: s for i, (s, _, _, _) in want.items()}
     cleaned = {
         r["doc_id"]: r
-        for r in remove_repeated_passages(
-            docs_df, "doc_id", "text", n=_N, min_docs=_MIN_DOCS, keep=keep
-        ).collect()
+        for r in remove_repeated_passages(docs_df, "doc_id", "text", n=_N).collect()
     }
     for i, (_, n_tok, n_cov, clean) in want.items():
         assert cleaned[i]["n_tokens"] == n_tok
@@ -81,9 +75,7 @@ def test_matches_python_reference(spark, docs_df, keep):
 def test_keep_first_preserves_one_copy(spark, docs_df):
     cleaned = {
         r["doc_id"]: r["clean_text"]
-        for r in remove_repeated_passages(
-            docs_df, "doc_id", "text", n=_N, min_docs=_MIN_DOCS, keep="first"
-        ).collect()
+        for r in remove_repeated_passages(docs_df, "doc_id", "text", n=_N).collect()
     }
     # doc 0 is the lowest-id owner of the boilerplate grams: keeps them
     assert _BOILER in cleaned[0]
@@ -93,31 +85,13 @@ def test_keep_first_preserves_one_copy(spark, docs_df):
     assert "unrelated tail text here" in cleaned[2]
 
 
-def test_aggressive_mode_scrubs_all_copies(spark, docs_df):
-    cleaned = {
-        r["doc_id"]: r["clean_text"]
-        for r in remove_repeated_passages(
-            docs_df, "doc_id", "text", n=_N, min_docs=_MIN_DOCS, keep="all"
-        ).collect()
-    }
-    for i in (0, 1, 2):
-        assert _BOILER not in cleaned[i]
-
-
 def test_short_and_empty_docs_pass_through(spark, docs_df):
     cleaned = {
         r["doc_id"]: r
-        for r in remove_repeated_passages(
-            docs_df, "doc_id", "text", n=_N, min_docs=_MIN_DOCS
-        ).collect()
+        for r in remove_repeated_passages(docs_df, "doc_id", "text", n=_N).collect()
     }
     assert cleaned[4]["covered_tokens"] == 0 and cleaned[4]["clean_text"] == "tiny doc"
     assert cleaned[5]["n_tokens"] == 0 and cleaned[5]["clean_text"] == ""
-
-
-def test_bad_keep_mode_rejected(spark, docs_df):
-    with pytest.raises(ValueError):
-        repeated_passage_spans(docs_df, "doc_id", "text", keep="last")
 
 
 def test_no_udf_and_no_cartesian(spark, docs_df):

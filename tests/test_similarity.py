@@ -141,19 +141,6 @@ def test_ivf_recall_vs_exact(spark):
     assert _recall(exact, wide) >= _recall(exact, got)
 
 
-def test_cosine_self_topk_guards_full_scan(spark):
-    """probe_ids=None is an O(n²) all-pairs scan — must be an explicit
-    opt-in, not a silent default."""
-    import pytest
-
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    with pytest.raises(ValueError, match="allow_full_scan"):
-        cosine_self_topk(emb, "vec_id", "embedding", k=3)
-    # explicit opt-in still works
-    out = cosine_self_topk(emb, "vec_id", "embedding", k=1, allow_full_scan=True)
-    assert out.limit(1).count() == 1
-
-
 def test_semantic_dedup_within_cell_collapse(spark):
     from adi_226_datawarehouse_project_spark.operators.similarity import semantic_dedup
 

@@ -140,23 +140,25 @@ def _stream_ts_values(spark, sf_dir, name):
 
 
 def test_is_dir_probe_handles_uris_and_local_paths(spark, tmp_path):
-    """The layout branch in read_events_stream must resolve through the
-    session's Hadoop FileSystem so directory-of-part-files tables are
-    detected on ANY filesystem. file:// URIs are the probe: os.path.isdir
-    returns False for them, so a True here proves the Hadoop path."""
+    """read_events_stream takes a LOCAL sf_dir: events.parquet as a
+    directory of part files streams the same rows as the single-file
+    layout (the glob branch would stream zero rows from a directory),
+    and a URI sf_dir is refused up front instead of failing on a
+    misleading "No such file"."""
     import os
+    import shutil
 
-    from adi_226_datawarehouse_project_spark.streaming.events_stream import _is_dir
+    import pytest
+
+    from adi_226_datawarehouse_project_spark.streaming.events_stream import (
+        read_events_stream,
+    )
 
     d = tmp_path / "events.parquet"
     d.mkdir()
-    f = tmp_path / "single.parquet"
-    f.write_bytes(b"x")
+    shutil.copy(os.path.join(SF_SMALL, "events.parquet"), d / "part-0.parquet")
+    got = _normalize(run_windowed_counts_once(spark, str(tmp_path), "5 minutes"))
+    assert got and got == _normalize(windowed_event_counts(spark, SF_SMALL, "5 minutes"))
+    with pytest.raises(ValueError, match="local directory"):
+        read_events_stream(spark, "file:" + SF_SMALL)
 
-    assert _is_dir(spark, str(d)) is True
-    assert _is_dir(spark, str(f)) is False
-    assert _is_dir(spark, str(tmp_path / "missing")) is False
-    # URI forms — the local fallback can't answer these
-    assert os.path.isdir(f"file://{d}") is False  # why the fallback isn't enough
-    assert _is_dir(spark, f"file://{d}") is True
-    assert _is_dir(spark, f"file://{f}") is False

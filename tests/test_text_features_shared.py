@@ -57,8 +57,7 @@ def _original_form(spark, sf_dir):
         F.lit(None).cast("bigint").alias("n2"), F.lit(None).cast("double").alias("v"),
     )
     scrub = remove_repeated_passages(
-        docs.select("doc_id", "text"), "doc_id", "text",
-        n=_PASSAGE_N, min_docs=2, keep="first",
+        docs.select("doc_id", "text"), "doc_id", "text", n=_PASSAGE_N
     ).select(
         F.lit("passage_scrub").alias("part"),
         F.col("doc_id").cast("string").alias("k"),
@@ -84,13 +83,10 @@ def test_tokens_col_passage_scrub_matches_text_path(spark):
     the text path does — including short docs (< n tokens, zero grams)
     and the keep-first owner exemption."""
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    via_text = remove_repeated_passages(
-        docs, "doc_id", "text", n=_PASSAGE_N, min_docs=2, keep="first"
-    ).select("doc_id", "n_tokens", "covered_tokens", "clean_text")
+    via_text = remove_repeated_passages(docs, "doc_id", "text", n=_PASSAGE_N).select("doc_id", "n_tokens", "covered_tokens", "clean_text")
     toks = docs.select("doc_id", TX.word_tokens("text").alias("tk"))
     via_tokens = remove_repeated_passages(
-        toks, "doc_id", "tk", n=_PASSAGE_N, min_docs=2, keep="first",
-        tokens_col="tk",
+        toks, "doc_id", "tk", n=_PASSAGE_N, tokens_col="tk"
     ).select("doc_id", "n_tokens", "covered_tokens", "clean_text")
     assert via_text.exceptAll(via_tokens).count() == 0
     assert via_tokens.exceptAll(via_text).count() == 0
