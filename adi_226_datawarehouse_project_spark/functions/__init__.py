@@ -1,3 +1,3 @@
-from .geohash import encode_geohash_py, geohash_col, geohash_sql
+from .geohash import encode_geohash_py, geohash_sql
 
-__all__ = ["encode_geohash_py", "geohash_col", "geohash_sql"]
+__all__ = ["encode_geohash_py", "geohash_sql"]

@@ -25,13 +25,11 @@ bisection oracle on the synthetic inputs.
 
 The SQL generator is dialect-rendered (Spark ``shiftleft``/``transform``
 vs DuckDB ``<<``/``list_transform``) so the star-schema views and the
-DuckDB oracle compute the identical column.
+DuckDB oracle compute the identical column. It is the one Spark form:
+DataFrame code takes it through ``F.expr(geohash_sql(...))``.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from .. import dialect as D
 
@@ -152,60 +150,3 @@ def geohash_sql(lat_expr: str, lon_expr: str, precision: int = 7, dialect: str =
         f"OR ({lon_expr}) < -180.0 OR ({lon_expr}) > 180.0 "
         f"THEN NULL ELSE {emit} END)"
     )
-
-
-# ---- PySpark Column form -------------------------------------------
-
-
-def _let_col(bound: Column, body) -> Column:
-    return F.transform(F.array(bound), body)[0]
-
-
-def _spread_step(sh: int, mask: int):
-    # NB: a single-parameter lambda is required — PySpark infers the
-    # HOF lambda's arity from the Python signature, so default args
-    # would be bound to extra lambda variables.
-    return lambda v: v.bitwiseOR(F.shiftleft(v, sh)).bitwiseAND(F.lit(mask))
-
-
-def _spread_col(e: Column) -> Column:
-    out = e
-    for sh, mask in _SPREAD_STEPS:
-        out = _let_col(out, _spread_step(sh, mask))
-    return out
-
-
-def geohash_col(lat: Column | str, lon: Column | str, precision: int = 7) -> Column:
-    """PySpark Column form of :func:`geohash_sql` — pure JVM-side
-    expression (no UDF), same Morton construction."""
-    lat_c = F.col(lat) if isinstance(lat, str) else lat
-    lon_c = F.col(lon) if isinstance(lon, str) else lon
-    lon_bits, lat_bits = _bit_counts(precision)
-    qlon = F.least(
-        F.floor((lon_c + F.lit(180.0)) / F.lit(360.0) * F.lit(float(1 << lon_bits))).cast("bigint"),
-        F.lit((1 << lon_bits) - 1),
-    )
-    qlat = F.least(
-        F.floor((lat_c + F.lit(90.0)) / F.lit(180.0) * F.lit(float(1 << lat_bits))).cast("bigint"),
-        F.lit((1 << lat_bits) - 1),
-    )
-    interleaved = _spread_col(qlon).bitwiseOR(F.shiftleft(_spread_col(qlat), 1))
-
-    def emit(v: Column) -> Column:
-        return F.concat(
-            *[
-                F.substr(
-                    F.lit(BASE32),
-                    F.shiftright(v, 5 * (precision - 1 - k)).bitwiseAND(F.lit(31)).cast("int") + 1,
-                    F.lit(1),
-                )
-                for k in range(precision)
-            ]
-        )
-
-    in_domain = (
-        lat_c.isNotNull() & lon_c.isNotNull()
-        & (lat_c >= F.lit(-90.0)) & (lat_c <= F.lit(90.0))
-        & (lon_c >= F.lit(-180.0)) & (lon_c <= F.lit(180.0))
-    )
-    return F.when(in_domain, _let_col(interleaved, emit))

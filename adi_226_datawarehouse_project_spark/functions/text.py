@@ -98,39 +98,12 @@ def token_count(col: Column | str) -> Column:
     return F.when(c.isNotNull(), F.size(word_tokens(c)))
 
 
-def bpe_ish_token_count(col: Column | str) -> Column:
-    """Sub-word-ish token estimate: count of word/number/punct chunks
-    matched by a BPE-flavored regex (each ~4 chars of a word become a
-    token, punctuation is its own token)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.size(
-        F.filter(
-            F.split(c, r"(?<=[\s\p{Punct}])|(?=[\s\p{Punct}])"),
-            lambda t: F.trim(t) != F.lit(""),
-        )
-    )
-
-
-def char_ngrams(col: Column | str, n: int = 3) -> Column:
-    """All character n-grams (shingles) of the lowercased text — the
-    shingle set for MinHash. Pure expression: substring over an index
-    sequence (no UDF)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return _let(
-        F.lower(c),
-        lambda low: F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(low) - (n - 1), F.lit(1))),
-            lambda i: F.substring(low, i, F.lit(n)),
-        ),
-    )
-
-
 def word_ngrams(col: Column | str, n: int = 2) -> Column:
     """Word n-grams joined by a space.
 
-    DELIBERATE short-document behavior (same clamp as char_ngrams, and
-    mirrored by every DuckDB oracle that re-derives grams): a document
-    with fewer than ``n`` tokens yields ONE gram — the whole document
+    DELIBERATE short-document behavior (mirrored by every DuckDB oracle
+    that re-derives grams): a document with fewer than ``n`` tokens
+    yields ONE gram — the whole document
     (an empty document yields ['']) — so short docs still carry a
     dedup/decontamination signature instead of silently dropping out
     of gram-keyed joins. Consumers that need strict n-grams must

@@ -2,16 +2,12 @@ from .binary_ops import (
     attach_binary_payload,
     decode_audio_stub,
     decode_image_stub,
-    extract_binary_features,
     resize_image_stub,
-    sample_frames_stub,
 )
 
 __all__ = [
     "attach_binary_payload",
     "decode_audio_stub",
     "decode_image_stub",
-    "extract_binary_features",
     "resize_image_stub",
-    "sample_frames_stub",
 ]

@@ -1,15 +1,10 @@
-"""Multimodal column plumbing: image/audio/video as opaque BINARY
-columns with typed metadata.
+"""Multimodal column plumbing: image/audio as opaque BINARY columns
+with typed metadata.
 
-Decode is codec-dispatched (``codec=`` on each decode op):
-- ``"real"`` — actual pixels/samples via multimodal.codecs: PIL /
-  soundfile when installed (import-gated), pure-stdlib 24-bit BMP and
-  RIFF/WAVE-PCM decoders otherwise. Unparseable payload → ValueError.
-- ``"sim"`` — deterministic fake features derived from the raw bytes
-  (stable across engines, which is what the DuckDB differential suite
-  pins), or NotImplementedError in strict mode.
-- ``"auto"`` — real when the bytes parse, per-row simulated fallback
-  otherwise (strict mode turns the fallback into NotImplementedError).
+Decode is simulated: each decoder derives deterministic fake features
+from the raw bytes, so the DuckDB differential suite can reproduce
+them. A real codec (pixels, PCM samples) would replace the per-batch
+body and keep the Arrow batch flow and the output schema.
 
 Design for 100 TB: binary payloads are processed with ``mapInPandas``
 (Arrow batches; one Python worker per partition, not per row).
@@ -25,20 +20,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from . import codecs as _codecs
-
-# Executor Python workers don't share the driver's sys.path, so the
-# codec module must ship BY VALUE inside the mapInPandas closures
-# (its own imports are stdlib+numpy, present on every worker).
-try:
-    from pyspark import cloudpickle as _cloudpickle
-
-    _cloudpickle.register_pickle_by_value(_codecs)
-except Exception:  # pragma: no cover - older cloudpickle
-    pass
-
-STRICT_DECODE = False  # True → decode raises NotImplementedError
 
 DECODED_SCHEMA = (
     "doc_id bigint, n_bytes int, width int, height int, channels int, mean_luma double"
@@ -56,87 +37,29 @@ def attach_binary_payload(df: DataFrame, text_col: str = "text", id_col: str = "
     )
 
 
-def extract_binary_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Pure-SQL byte-level features (no decode): size, first-byte tag,
-    md5. These run JVM-side and scale like any projection."""
-    return df.withColumn("n_bytes", F.octet_length(F.col(payload_col))).withColumn(
-        "payload_md5", F.md5(F.col(payload_col))
-    )
-
-
-def decode_image(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    codec: str = "auto",
-    strict: bool | None = None,
-) -> DataFrame:
-    """Decode each payload into image features via mapInPandas (see
-    module docstring for the real/sim/auto codec contract). ``strict``
-    defaults to module ``STRICT_DECODE``, captured into the closure at
-    plan-build time so it survives executor-side re-import."""
-    strict_mode = STRICT_DECODE if strict is None else strict
-    if codec not in ("real", "sim", "auto"):
-        raise ValueError(f"codec must be real|sim|auto, got {codec!r}")
-
-    def _sim_frame(pdf: pd.DataFrame) -> pd.DataFrame:
-        payload = pdf[payload_col]
-        n = payload.str.len().fillna(0).astype("int32")
-        first = payload.map(lambda b: b[0] if isinstance(b, (bytes, bytearray)) and b else 0)
-        return pd.DataFrame(
-            {
-                "doc_id": pdf[id_col],
-                "n_bytes": n,
-                "width": (n % 640).astype("int32") + 1,
-                "height": (n % 480).astype("int32") + 1,
-                "channels": 3,
-                "mean_luma": (first.astype("float64") % 256.0) / 255.0,
-            }
-        )
-
-    decode_image_bytes = _codecs.decode_image_bytes
+def decode_image_stub(df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload") -> DataFrame:
+    """Simulated image decode via mapInPandas: deterministic features
+    derived from the raw bytes. The cross-engine differential suite
+    pins this path (the fake features are reproducible in DuckDB SQL,
+    real pixels aren't)."""
 
     def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if codec == "sim":
-                if strict_mode:
-                    raise NotImplementedError(
-                        "simulated image decode is disabled in strict mode"
-                    )
-                yield _sim_frame(pdf)
-                continue
-            sim = None if codec == "real" else _sim_frame(pdf)
-            out: dict[str, list] = {k: [] for k in
-                                    ("doc_id", "n_bytes", "width", "height", "channels", "mean_luma")}
-            for pos, (doc_id, b) in enumerate(zip(pdf[id_col], pdf[payload_col])):
-                real = decode_image_bytes(b)
-                if real is not None:
-                    w, h, ch, luma = real
-                    row = (int(len(b)), int(w), int(h), int(ch), float(luma))
-                elif codec == "real":
-                    raise ValueError(f"undecodable image payload for doc_id={doc_id}")
-                elif strict_mode:
-                    raise NotImplementedError(
-                        "image payload not decodable by available codecs (PIL absent) "
-                        "and the simulated fallback is disabled in strict mode"
-                    )
-                else:
-                    srow = sim.iloc[pos]
-                    row = (int(srow["n_bytes"]), int(srow["width"]), int(srow["height"]),
-                           int(srow["channels"]), float(srow["mean_luma"]))
-                out["doc_id"].append(doc_id)
-                for k, v in zip(("n_bytes", "width", "height", "channels", "mean_luma"), row):
-                    out[k].append(v)
-            yield pd.DataFrame(out)
+            payload = pdf[payload_col]
+            n = payload.str.len().fillna(0).astype("int32")
+            first = payload.map(lambda b: b[0] if isinstance(b, (bytes, bytearray)) and b else 0)
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf[id_col],
+                    "n_bytes": n,
+                    "width": (n % 640).astype("int32") + 1,
+                    "height": (n % 480).astype("int32") + 1,
+                    "channels": 3,
+                    "mean_luma": (first.astype("float64") % 256.0) / 255.0,
+                }
+            )
 
     return df.mapInPandas(_decode_batches, schema=DECODED_SCHEMA)
-
-
-def decode_image_stub(df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload") -> DataFrame:
-    """Simulated-codec decode — deterministic byte-derived features;
-    the cross-engine differential suite pins this path (the fake
-    features are reproducible in DuckDB SQL, real pixels aren't)."""
-    return decode_image(df, id_col, payload_col, codec="sim")
 
 
 RESIZED_SCHEMA = (
@@ -155,17 +78,10 @@ def resize_image_stub(
     (PIL/cv2); the geometry math, Arrow batch flow, and output schema
     are the real contract and are exact (pure IEEE-double ops, so the
     DuckDB oracle reproduces them bit-for-bit)."""
-    # Capture at PLAN-BUILD time, like decode_image/decode_audio: a
-    # flip of the module flag between building the plan and running it
-    # must not change this operator's behavior while leaving theirs.
-    strict_mode = STRICT_DECODE
-
     def _resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
         for pdf in batches:
-            if strict_mode:
-                raise NotImplementedError("image resize requires PIL/cv2 (not in container)")
             w = pdf["width"].astype("float64").to_numpy()
             h = pdf["height"].astype("float64").to_numpy()
             scale = np.minimum(np.minimum(max_width / w, max_height / h), 1.0)
@@ -188,105 +104,29 @@ AUDIO_SCHEMA = (
 )
 
 
-def decode_audio(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    sample_rate: int = 16000,
-    codec: str = "auto",
-    strict: bool | None = None,
-) -> DataFrame:
-    """Decode audio payloads into waveform-level features via
-    mapInPandas. Real path: soundfile when installed, stdlib RIFF/WAVE
-    16-bit PCM reader otherwise (actual samples, mono-downmixed RMS).
-    Sim path: deterministic integer functions of the bytes under a
-    16-bit-mono-PCM model at ``sample_rate`` (DuckDB-reproducible).
-    ``codec``/``strict`` behave as in :func:`decode_image`."""
-    strict_mode = STRICT_DECODE if strict is None else strict
-    if codec not in ("real", "sim", "auto"):
-        raise ValueError(f"codec must be real|sim|auto, got {codec!r}")
-
-    def _sim_frame(pdf: pd.DataFrame) -> pd.DataFrame:
-        payload = pdf[payload_col]
-        n = payload.str.len().fillna(0).astype("int64")
-        first = payload.map(
-            lambda b: b[0] if isinstance(b, (bytes, bytearray)) and b else 0
-        ).astype("int64")
-        n_samples = n // 2
-        return pd.DataFrame(
-            {
-                "doc_id": pdf[id_col],
-                "sample_rate": sample_rate,
-                "n_samples": n_samples,
-                "duration_s": n_samples.astype("float64") / float(sample_rate),
-                "rms": ((first * 31 + n) % 1000).astype("float64") / 1000.0,
-            }
-        )
-
-    decode_audio_bytes = _codecs.decode_audio_bytes
-
-    def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if codec == "sim":
-                if strict_mode:
-                    raise NotImplementedError(
-                        "simulated audio decode is disabled in strict mode"
-                    )
-                yield _sim_frame(pdf)
-                continue
-            sim = None if codec == "real" else _sim_frame(pdf)
-            out: dict[str, list] = {k: [] for k in
-                                    ("doc_id", "sample_rate", "n_samples", "duration_s", "rms")}
-            for pos, (doc_id, b) in enumerate(zip(pdf[id_col], pdf[payload_col])):
-                real = decode_audio_bytes(b)
-                if real is not None:
-                    sr, n, dur, rms = real
-                    row = (int(sr), int(n), float(dur), float(rms))
-                elif codec == "real":
-                    raise ValueError(f"undecodable audio payload for doc_id={doc_id}")
-                elif strict_mode:
-                    raise NotImplementedError(
-                        "audio payload not decodable by available codecs (soundfile "
-                        "absent) and the simulated fallback is disabled in strict mode"
-                    )
-                else:
-                    srow = sim.iloc[pos]
-                    row = (int(srow["sample_rate"]), int(srow["n_samples"]),
-                           float(srow["duration_s"]), float(srow["rms"]))
-                out["doc_id"].append(doc_id)
-                for k, v in zip(("sample_rate", "n_samples", "duration_s", "rms"), row):
-                    out[k].append(v)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(_decode_batches, schema=AUDIO_SCHEMA)
-
-
 def decode_audio_stub(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload", sample_rate: int = 16000
 ) -> DataFrame:
-    """Simulated-codec audio decode (DuckDB-reproducible features)."""
-    return decode_audio(df, id_col, payload_col, sample_rate, codec="sim")
+    """Simulated audio decode via mapInPandas: deterministic integer
+    functions of the bytes under a 16-bit-mono-PCM model at
+    ``sample_rate`` (DuckDB-reproducible)."""
 
-
-def sample_frames_stub(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload", every_n_bytes: int = 64
-) -> DataFrame:
-    """'Frame sampling': one row per sampled offset of the payload —
-    the explode-shaped output a video frame sampler produces. Offsets
-    are computed JVM-side; only the (stubbed) per-frame decode would
-    need Python."""
-    return df.select(
-        F.col(id_col),
-        F.posexplode(
-            F.sequence(
-                F.lit(0),
-                F.greatest(
-                    (F.octet_length(F.col(payload_col)) - 1) / every_n_bytes, F.lit(0)
-                ).cast("int"),
+    def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            payload = pdf[payload_col]
+            n = payload.str.len().fillna(0).astype("int64")
+            first = payload.map(
+                lambda b: b[0] if isinstance(b, (bytes, bytearray)) and b else 0
+            ).astype("int64")
+            n_samples = n // 2
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf[id_col],
+                    "sample_rate": sample_rate,
+                    "n_samples": n_samples,
+                    "duration_s": n_samples.astype("float64") / float(sample_rate),
+                    "rms": ((first * 31 + n) % 1000).astype("float64") / 1000.0,
+                }
             )
-        ).alias("frame_index", "byte_offset_step"),
-    ).select(
-        id_col,
-        "frame_index",
-        (F.col("frame_index") * every_n_bytes).alias("byte_offset"),
-    )
+
+    return df.mapInPandas(_decode_batches, schema=AUDIO_SCHEMA)

@@ -1,4 +1,4 @@
-"""N-gram language-model scoring over a document corpus — CCNet-style
+"""Unigram language-model scoring over a document corpus — CCNet-style
 perplexity filtering for the training-data pipeline (Wenzek et al.,
 arXiv:1911.00359 filter web text by LM perplexity; Gopher/Rae et al.
 use the same signal). Documents whose tokens are improbable under a
@@ -47,13 +47,6 @@ from pyspark.sql import functions as F
 from ..functions.text import word_tokens
 
 
-def _tf(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    toks = df.select(
-        F.col(id_col), F.explode(word_tokens(F.col(text_col))).alias("token")
-    )
-    return toks.groupBy(id_col, "token").agg(F.count(F.lit(1)).alias("tf"))
-
-
 def unigram_lm_scores(
     df: DataFrame,
     id_col: str,
@@ -71,7 +64,10 @@ def unigram_lm_scores(
     """
     if mode not in ("ln", "bits"):
         raise ValueError(f"unknown lm score mode: {mode!r}")
-    tf = _tf(df, id_col, text_col)
+    toks = df.select(
+        F.col(id_col), F.explode(word_tokens(F.col(text_col))).alias("token")
+    )
+    tf = toks.groupBy(id_col, "token").agg(F.count(F.lit(1)).alias("tf"))
     counts = tf.groupBy("token").agg(F.sum("tf").alias("cnt"))
     totals = counts.agg(
         F.sum("cnt").alias("__T"), F.count(F.lit(1)).alias("__V")
@@ -111,66 +107,6 @@ def unigram_lm_scores(
     )
 
 
-def bigram_lm_scores(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    lam: float = 0.8,
-) -> DataFrame:
-    """Per-document interpolated-bigram NLL (nats/token over bigram
-    positions): ``p(w2|w1) = lam·c(w1,w2)/c(w1·) + (1-lam)·p1(w2)``
-    with ``p1`` the add-one unigram model. Returns
-    ``(id, n_bigrams, nll, ppl)``; docs with < 2 tokens drop out
-    (no bigram positions — the caller unions them back if needed).
-
-    Shape: per-doc bigram frequencies are one ``groupBy(id, w1, w2)``;
-    corpus bigram counts reuse those rows (``sum`` over (w1, w2));
-    the context counts c(w1·) reuse the BIGRAM counts (``sum`` over
-    w1 — equals unigram counts over non-final positions); unigram
-    backoff joins on w2. Three token-keyed equi-joins, one 1-row
-    broadcast — no UDFs, no cartesian.
-    """
-    if not (0.0 < lam < 1.0):
-        raise ValueError("lam must be in (0, 1) — pure bigram has zero-prob events")
-    toks = df.select(
-        F.col(id_col), word_tokens(F.col(text_col)).alias("__toks")
-    )
-    pairs = toks.select(
-        id_col,
-        F.explode(
-            F.expr(
-                "transform(slice(__toks, 1, greatest(size(__toks) - 1, 0)),"
-                " (w, i) -> struct(w AS w1, __toks[i + 1] AS w2))"
-            )
-        ).alias("bg"),
-    ).select(id_col, F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
-    bf = pairs.groupBy(id_col, "w1", "w2").agg(F.count(F.lit(1)).alias("bf"))
-    bcounts = bf.groupBy("w1", "w2").agg(F.sum("bf").alias("bcnt"))
-    ctx = bcounts.groupBy("w1").agg(F.sum("bcnt").alias("ccnt"))
-    # unigram distribution over ALL positions (for backoff)
-    tf = _tf(df, id_col, text_col)
-    ucounts = tf.groupBy("token").agg(F.sum("tf").alias("cnt"))
-    totals = ucounts.agg(F.sum("cnt").alias("__T"), F.count(F.lit(1)).alias("__V"))
-    p1 = (F.col("cnt") + 1).cast("double") / (F.col("__T") + F.col("__V")).cast(
-        "double"
-    )
-    joined = (
-        bf.join(bcounts, ["w1", "w2"])
-        .join(ctx, "w1")
-        .join(ucounts.withColumnRenamed("token", "w2"), "w2")
-        .crossJoin(F.broadcast(totals))
-    )
-    p = F.lit(lam) * F.col("bcnt").cast("double") / F.col("ccnt").cast("double") + (
-        F.lit(1.0 - lam) * p1
-    )
-    per_doc = joined.groupBy(id_col).agg(
-        F.sum("bf").alias("n_bigrams"),
-        F.sum(F.col("bf").cast("double") * -F.log(p)).alias("__nll_sum"),
-    )
-    nll = F.col("__nll_sum") / F.col("n_bigrams").cast("double")
-    return per_doc.select(id_col, "n_bigrams", nll.alias("nll"), F.exp(nll).alias("ppl"))
-
-
 def perplexity_filter(
     df: DataFrame,
     id_col: str,
@@ -191,56 +127,3 @@ def perplexity_filter(
         )
     ).select(id_col)
     return df.join(keep, id_col, "left_semi")
-
-
-def perplexity_buckets(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    head_frac: float = 1 / 3,
-    tail_frac: float = 1 / 3,
-    min_tokens: int = 1,
-) -> DataFrame:
-    """CCNet's actual selection mechanism (Wenzek et al. §4.4): rather
-    than one global threshold, rank documents by LM perplexity and
-    split the corpus into head / middle / tail buckets (CCNet trains
-    on head+middle and drops or down-weights the tail). Returns the
-    input rows plus ``bits_per_token_milli`` and ``ppl_bucket``
-    ('head' = lowest-perplexity ``head_frac``, 'tail' = highest
-    ``tail_frac``, 'middle' = the rest).
-
-    The bucket boundaries are the corpus's own score quantiles,
-    computed with ``approx_percentile`` (mergeable t-digest — one
-    bounded-memory aggregation regardless of corpus size) and
-    broadcast back as a 1-row frame; per-row bucketing is then a
-    narrow comparison. Documents under ``min_tokens`` get bucket
-    'tail' (too short to score meaningfully)."""
-    if not (0 < head_frac and 0 < tail_frac and head_frac + tail_frac < 1):
-        raise ValueError(f"bad fractions: head={head_frac}, tail={tail_frac}")
-    scores = unigram_lm_scores(df, id_col, text_col, mode="bits").select(
-        id_col, "n_tokens", "bits_per_token_milli"
-    )
-    cuts = scores.filter(F.col("n_tokens") >= min_tokens).agg(
-        F.expr(
-            f"approx_percentile(bits_per_token_milli, {head_frac}, 10000)"
-        ).alias("__head_cut"),
-        F.expr(
-            f"approx_percentile(bits_per_token_milli, {1.0 - tail_frac}, 10000)"
-        ).alias("__tail_cut"),
-    )
-    bucketed = (
-        df.join(scores, id_col, "left")
-        .crossJoin(F.broadcast(cuts))
-        .withColumn(
-            "ppl_bucket",
-            F.when(
-                F.col("n_tokens").isNull() | (F.col("n_tokens") < min_tokens),
-                F.lit("tail"),
-            )
-            .when(F.col("bits_per_token_milli") <= F.col("__head_cut"), "head")
-            .when(F.col("bits_per_token_milli") > F.col("__tail_cut"), "tail")
-            .otherwise("middle"),
-        )
-        .drop("__head_cut", "__tail_cut", "n_tokens")
-    )
-    return bucketed

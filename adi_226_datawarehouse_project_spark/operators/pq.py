@@ -17,11 +17,14 @@ Distributed shape:
   differential oracle re-derives them bit-identically with zero
   training state); they are driver-resident model state of
   ``m·ksub·dsub`` doubles — the same kind MLlib keeps;
-- encoding is a NARROW literal-inlined argmin per subspace: zero
-  shuffles, zero UDFs, the corpus streams once and emits
-  ``(id, codes array<int>)``;
+- encoding is a NARROW argmin per subspace, folded over the codebooks
+  as one literal array: zero shuffles, zero UDFs, the corpus streams
+  once and emits ``(id, codes array<int>)``. The folds keep the
+  expression text a few hundred characters plus the literal, where
+  spelling out every ``m·ksub·dsub`` term made whole-stage codegen
+  give up ("Code grows beyond 64 KB") at m=4/ksub=16;
 - each probe row computes its ADC lookup table ONCE (``m·ksub``
-  dot products as one literal expression), then every candidate is
+  dot products, the same fold shape), then every candidate is
   scored with ``m`` array lookups + adds — not ``dim`` multiplies;
 - the probe side broadcasts and the code table streams once
   (brute-force ADC — never a corpus×corpus cross join).
@@ -30,8 +33,8 @@ Vectors are L2-normalized before everything, so ADC dot approximates
 cosine.
 
 All floats follow the module's determinism rule: sequential
-index-order folds (literal-expression sums associate left-to-right),
-so scores are bit-identical run-to-run and engine-to-engine.
+index-order folds (``aggregate`` over dims, left to right), so scores
+are bit-identical run-to-run and engine-to-engine.
 """
 
 from __future__ import annotations
@@ -41,18 +44,6 @@ from pyspark.sql import functions as F
 
 from ..functions.text import _let
 from .similarity import _norm
-
-# Codegen guard: the encode expression materializes m·ksub·dsub
-# multiply-add terms; past ~10^4 Catalyst falls back to interpreted
-# eval or trips JVM method limits. 4×16×16 = 1024
-# terms sits comfortably inside; production-width models should raise m
-# (more, smaller subspaces) rather than ksub.
-_INLINE_MAX_TERMS = 10_000
-
-
-def _f(x: float) -> str:
-    """Full-precision SQL double literal (repr round-trips exactly)."""
-    return repr(float(x))
 
 
 def pq_codebooks(
@@ -110,48 +101,45 @@ def _normalized(vec_col: str) -> Column:
     )
 
 
+def _codebook_sql(codebooks: list[list[list[float]]]) -> str:
+    """The codebooks as one SQL literal ``array<array<array<double>>>``
+    (``D``-suffixed, full-precision: repr round-trips exactly)."""
+    return "array(" + ", ".join(
+        "array(" + ", ".join(
+            "array(" + ", ".join(f"{float(x)!r}D" for x in entry) + ")" for entry in book
+        ) + ")"
+        for book in codebooks
+    ) + ")"
+
+
 def _encode_expr(codebooks: list[list[list[float]]], nv_col: str) -> str:
     """SQL text: array<int> of per-subspace argmin-L2 codes against the
-    literal codebooks. Ties break to the smallest code (struct min
+    literal codebooks, as folds over the codebook array (the expression
+    text stays small at any m·ksub·dsub, so it compiles inside
+    whole-stage codegen). Ties break to the smallest code (struct min
     compares distance, then code)."""
-    m, ksub, dsub = len(codebooks), len(codebooks[0]), len(codebooks[0][0])
-    if m * ksub * dsub > _INLINE_MAX_TERMS:
-        raise ValueError(
-            f"inline encode would materialize {m * ksub * dsub} terms"
-            f" (> {_INLINE_MAX_TERMS}); raise m / lower ksub"
-        )
-    subs = []
-    for j in range(m):
-        entries = []
-        for c, entry in enumerate(codebooks[j]):
-            terms = " + ".join(
-                f"(element_at({nv_col}, {j * dsub + d + 1}) - {_f(entry[d])})"
-                f" * (element_at({nv_col}, {j * dsub + d + 1}) - {_f(entry[d])})"
-                for d in range(dsub)
-            )
-            entries.append(f"named_struct('d', CAST({terms} AS DOUBLE), 'c', {c})")
-        subs.append(f"array_min(array({', '.join(entries)})).c")
-    return f"array({', '.join(subs)})"
+    dsub = len(codebooks[0][0])
+    dist = (
+        f"aggregate(sequence(0, {dsub - 1}), 0D, (acc, d) -> acc +"
+        f" (element_at({nv_col}, j * {dsub} + d + 1) - element_at(e, d + 1)) *"
+        f" (element_at({nv_col}, j * {dsub} + d + 1) - element_at(e, d + 1)))"
+    )
+    return (
+        f"transform({_codebook_sql(codebooks)}, (sub, j) -> array_min(transform(sub,"
+        f" (e, c) -> named_struct('d', {dist}, 'c', c))).c)"
+    )
 
 
 def _lut_expr(codebooks: list[list[list[float]]], nq_col: str) -> str:
     """SQL text: array<array<double>> ADC table — lut[j][c] is the dot
-    of the query's j-th subspace slice with codebook entry c."""
-    m, ksub, dsub = len(codebooks), len(codebooks[0]), len(codebooks[0][0])
-    rows = []
-    for j in range(m):
-        dots = []
-        for entry in codebooks[j]:
-            dots.append(
-                " + ".join(
-                    f"element_at({nq_col}, {j * dsub + d + 1}) * {_f(entry[d])}"
-                    for d in range(dsub)
-                )
-            )
-        rows.append(
-            "array(" + ", ".join(f"CAST({d} AS DOUBLE)" for d in dots) + ")"
-        )
-    return f"array({', '.join(rows)})"
+    of the query's j-th subspace slice with codebook entry c (the same
+    fold shape as :func:`_encode_expr`)."""
+    dsub = len(codebooks[0][0])
+    dot = (
+        f"aggregate(sequence(0, {dsub - 1}), 0D, (acc, d) -> acc +"
+        f" element_at({nq_col}, j * {dsub} + d + 1) * element_at(e, d + 1))"
+    )
+    return f"transform({_codebook_sql(codebooks)}, (sub, j) -> transform(sub, e -> {dot}))"
 
 
 def pq_encode(
@@ -172,25 +160,16 @@ def pq_adc_topk(
     df: DataFrame,
     id_col: str,
     vec_col: str,
+    codebooks: list[list[list[float]]],
     k: int = 10,
     probe_ids: list[int] | None = None,
-    m: int = 4,
-    ksub: int = 16,
-    codebooks: list[list[list[float]]] | None = None,
 ) -> DataFrame:
     """Approximate top-k by ADC score: ``(query_id, neighbor_id, adc,
     rank)``. The probe side broadcasts against the full code table
     (codes, not vectors — the scan is ~dim/m of the exact brute-force
     bytes)."""
-    if codebooks is None:
-        codebooks = pq_codebooks(df, id_col, vec_col, m=m, ksub=ksub)
-    mm = len(codebooks)
-
-    corpus = df.select(
-        F.col(id_col).alias("neighbor_id"), _normalized(vec_col).alias("__pq_nv")
-    )
-    codes = corpus.select(
-        "neighbor_id", F.expr(_encode_expr(codebooks, "__pq_nv")).alias("__codes")
+    codes = pq_encode(df, id_col, vec_col, codebooks).select(
+        F.col(id_col).alias("neighbor_id"), F.col("codes").alias("__codes")
     )
     probes = df.select(
         F.col(id_col).alias("query_id"), _normalized(vec_col).alias("__pq_nq")
@@ -206,7 +185,7 @@ def pq_adc_topk(
     )
 
     adc = F.expr(
-        f"aggregate(sequence(0, {mm - 1}), CAST(0 AS DOUBLE),"
+        f"aggregate(sequence(0, {len(codebooks) - 1}), CAST(0 AS DOUBLE),"
         f" (acc, j) -> acc + element_at(element_at(__lut, j + 1),"
         f" element_at(__codes, j + 1) + 1))"
     )

@@ -117,18 +117,3 @@ def scd2_apply(
         .unionByName(reopened)
         .unionByName(brand_new)
     )
-
-
-def as_of(dim: DataFrame, key: str, date: _dt.date) -> DataFrame:
-    """Point-in-time view of the SCD2 dimension: the version of each
-    key that was effective ON ``date`` — ``effective_from <= date <
-    effective_to`` (half-open, matching :func:`scd2_apply`'s close
-    rule: a version closed on D stops covering D, the replacement
-    starts at D). Keys whose first version starts after ``date`` are
-    absent — they did not exist yet. Pure narrow filter over the
-    stored dimension; with the dimension partitioned/z-ordered on the
-    date range at warehouse scale, the scan prunes to live files."""
-    return dim.filter(
-        (F.col("effective_from") <= F.lit(date))
-        & (F.col("effective_to") > F.lit(date))
-    ).drop("is_current")

@@ -93,38 +93,18 @@ def _srp_plane_bit(vec_col: str, p: int, weight: int) -> str:
     return f"(CASE WHEN {proj} > 0 THEN {weight}L ELSE 0L END)"
 
 
-def srp_signature(vec_col: str, num_planes: int = 16) -> Column:
-    """Signed-random-projection bit signature packed into a bigint.
-    The ±1 hyperplane components are deterministic xxhash64 mixes of
-    (plane, dim) — same value on every executor, no state to ship.
-
-    Built as ONE SQL text expression (the py4j construction-tax
-    finding, see dedup.simhash): 16 planes of per-op Column folds were
-    ~1.3s of client round trips per query build; signatures are
-    bit-identical to the Column form. Capped at 63 planes — bit 63 is
-    the bigint sign bit; wider configurations go through
-    :func:`srp_band_buckets`, which never packs more than one band per
-    long."""
-    if num_planes < 1:
-        raise ValueError(f"num_planes must be positive: {num_planes}")
-    if num_planes > 63:
-        raise ValueError(
-            "srp_signature packs all planes into one signed bigint; "
-            f"num_planes={num_planes} > 63 would overflow the sign bit — "
-            "use srp_band_buckets for wide-plane configurations"
-        )
-    terms = [_srp_plane_bit(vec_col, p, 1 << p) for p in range(num_planes)]
-    return F.expr("CAST(0 AS BIGINT) + " + " + ".join(terms))
-
-
 def srp_band_buckets(vec_col: str, num_planes: int, bands: int) -> Column:
     """Array of ``bands`` SRP bucket keys, band b packing planes
     [b·bits, (b+1)·bits) into one bigint each (bits = num_planes/bands
-    ≤ 63). Identical bucket values to shift/mask over
-    :func:`srp_signature` at every operating point both support, but
-    with no all-planes pack — so ``num_planes`` can grow with corpus
-    size (the candidate-density rule in
-    :func:`embedding_near_dup_pairs`) without hitting the 63-bit cap."""
+    ≤ 63). The ±1 hyperplane components are deterministic xxhash64
+    mixes of (plane, dim) — same value on every executor, no state to
+    ship. No all-planes pack: ``num_planes`` can grow with corpus size
+    (the candidate-density rule in :func:`embedding_near_dup_pairs`)
+    without hitting a 63-bit cap.
+
+    Built as ONE SQL text expression (the py4j construction-tax
+    finding, see dedup.simhash): per-op Column folds were ~1.3s of
+    client round trips per query build."""
     if bands < 1:
         raise ValueError(f"bands must be positive: {bands}")
     if num_planes % bands != 0:

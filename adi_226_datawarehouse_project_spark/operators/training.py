@@ -379,76 +379,6 @@ def chunk_documents(
     )
 
 
-def corpus_report(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    lang_col: str | None = None,
-) -> DataFrame:
-    """One-pass corpus data-card: the summary block a published
-    training set ships (C4/Pile/ROOTS-style datasheets). One row per
-    language (plus an ``__all__`` rollup via grouping sets) with:
-
-    - ``n_docs``, ``total_tokens``
-    - token-count distribution: min / p50 / p90 / max (``p*`` via
-      ``approx_percentile`` — the mergeable one-pass t-digest sketch;
-      the exact-vs-sketch legality bound is pinned by
-      ``op_approx_vs_exact``)
-    - ``approx_distinct_fingerprints`` (HLL++ over the order-insensitive
-      token-set fingerprint) and the derived ``dup_rate_pct`` estimate —
-      the headline "how much exact duplication is left" number.
-
-    Everything is a single map-side-combinable aggregation — sketches
-    merge, so the same plan profiles 100 TB with fixed memory; no
-    second pass, no window, no UDF."""
-    from ..functions.text import fingerprint, token_count
-
-    lang = F.col(lang_col) if lang_col else F.lit("und")
-    prepared = df.select(
-        lang.alias("lang"),
-        token_count(F.col(text_col)).cast("bigint").alias("__nt"),
-        fingerprint(F.col(text_col)).alias("__fp"),
-    )
-    # rollup = per-lang rows + one grand-total row (lang NULL -> __all__)
-    out = (
-        prepared.rollup("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("__nt").alias("total_tokens"),
-            F.min("__nt").alias("min_tokens"),
-            F.expr("approx_percentile(__nt, 0.5, 10000)").alias("p50_tokens"),
-            F.expr("approx_percentile(__nt, 0.9, 10000)").alias("p90_tokens"),
-            F.max("__nt").alias("max_tokens"),
-            F.approx_count_distinct("__fp").alias("approx_distinct_fingerprints"),
-            # F.grouping separates the ROLLUP total row from a genuine
-            # NULL-language stratum — coalesce alone would emit two
-            # indistinguishable "__all__" rows when lang IS NULL occurs
-            # (grouping() is only legal inside the grouping aggregate)
-            F.grouping("lang").alias("__is_total"),
-        )
-        .select(
-            F.when(F.col("__is_total") == 1, F.lit("__all__"))
-            .otherwise(F.coalesce(F.col("lang"), F.lit("__unknown__")))
-            .alias("lang"),
-            "n_docs",
-            "total_tokens",
-            "min_tokens",
-            "p50_tokens",
-            "p90_tokens",
-            "max_tokens",
-            "approx_distinct_fingerprints",
-            F.round(
-                (F.col("n_docs") - F.col("approx_distinct_fingerprints"))
-                * 100.0
-                / F.greatest(F.col("n_docs"), F.lit(1)),
-                2,
-            ).alias("dup_rate_pct"),
-        )
-        .orderBy("lang")
-    )
-    return out
-
-
 def group_sample_k(
     df: DataFrame,
     strata_col: str,

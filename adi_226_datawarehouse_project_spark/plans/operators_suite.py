@@ -3878,8 +3878,7 @@ def _spark_sim_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb_iv.unionByName(corrupt), "vec_id", "embedding", m=4, ksub=16
     )
     pq = pq_adc_topk(
-        emb, "vec_id", "embedding", k=5, probe_ids=[0, 1, 2, 3, 4], m=4, ksub=16,
-        codebooks=cbs,
+        emb, "vec_id", "embedding", cbs, k=5, probe_ids=[0, 1, 2, 3, 4]
     ).select(
         F.lit("pq_adc").alias("part"),
         (F.col("query_id") * 100 + F.col("rank")).cast("bigint").alias("query_id"),

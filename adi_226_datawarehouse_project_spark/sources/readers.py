@@ -9,6 +9,8 @@ library: every reader returns a DataFrame already conforming to the
 declared contract, so downstream operators never branch on source
 shape.
 
+Formats are the reference's three: CSV, JSON and parquet.
+
 Scale: all readers are plain DataFrameReader scans — Catalyst pushes
 filters/projections into them; explicit schemas (when given) skip the
 inference pass, which at 100 TB is the difference between one job and
@@ -78,36 +80,3 @@ def read_json_with_csv_fallback(
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Parquet scan (S7/S8) — vectorized reader, row-group skipping."""
     return spark.read.parquet(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan (beyond-reference format widening): the other built-in
-    columnar format, same vectorized reader + predicate
-    pushdown/column-pruning semantics as parquet — a drop-in for
-    warehouses whose upstream lake standardized on ORC."""
-    return spark.read.orc(path)
-
-
-def read_binary_files(
-    spark: SparkSession,
-    path: str,
-    glob: str | None = None,
-    recursive: bool = True,
-) -> DataFrame:
-    """Binary-blob ingestion (`binaryFile` source) — the scale path for
-    raw image/audio/video files into the multimodal pipeline: one row
-    per file with ``(path, modificationTime, length, content:binary)``.
-    ``glob`` filters by filename pattern (e.g. ``*.bmp``) AT THE
-    LISTING, so non-matching files are never opened.
-
-    Feed the result into ``multimodal.binary_ops`` decoders by
-    renaming ``content`` to the payload column; at 100 TB prefer many
-    medium files over millions of tiny ones (driver-side listing) —
-    or compact blobs into parquet binary columns first
-    (``multimodal_suite`` path)."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
-    return reader.load(path)

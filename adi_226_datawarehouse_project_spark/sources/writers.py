@@ -8,6 +8,7 @@ scale. Here the default keeps the plan's parallelism; `single_file`
 is an explicit opt-in knob, and the gold-zone writer partitions by a
 column (e.g. created_year) so downstream reads get partition pruning
 for free (`WHERE created_year = …` never touches other years' files).
+Formats are the reference's parquet, CSV and JSON.
 """
 
 from __future__ import annotations
@@ -82,20 +83,6 @@ def write_bucketed_table(
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.format("parquet").saveAsTable(name)
-
-
-def write_orc(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """ORC sink (beyond-reference format widening) — same layout knobs
-    as the parquet sink; for lakes standardized on ORC."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite", header: bool = True) -> None:

@@ -173,12 +173,14 @@ def main() -> int:
         *pkg.rglob("*.py"), REPO / "__spark_entry__.py", REPO / "bench.py",
         *(REPO / "perfbench").glob("*.py"), *(REPO / "scripts").glob("*.py"),
     ]
+    trees = {
+        f: ast.parse(f.read_text()) for f in roots
+        if f.name != "__init__.py" and not f.name.startswith("test_")
+    }
     imported: set[str] = set()
-    for f in roots:
-        if f.name == "__init__.py" or f.name.startswith("test_"):
-            continue
+    for f, tree in trees.items():
         here = dotted(f)
-        for node in ast.walk(ast.parse(f.read_text())):
+        for node in ast.walk(tree):
             if isinstance(node, ast.Import):
                 names = [a.name for a in node.names]
             elif isinstance(node, ast.ImportFrom):
@@ -196,6 +198,72 @@ def main() -> int:
         return 1
     print(f"reachability gate OK: {len(mods) - len(keep)} modules imported outside "
           f"tests, {len(keep)} kept ({', '.join(sorted(keep))})")
+
+    # function reachability: every top-level def/class of a package
+    # module is named (Name, Attribute or ImportFrom) somewhere in the
+    # same non-test roots; names only, so a same-named local counts
+    fn_keep = {
+        "normalize_upper": "F1, trim+upper normalization",
+        "normalize_lower": "F2, trim+lower normalization",
+        "date_key": "F9, the YYYYMMDD date surrogate",
+        "bbox_filter": "P4, the bounding-box predicate",
+        "duration_hours": "P13, the conditional duration",
+        "nullif_blank": "P14, NULLIF(TRIM(x), '')",
+        "clean_currency": "P15, the TRY_CAST currency parse",
+        "encode_geohash_py": "the bisection oracle geohash_sql is checked against",
+        "golden_df": "the DataFrame twin the goldens are compared against",
+        "run_corpus_pipeline": "a pipeline entry point",
+        "soda_events_stream": "a stream entry point (SODA source)",
+        "file_events_stream": "a stream entry point (file source)",
+        "ingest_if_absent": "K8, the idempotent-skip source check",
+        "read_json_with_csv_fallback": "S5, the JSON-then-CSV source policy",
+        "wait_for": "the sensor poll of SURVEY 2.12",
+        "instrument_funnel": "per-stage funnel counts, the reference's row logging",
+        "funnel_counts": "per-stage funnel counts, the reference's row logging",
+        "matches": "a staging validation check",
+        "in_set": "a staging validation check",
+        "approx_unique": "a staging validation check",
+        "salted_join": "salting, the candidate fix for the hot-key items",
+        "salted_agg": "salting, the candidate fix for the hot-key items",
+        "write_bucketed_table": "the DISTKEY analog on the scale list",
+        "collect_stats": "the planner-stats analog on the scale list",
+        "compact_table": "small-file compaction on the scale list",
+        "run_windowed_counts_once": "a streaming driver",
+        "run_dedup_stream_once": "a streaming driver",
+        "clicks_purchases_batch": "the batch twin of the stream-stream join driver",
+        "stream_cdc_apply": "a streaming driver",
+        "read_cdc_stored": "a streaming driver",
+        "compact_tombstones": "a streaming driver",
+        "observe_stream": "streaming telemetry",
+        "collect_observed": "streaming telemetry",
+    }
+    named: set[str] = set()
+    defined: list[tuple[str, str]] = []
+    for f, tree in trees.items():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                named.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                named.add(node.attr)
+            elif isinstance(node, ast.ImportFrom):
+                named.update(a.name for a in node.names)
+        if f.is_relative_to(pkg):
+            defined += [
+                (node.name, f"{short[dotted(f)]}.{node.name}") for node in tree.body
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+            ]
+    dead = sorted(q for n, q in defined if n not in named and n not in fn_keep)
+    stale_keep = sorted(n for n in fn_keep if n in named or n not in dict(defined))
+    if dead:
+        print("package functions no non-test file names:\n  " + "\n  ".join(dead),
+              file=sys.stderr)
+    if stale_keep:
+        print("function keep entries that are reached or gone (drop them):\n  "
+              + "\n  ".join(stale_keep), file=sys.stderr)
+    if dead or stale_keep:
+        return 1
+    print(f"function reachability gate OK: {len(defined) - len(fn_keep)} top-level "
+          f"defs named outside tests, {len(fn_keep)} kept")
 
     # oracle independence in the registry module: a Spark side never
     # reaches DuckDB text, an oracle never reaches Spark code. Functions

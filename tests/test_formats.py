@@ -1,98 +1,10 @@
-"""Format-widening sources/sinks: ORC roundtrip with predicate
-pushdown, and binaryFile blob ingestion feeding the real multimodal
-decode path end-to-end (files on disk → binary rows → pixel
-features)."""
+"""Parquet sink options: the column bloom filter reaches the file."""
 
 import os
-import shutil
 
-from conftest import SF_SMALL
 from pyspark.sql import functions as F
 
-from adi_226_datawarehouse_project_spark.multimodal.binary_ops import decode_image
-from adi_226_datawarehouse_project_spark.sources.catalog import load_table
-from adi_226_datawarehouse_project_spark.sources.readers import (
-    read_binary_files,
-    read_orc,
-)
-from adi_226_datawarehouse_project_spark.sources.writers import write_orc
-from test_multimodal import _bmp_bytes
-
 BASE = "/tmp/spark_graft_io/test_formats"
-
-
-def test_orc_roundtrip_values_and_pushdown(spark):
-    shutil.rmtree(BASE, ignore_errors=True)
-    nation = load_table(spark, SF_SMALL, "nation")
-    write_orc(nation, f"{BASE}/nation_orc")
-    back = read_orc(spark, f"{BASE}/nation_orc")
-    want = sorted(
-        (r["n_nationkey"], r["n_name"], r["n_regionkey"]) for r in nation.collect()
-    )
-    got = sorted(
-        (r["n_nationkey"], r["n_name"], r["n_regionkey"]) for r in back.collect()
-    )
-    assert got == want
-    # the filter must reach the ORC scan, same as parquet
-    plan = (
-        back.filter(F.col("n_regionkey") == 2)
-        .select("n_name")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PushedFilters: [" in plan and "n_regionkey" in plan.split("PushedFilters")[1][:200]
-
-
-def test_orc_partitioned_write_prunes(spark):
-    orders = load_table(spark, SF_SMALL, "orders").withColumn(
-        "o_year", F.year("o_orderdate")
-    )
-    write_orc(orders, f"{BASE}/orders_orc", partition_by=["o_year"])
-    back = read_orc(spark, f"{BASE}/orders_orc").filter(F.col("o_year") == 1997)
-    assert back.count() == orders.filter(F.col("o_year") == 1997).count()
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "o_year" in plan.split("PartitionFilters")[1][:200]
-
-
-def test_binary_file_ingestion_to_real_decode(spark):
-    blob_dir = f"{BASE}/blobs/nested"
-    shutil.rmtree(f"{BASE}/blobs", ignore_errors=True)
-    os.makedirs(blob_dir)
-    white, black = (255, 255, 255), (0, 0, 0)
-    imgs = {
-        "a.bmp": _bmp_bytes([[white, black], [black, white]]),
-        "b.bmp": _bmp_bytes([[black]]),
-    }
-    for name, data in imgs.items():
-        with open(os.path.join(blob_dir, name), "wb") as f:
-            f.write(data)
-    with open(os.path.join(blob_dir, "notes.txt"), "wb") as f:
-        f.write(b"not an image")
-
-    files = read_binary_files(spark, f"{BASE}/blobs", glob="*.bmp")
-    rows = {os.path.basename(r["path"]): r for r in files.collect()}
-    # the txt file was excluded at listing; bytes roundtrip exactly
-    assert set(rows) == set(imgs)
-    for name, data in imgs.items():
-        assert bytes(rows[name]["content"]) == data
-        assert rows[name]["length"] == len(data)
-
-    # DECODED_SCHEMA keys by a LONG doc_id; the blob length is unique
-    # here and maps each feature row back to its source file.
-    decoded = decode_image(
-        files.select(
-            F.col("length").alias("doc_id"), F.col("content").alias("payload")
-        ),
-        id_col="doc_id",
-        codec="real",
-    )
-    feats = {r["doc_id"]: r for r in decoded.collect()}
-    a, b = feats[len(imgs["a.bmp"])], feats[len(imgs["b.bmp"])]
-    assert (a["width"], a["height"]) == (2, 2)
-    assert abs(a["mean_luma"] - 0.5) < 1e-9
-    assert (b["width"], b["height"]) == (1, 1)
-    assert b["mean_luma"] == 0.0
 
 
 def test_parquet_bloom_filter_written_and_values_intact(spark):

@@ -8,9 +8,13 @@ from pyspark.sql import types as T
 
 from adi_226_datawarehouse_project_spark.functions.geohash import (
     encode_geohash_py,
-    geohash_col,
     geohash_sql,
 )
+
+
+def _gh(precision=7):
+    """The star's Spark form: the dialect-rendered SQL as a Column."""
+    return F.expr(geohash_sql("lat", "lon", precision)).alias("gh")
 
 
 def _check_points(spark, pts, precision=7):
@@ -18,10 +22,7 @@ def _check_points(spark, pts, precision=7):
         [T.StructField("lat", T.DoubleType()), T.StructField("lon", T.DoubleType())]
     )
     df = spark.createDataFrame(pts, schema)
-    got = [
-        r["gh"]
-        for r in df.select(geohash_col("lat", "lon", precision).alias("gh")).collect()
-    ]
+    got = [r["gh"] for r in df.select(_gh(precision)).collect()]
     want = [encode_geohash_py(la, lo, precision) for la, lo in pts]
     assert got == want
 
@@ -52,32 +53,14 @@ def test_null_propagates(spark):
             [T.StructField("lat", T.DoubleType()), T.StructField("lon", T.DoubleType())]
         ),
     )
-    got = [r["gh"] for r in df.select(geohash_col("lat", "lon").alias("gh")).collect()]
+    got = [r["gh"] for r in df.select(_gh()).collect()]
     assert got[0] is None and got[1] is None and got[2] is not None
-
-
-def test_sql_form_matches_column_form(spark):
-    rng = random.Random(7)
-    pts = [(rng.uniform(-90, 90), rng.uniform(-180, 180)) for _ in range(200)]
-    schema = T.StructType(
-        [T.StructField("lat", T.DoubleType()), T.StructField("lon", T.DoubleType())]
-    )
-    df = spark.createDataFrame(pts, schema)
-    df.createOrReplaceTempView("__gh_pts")
-    via_sql = [
-        r[0]
-        for r in spark.sql(
-            f"SELECT {geohash_sql('lat', 'lon', 7)} FROM __gh_pts"
-        ).collect()
-    ]
-    via_col = [r[0] for r in df.select(geohash_col("lat", "lon", 7)).collect()]
-    assert via_sql == via_col
 
 
 def test_no_python_udf_in_plan(spark):
     df = spark.range(10).select(
         (F.col("id") * 0.001 + 40.5).alias("lat"), (F.col("id") * 0.001 - 74.0).alias("lon")
     )
-    out = df.select(geohash_col("lat", "lon"))
+    out = df.select(_gh())
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

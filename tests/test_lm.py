@@ -1,4 +1,4 @@
-"""Unigram/bigram LM scoring: ln mode vs a pure-Python reference,
+"""Unigram LM scoring: ln mode vs a pure-Python reference,
 exact bits mode, perplexity filter semantics, and plan-shape gates."""
 
 from __future__ import annotations
@@ -8,7 +8,6 @@ import math
 import pytest
 
 from adi_226_datawarehouse_project_spark.operators.lm_score import (
-    bigram_lm_scores,
     perplexity_filter,
     unigram_lm_scores,
 )
@@ -19,7 +18,7 @@ _DOCS = [
     (2, "the cat and the dog"),
     (3, "zyx qwv zzz zyx"),  # gibberish: rare tokens, high surprisal
     (4, "the the the the"),  # degenerate: most common token only
-    (5, "one"),  # single token: no bigram positions
+    (5, "one"),  # single token
 ]
 
 
@@ -40,35 +39,6 @@ def _py_unigram(docs):
         bits = sum(((T + V) // (cnt[w] + 1)).bit_length() - 1 for w in ts)
         out[i] = (len(ts), nll, bits)
     return out, T, V
-
-
-def _py_bigram(docs, lam):
-    toks = {i: _tokens(t) for i, t in docs}
-    ucnt: dict[str, int] = {}
-    for ts in toks.values():
-        for w in ts:
-            ucnt[w] = ucnt.get(w, 0) + 1
-    T, V = sum(ucnt.values()), len(ucnt)
-    bcnt: dict[tuple, int] = {}
-    for ts in toks.values():
-        for a, b in zip(ts, ts[1:]):
-            bcnt[(a, b)] = bcnt.get((a, b), 0) + 1
-    ccnt: dict[str, int] = {}
-    for (a, _), c in bcnt.items():
-        ccnt[a] = ccnt.get(a, 0) + c
-    out = {}
-    for i, ts in toks.items():
-        bgs = list(zip(ts, ts[1:]))
-        if not bgs:
-            continue
-        nll = -sum(
-            math.log(
-                lam * bcnt[(a, b)] / ccnt[a] + (1 - lam) * (ucnt[b] + 1) / (T + V)
-            )
-            for a, b in bgs
-        ) / len(bgs)
-        out[i] = (len(bgs), nll)
-    return out
 
 
 @pytest.fixture(scope="module")
@@ -110,25 +80,6 @@ def test_gibberish_scores_higher_than_common_text(spark, docs_df):
     assert got[4] < got[0]  # all-stopword doc is the most predictable
 
 
-def test_bigram_ln_matches_python_reference(spark, docs_df):
-    lam = 0.8
-    got = {
-        r["doc_id"]: r
-        for r in bigram_lm_scores(docs_df, "doc_id", "text", lam=lam).collect()
-    }
-    want = _py_bigram(_DOCS, lam)
-    assert set(got) == set(want)  # the 1-token doc drops out
-    assert 5 not in got
-    for i, (n, nll) in want.items():
-        assert got[i]["n_bigrams"] == n
-        assert got[i]["nll"] == pytest.approx(nll, rel=1e-12)
-
-
-def test_bigram_rejects_degenerate_lambda(spark, docs_df):
-    with pytest.raises(ValueError):
-        bigram_lm_scores(docs_df, "doc_id", "text", lam=1.0)
-
-
 def test_perplexity_filter_keeps_low_surprisal_docs(spark, docs_df):
     want, T, V = _py_unigram(_DOCS)
     # pick a threshold that splits the fixture: strictly between the
@@ -149,58 +100,8 @@ def test_mode_rejected(spark, docs_df):
 
 
 def test_no_udf_and_no_cartesian(spark, docs_df):
-    for frame in (
-        unigram_lm_scores(docs_df, "doc_id", "text", mode="bits"),
-        bigram_lm_scores(docs_df, "doc_id", "text"),
-    ):
+    for mode in ("bits", "ln"):
+        frame = unigram_lm_scores(docs_df, "doc_id", "text", mode=mode)
         plan = frame._jdf.queryExecution().executedPlan().toString()
         assert "BatchEvalPython" not in plan
         assert plan.count("CartesianProduct") == 0
-
-
-def test_perplexity_buckets_partition_corpus(spark):
-    from conftest import SF_SMALL
-    from pyspark.sql import functions as F
-
-    from adi_226_datawarehouse_project_spark.operators.lm_score import (
-        perplexity_buckets,
-        unigram_lm_scores,
-    )
-    from adi_226_datawarehouse_project_spark.sources.catalog import load_table
-
-    docs = load_table(spark, SF_SMALL, "documents").select("doc_id", "text")
-    out = perplexity_buckets(docs, "doc_id", "text")
-    by_bucket = {
-        r["ppl_bucket"]: r["n"]
-        for r in out.groupBy("ppl_bucket").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    n = docs.count()
-    # every doc lands in exactly one bucket; fractions are roughly thirds
-    assert sum(by_bucket.values()) == n
-    assert set(by_bucket) == {"head", "middle", "tail"}
-    for b in by_bucket:
-        assert by_bucket[b] >= 0.2 * n, by_bucket
-    # ordering invariant: every head doc scores <= every tail doc
-    scores = {
-        r["doc_id"]: r["bits_per_token_milli"]
-        for r in unigram_lm_scores(docs, "doc_id", "text", mode="bits").collect()
-    }
-    rows = {(r["doc_id"]): r["ppl_bucket"] for r in out.collect()}
-    max_head = max(scores[i] for i, b in rows.items() if b == "head")
-    min_tail = min(scores[i] for i, b in rows.items() if b == "tail")
-    assert max_head <= min_tail
-
-
-def test_perplexity_buckets_rejects_bad_fractions(spark):
-    from conftest import SF_SMALL
-
-    from adi_226_datawarehouse_project_spark.operators.lm_score import (
-        perplexity_buckets,
-    )
-    from adi_226_datawarehouse_project_spark.sources.catalog import load_table
-
-    docs = load_table(spark, SF_SMALL, "documents").select("doc_id", "text")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        perplexity_buckets(docs, "doc_id", "text", head_frac=0.7, tail_frac=0.5)

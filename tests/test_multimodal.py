@@ -5,8 +5,6 @@ from conftest import SF_SMALL
 from adi_226_datawarehouse_project_spark.multimodal.binary_ops import (
     attach_binary_payload,
     decode_image_stub,
-    extract_binary_features,
-    sample_frames_stub,
 )
 from adi_226_datawarehouse_project_spark.sources.catalog import load_table
 
@@ -23,14 +21,6 @@ def test_payload_schema(spark):
     assert row["payload_bytes"] == len(row["payload"])
 
 
-def test_byte_features_jvm_side(spark):
-    df = extract_binary_features(_payload(spark))
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan  # md5/octet_length stay JVM-side
-    r = df.collect()[0]
-    assert r["n_bytes"] == r["payload_bytes"] and len(r["payload_md5"]) == 32
-
-
 def test_decode_stub_deterministic(spark):
     a = decode_image_stub(_payload(spark)).collect()
     b = decode_image_stub(_payload(spark)).collect()
@@ -38,17 +28,6 @@ def test_decode_stub_deterministic(spark):
     for r in a:
         assert 1 <= r["width"] <= 640 and 1 <= r["height"] <= 480
         assert 0.0 <= r["mean_luma"] <= 1.0
-
-
-def test_frame_sampler_offsets(spark):
-    frames = sample_frames_stub(_payload(spark, n=5), every_n_bytes=64)
-    rows = frames.collect()
-    assert all(r["byte_offset"] == r["frame_index"] * 64 for r in rows)
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r["doc_id"], []).append(r["frame_index"])
-    for idxs in by_doc.values():
-        assert sorted(idxs) == list(range(len(idxs)))  # dense frame indices
 
 
 def test_resize_stub_geometry(spark):
@@ -79,91 +58,3 @@ def test_audio_decode_stub(spark):
         assert r["sample_rate"] == 16000
         assert r["duration_s"] == r["n_samples"] / 16000.0
         assert 0.0 <= r["rms"] < 1.0
-
-
-def _bmp_bytes(pixels):
-    """Minimal uncompressed 24-bit BMP from [[(r,g,b), ...], ...] rows
-    (row 0 = top)."""
-    import struct as st
-
-    h, w = len(pixels), len(pixels[0])
-    row_bytes = (w * 3 + 3) & ~3
-    body = b""
-    for row in reversed(pixels):  # bottom-up storage
-        line = b"".join(bytes((b_, g, r)) for (r, g, b_) in row)
-        body += line + b"\x00" * (row_bytes - len(line))
-    header = st.pack("<2sIHHI", b"BM", 54 + len(body), 0, 0, 54)
-    info = st.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 2835, 2835, 0, 0)
-    return header + info + body
-
-
-def _wav_bytes(samples, sample_rate=8000):
-    """16-bit mono PCM WAV from float samples in [-1, 1]."""
-    import io
-    import struct as st
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(sample_rate)
-        w.writeframes(b"".join(st.pack("<h", int(s * 32767)) for s in samples))
-    return buf.getvalue()
-
-
-def test_real_image_codec_bmp(spark):
-    """The REAL image path decodes actual pixels (stdlib BMP parser —
-    no PIL in this container) and computes true BT.601 mean luma."""
-    from adi_226_datawarehouse_project_spark.multimodal.binary_ops import decode_image
-
-    white, black = (255, 255, 255), (0, 0, 0)
-    img = _bmp_bytes([[white, black, white], [black, white, black]])
-    df = spark.createDataFrame([(1, img)], "doc_id LONG, payload BINARY")
-    (r,) = decode_image(df, codec="real").collect()
-    assert (r["width"], r["height"], r["channels"]) == (3, 2, 3)
-    assert r["n_bytes"] == len(img)
-    assert abs(r["mean_luma"] - 0.5) < 1e-9  # 3 white + 3 black pixels
-
-
-def test_real_audio_codec_wav(spark):
-    """The REAL audio path decodes actual PCM samples via the stdlib
-    wave reader and computes true RMS."""
-    import numpy as np
-
-    from adi_226_datawarehouse_project_spark.multimodal.binary_ops import decode_audio
-
-    samples = [0.5, -0.5, 0.5, -0.5, 0.0, 0.0, 0.5, -0.5]
-    wav = _wav_bytes(samples, sample_rate=8000)
-    df = spark.createDataFrame([(7, wav)], "doc_id LONG, payload BINARY")
-    (r,) = decode_audio(df, codec="real").collect()
-    assert r["sample_rate"] == 8000
-    assert r["n_samples"] == len(samples)
-    assert abs(r["duration_s"] - len(samples) / 8000.0) < 1e-12
-    want_rms = float(np.sqrt(np.mean((np.array([int(s * 32767) for s in samples]) / 32768.0) ** 2)))
-    assert abs(r["rms"] - want_rms) < 1e-9
-
-
-def test_auto_codec_mixes_real_and_sim(spark):
-    """auto: parseable payloads get real features, text bytes fall back
-    to the deterministic simulation; strict mode forbids the fallback;
-    codec='real' refuses undecodable bytes."""
-    import pytest
-
-    from adi_226_datawarehouse_project_spark.multimodal.binary_ops import decode_image
-
-    img = _bmp_bytes([[(0, 0, 0)]])
-    rows = [(1, img), (2, b"not an image at all")]
-    df = spark.createDataFrame(rows, "doc_id LONG, payload BINARY")
-    got = {r["doc_id"]: r for r in decode_image(df, codec="auto").collect()}
-    assert (got[1]["width"], got[1]["height"]) == (1, 1)  # real decode
-    n2 = len(b"not an image at all")
-    assert got[2]["width"] == n2 % 640 + 1  # sim fallback formula
-
-    with pytest.raises(Exception, match="strict mode"):
-        decode_image(df, codec="auto", strict=True).collect()
-    with pytest.raises(Exception, match="undecodable"):
-        decode_image(df, codec="real").collect()
-    # strict + real codec present and all payloads parseable -> works
-    ok = spark.createDataFrame([(1, img)], "doc_id LONG, payload BINARY")
-    assert decode_image(ok, codec="auto", strict=True).count() == 1

@@ -93,7 +93,7 @@ def test_encode_matches_python(spark, vec_df, cb):
 def test_adc_topk_matches_python(spark, vec_df, cb):
     probe = [0, 7, 13]
     got = pq_adc_topk(
-        vec_df, "vec_id", "embedding", k=5, probe_ids=probe, codebooks=cb
+        vec_df, "vec_id", "embedding", cb, k=5, probe_ids=probe
     ).collect()
     codes = {i: _py_encode(v, cb) for i, v in _VECS}
     by_q = {}

@@ -100,32 +100,6 @@ def test_scd2_null_transitions(spark):
     assert len(by_key[3]) == 1 and by_key[3][0].is_current
 
 
-def test_as_of_point_in_time_views(spark):
-    import datetime as dt
-
-    from adi_226_datawarehouse_project_spark.operators.scd import as_of, scd2_apply
-
-    d0 = spark.createDataFrame(
-        [("k1", "v1", dt.date(2024, 1, 1), dt.date(9999, 12, 31), True)],
-        "key STRING, attr STRING, effective_from DATE, effective_to DATE, is_current BOOLEAN",
-    )
-    upd = spark.createDataFrame([("k1", "v2"), ("k2", "w1")], "key STRING, attr STRING")
-    dim = scd2_apply(d0, upd, "key", "attr", dt.date(2024, 6, 1))
-
-    def at(d):
-        return {
-            (r["key"], r["attr"]) for r in as_of(dim, "key", d).collect()
-        }
-
-    # before k2 existed and before k1's change
-    assert at(dt.date(2024, 3, 1)) == {("k1", "v1")}
-    # ON the batch date the new versions take effect (half-open close)
-    assert at(dt.date(2024, 6, 1)) == {("k1", "v2"), ("k2", "w1")}
-    assert at(dt.date(2025, 1, 1)) == {("k1", "v2"), ("k2", "w1")}
-    # before anything existed
-    assert at(dt.date(2023, 1, 1)) == set()
-
-
 def test_same_day_triple_apply_keeps_audit_rows(spark):
     """Three same-day updates to one key: the zero-length closed
     versions created by earlier applies share effective_from with the

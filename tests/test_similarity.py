@@ -215,14 +215,16 @@ def test_assign_cells_multi_single_probe_matches_assign_cells(spark):
 
 
 def test_srp_band_buckets_match_signature_shift_mask(spark):
-    """The per-band pack must equal shift/mask over the packed
-    signature at every operating point both support — this is what
-    keeps the oracle-pinned 16/4 values identical post-refactor."""
+    """Band b packs the sign bits of planes [b·bits, (b+1)·bits): the
+    bands must equal shift/mask over the all-planes signature. Each
+    plane's bit is its own Spark column here and the signature is
+    packed in Python — this is what keeps the oracle-pinned 16/4
+    values identical across refactors of the pack."""
     from pyspark.sql import functions as F
 
     from adi_226_datawarehouse_project_spark.operators.similarity import (
+        _srp_plane_bit,
         srp_band_buckets,
-        srp_signature,
     )
 
     df = spark.range(20).selectExpr(
@@ -230,35 +232,21 @@ def test_srp_band_buckets_match_signature_shift_mask(spark):
         "transform(sequence(0, 15), i -> CAST(xxhash64(id, i) % 97 AS DOUBLE) / 97.0 - 0.5)"
         " AS embedding",
     )
-    for planes, bands in [(16, 4), (16, 2), (48, 4)]:
+    for planes, bands in [(16, 4), (16, 2), (48, 4), (64, 8)]:
         bits = planes // bands
         mask = (1 << bits) - 1
-        via_sig = df.select(
-            "vec_id",
-            F.array(
-                *[
-                    F.shiftrightunsigned(
-                        srp_signature("embedding", planes), b * bits
-                    ).bitwiseAND(F.lit(mask))
-                    for b in range(bands)
-                ]
-            ).alias("b"),
+        rows = df.select(
+            srp_band_buckets("embedding", planes, bands).alias("b"),
+            *[F.expr(_srp_plane_bit("embedding", p, 1)).alias(f"p{p}") for p in range(planes)],
         ).collect()
-        via_bands = df.select(
-            "vec_id", srp_band_buckets("embedding", planes, bands).alias("b")
-        ).collect()
-        assert {r["vec_id"]: r["b"] for r in via_sig} == {
-            r["vec_id"]: r["b"] for r in via_bands
-        }
+        for r in rows:
+            sig = sum(r[f"p{p}"] << p for p in range(planes))
+            assert r["b"] == [(sig >> (b * bits)) & mask for b in range(bands)]
 
 
 def test_srp_wide_planes_supported_and_signature_guarded(spark):
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
     from adi_226_datawarehouse_project_spark.operators.similarity import (
         srp_band_buckets,
-        srp_signature,
     )
 
     df = spark.range(4).selectExpr(
@@ -270,9 +258,9 @@ def test_srp_wide_planes_supported_and_signature_guarded(spark):
     rows = df.select(srp_band_buckets("embedding", 64, 8).alias("b")).collect()
     assert all(len(r["b"]) == 8 for r in rows)
     assert all(0 <= v < 256 for r in rows for v in r["b"])
-    # ...while the all-planes pack refuses to overflow its sign bit
-    with _pytest.raises(ValueError, match="63"):
-        srp_signature("embedding", 64)
+    # ...while one 64-bit band would overflow the bigint sign bit
+    with pytest.raises(ValueError, match="63"):
+        srp_band_buckets("embedding", 64, 1)
 
 
 def test_nan_embedding_is_quarantined(spark):
@@ -310,15 +298,12 @@ def test_nan_embedding_is_quarantined(spark):
 def test_srp_band_validation(spark):
     from adi_226_datawarehouse_project_spark.operators.similarity import (
         srp_band_buckets,
-        srp_signature,
     )
 
     with pytest.raises(ValueError, match="not divisible"):
         srp_band_buckets("v", 16, 3)
     with pytest.raises(ValueError, match="positive"):
         srp_band_buckets("v", 16, 0)
-    with pytest.raises(ValueError, match="positive"):
-        srp_signature("v", 0)
 
 
 def test_model_sampling_skips_corrupt_low_id_vectors(spark):

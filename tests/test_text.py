@@ -1,8 +1,6 @@
 """Text-analysis functions over synthetic rows (LLM-pipeline family)."""
 
 from adi_226_datawarehouse_project_spark.functions.text import (
-    bpe_ish_token_count,
-    char_ngrams,
     fingerprint,
     lang_id,
     punct_ratio,
@@ -21,16 +19,6 @@ def _vals(spark, rows, col):
 def test_token_count(spark):
     got = _vals(spark, ["a b  c", "  ", "one"], token_count("text"))
     assert got == [3, 0, 1]
-
-
-def test_bpe_ish_counts_punct_separately(spark):
-    got = _vals(spark, ["hello, world!"], bpe_ish_token_count("text"))
-    assert got == [4]  # hello , world !
-
-
-def test_char_ngrams(spark):
-    got = _vals(spark, ["abcd"], char_ngrams("text", 3))
-    assert got == [["abc", "bcd"]]
 
 
 def test_word_ngrams(spark):

@@ -262,43 +262,6 @@ def test_chunk_documents_rejects_bad_params(spark):
         chunk_documents(docs, "doc_id", "text", window=4, stride=-1)
 
 
-def test_corpus_report_datacard(spark):
-    from adi_226_datawarehouse_project_spark.operators.training import corpus_report
-
-    docs = spark.createDataFrame(
-        [
-            (1, "one two three", "en"),
-            (2, "one two three four five", "en"),
-            (3, "three two one", "en"),   # same token SET as doc 1 -> same fingerprint
-            (4, "eins zwei", "de"),
-        ],
-        "doc_id BIGINT, text STRING, lang STRING",
-    )
-    rows = {r["lang"]: r for r in corpus_report(docs, "doc_id", "text", "lang").collect()}
-    assert set(rows) == {"en", "de", "__all__"}
-    en, al = rows["en"], rows["__all__"]
-    assert en["n_docs"] == 3 and en["total_tokens"] == 11
-    assert en["min_tokens"] == 3 and en["max_tokens"] == 5
-    # docs 1 and 3 share a fingerprint: 2 distinct of 3 (HLL exact at
-    # this cardinality), dup rate 33.33%
-    assert en["approx_distinct_fingerprints"] == 2
-    assert abs(en["dup_rate_pct"] - 33.33) < 0.01
-    assert al["n_docs"] == 4 and al["total_tokens"] == 13
-    assert rows["de"]["dup_rate_pct"] == 0.0
-
-
-def test_corpus_report_single_aggregation_plan(spark):
-    from adi_226_datawarehouse_project_spark.operators.training import corpus_report
-
-    docs = spark.createDataFrame([(1, "a b", "en")], "doc_id BIGINT, text STRING, lang STRING")
-    plan = (
-        corpus_report(docs, "doc_id", "text", "lang")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BatchEvalPython" not in plan
-    assert "Window" not in plan  # sketches, not sorts
-
-
 def test_group_sample_k_exact_size_and_determinism(spark):
     from adi_226_datawarehouse_project_spark.operators.training import group_sample_k
 
@@ -476,17 +439,6 @@ def test_group_sample_k_prefilter_fraction_ge_one_keeps_exact_k(spark):
     want = sorted(r["id"] for r in base.collect())
     got = sorted(r["id"] for r in pre.collect())
     assert got == want and len(got) == 25
-
-
-def test_corpus_report_separates_null_lang_from_rollup_total(spark):
-    from adi_226_datawarehouse_project_spark.operators.training import corpus_report
-
-    df = spark.createDataFrame(
-        [(1, "alpha beta gamma", "en"), (2, "delta epsilon zeta", None)],
-        "doc_id bigint, text string, lang string",
-    )
-    rows = {r["lang"]: r["n_docs"] for r in corpus_report(df, "doc_id", "text", "lang").collect()}
-    assert rows == {"en": 1, "__unknown__": 1, "__all__": 2}
 
 
 def test_group_sample_k_prefilter_matches_null_stratum(spark):
