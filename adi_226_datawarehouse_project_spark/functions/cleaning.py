@@ -1,12 +1,14 @@
 """Cleaning & enrichment column functions (DataFrame surface).
 
 The reference's cleaning layer re-expressed as composable Column
-functions (SURVEY §2.2/§2.9): multi-format timestamp parsing
-(`glue_job_clean_311.py:40-46`), timezone conversion (`:120-121`),
-text normalization (`:127-129`), bounding-box filters (`:24-25,
+functions (SURVEY §2.2/§2.9): text normalization
+(`glue_job_clean_311.py:127-129`), bounding-box filters (`:24-25,
 122-126`), currency parsing with try-cast semantics
 (`airbnb_clean_data.py:46-48`), and the expected-columns schema
-contract (`glue_job_clean_311.py:101-111`).
+contract (`glue_job_clean_311.py:101-111`). Multi-format timestamp
+parsing (`:40-46`) and the timezone conversion (`:120-121`) are SQL
+text in `dialect.parse_timestamp` / `dialect.to_utc`, the forms the
+star model runs.
 
 All pure `pyspark.sql.functions` — JVM-side, codegen-friendly, no
 Python UDFs anywhere in the hot path.
@@ -17,26 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# The four timestamp formats the reference's parse_timestamp accepts.
-TS_JAVA_FORMATS = (
-    "yyyy-MM-dd'T'HH:mm:ss.SSS",
-    "yyyy-MM-dd'T'HH:mm:ss",
-    "MM/dd/yyyy hh:mm:ss a",
-    "M/d/yyyy h:mm:ss a",
-)
-
 NYC_BBOX = {"min_lat": 40.4, "max_lat": 41.0, "min_lon": -74.3, "max_lon": -73.7}
-
-
-def parse_timestamp_multi(col: Column | str, formats: tuple[str, ...] = TS_JAVA_FORMATS) -> Column:
-    """COALESCE over try-parses of each format; NULL if none match."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(*[F.try_to_timestamp(c, F.lit(fmt)) for fmt in formats])
-
-
-def to_utc(col: Column | str, tz: str = "America/New_York") -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.to_utc_timestamp(c, tz)
 
 
 def normalize_upper(col: Column | str) -> Column:

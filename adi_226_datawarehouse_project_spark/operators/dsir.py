@@ -1,19 +1,19 @@
-"""DSIR-style data selection via importance resampling (Xie et al.,
+"""DSIR-style data selection by importance weights (Xie et al.,
 NeurIPS 2023, arXiv:2302.03169): given a large RAW web corpus and a
 small TARGET corpus with the desired distribution (curated wiki/books,
 a downstream task's domain), score every raw document by how much more
-likely it is under a hashed bag-of-n-grams model of the target than
-under the raw model, then keep the top-k (or Gumbel-top-k resample).
-This is the standard pretraining-data selection step between quality
-filtering and dedup in an LLM pipeline — the reference warehouse has
-no analog (beyond-reference, north-star operator family).
+likely it is under a hashed bag-of-words model of the target than
+under the raw model, then keep the top-k. This is the standard
+pretraining-data selection step between quality filtering and dedup in
+an LLM pipeline — the reference warehouse has no analog
+(beyond-reference, north-star operator family).
 
 Distributed shape (the tfidf/lm_score lessons applied):
 
 - hashed features are pure narrow expressions: tokenize → explode
-  grams → md5-bucket (portable across engines) → ONE map-side-combined
+  words → md5-bucket (portable across engines) → ONE map-side-combined
   ``groupBy(id, bucket)``;
-- both n-gram models are ≤ ``n_buckets`` rows by construction — the
+- both bucket models are ≤ ``n_buckets`` rows by construction — the
   raw model REUSES the raw feature rows (one corpus scan total), and
   both model tables are explicitly ``broadcast()`` into the scoring
   join, so the corpus-sized side never shuffles on bucket;
@@ -23,18 +23,12 @@ Distributed shape (the tfidf/lm_score lessons applied):
   (:func:`..operators.training.global_order_rank`) — no global
   single-partition window at any corpus size.
 
-Two scoring modes (the tfidf/lm_score ``ln``/integer convention):
-
-- ``mode="ln"`` (production): real log-importance
-  ``log ŵ = Σ_b c_b·(ln p̂(b) − ln q̂(b))`` with add-one smoothing over
-  the ``n_buckets`` feature space; optional Gumbel perturbation for
-  true importance RESAMPLING (the paper's estimator) with md5-derived
-  uniforms — deterministic across runs/cluster sizes, unlike RNG.
-- ``mode="bits"``: whole-bit integer importance
-  ``Σ_b c_b·(s_q(b) − s_p(b))`` with
-  ``s_x(b) = floor(log2((T_x + B) div (cnt_x(b) + 1)))`` computed
-  exactly as ``length(bin(q)) − 1`` — pure BIGINT, libm-free,
-  bit-exact on any engine; the DuckDB differential oracle runs this.
+Scoring is whole-bit integer importance (the tfidf/lm_score integer
+convention): ``Σ_b c_b·(s_q(b) − s_p(b))`` with add-one smoothing over
+the ``n_buckets`` feature space,
+``s_x(b) = floor(log2((T_x + B) div (cnt_x(b) + 1)))`` computed
+exactly as ``length(bin(q)) − 1`` — pure BIGINT, libm-free, bit-exact
+on any engine; the DuckDB differential oracle re-derives it.
 
 Documents with zero tokens have no feature rows and therefore no
 weight — they are never selected (weight −∞ semantics), in both
@@ -62,35 +56,16 @@ def _bucket(gram: Column, n_buckets: int) -> Column:
 
 
 def hashed_gram_counts(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n_buckets: int,
-    gram_n: int = 1,
+    df: DataFrame, id_col: str, text_col: str, n_buckets: int
 ) -> DataFrame:
-    """Hashed bag-of-n-grams features: ``(id, bucket, c)`` counts with
-    ``bucket = md5_48(gram) mod n_buckets``. ``gram_n=1`` hashes word
-    unigrams; ``gram_n>=2`` hashes space-joined word n-grams (DSIR uses
-    unigrams+bigrams; call twice and union for that). Narrow explode +
-    one map-side-combined aggregation — no joins, no UDF."""
+    """Hashed bag-of-words features: ``(id, bucket, c)`` counts with
+    ``bucket = md5_48(word) mod n_buckets``. Narrow explode + one
+    map-side-combined aggregation — no joins, no UDF."""
     if n_buckets <= 0:
         raise ValueError(f"n_buckets must be positive: {n_buckets}")
-    if gram_n < 1:
-        raise ValueError(f"gram_n must be >= 1: {gram_n}")
-    toks = df.select(F.col(id_col), word_tokens(F.col(text_col)).alias("__toks"))
-    if gram_n == 1:
-        grams = toks.select(id_col, F.explode("__toks").alias("__gram"))
-    else:
-        n = gram_n
-        grams = toks.select(
-            F.col(id_col),
-            F.explode(
-                F.expr(
-                    f"transform(slice(__toks, 1, greatest(size(__toks) - {n - 1}, 0)),"
-                    f" (w, i) -> array_join(slice(__toks, i + 1, {n}), ' '))"
-                )
-            ).alias("__gram"),
-        )
+    grams = df.select(
+        F.col(id_col), F.explode(word_tokens(F.col(text_col))).alias("__gram")
+    )
     return grams.select(
         id_col, _bucket(F.col("__gram"), n_buckets).alias("bucket")
     ).groupBy(id_col, "bucket").agg(F.count(F.lit(1)).alias("c"))
@@ -106,21 +81,16 @@ def importance_weights(
     target: DataFrame,
     id_col: str,
     text_col: str,
-    n_buckets: int = 4096,
-    gram_n: int = 1,
-    mode: str = "ln",
+    n_buckets: int,
 ) -> DataFrame:
     """Per-raw-document importance weight of target-vs-raw hashed
-    n-gram models. Returns ``(id, n_grams, log_weight)`` (``ln`` mode,
-    DOUBLE nats) or ``(id, n_grams, weight_bits)`` (``bits`` mode,
-    BIGINT, bit-exact). Positive ⇒ the document looks more like the
-    target corpus than like the raw corpus."""
-    if mode not in ("ln", "bits"):
-        raise ValueError(f"unknown dsir mode: {mode!r}")
-    feats = hashed_gram_counts(raw, id_col, text_col, n_buckets, gram_n)
+    bag-of-words models: ``(id, n_grams, weight_bits)``, BIGINT and
+    bit-exact. Positive ⇒ the document looks more like the target
+    corpus than like the raw corpus."""
+    feats = hashed_gram_counts(raw, id_col, text_col, n_buckets)
     q = _model_counts(feats).withColumnRenamed("cnt", "__cq")
     p = _model_counts(
-        hashed_gram_counts(target, id_col, text_col, n_buckets, gram_n)
+        hashed_gram_counts(target, id_col, text_col, n_buckets)
     ).withColumnRenamed("cnt", "__cp")
     q_tot = q.agg(F.sum("__cq").alias("__Tq"))
     p_tot = p.agg(F.coalesce(F.sum("__cp"), F.lit(0)).cast("bigint").alias("__Tp"))
@@ -131,24 +101,9 @@ def importance_weights(
         .crossJoin(F.broadcast(q_tot))
         .crossJoin(F.broadcast(p_tot))
     )
-    B = F.lit(n_buckets)
-    if mode == "ln":
-        term = F.col("c").cast("double") * (
-            (
-                F.log((F.col("__cp") + 1).cast("double"))
-                - F.log((F.col("__Tp") + B).cast("double"))
-            )
-            - (
-                F.log((F.col("__cq") + 1).cast("double"))
-                - F.log((F.col("__Tq") + B).cast("double"))
-            )
-        )
-        return joined.groupBy(id_col).agg(
-            F.sum("c").alias("n_grams"), F.sum(term).alias("log_weight")
-        )
-    # bits: sq − sp, each an exact integer floor-log2 of the smoothed
-    # inverse probability (see lm_score.unigram_lm_scores bits mode for
-    # the div-vs-/ rationale).
+    # sq − sp, each an exact integer floor-log2 of the smoothed inverse
+    # probability (see lm_score.unigram_lm_scores for the div-vs-/
+    # rationale).
     s_q = F.length(F.bin(F.expr(f"(__Tq + {n_buckets}) div (__cq + 1)"))).cast(
         "bigint"
     ) - F.lit(1)
@@ -168,49 +123,26 @@ def dsir_select(
     text_col: str,
     k: int,
     n_buckets: int = 4096,
-    gram_n: int = 1,
-    mode: str = "bits",
     seed: str = "dsir",
-    gumbel: bool = False,
 ) -> DataFrame:
     """Select ``k`` raw documents by importance: rank by weight
-    descending (md5 + id tiebreaks — fully deterministic) via the
-    two-phase distributed rank and keep ``selection_rank < k``.
-
-    ``gumbel=True`` (``ln`` mode only) adds a Gumbel perturbation
-    ``g = −ln(−ln(u))`` with ``u`` the md5-derived uniform of
-    ``(seed, id)`` — Gumbel-top-k sampling ∝ ŵ WITHOUT replacement
-    (the paper's importance resampling), still deterministic for a
-    fixed seed. Returns the selected RAW rows plus ``weight_bits`` /
-    ``log_weight`` and ``selection_rank``.
+    descending (md5 of ``(seed, id)`` then id tiebreaks — fully
+    deterministic) via the two-phase distributed rank and keep
+    ``selection_rank < k``. The key stays BIGINT end-to-end, so the
+    rank order is bit-exact, never subject to double rounding. Returns
+    the selected RAW rows plus ``n_grams``, ``weight_bits`` and
+    ``selection_rank``.
     """
     if k < 0:
         raise ValueError(f"k must be >= 0: {k}")
-    if gumbel and mode != "ln":
-        raise ValueError("gumbel resampling requires mode='ln'")
-    w = importance_weights(raw, target, id_col, text_col, n_buckets, gram_n, mode)
-    if mode == "bits":
-        # stays BIGINT end-to-end: the rank order is bit-exact, never
-        # subject to double rounding.
-        key = F.col("weight_bits")
-        keep_cols = ["weight_bits"]
-    else:
-        key = F.col("log_weight")
-        keep_cols = ["log_weight"]
-    if gumbel:
-        # u in (0,1): (h48 + 0.5) / 2^48 from the portable hex hash.
-        h = F.conv(_hash_hex(id_col, seed, width=12), 16, 10).cast("double")
-        u = (h + F.lit(0.5)) / F.lit(float(1 << 48))
-        key = key + (-F.log(-F.log(u)))
-    scored = w.withColumn("__negkey", -key).withColumn(
+    w = importance_weights(raw, target, id_col, text_col, n_buckets)
+    scored = w.withColumn("__negkey", -F.col("weight_bits")).withColumn(
         "__tb", _hash_hex(id_col, seed)
     )
     ranked = global_order_rank(
-        scored,
-        order_cols=["__negkey", "__tb", id_col],
-        rank_col="selection_rank",
+        scored, ["__negkey", "__tb", id_col], "selection_rank"
     ).drop("__negkey", "__tb")
     sel = ranked.filter(F.col("selection_rank") < F.lit(k)).select(
-        id_col, "n_grams", *keep_cols, "selection_rank"
+        id_col, "n_grams", "weight_bits", "selection_rank"
     )
     return raw.join(sel, id_col)

@@ -22,21 +22,16 @@ Distributed shape (the tfidf lesson applied):
 
 Everything is built-in Column expressions; no UDFs anywhere.
 
-Two scoring modes (the tfidf ``ln``/``rational_int`` convention):
-
-- ``mode="ln"`` (default, production): add-one-smoothed unigram NLL,
-  ``nll = Σ tf·ln((T+V)/(cnt+1)) / Σ tf`` nats per token, plus
-  ``ppl = e^nll``. Reproducible cross-engine only up to libm ulp
-  differences; pinned against an independent Python reference in
-  ``tests/test_lm.py``.
-- ``mode="bits"``: integer bit-surprisal. Per token,
-  ``s = floor(log2((T+V) / (cnt+1)))`` computed EXACTLY in integer
-  arithmetic as ``length(bin((T+V) div (cnt+1))) - 1`` (for a ≥ b,
-  ``floor(log2(a/b)) == floor(log2(a div b))`` — both count the
-  leading bit of the quotient), so the per-doc ``Σ tf·s`` is pure
-  BIGINT and BIT-EXACT on any engine. This is a true logarithmic
-  surprisal at whole-bit granularity; the DuckDB differential oracle
-  runs this mode.
+The score is integer bit-surprisal (the tfidf integer convention): per
+token, the add-one-smoothed ``s = floor(log2((T+V) / (cnt+1)))``
+computed EXACTLY in integer arithmetic as
+``length(bin((T+V) div (cnt+1))) - 1`` (for a ≥ b,
+``floor(log2(a/b)) == floor(log2(a div b))`` — both count the leading
+bit of the quotient), so the per-doc ``Σ tf·s`` is pure BIGINT and
+BIT-EXACT on any engine, where a float nats/perplexity score would
+reproduce only up to libm ulp differences. This is a true logarithmic
+surprisal at whole-bit granularity; the DuckDB differential oracle
+recomputes it.
 """
 
 from __future__ import annotations
@@ -51,19 +46,14 @@ def unigram_lm_scores(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    mode: str = "ln",
 ) -> DataFrame:
     """Per-document unigram-LM surprisal under the corpus's own
-    add-one-smoothed unigram distribution.
-
-    Returns ``(id, n_tokens, ...)`` with mode-dependent score columns:
-    ``mode="ln"`` adds ``nll`` (mean nats/token, DOUBLE) and ``ppl``
-    (= e^nll); ``mode="bits"`` adds ``surprisal_bits`` (Σ tf·s,
-    BIGINT, bit-exact) and ``bits_per_token_milli``
-    (= 1000·surprisal_bits div n_tokens, BIGINT).
+    add-one-smoothed unigram distribution: ``(id, n_tokens,
+    surprisal_bits, bits_per_token_milli)`` with ``surprisal_bits`` =
+    Σ tf·s (BIGINT, bit-exact) and ``bits_per_token_milli`` =
+    1000·surprisal_bits div n_tokens (BIGINT). Token-less documents
+    have no row.
     """
-    if mode not in ("ln", "bits"):
-        raise ValueError(f"unknown lm score mode: {mode!r}")
     toks = df.select(
         F.col(id_col), F.explode(word_tokens(F.col(text_col))).alias("token")
     )
@@ -73,23 +63,7 @@ def unigram_lm_scores(
         F.sum("cnt").alias("__T"), F.count(F.lit(1)).alias("__V")
     )
     joined = tf.join(counts, "token").crossJoin(F.broadcast(totals))
-    if mode == "ln":
-        # ln((T+V)/(cnt+1)) > 0 always (cnt <= T, V >= 1).
-        term = F.col("tf").cast("double") * (
-            F.log((F.col("__T") + F.col("__V")).cast("double"))
-            - F.log((F.col("cnt") + 1).cast("double"))
-        )
-        per_doc = joined.groupBy(id_col).agg(
-            F.sum("tf").alias("n_tokens"), F.sum(term).alias("__nll_sum")
-        )
-        nll = F.col("__nll_sum") / F.col("n_tokens").cast("double")
-        return per_doc.select(
-            id_col,
-            "n_tokens",
-            nll.alias("nll"),
-            F.exp(nll).alias("ppl"),
-        )
-    # bits: exact integer floor-log2 of the smoothed odds ratio.
+    # exact integer floor-log2 of the smoothed odds ratio.
     # bigint/bigint in Spark SQL is DOUBLE division (a cast back would
     # round, not floor) — integer DIV keeps the whole path exact.
     s_bits = F.length(
@@ -112,18 +86,15 @@ def perplexity_filter(
     id_col: str,
     text_col: str,
     max_bits_per_token: float = 14.0,
-    min_tokens: int = 1,
 ) -> DataFrame:
     """Keep documents whose exact integer bit-surprisal per token is
     at or below ``max_bits_per_token`` (CCNet keeps the low-perplexity
-    head/middle of the corpus). Deterministic on any engine (bits
-    mode). Returns the input rows of the survivors."""
-    scores = unigram_lm_scores(df, id_col, text_col, mode="bits")
+    head/middle of the corpus). Deterministic on any engine. Returns
+    the input rows of the survivors; token-less documents are never
+    kept."""
+    scores = unigram_lm_scores(df, id_col, text_col)
     keep = scores.filter(
-        (F.col("n_tokens") >= min_tokens)
-        & (
-            F.col("bits_per_token_milli")
-            <= F.lit(int(round(max_bits_per_token * 1000)))
-        )
+        F.col("bits_per_token_milli")
+        <= F.lit(int(round(max_bits_per_token * 1000)))
     ).select(id_col)
     return df.join(keep, id_col, "left_semi")

@@ -11,7 +11,7 @@ This module runs that scoring step as a pure Spark plan:
 Design notes (100 TB):
 
 - The model is a TABLE (bucket -> weight), exactly how a trained
-  hashed linear model ships. It is tiny (n_buckets rows) and joined
+  hashed linear model ships. It is tiny (``N_BUCKETS`` rows) and joined
   with an explicit ``F.broadcast`` — scoring never shuffles the corpus
   on anything but the final per-doc groupBy, and that aggregation is
   map-side combinable (sum/count partials).
@@ -39,30 +39,29 @@ from pyspark.sql import functions as F
 
 from ..functions.text import word_tokens
 
-N_BUCKETS_DEFAULT = 256
+N_BUCKETS = 256
+_SEED = "qw-v1"
 
 
-def _bucket32(col, n_buckets: int):
+def _bucket32(col):
     """Portable 32-bit md5 bucket: identical in Spark and DuckDB."""
     return (
-        F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint") % n_buckets
+        F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint") % N_BUCKETS
     ).cast("int")
 
 
-def make_hashed_weights(
-    spark: SparkSession, n_buckets: int = N_BUCKETS_DEFAULT, seed: str = "qw-v1"
-) -> DataFrame:
+def make_hashed_weights(spark: SparkSession) -> DataFrame:
     """Deterministic (bucket, w_milli) model table, w_milli ∈ [-1000, 1000].
 
-    Derived from ``md5(seed '-' bucket)`` so the DuckDB oracle can
-    regenerate the identical model from ``range(n_buckets)``.
+    Derived from ``md5('qw-v1-' bucket)`` so the DuckDB oracle can
+    regenerate the identical model from ``range(256)``.
     """
-    return spark.range(n_buckets).select(
+    return spark.range(N_BUCKETS).select(
         F.col("id").cast("int").alias("bucket"),
         (
             F.conv(
                 F.substring(
-                    F.md5(F.concat(F.lit(f"{seed}-"), F.col("id").cast("string"))),
+                    F.md5(F.concat(F.lit(f"{_SEED}-"), F.col("id").cast("string"))),
                     1,
                     8,
                 ),
@@ -76,32 +75,27 @@ def make_hashed_weights(
 
 
 def hashed_linear_score(
-    docs: DataFrame,
-    weights: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = N_BUCKETS_DEFAULT,
-    bias_milli: int = 0,
-    keep_threshold: float = 0.0,
+    docs: DataFrame, weights: DataFrame, bias_milli: int
 ) -> DataFrame:
-    """Score every document with the hashed linear model.
+    """Score every ``(doc_id, text)`` document with the hashed linear
+    model.
 
-    Returns one row per input doc: ``n_tokens``, ``sum_w_milli`` (exact
-    integer evidence), ``score`` = ``sum_w_milli / n_tokens / 1000 +
-    bias`` rounded to 6 dp, and ``keep`` — score strictly above
-    ``keep_threshold``. Token-less docs score NULL and are not kept
-    (route them to the heuristic gate instead).
+    Returns one row per input doc: ``doc_id``, ``n_tokens``,
+    ``sum_w_milli`` (exact integer evidence), ``score`` =
+    ``sum_w_milli / n_tokens / 1000 + bias`` rounded to 6 dp, and
+    ``keep`` — score strictly above 0. Token-less docs score NULL and
+    are not kept (route them to the heuristic gate instead).
     """
     toks = docs.select(
-        F.col(id_col), F.explode(word_tokens(text_col)).alias("__tok")
-    ).select(id_col, _bucket32(F.col("__tok"), n_buckets).alias("bucket"))
+        F.col("doc_id"), F.explode(word_tokens("text")).alias("__tok")
+    ).select("doc_id", _bucket32(F.col("__tok")).alias("bucket"))
 
     # LEFT join + coalesce(w, 0): a real trained model table often
     # stores only non-zero buckets, and an inner join would silently
     # drop those tokens from BOTH the sum and the n_tokens denominator.
     per_doc = (
         toks.join(F.broadcast(weights), "bucket", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum(F.coalesce(F.col("w_milli"), F.lit(0))).alias("sum_w_milli"),
             F.count(F.lit(1)).alias("n_tokens"),
@@ -118,13 +112,13 @@ def hashed_linear_score(
     )
     score = round6(raw)
     return (
-        docs.select(id_col)
-        .join(per_doc, id_col, "left")
+        docs.select("doc_id")
+        .join(per_doc, "doc_id", "left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.coalesce(F.col("n_tokens"), F.lit(0)).cast("bigint").alias("n_tokens"),
             F.col("sum_w_milli").cast("bigint").alias("sum_w_milli"),
             score.alias("score"),
-            F.coalesce(score > keep_threshold, F.lit(False)).alias("keep"),
+            F.coalesce(score > 0.0, F.lit(False)).alias("keep"),
         )
     )

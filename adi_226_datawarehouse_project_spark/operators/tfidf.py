@@ -11,15 +11,14 @@ the per-document top-k is a window partitioned by doc id, whose
 per-partition cardinality is the doc's vocabulary — bounded, skew-free.
 Everything is built-in Column expressions: no UDFs anywhere.
 
-Two IDF variants:
+Both scorers are pure BIGINT arithmetic, BIT-EXACT on any engine (a
+float ``ln`` idf would reproduce cross-engine only up to libm ulp
+differences), so the DuckDB differential oracles recompute them
+exactly:
 
-- ``idf="ln"`` (default, production): smooth sklearn-style
-  ``ln((N+1)/(df+1)) + 1``.
-- ``idf="rational_int"``: integer-scaled rarity weight
-  ``(tf·SCALE·(N+1)) div (df+1)`` computed in pure BIGINT arithmetic.
-  Rankings from ``ln`` are reproducible cross-engine only up to libm
-  ulp differences; the integer variant is BIT-EXACT on any engine, so
-  the DuckDB differential oracle runs this mode.
+- TF-IDF is the integer-scaled rarity weight
+  ``(tf·SCALE·(N+1)) div (df+1)``;
+- BM25 uses whole-bit idf and milli-unit length normalization.
 """
 
 from __future__ import annotations
@@ -30,6 +29,7 @@ from pyspark.sql import functions as F
 from ..functions.text import word_tokens
 
 _RATIONAL_SCALE = 1_000_000
+_K1_MILLI, _B_MILLI = 1200, 750  # BM25 k1 = 1.2, b = 0.75
 
 
 def _rational_score_expr():
@@ -37,13 +37,13 @@ def _rational_score_expr():
     overflow guard (the simhash lane-pack lesson): the numerator
     tf·SCALE·(N+1) must fit a signed 64-bit lane; the bound is exact —
     the max safe tf given N — and raises instead of silently wrapping
-    under non-ANSI sessions. Corpora past the bound (N·tf ≳ 9.2e12)
-    should use the ln mode, whose floats don't overflow."""
+    under non-ANSI sessions. The bound (N·tf ≳ 9.2e12) sits far past
+    any per-document term frequency of a real corpus."""
     return F.expr(
         f"CAST(coalesce(CAST(assert_true("
         f"tf <= ((9223372036854775807 div (__N + 1)) div {_RATIONAL_SCALE}),"
-        f" 'tfidf rational_int: tf*SCALE*(N+1) would overflow bigint;"
-        f" use idf=\"ln\"') AS BIGINT), 0)"
+        f" 'tfidf: tf*SCALE*(N+1) would overflow bigint"
+        f" (term frequency too large for this corpus size)') AS BIGINT), 0)"
         f" + tf * {_RATIONAL_SCALE} * (__N + 1) AS BIGINT) div (df + 1)"
     )
 
@@ -52,14 +52,12 @@ def tf_idf_terms(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    top_k: int = 3,
-    idf: str = "ln",
+    top_k: int,
 ) -> DataFrame:
     """Top-``top_k`` TF-IDF terms per document:
-    ``(id, token, tf, df, score, rank)``. Ties break lexicographically
-    on token so results are total-ordered and reproducible."""
-    if idf not in ("ln", "rational_int"):
-        raise ValueError(f"unknown idf variant: {idf!r}")
+    ``(id, token, tf, df, score, rank)`` with the exact integer
+    ``score``. Ties break lexicographically on token so results are
+    total-ordered and reproducible."""
     toks = df.select(
         F.col(id_col), F.explode(word_tokens(F.col(text_col))).alias("token")
     )
@@ -67,16 +65,9 @@ def tf_idf_terms(
     docfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     n_docs = df.select(F.count(F.lit(1)).alias("__N"))
     scored = tf.join(docfreq, "token").crossJoin(F.broadcast(n_docs))
-    if idf == "ln":
-        score = F.col("tf").cast("double") * (
-            F.log((F.col("__N") + 1).cast("double") / (F.col("df") + 1).cast("double"))
-            + F.lit(1.0)
-        )
-    else:
-        score = _rational_score_expr()
     w = Window.partitionBy(id_col).orderBy(F.col("score").desc(), F.col("token").asc())
     return (
-        scored.withColumn("score", score)
+        scored.withColumn("score", _rational_score_expr())
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= top_k)
         .select(id_col, "token", "tf", "df", "score", "rank")
@@ -88,9 +79,6 @@ def bm25_scores(
     id_col: str,
     text_col: str,
     terms: list[str],
-    k1_milli: int = 1200,
-    b_milli: int = 750,
-    mode: str = "ln",
 ) -> DataFrame:
     """Okapi BM25 document scores for a fixed query-term set — the
     retrieval/relevance primitive of corpus curation (rank documents
@@ -98,26 +86,22 @@ def bm25_scores(
     way DSIR selects distribution-relevant data).
 
     Returns one row per document matching ≥1 query term:
-    ``(id, matched_terms, score)`` (``ln`` mode, DOUBLE) or
-    ``(id, matched_terms, score_micro)`` (``bits``-style integer mode,
-    BIGINT, bit-exact cross-engine — the DuckDB differential oracle
-    runs this). ``k1``/``b`` arrive as exact MILLI-units so the integer
-    mode never parses floats.
+    ``(id, matched_terms, score_micro)`` — BIGINT, bit-exact
+    cross-engine (the DuckDB differential oracle recomputes it).
 
-    - ``mode="ln"`` (production): textbook BM25 —
-      ``idf = ln(1 + (N − df + 0.5)/(df + 0.5))``,
-      ``score = Σ idf · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))``.
-    - ``mode="int"``: the repo's integer-surprisal convention (tfidf
-      ``rational_int`` / lm_score ``bits``): ``idf_bits =
-      floor(log2((N+1) div df))`` via ``length(bin(q)) − 1`` and all
-      length normalization in exact milli-unit BIGINT arithmetic
-      (``avgdl_milli = (1000·T) div N``). WHOLE-BIT idf granularity is
-      the documented trade: a term in more than half the corpus scores
-      0 (worthless for ranking — the right call at curation scale,
-      where sub-bit idf of a near-ubiquitous term is noise anyway).
-      Overflow guard: per-term numerator ``63 · tf · (k1+1000) · 10⁶``
-      caps tf at ~6.6e7 tokens per doc-term — loud assert, never a
-      silent wrap (the tfidf lesson).
+    The textbook form is
+    ``score = Σ idf · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))`` with
+    k1 = 1.2, b = 0.75; here in the repo's integer-surprisal
+    convention (tfidf / lm_score): ``idf_bits =
+    floor(log2((N+1) div df))`` via ``length(bin(q)) − 1`` and all
+    length normalization in exact milli-unit BIGINT arithmetic
+    (``avgdl_milli = (1000·T) div N``, k1 and b as milli-units).
+    WHOLE-BIT idf granularity is the documented trade: a term in more
+    than half the corpus scores 0 (worthless for ranking — the right
+    call at curation scale, where sub-bit idf of a near-ubiquitous term
+    is noise anyway). Overflow guard: per-term numerator
+    ``63 · tf · (k1+1000) · 10⁶`` caps tf at ~6.6e7 tokens per
+    doc-term — loud assert, never a silent wrap (the tfidf lesson).
 
     Distributed shape (the tfidf/lm_score lessons): one narrow
     tokenize/explode pass; per-(doc, term) tf and per-term df are
@@ -127,8 +111,6 @@ def bm25_scores(
     totals broadcast via the 1-row cross join; the final score is a
     per-doc combinable sum. No UDFs, no windows over the corpus.
     """
-    if mode not in ("ln", "int"):
-        raise ValueError(f"unknown bm25 mode: {mode!r}")
     qts = sorted({t.lower() for t in terms if t and t.strip()})
     if not qts:
         raise ValueError("bm25_scores: empty query-term set")
@@ -161,32 +143,10 @@ def bm25_scores(
         .join(dl, id_col)
         .crossJoin(F.broadcast(totals))
     )
-    if mode == "ln":
-        k1 = k1_milli / 1000.0
-        b = b_milli / 1000.0
-        idf = F.log(
-            F.lit(1.0)
-            + (F.col("__N").cast("double") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-        )
-        denom = F.col("tf").cast("double") + F.lit(k1) * (
-            F.lit(1.0 - b)
-            + F.lit(b)
-            * F.col("__dl").cast("double")
-            * F.col("__N").cast("double")
-            / F.col("__T").cast("double")
-        )
-        term_score = idf * F.col("tf").cast("double") * F.lit(k1 + 1.0) / denom
-        return (
-            joined.groupBy(id_col)
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("matched_terms"),
-                F.sum(term_score).alias("score"),
-            )
-        )
     guard = (
-        f"coalesce(CAST(assert_true(tf <= {(1 << 63) // (63 * (k1_milli + 1000) * 1_000_000)},"
-        f" 'bm25 int mode: idf_bits*tf*(k1+1000)*1e6 would overflow bigint;"
-        f" use mode=\"ln\"') AS BIGINT), 0L)"
+        f"coalesce(CAST(assert_true(tf <= {(1 << 63) // (63 * (_K1_MILLI + 1000) * 1_000_000)},"
+        f" 'bm25: idf_bits*tf*(k1+1000)*1e6 would overflow bigint"
+        f" (term frequency too large)') AS BIGINT), 0L)"
     )
     scored = (
         joined.withColumn(
@@ -198,14 +158,14 @@ def bm25_scores(
         .withColumn(
             "__denom_milli",
             F.expr(
-                f"1000 * tf + ({k1_milli}L * (1000 - {b_milli}"
-                f" + ({b_milli}L * 1000 * __dl) div __avgdl_milli)) div 1000"
+                f"1000 * tf + ({_K1_MILLI}L * (1000 - {_B_MILLI}"
+                f" + ({_B_MILLI}L * 1000 * __dl) div __avgdl_milli)) div 1000"
             ),
         )
         .withColumn(
             "__term_score_micro",
             F.expr(
-                f"(__idf_bits * tf * {k1_milli + 1000}L * 1000000 + {guard})"
+                f"(__idf_bits * tf * {_K1_MILLI + 1000}L * 1000000 + {guard})"
                 " div __denom_milli"
             ),
         )
@@ -221,15 +181,11 @@ def bm25_topk(
     id_col: str,
     text_col: str,
     terms: list[str],
-    k: int = 10,
-    k1_milli: int = 1200,
-    b_milli: int = 750,
-    mode: str = "ln",
+    k: int,
 ) -> DataFrame:
     """Top-``k`` documents by BM25 score, ties to the smallest id —
     fully deterministic. The global order runs as Spark's top-k
     (TakeOrderedAndProject: per-partition heaps, never a full sort),
     so it scales to any corpus size."""
-    scores = bm25_scores(df, id_col, text_col, terms, k1_milli, b_milli, mode)
-    score_col = "score_micro" if mode == "int" else "score"
-    return scores.orderBy(F.col(score_col).desc(), F.col(id_col).asc()).limit(k)
+    scores = bm25_scores(df, id_col, text_col, terms)
+    return scores.orderBy(F.col("score_micro").desc(), F.col(id_col).asc()).limit(k)

@@ -24,9 +24,10 @@ Design rules shared by all three:
   serializes 100 TB through one task. :func:`distributed_prefix_sum`
   is the classic two-phase scan instead: range-partition on the order
   key, per-partition (parallel) intra sums, then a prefix over the
-  ~num_partitions per-partition totals (a frame of a few thousand
-  rows at cluster scale) broadcast back. The only single-partition
-  window in the plan runs over that tiny totals frame.
+  per-partition totals (a frame of a few thousand rows at cluster
+  scale) broadcast back. The only single-partition window in the plan
+  runs over that tiny totals frame; a rank is the same scan counting
+  rows (:func:`global_order_rank`).
 - **Narrow where possible.** Stratified sampling is a pure filter
   Column — no shuffle at all; it composes under the scan's other
   pushed predicates.
@@ -54,22 +55,12 @@ def _hash_hex(id_col: Column | str, seed: str, width: int = _HEX_WIDTH) -> Colum
     )
 
 
-def fraction_threshold(fraction: float, width: int = _HEX_WIDTH) -> str:
-    """Hex threshold t such that P[hash_hex < t] == round(f·16^w)/16^w."""
+def fraction_threshold(fraction: float) -> str:
+    """Width-6 hex threshold t such that P[hash_hex < t] ==
+    round(f·16^6)/16^6."""
     if not 0.0 <= fraction <= 1.0:
         raise ValueError(f"fraction out of [0,1]: {fraction}")
-    return format(int(round(fraction * 16**width)), f"0{width}x")
-
-
-def keep_fraction(id_col: Column | str, fraction: float, seed: str) -> Column:
-    """Boolean Column: keep this row with the given deterministic
-    fraction. fraction>=1 keeps all (the 'ffffff' prefix would
-    otherwise be dropped at ~6e-8 probability); fraction<=0 drops all."""
-    if fraction >= 1.0:
-        return F.lit(True)
-    if fraction <= 0.0:
-        return F.lit(False)
-    return _hash_hex(id_col, seed) < F.lit(fraction_threshold(fraction))
+    return format(int(round(fraction * 16**_HEX_WIDTH)), f"0{_HEX_WIDTH}x")
 
 
 def stratified_sample(
@@ -78,14 +69,15 @@ def stratified_sample(
     strata_col: str,
     fractions: dict[str, float],
     seed: str,
-    default_fraction: float = 0.0,
 ) -> DataFrame:
     """Deterministic per-stratum downsampling — mixture weighting over
     domains/languages/sources. Pure narrow filter (zero shuffle): each
     row's fate is a threshold test on md5(seed:id) against its
     stratum's hex threshold, so the predicate composes with scan
-    pushdown and the sample is reproducible and append-stable. Strata
-    absent from ``fractions`` get ``default_fraction``.
+    pushdown and the sample is reproducible and append-stable. A
+    fraction >= 1 keeps the whole stratum (the 'ffffff' prefix would
+    otherwise be dropped at ~6e-8 probability); strata absent from
+    ``fractions`` are dropped.
 
     At 100 TB this is exactly as scalable as the scan itself; contrast
     ``df.sampleBy`` which is seeded per-partition-RNG (repartitioning
@@ -101,41 +93,35 @@ def stratified_sample(
             cond = h < F.lit(fraction_threshold(frac))
         branch = (F.col(strata_col) == F.lit(stratum), cond)
         whens = F.when(*branch) if whens is None else whens.when(*branch)
-    otherwise = keep_fraction(id_col, default_fraction, seed)
-    pred = otherwise if whens is None else whens.otherwise(otherwise)
+    pred = F.lit(False) if whens is None else whens.otherwise(F.lit(False))
     return df.filter(pred)
 
 
 def distributed_prefix_sum(
-    df: DataFrame,
-    order_col: str,
-    value_col: str,
-    out_col: str = "prefix_sum",
-    num_partitions: int | None = None,
+    df: DataFrame, order_cols: list[str], value: Column
 ) -> DataFrame:
-    """EXCLUSIVE prefix sum of ``value_col`` over the total order given
-    by ``order_col`` (must be unique — ties would make per-row
-    exclusive sums order-dependent), without a global single-partition
-    window.
+    """EXCLUSIVE prefix sum of ``value`` as a BIGINT ``prefix_sum``
+    column, over the total order given by ``order_cols`` (ascending;
+    the combination must be unique — ties would make per-row exclusive
+    sums order-dependent), without a global single-partition window.
 
-    Two-phase scan: (1) range-partition on the order key and compute
-    intra-partition exclusive sums with a window PARTITIONED BY the
-    physical partition id — fully parallel; (2) aggregate one total per
-    partition, prefix those (a window over ~num_partitions rows — the
-    only unpartitioned window in the plan), broadcast-join the offsets
-    back. The result is invariant to the partition count/boundaries, so
-    Spark's sampled range boundaries never affect values.
+    Two-phase scan: (1) range-partition on the order key into
+    ``spark.sql.shuffle.partitions`` ranges and compute intra-partition
+    exclusive sums with a window PARTITIONED BY the physical partition
+    id — fully parallel; (2) aggregate one total per partition, prefix
+    those (a window over one row per partition — the only unpartitioned
+    window in the plan), broadcast-join the offsets back. The result is
+    invariant to the partition count/boundaries, so Spark's sampled
+    range boundaries never affect values.
 
     The ranged frame is pinned eagerly with lineage cut (``pin``
     policy; same rationale as ``near_dup_clusters``): both phases
     consume it, and pinning the materialized partitioning removes any
     recompute-alignment concern between the totals branch and the main
     branch — a prefix scan is inherently a two-pass barrier."""
-    n = num_partitions or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     ranged = pin(
-        df.repartitionByRange(n, F.col(order_col)).withColumn(
+        df.repartitionByRange(n, *order_cols).withColumn(
             "__pid", F.spark_partition_id()
         ),
         truncate=True,
@@ -143,16 +129,16 @@ def distributed_prefix_sum(
     )
     w_intra = (
         Window.partitionBy("__pid")
-        .orderBy(order_col)
+        .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     intra = ranged.withColumn(
-        "__intra", F.coalesce(F.sum(value_col).over(w_intra), F.lit(0).cast("bigint"))
+        "__intra", F.coalesce(F.sum(value).over(w_intra), F.lit(0).cast("bigint"))
     )
     w_tot = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = (
         ranged.groupBy("__pid")
-        .agg(F.sum(value_col).alias("__t"))
+        .agg(F.sum(value).alias("__t"))
         .withColumn(
             "__off", F.coalesce(F.sum("__t").over(w_tot), F.lit(0).cast("bigint"))
         )
@@ -160,7 +146,7 @@ def distributed_prefix_sum(
     )
     return (
         intra.join(F.broadcast(offsets), "__pid")
-        .withColumn(out_col, (F.col("__intra") + F.col("__off")).cast("bigint"))
+        .withColumn("prefix_sum", (F.col("__intra") + F.col("__off")).cast("bigint"))
         .drop("__pid", "__intra", "__off")
     )
 
@@ -170,7 +156,6 @@ def pack_sequences(
     id_col: str,
     tokens_col: str,
     max_len: int,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Concat-and-chunk sequence packing: documents are laid end-to-end
     in ``id_col`` order into one virtual token stream, which is cut
@@ -191,16 +176,14 @@ def pack_sequences(
         raise ValueError(f"max_len must be positive: {max_len}")
     packed = distributed_prefix_sum(
         df.select(id_col, F.col(tokens_col).cast("bigint").alias("n_tokens")),
-        order_col=id_col,
-        value_col="n_tokens",
-        out_col="token_offset",
-        num_partitions=num_partitions,
+        [id_col],
+        F.col("n_tokens"),
     )
-    off, nt, L = F.col("token_offset"), F.col("n_tokens"), F.lit(max_len)
+    off, nt, L = F.col("prefix_sum"), F.col("n_tokens"), F.lit(max_len)
     return packed.select(
         id_col,
         "n_tokens",
-        "token_offset",
+        off.alias("token_offset"),
         F.floor(off / L).cast("bigint").alias("chunk_first"),
         F.floor((off + F.greatest(nt, F.lit(1)) - 1) / L)
         .cast("bigint")
@@ -245,48 +228,15 @@ def pack_chunk_stats(packed: DataFrame, id_col: str, max_len: int) -> DataFrame:
 
 
 def global_order_rank(
-    df: DataFrame,
-    order_cols: list[str],
-    rank_col: str = "rank",
-    num_partitions: int | None = None,
+    df: DataFrame, order_cols: list[str], rank_col: str
 ) -> DataFrame:
-    """Dense 0-based global rank of every row in the total order given
-    by ``order_cols`` (ascending; the combination must be unique — add
-    an id tiebreaker), WITHOUT a global single-partition window. Same
-    two-phase machinery as :func:`distributed_prefix_sum`, counting
-    rows: range-partition on the order key (parallel), intra-partition
-    ``row_number`` partitioned by the physical partition id, prefix the
-    ~num_partitions per-partition counts (the only unpartitioned window
-    — over a tiny frame), broadcast the offsets back. Invariant to the
-    partition count/boundaries."""
-    cols = [F.col(c) for c in order_cols]
-    n = num_partitions or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    ranged = pin(
-        df.repartitionByRange(n, *cols).withColumn(
-            "__pid", F.spark_partition_id()
-        ),
-        truncate=True,
-        eager=True,
-    )
-    w_intra = Window.partitionBy("__pid").orderBy(*order_cols)
-    intra = ranged.withColumn(
-        "__r", F.row_number().over(w_intra).cast("bigint") - 1
-    )
-    w_tot = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        ranged.groupBy("__pid")
-        .agg(F.count("*").alias("__t"))
-        .withColumn(
-            "__off", F.coalesce(F.sum("__t").over(w_tot), F.lit(0).cast("bigint"))
-        )
-        .select("__pid", "__off")
-    )
-    return (
-        intra.join(F.broadcast(offsets), "__pid")
-        .withColumn(rank_col, F.col("__r") + F.col("__off"))
-        .drop("__pid", "__r", "__off")
+    """0-based global rank of every row in the total order given by
+    ``order_cols`` (ascending; the combination must be unique — add an
+    id tiebreaker), WITHOUT a global single-partition window. A rank is
+    the exclusive prefix count, so this is
+    :func:`distributed_prefix_sum` of 1."""
+    return distributed_prefix_sum(df, order_cols, F.lit(1)).withColumnRenamed(
+        "prefix_sum", rank_col
     )
 
 
@@ -294,7 +244,6 @@ def global_shuffle_rank(
     df: DataFrame,
     id_col: str,
     seed: str,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Deterministic global training-order shuffle: every row gets a
     dense 0-based rank in the pseudo-random order md5(seed:id) (id as
@@ -304,20 +253,17 @@ def global_shuffle_rank(
     output order is reproducible across runs, engines, and cluster
     sizes — `ORDER BY rand()` is none of those."""
     keyed = df.withColumn("__skey", _hash_hex(id_col, seed, width=12))
-    return global_order_rank(
-        keyed,
-        order_cols=["__skey", id_col],
-        rank_col="shuffle_rank",
-        num_partitions=num_partitions,
-    ).drop("__skey")
+    return global_order_rank(keyed, ["__skey", id_col], "shuffle_rank").drop(
+        "__skey"
+    )
 
 
 def chunk_documents(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    window: int = 512,
-    stride: int | None = None,
+    window: int,
+    stride: int,
 ) -> DataFrame:
     """Split each document's token stream into (possibly overlapping)
     context windows — the long-document complement of
@@ -327,7 +273,7 @@ def chunk_documents(
     ``chunk_idx`` 0-based and ``chunk_text`` the space-joined token
     window starting at ``chunk_idx·stride``.
 
-    ``stride`` defaults to ``window`` (no overlap); a smaller stride
+    ``stride == window`` gives disjoint windows; a smaller stride
     gives sliding-window overlap (common for RAG indexing and for
     training-context continuity). The chunk count is
     ``1 + ceil(max(n_tokens - window, 0) / stride)``, clamped to
@@ -344,8 +290,6 @@ def chunk_documents(
     """
     from ..functions.text import word_tokens
 
-    if stride is None:
-        stride = window
     if window <= 0 or stride <= 0:
         raise ValueError(f"window and stride must be positive: {window}, {stride}")
     toks = df.withColumn("__toks", word_tokens(F.col(text_col)))
@@ -525,8 +469,7 @@ def group_sample_k(
 def leakage_safe_split(
     df: DataFrame,
     id_col: str,
-    pairs: DataFrame | None = None,
-    clusters: DataFrame | None = None,
+    clusters: DataFrame,
     val_frac: float = 0.1,
     test_frac: float = 0.1,
     seed: str = "split-v1",
@@ -542,13 +485,9 @@ def leakage_safe_split(
     together) instead of collapsing them; after a cluster collapse the
     doc-level and cluster-level splits coincide.
 
-    Inputs: either ``pairs`` (a near-dup pair frame ``(id_a, id_b)``,
-    e.g. from :func:`..dedup.ngram_jaccard_pairs` or the minhash LSH
-    family — components are computed here) or a precomputed
-    ``clusters`` frame ``(id, cluster_id)`` from
-    :func:`..dedup.near_dup_clusters` (pass this when the pipeline
-    already ran the contraction — don't pay it twice). Exactly one
-    must be given.
+    Input: a ``clusters`` frame ``(id, cluster_id)``, e.g. from
+    :func:`..dedup.near_dup_clusters` over the near-dup pairs the
+    pipeline already computed.
 
     The assignment is the engine's standard portable determinism
     scheme (md5 of ``seed || ':' || cluster_id``, fixed-width-hex
@@ -562,8 +501,7 @@ def leakage_safe_split(
 
     Scale shape: one hash join of the corpus against the (id,
     cluster_id) frame plus a narrow hash compare — no shuffle beyond
-    the join; the contraction (if computed here) is the O(log n)
-    star-contraction of :func:`..dedup.near_dup_clusters`.
+    the join.
 
     Returns ``df`` plus ``cluster_id`` and ``split`` columns — every
     input row, always: a doc absent from a caller-supplied
@@ -571,16 +509,10 @@ def leakage_safe_split(
     the singleton label :func:`..dedup.near_dup_clusters` gives
     isolated nodes.
     """
-    if (pairs is None) == (clusters is None):
-        raise ValueError("pass exactly one of pairs= or clusters=")
     if val_frac < 0 or test_frac < 0 or val_frac + test_frac >= 1.0:
         raise ValueError(
             f"need val_frac, test_frac >= 0 and val+test < 1: {val_frac}, {test_frac}"
         )
-    if clusters is None:
-        from .dedup import near_dup_clusters
-
-        clusters = near_dup_clusters(df.select(id_col), id_col, pairs)
     comp = clusters.select(
         F.col(clusters.columns[0]).alias(id_col),
         F.col("cluster_id"),
@@ -593,13 +525,11 @@ def leakage_safe_split(
         .when(h < F.lit(t_val), F.lit("val"))
         .otherwise(F.lit("train"))
     )
-    # LEFT join + self-cluster fallback: a caller-supplied clusters=
-    # frame that misses some df rows must not silently DROP them (an
-    # inner join would — no split at all beats a wrong split only when
-    # it's loud). Uncovered docs get cluster_id = their own id, the
-    # exact singleton semantics near_dup_clusters assigns to isolated
-    # nodes, so the pairs= and clusters= paths agree whenever coverage
-    # is complete.
+    # LEFT join + self-cluster fallback: a clusters frame that misses
+    # some df rows must not silently DROP them (an inner join would —
+    # no split at all beats a wrong split only when it's loud).
+    # Uncovered docs get cluster_id = their own id, the exact singleton
+    # semantics near_dup_clusters assigns to isolated nodes.
     return (
         df.join(comp, id_col, "left")
         .withColumn("cluster_id", F.coalesce(F.col("cluster_id"), F.col(id_col)))

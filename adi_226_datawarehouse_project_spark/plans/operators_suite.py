@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from .. import dialect as D
 from ..functions import text as TX
-from ..functions.cleaning import ensure_columns, parse_timestamp_multi, to_utc
+from ..functions.cleaning import ensure_columns
 from ..model.star import oracle_with_chain, register_star_views
 from ..multimodal.binary_ops import attach_binary_payload, decode_image_stub
 from ..operators.decontamination import decontaminate
@@ -43,7 +43,7 @@ from ..operators.dedup import (
 )
 from ..operators.gapfill import gap_fill_interpolate, hourly_observations
 from ..operators.quality_model import hashed_linear_score, make_hashed_weights
-from ..operators.similarity import cosine, cosine_self_topk, ivf_topk, lsh_bucket_topk
+from ..operators.similarity import cosine_self_topk, ivf_topk, lsh_bucket_topk
 from ..operators.training import (
     fraction_threshold,
     global_shuffle_rank,
@@ -2498,14 +2498,16 @@ _ASOF_RANGE_ORACLE = _suite_sql([
 # text_token_features / text_doc_features). Part tags are disjoint, so
 # both keep their independent value oracles. Round 11 adds the
 # `bm25_topk` part: the real BM25 retrieval operator
-# (operators/tfidf.bm25_topk, integer mode — exact BIGINT arithmetic,
-# whole-bit idf) over a fixed 3-term query, top 50 by
+# (operators/tfidf.bm25_topk — exact BIGINT arithmetic, whole-bit
+# idf) over a fixed 3-term query, top 50 by
 # (score DESC, doc_id) — membership, match counts, and scores all
 # value-checked against an independent DuckDB derivation. ---
 _BM25_TERMS = ["dup", "vector", "spark"]
-_BM25_K1_MILLI, _BM25_B_MILLI, _BM25_TOPK = 1200, 750, 50
+_BM25_TOPK = 50
+# the operator's fixed k1 = 1.2, b = 0.75, restated for the oracle
+_BM25_K1_MILLI, _BM25_B_MILLI = 1200, 750
 
-# Independent DuckDB derivation of bm25_topk (int mode): same integer
+# Independent DuckDB derivation of bm25_topk: same integer
 # formula, DuckDB spellings (// for div, string_split_regex tokens).
 _BM25_ORACLE = f"""
 WITH toks AS (
@@ -2547,10 +2549,7 @@ def _spark_bm25_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.tfidf import bm25_topk
 
     docs = load_table(spark, sf_dir, "documents")
-    out = bm25_topk(
-        docs, "doc_id", "text", _BM25_TERMS,
-        k=_BM25_TOPK, k1_milli=_BM25_K1_MILLI, b_milli=_BM25_B_MILLI, mode="int",
-    )
+    out = bm25_topk(docs, "doc_id", "text", _BM25_TERMS, k=_BM25_TOPK)
     return out.select(
         F.lit("bm25_topk").alias("part"),
         F.col("doc_id").cast("string").alias("k"),
@@ -3170,11 +3169,10 @@ GROUP BY lang ORDER BY lang
 """
 
 
-# --- tfidf part: top-2 TF-IDF terms per document in the bit-exact
-# rational_int IDF mode (pure BIGINT arithmetic — libm-free, so the
-# ranking is reproducible on any engine; the production ln mode is
-# pinned against a Python reference in tests/test_tfidf.py). k packs
-# (doc, rank, token); n is the integer score; n2 packs (tf, df). ---
+# --- tfidf part: top-2 TF-IDF terms per document by the operator's
+# integer rarity weight (pure BIGINT arithmetic — libm-free, so the
+# ranking is reproducible on any engine). k packs (doc, rank, token);
+# n is the integer score; n2 packs (tf, df). ---
 _TFIDF_TOP_K = 2
 
 
@@ -3182,7 +3180,7 @@ def _spark_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.tfidf import tf_idf_terms
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return tf_idf_terms(docs, "doc_id", "text", top_k=_TFIDF_TOP_K, idf="rational_int").select(
+    return tf_idf_terms(docs, "doc_id", "text", top_k=_TFIDF_TOP_K).select(
         F.concat(
             F.col("doc_id").cast("string"), F.lit(":"),
             F.col("rank").cast("string"), F.lit(":"), F.col("token"),
@@ -3212,17 +3210,16 @@ FROM ranked WHERE rank <= {_TFIDF_TOP_K}
 """
 
 
-# --- lm_ppl part: CCNet-style unigram LM surprisal per document in
-# the bit-exact "bits" mode (integer floor-log2 of the add-one-
-# smoothed odds ratio — libm-free, reproducible on any engine; the
-# production ln/ppl mode is pinned against a Python reference in
-# tests/test_lm.py). k is the doc, n the exact Σ tf·bits, n2 packs
-# (n_tokens, bits_per_token_milli). ---
+# --- lm_ppl part: CCNet-style unigram LM surprisal per document as
+# bit-exact integer surprisal (integer floor-log2 of the add-one-
+# smoothed odds ratio — libm-free, reproducible on any engine). k is
+# the doc, n the exact Σ tf·bits, n2 packs (n_tokens,
+# bits_per_token_milli). ---
 def _spark_lm_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.lm_score import unigram_lm_scores
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return unigram_lm_scores(docs, "doc_id", "text", mode="bits").select(
+    return unigram_lm_scores(docs, "doc_id", "text").select(
         F.col("doc_id").cast("string").alias("k"),
         F.col("surprisal_bits").alias("n"),
         (F.col("n_tokens").cast("bigint") * 100000 + F.col("bits_per_token_milli")).alias("n2"),
@@ -3289,16 +3286,15 @@ FROM (
 """
 
 
-# --- dsir part: DSIR-style importance resampling (Xie et al.,
-# arXiv:2302.03169) in the bit-exact "bits" mode — target stratum =
+# --- dsir part: DSIR-style importance selection (Xie et al.,
+# arXiv:2302.03169) with bit-exact integer weights — target stratum =
 # doc_id % 7 == 0 (the "curated domain"), raw = the rest; hashed
 # unigram features into 512 md5 buckets; keep the top ceil(30%) of raw
 # by integer whole-bit importance Σ c·(s_q − s_p) with deterministic
 # md5+id tiebreaks. The oracle re-derives the ENTIRE chain (features,
 # both models, weights, rank) in DuckDB; k verifies the doc, n the
 # exact weight, n2 packs (rank, n_grams) — a one-bucket drift or a
-# rank swap anywhere flips the hash. The production ln/Gumbel path is
-# pinned against a Python reference in tests/test_dsir.py. ---
+# rank swap anywhere flips the hash. ---
 _DSIR_BUCKETS = 512
 _DSIR_SEED = "dsir-v1"
 _DSIR_FRAC = 0.3
@@ -3320,8 +3316,6 @@ def _spark_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         k=k,
         n_buckets=_DSIR_BUCKETS,
-        gram_n=1,
-        mode="bits",
         seed=_DSIR_SEED,
     )
     return sel.select(

@@ -33,8 +33,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Footer-probe and schema memos are keyed on (size, mtime_ns) of the
 # file so a fixture rewritten IN PLACE (regenerated at a larger scale,
 # compacted, given a new column) is probed again instead of serving a

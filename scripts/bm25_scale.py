@@ -1,7 +1,7 @@
-"""BM25/TF-IDF lane at 64× (VERDICT r11 task 6).
+"""BM25 lane at 64×.
 
-Runs `bm25_topk` in the production ln mode over a 64×-replicated
-documents corpus and verifies two things:
+Runs `bm25_topk` over a 64×-replicated documents corpus and verifies
+two things:
 
 1. PLAN: the global top-k is a `TakeOrderedAndProject` (per-partition
    heaps) — no full `Sort` of the scored corpus anywhere in the
@@ -9,11 +9,10 @@ documents corpus and verifies two things:
 2. WALL: one timed end-to-end run (top-50 over a fixed 3-term query),
    recorded alongside the other 64× measurement rows.
 
-Also probes the int mode's overflow guard posture at this scale: the
-guard raises at tf > (1<<63)/(63·(k1+1000)·1e6) ≈ 6.6e7 — per-DOC term
-frequency, which replication never grows (copies salt their tokens),
-so int mode stays usable at 64×; we confirm it still matches ln-mode's
-top-k MEMBERSHIP on the replicated corpus head.
+The integer scorer's overflow guard raises at
+tf > (1<<63)/(63·(k1+1000)·1e6) ≈ 6.6e7 — per-DOC term frequency,
+which replication never grows (copies salt their tokens), so the run
+also confirms the guard stays silent at this scale.
 
 Run: python scripts/bm25_scale.py [corpus_dir]
 """
@@ -40,7 +39,7 @@ def main() -> None:
     docs = load_table(spark, corpus, "documents")
     n_docs = docs.count()
 
-    top = bm25_topk(docs, "doc_id", "text", TERMS, k=50, mode="ln")
+    top = bm25_topk(docs, "doc_id", "text", TERMS, k=50)
     plan = top._jdf.queryExecution().executedPlan().toString()
     has_tops = "TakeOrderedAndProject" in plan
     # a bare "Sort " node that is NOT inside the TakeOrdered operator
@@ -54,21 +53,13 @@ def main() -> None:
     rows = top.collect()
     wall = time.perf_counter() - t0
 
-    t1 = time.perf_counter()
-    int_rows = bm25_topk(docs, "doc_id", "text", TERMS, k=50, mode="int").collect()
-    wall_int = time.perf_counter() - t1
-    member_ln = {r["doc_id"] for r in rows}
-    member_int = {r["doc_id"] for r in int_rows}
-
     print(json.dumps({
         "corpus": corpus,
         "n_docs": n_docs,
         "plan_take_ordered": has_tops,
         "plan_full_sort": full_sort,
-        "wall_ln_s": round(wall, 2),
-        "wall_int_s": round(wall_int, 2),
+        "wall_int_s": round(wall, 2),
         "topk_rows": len(rows),
-        "ln_int_member_overlap": len(member_ln & member_int),
         "loadavg": os.getloadavg(),
     }))
     assert has_tops and not full_sort, "top-k plan regressed to a full sort"

@@ -152,9 +152,7 @@ def ops(spark: SparkSession, d: str) -> dict[str, callable]:
             n=5,
             min_overlap=2,
         ).count(),
-        "tfidf_top2": lambda: tf_idf_terms(
-            docs(), "doc_id", "text", top_k=2, idf="rational_int"
-        ).count(),
+        "tfidf_top2": lambda: tf_idf_terms(docs(), "doc_id", "text", top_k=2).count(),
         "events_tumbling_window": lambda: __import__(
             "adi_226_datawarehouse_project_spark.streaming.events_stream",
             fromlist=["windowed_event_counts"],
@@ -191,9 +189,7 @@ def _dsir_count(spark: SparkSession, d: str) -> int:
     tgt = docs.filter(F.col("doc_id") % 7 == 0)
     raw = docs.filter(F.col("doc_id") % 7 != 0)
     k = _m.ceil(0.3 * raw.count())
-    return dsir_select(
-        raw, tgt, "doc_id", "text", k=k, n_buckets=4096, mode="bits"
-    ).count()
+    return dsir_select(raw, tgt, "doc_id", "text", k=k, n_buckets=4096).count()
 
 
 def _url_dedup_count(spark: SparkSession, d: str) -> int:

@@ -201,7 +201,9 @@ def main() -> int:
 
     # function reachability: every top-level def/class of a package
     # module is named (Name, Attribute or ImportFrom) somewhere in the
-    # same non-test roots; names only, so a same-named local counts
+    # same non-test roots; names only, so a same-named local counts. An
+    # ImportFrom counts only where the importing file uses the name it
+    # binds, so an unused import reaches nothing.
     fn_keep = {
         "normalize_upper": "F1, trim+upper normalization",
         "normalize_lower": "F2, trim+lower normalization",
@@ -240,13 +242,17 @@ def main() -> int:
     named: set[str] = set()
     defined: list[tuple[str, str]] = []
     for f, tree in trees.items():
+        used: set[str] = set()
+        imports: list[ast.alias] = []
         for node in ast.walk(tree):
             if isinstance(node, ast.Name):
-                named.add(node.id)
+                used.add(node.id)
             elif isinstance(node, ast.Attribute):
-                named.add(node.attr)
+                used.add(node.attr)
             elif isinstance(node, ast.ImportFrom):
-                named.update(a.name for a in node.names)
+                imports += node.names
+        named |= used
+        named.update(a.name for a in imports if (a.asname or a.name) in used)
         if f.is_relative_to(pkg):
             defined += [
                 (node.name, f"{short[dotted(f)]}.{node.name}") for node in tree.body

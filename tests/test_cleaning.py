@@ -4,6 +4,7 @@ import datetime
 
 from pyspark.sql import functions as F
 
+from adi_226_datawarehouse_project_spark import dialect as D
 from adi_226_datawarehouse_project_spark.functions.cleaning import (
     bbox_filter,
     clean_currency,
@@ -13,8 +14,6 @@ from adi_226_datawarehouse_project_spark.functions.cleaning import (
     normalize_lower,
     normalize_upper,
     nullif_blank,
-    parse_timestamp_multi,
-    to_utc,
 )
 
 
@@ -32,6 +31,9 @@ def test_clean_currency(spark):
 
 
 def test_parse_timestamp_multi_formats(spark):
+    """The star's F5 parse (dialect.parse_timestamp, Spark form): the
+    four reference formats through the structural dispatch and the
+    try-parse cascade, NULL for anything else."""
     rows = [
         ("2024-03-01T10:20:30.123",),
         ("2024-03-01T10:20:30",),
@@ -40,7 +42,8 @@ def test_parse_timestamp_multi_formats(spark):
         ("not a time",),
     ]
     df = spark.createDataFrame(rows, ["s"])
-    got = [r["v"] for r in df.select(parse_timestamp_multi("s").alias("v")).collect()]
+    parsed = F.expr(D.parse_timestamp(D.SPARK, "s"))
+    got = [r["v"] for r in df.select(parsed.alias("v")).collect()]
     assert got[0] == datetime.datetime(2024, 3, 1, 10, 20, 30, 123000)
     assert got[1] == datetime.datetime(2024, 3, 1, 10, 20, 30)
     assert got[2] == datetime.datetime(2024, 3, 1, 10, 20, 30)
@@ -49,9 +52,17 @@ def test_parse_timestamp_multi_formats(spark):
 
 
 def test_to_utc(spark):
-    df = spark.createDataFrame([(datetime.datetime(2024, 1, 15, 12, 0, 0),)], ["ts"])
-    # January: America/New_York is UTC-5.
-    assert _one(df, to_utc("ts")) == datetime.datetime(2024, 1, 15, 17, 0, 0)
+    """The star's F6 conversion (dialect.to_utc, Spark form)."""
+    df = spark.createDataFrame(
+        [(datetime.datetime(2024, 1, 15, 12, 0, 0),), (datetime.datetime(2024, 7, 15, 12, 0, 0),)],
+        ["ts"],
+    )
+    got = [r["v"] for r in df.select(F.expr(D.to_utc(D.SPARK, "ts")).alias("v")).collect()]
+    # America/New_York is UTC-5 in January and UTC-4 (DST) in July.
+    assert got == [
+        datetime.datetime(2024, 1, 15, 17, 0, 0),
+        datetime.datetime(2024, 7, 15, 16, 0, 0),
+    ]
 
 
 def test_normalize_and_nullif(spark):

@@ -138,7 +138,7 @@ def test_corpus_pipeline_optional_scrub_and_lm_stages(spark, sf_dir, tmp_path):
     pre = spark.read.parquet(_os.path.join(out, "decontaminated"))
     kept_ids = {r["doc_id"] for r in spark.read.parquet(
         _os.path.join(out, "lm_filtered")).select("doc_id").collect()}
-    scores = unigram_lm_scores(pre, "doc_id", "text", mode="bits").collect()
+    scores = unigram_lm_scores(pre, "doc_id", "text").collect()
     for r in scores:
         assert (r["bits_per_token_milli"] <= 9000) == (r["doc_id"] in kept_ids)
 

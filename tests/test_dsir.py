@@ -1,17 +1,15 @@
-"""DSIR importance resampling: property tests against a plain-Python
-reference (hashlib md5 buckets + integer bit-weights + float ln
-weights), selection semantics (target-lookalikes rank first, empty
-docs never selected), determinism under repartitioning, and plan
-gates (no Python UDF, broadcast model joins, no global window over
-the corpus-sized frame)."""
+"""DSIR importance selection: property tests against a plain-Python
+reference (hashlib md5 buckets + integer bit-weights), selection
+semantics (target-lookalikes rank first, empty docs never selected),
+determinism under repartitioning, and plan gates (no Python UDF,
+broadcast model joins, no global window over the corpus-sized
+frame)."""
 
 import hashlib
-import math
 from collections import Counter
 
 import pytest
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from adi_226_datawarehouse_project_spark.operators.dsir import (
     dsir_select,
@@ -30,52 +28,35 @@ def _bucket(gram: str) -> int:
     return int(hashlib.md5(gram.encode()).hexdigest()[:12], 16) % B
 
 
-def _feats(docs, gram_n=1):
+def _feats(docs):
     out = {}
     for i, text in docs:
         toks = _tok(text)
-        if gram_n == 1:
-            grams = toks
-        else:
-            grams = [
-                " ".join(toks[j : j + gram_n])
-                for j in range(max(len(toks) - gram_n + 1, 0))
-            ]
-        if grams:
-            out[i] = Counter(_bucket(g) for g in grams)
+        if toks:
+            out[i] = Counter(_bucket(g) for g in toks)
     return out
 
 
-def _ref_weights(raw_docs, tgt_docs, mode="bits", gram_n=1):
-    rf = _feats(raw_docs, gram_n)
+def _ref_weights(raw_docs, tgt_docs):
+    rf = _feats(raw_docs)
     q = Counter()
     for c in rf.values():
         q.update(c)
     p = Counter()
-    for c in _feats(tgt_docs, gram_n).values():
+    for c in _feats(tgt_docs).values():
         p.update(c)
     Tq, Tp = sum(q.values()), sum(p.values())
-    w = {}
-    for i, c in rf.items():
-        if mode == "bits":
-            w[i] = sum(
-                n
-                * (
-                    (((Tq + B) // (q[b] + 1)).bit_length() - 1)
-                    - (((Tp + B) // (p.get(b, 0) + 1)).bit_length() - 1)
-                )
-                for b, n in c.items()
+    return {
+        i: sum(
+            n
+            * (
+                (((Tq + B) // (q[b] + 1)).bit_length() - 1)
+                - (((Tp + B) // (p.get(b, 0) + 1)).bit_length() - 1)
             )
-        else:
-            w[i] = sum(
-                n
-                * (
-                    (math.log(p.get(b, 0) + 1) - math.log(Tp + B))
-                    - (math.log(q[b] + 1) - math.log(Tq + B))
-                )
-                for b, n in c.items()
-            )
-    return w
+            for b, n in c.items()
+        )
+        for i, c in rf.items()
+    }
 
 
 RAW = [
@@ -114,46 +95,18 @@ def test_hashed_gram_counts_matches_python(spark, frames):
     assert got == want
 
 
-def test_hashed_bigram_counts_matches_python(spark, frames):
-    raw, _ = frames
-    got = {
-        (r["id"], r["bucket"]): r["c"]
-        for r in hashed_gram_counts(raw, "id", "text", B, gram_n=2).collect()
-    }
-    want = {
-        (i, b): n for i, c in _feats(RAW, gram_n=2).items() for b, n in c.items()
-    }
-    assert got == want
-
-
 def test_bits_weights_bit_exact(spark, frames):
     raw, tgt = frames
     got = {
         r["id"]: r["weight_bits"]
-        for r in importance_weights(
-            raw, tgt, "id", "text", n_buckets=B, mode="bits"
-        ).collect()
+        for r in importance_weights(raw, tgt, "id", "text", n_buckets=B).collect()
     }
-    assert got == _ref_weights(RAW, TGT, mode="bits")
-
-
-def test_ln_weights_match_python(spark, frames):
-    raw, tgt = frames
-    got = {
-        r["id"]: r["log_weight"]
-        for r in importance_weights(
-            raw, tgt, "id", "text", n_buckets=B, mode="ln"
-        ).collect()
-    }
-    want = _ref_weights(RAW, TGT, mode="ln")
-    assert set(got) == set(want)
-    for i in want:
-        assert got[i] == pytest.approx(want[i], rel=1e-9)
+    assert got == _ref_weights(RAW, TGT)
 
 
 def test_selection_prefers_target_lookalikes(spark, frames):
     raw, tgt = frames
-    sel = dsir_select(raw, tgt, "id", "text", k=3, n_buckets=B, mode="bits")
+    sel = dsir_select(raw, tgt, "id", "text", k=3, n_buckets=B)
     ids = {r["id"] for r in sel.collect()}
     # the three quantum-flavored raw docs outscore the finance/sport ones
     assert ids == {2, 4, 6}
@@ -169,17 +122,16 @@ def test_empty_doc_never_selected_and_k_overshoot(spark, frames):
     # k larger than the number of weighted docs: everything with at
     # least one token is selected; the empty doc has no weight (-inf
     # semantics) and stays out.
-    sel = dsir_select(raw, tgt, "id", "text", k=100, n_buckets=B, mode="bits")
+    sel = dsir_select(raw, tgt, "id", "text", k=100, n_buckets=B)
     ids = {r["id"] for r in sel.collect()}
     assert ids == {1, 2, 3, 4, 5, 6, 8}
 
 
 def test_selection_partition_invariance(spark, frames):
     raw, tgt = frames
-    a = dsir_select(raw, tgt, "id", "text", k=4, n_buckets=B, mode="bits")
+    a = dsir_select(raw, tgt, "id", "text", k=4, n_buckets=B)
     b = dsir_select(
-        raw.repartition(7), tgt.repartition(3), "id", "text", k=4, n_buckets=B,
-        mode="bits",
+        raw.repartition(7), tgt.repartition(3), "id", "text", k=4, n_buckets=B
     )
     rows = lambda d: sorted(  # noqa: E731
         (r["id"], r["weight_bits"], r["selection_rank"])
@@ -188,38 +140,10 @@ def test_selection_partition_invariance(spark, frames):
     assert rows(a) == rows(b)
 
 
-def test_gumbel_resampling_matches_python_reference(spark, frames):
-    raw, tgt = frames
-    seed = "g1"
-    sel = dsir_select(
-        raw, tgt, "id", "text", k=3, n_buckets=B, mode="ln", seed=seed,
-        gumbel=True,
-    )
-    got = {r["id"] for r in sel.collect()}
-    w = _ref_weights(RAW, TGT, mode="ln")
-    keys = {}
-    for i, lw in w.items():
-        h = int(hashlib.md5(f"{seed}:{i}".encode()).hexdigest()[:12], 16)
-        u = (h + 0.5) / float(1 << 48)
-        keys[i] = lw + (-math.log(-math.log(u)))
-    want = set(sorted(keys, key=lambda i: -keys[i])[:3])
-    assert got == want
-
-
-def test_gumbel_requires_ln_mode(spark, frames):
-    raw, tgt = frames
-    with pytest.raises(ValueError):
-        dsir_select(raw, tgt, "id", "text", k=1, mode="bits", gumbel=True)
-
-
 def test_rejects_bad_params(spark, frames):
     raw, tgt = frames
     with pytest.raises(ValueError):
-        importance_weights(raw, tgt, "id", "text", mode="nats")
-    with pytest.raises(ValueError):
         hashed_gram_counts(raw, "id", "text", 0)
-    with pytest.raises(ValueError):
-        hashed_gram_counts(raw, "id", "text", B, gram_n=0)
     with pytest.raises(ValueError):
         dsir_select(raw, tgt, "id", "text", k=-1)
 
@@ -229,7 +153,7 @@ def test_plan_no_udf_broadcast_models_no_global_corpus_window(spark, frames):
     # the scoring plan (pre-rank): both bucket-model joins must take
     # the broadcast side and nothing may fall to Python or cartesian.
     wplan = (
-        importance_weights(raw, tgt, "id", "text", n_buckets=B, mode="bits")
+        importance_weights(raw, tgt, "id", "text", n_buckets=B)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -239,7 +163,7 @@ def test_plan_no_udf_broadcast_models_no_global_corpus_window(spark, frames):
     assert wplan.count("BroadcastHashJoin") >= 2
     # the selection plan (post-rank; the checkpoint truncates the
     # scoring lineage out of it):
-    sel = dsir_select(raw, tgt, "id", "text", k=3, n_buckets=B, mode="bits")
+    sel = dsir_select(raw, tgt, "id", "text", k=3, n_buckets=B)
     plan = sel._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "CartesianProduct" not in plan

@@ -1,9 +1,7 @@
-"""Unigram LM scoring: ln mode vs a pure-Python reference,
-exact bits mode, perplexity filter semantics, and plan-shape gates."""
+"""Unigram LM scoring: exact integer bit-surprisal vs a pure-Python
+reference, perplexity filter semantics, and plan-shape gates."""
 
 from __future__ import annotations
-
-import math
 
 import pytest
 
@@ -35,9 +33,8 @@ def _py_unigram(docs):
     T, V = sum(cnt.values()), len(cnt)
     out = {}
     for i, ts in toks.items():
-        nll = sum(math.log(T + V) - math.log(cnt[w] + 1) for w in ts) / len(ts)
         bits = sum(((T + V) // (cnt[w] + 1)).bit_length() - 1 for w in ts)
-        out[i] = (len(ts), nll, bits)
+        out[i] = (len(ts), bits)
     return out, T, V
 
 
@@ -46,26 +43,15 @@ def docs_df(spark):
     return spark.createDataFrame(_DOCS, "doc_id BIGINT, text STRING")
 
 
-def test_unigram_ln_matches_python_reference(spark, docs_df):
-    got = {
-        r["doc_id"]: r
-        for r in unigram_lm_scores(docs_df, "doc_id", "text", mode="ln").collect()
-    }
-    want, _, _ = _py_unigram(_DOCS)
-    assert set(got) == set(want)
-    for i, (n, nll, _) in want.items():
-        assert got[i]["n_tokens"] == n
-        assert got[i]["nll"] == pytest.approx(nll, rel=1e-12)
-        assert got[i]["ppl"] == pytest.approx(math.exp(nll), rel=1e-12)
-
-
 def test_unigram_bits_exact(spark, docs_df):
     got = {
         r["doc_id"]: r
-        for r in unigram_lm_scores(docs_df, "doc_id", "text", mode="bits").collect()
+        for r in unigram_lm_scores(docs_df, "doc_id", "text").collect()
     }
     want, _, _ = _py_unigram(_DOCS)
-    for i, (n, _, bits) in want.items():
+    assert set(got) == set(want)
+    for i, (n, bits) in want.items():
+        assert got[i]["n_tokens"] == n
         assert got[i]["surprisal_bits"] == bits
         assert got[i]["bits_per_token_milli"] == (1000 * bits) // n
         assert isinstance(got[i]["surprisal_bits"], int)
@@ -73,8 +59,8 @@ def test_unigram_bits_exact(spark, docs_df):
 
 def test_gibberish_scores_higher_than_common_text(spark, docs_df):
     got = {
-        r["doc_id"]: r["nll"]
-        for r in unigram_lm_scores(docs_df, "doc_id", "text", mode="ln").collect()
+        r["doc_id"]: r["bits_per_token_milli"]
+        for r in unigram_lm_scores(docs_df, "doc_id", "text").collect()
     }
     assert got[3] > got[0]  # rare-token doc beats common-token doc
     assert got[4] < got[0]  # all-stopword doc is the most predictable
@@ -84,7 +70,7 @@ def test_perplexity_filter_keeps_low_surprisal_docs(spark, docs_df):
     want, T, V = _py_unigram(_DOCS)
     # pick a threshold that splits the fixture: strictly between the
     # best and worst per-token bit rates
-    rates = {i: (1000 * b) // n for i, (n, _, b) in want.items()}
+    rates = {i: (1000 * b) // n for i, (n, b) in want.items()}
     cut = sorted(rates.values())[len(rates) // 2] / 1000.0
     kept = perplexity_filter(
         docs_df, "doc_id", "text", max_bits_per_token=cut
@@ -94,14 +80,8 @@ def test_perplexity_filter_keeps_low_surprisal_docs(spark, docs_df):
     assert all(r["text"] for r in kept)
 
 
-def test_mode_rejected(spark, docs_df):
-    with pytest.raises(ValueError):
-        unigram_lm_scores(docs_df, "doc_id", "text", mode="log10")
-
-
 def test_no_udf_and_no_cartesian(spark, docs_df):
-    for mode in ("bits", "ln"):
-        frame = unigram_lm_scores(docs_df, "doc_id", "text", mode=mode)
-        plan = frame._jdf.queryExecution().executedPlan().toString()
-        assert "BatchEvalPython" not in plan
-        assert plan.count("CartesianProduct") == 0
+    frame = unigram_lm_scores(docs_df, "doc_id", "text")
+    plan = frame._jdf.queryExecution().executedPlan().toString()
+    assert "BatchEvalPython" not in plan
+    assert plan.count("CartesianProduct") == 0

@@ -11,7 +11,7 @@ import hashlib
 from pyspark.sql import functions as F
 
 from adi_226_datawarehouse_project_spark.operators.quality_model import (
-    N_BUCKETS_DEFAULT,
+    N_BUCKETS,
     hashed_linear_score,
     make_hashed_weights,
 )
@@ -31,14 +31,14 @@ def _py_score(text: str, bias_milli: int = 0):
     toks = [t for t in text.lower().strip().split() if t]
     if not toks:
         return 0, None, None
-    sw = sum(_py_weight(_h32(t) % N_BUCKETS_DEFAULT) for t in toks)
+    sw = sum(_py_weight(_h32(t) % N_BUCKETS) for t in toks)
     raw = sw / len(toks) / 1000.0 + bias_milli / 1000.0
     return len(toks), sw, math.floor(raw * 1000000 + 0.5) / 1000000
 
 
 def test_weights_deterministic_and_bounded(spark):
     w = make_hashed_weights(spark).collect()
-    assert len(w) == N_BUCKETS_DEFAULT
+    assert len(w) == N_BUCKETS
     for r in w:
         assert -1000 <= r.w_milli <= 1000
         assert r.w_milli == _py_weight(r.bucket)
@@ -73,7 +73,7 @@ def test_tokenless_doc_scores_null_and_is_not_kept(spark):
     )
     out = {
         r.doc_id: r
-        for r in hashed_linear_score(docs, make_hashed_weights(spark)).collect()
+        for r in hashed_linear_score(docs, make_hashed_weights(spark), bias_milli=0).collect()
     }
     assert len(out) == 4  # every input doc present exactly once
     for d in (1, 2, 3):
@@ -85,7 +85,7 @@ def test_plan_broadcasts_model_and_stays_jvm_side(spark, sf_dir):
     from adi_226_datawarehouse_project_spark.sources.catalog import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    out = hashed_linear_score(docs, make_hashed_weights(spark))
+    out = hashed_linear_score(docs, make_hashed_weights(spark), bias_milli=0)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -100,22 +100,25 @@ def test_sparse_model_table_treats_missing_buckets_as_zero_weight(spark):
     )
     dense = make_hashed_weights(spark)
     toks = ["alpha", "beta", "gamma", "delta"]
-    buckets = {_h32(t) % N_BUCKETS_DEFAULT for t in toks}
+    buckets = {_h32(t) % N_BUCKETS for t in toks}
     keep_bucket = min(buckets)
     sparse = dense.where(F.col("bucket") == keep_bucket)
 
-    out = hashed_linear_score(docs, sparse).collect()[0]
+    out = hashed_linear_score(docs, sparse, bias_milli=0).collect()[0]
     assert out.n_tokens == 4  # all tokens counted
     expected = sum(
-        _py_weight(b) for t in toks if (b := _h32(t) % N_BUCKETS_DEFAULT) == keep_bucket
+        _py_weight(b) for t in toks if (b := _h32(t) % N_BUCKETS) == keep_bucket
     )
     assert out.sum_w_milli == expected
 
 
+
 def test_keep_threshold_moves_the_gate(spark):
+    """The keep gate is score > 0, so the bias moves it: weights
+    average at most 1.0, so a bias of -1.0 keeps nothing."""
     docs = spark.createDataFrame([(1, "alpha beta gamma")], "doc_id BIGINT, text STRING")
     w = make_hashed_weights(spark)
-    base = hashed_linear_score(docs, w).collect()[0]
-    high = hashed_linear_score(docs, w, keep_threshold=1.0).collect()[0]
-    assert high.keep is False  # weights are bounded by 1.0 avg
+    base = hashed_linear_score(docs, w, bias_milli=0).collect()[0]
+    high = hashed_linear_score(docs, w, bias_milli=-1000).collect()[0]
+    assert high.keep is False
     assert base.keep == (base.score > 0.0)

@@ -1,9 +1,8 @@
-"""TF-IDF term extraction: ln mode vs a pure-Python reference, plus
-rational_int mode determinism and plan-shape checks."""
+"""TF-IDF term extraction and BM25 scoring: the integer scorers
+against pure-Python references, determinism, overflow guards and
+plan-shape checks."""
 
 from __future__ import annotations
-
-import math
 
 import pytest
 
@@ -18,7 +17,8 @@ _DOCS = [
 
 
 def _py_tfidf(docs, top_k):
-    """Independent reference: smooth ln idf, token tie-break."""
+    """Independent reference: integer rarity weight
+    (tf·10⁶·(N+1)) div (df+1), token tie-break."""
     toks = {i: t.lower().split() for i, t in docs}
     tf = {(i, w): toks[i].count(w) for i in toks for w in set(toks[i])}
     dfreq: dict[str, int] = {}
@@ -29,7 +29,7 @@ def _py_tfidf(docs, top_k):
     for i in toks:
         scored = sorted(
             (
-                (-(tf[(i, w)] * (math.log((n + 1) / (dfreq[w] + 1)) + 1)), w)
+                (-((tf[(i, w)] * 1_000_000 * (n + 1)) // (dfreq[w] + 1)), w)
                 for w in set(toks[i])
             ),
         )
@@ -42,8 +42,8 @@ def docs_df(spark):
     return spark.createDataFrame(_DOCS, "doc_id BIGINT, text STRING")
 
 
-def test_ln_mode_matches_python_reference(spark, docs_df):
-    got = tf_idf_terms(docs_df, "doc_id", "text", top_k=2, idf="ln").collect()
+def test_tf_idf_matches_python_reference(spark, docs_df):
+    got = tf_idf_terms(docs_df, "doc_id", "text", top_k=2).collect()
     want = _py_tfidf(_DOCS, 2)
     by_doc: dict[int, list] = {}
     for r in sorted(got, key=lambda r: (r["doc_id"], r["rank"])):
@@ -51,22 +51,16 @@ def test_ln_mode_matches_python_reference(spark, docs_df):
     assert set(by_doc) == set(want)
     for i, pairs in want.items():
         assert [t for t, _ in by_doc[i]] == [t for t, _ in pairs]
-        for (_, s_got), (_, s_want) in zip(by_doc[i], pairs):
-            assert s_got == pytest.approx(s_want, rel=1e-12)
+        assert [s for _, s in by_doc[i]] == [s for _, s in pairs]
 
 
 def test_rational_mode_is_integral_and_rank_consistent(spark, docs_df):
-    got = tf_idf_terms(docs_df, "doc_id", "text", top_k=2, idf="rational_int").collect()
+    got = tf_idf_terms(docs_df, "doc_id", "text", top_k=2).collect()
     assert all(isinstance(r["score"], int) for r in got)
     # 'fast' (tf=3, df=1) out-ranks both df=2 terms; 'runs' wins the
     # exact score tie against 'spark' lexicographically.
     doc0 = sorted((r for r in got if r["doc_id"] == 0), key=lambda r: r["rank"])
     assert doc0[0]["token"] == "fast" and doc0[1]["token"] == "runs"
-
-
-def test_bad_variant_rejected(spark, docs_df):
-    with pytest.raises(ValueError):
-        tf_idf_terms(docs_df, "doc_id", "text", idf="tf_only")
 
 
 def test_no_udf_and_no_cartesian_over_corpus(spark, docs_df):
@@ -100,74 +94,69 @@ def test_rational_mode_overflow_guard(spark):
         _score(tf_max + 1, 0, n)
 
 
-def _py_bm25_ln(docs, terms, k1=1.2, b=0.75):
-    """Independent textbook BM25 reference (ln idf variant used by the
-    operator: ln(1 + (N - df + 0.5)/(df + 0.5)))."""
+def _py_bm25_int(docs, terms, k1=1200, b=750):
+    """Independent integer BM25 reference: whole-bit idf
+    floor(log2((N+1) div df)), k1/b and avgdl in milli-units,
+    micro-unit per-term scores floored."""
     toks = {i: t.lower().split() for i, t in docs}
     n = len(docs)
-    avgdl = sum(len(v) for v in toks.values()) / n
+    avgdl = max(1000 * sum(len(v) for v in toks.values()) // n, 1)
     dfreq: dict[str, int] = {}
     for i in toks:
         for w in set(toks[i]):
             dfreq[w] = dfreq.get(w, 0) + 1
     out = {}
     for i in toks:
-        s, matched = 0.0, 0
+        s, matched = 0, 0
         for w in set(terms):
             tf = toks[i].count(w)
             if tf == 0:
                 continue
             matched += 1
-            idf = math.log(1 + (n - dfreq[w] + 0.5) / (dfreq[w] + 0.5))
-            s += idf * tf * (k1 + 1) / (tf + k1 * (1 - b + b * len(toks[i]) / avgdl))
+            idf_bits = ((n + 1) // dfreq[w]).bit_length() - 1
+            denom = 1000 * tf + (k1 * (1000 - b + (b * 1000 * len(toks[i])) // avgdl)) // 1000
+            s += (idf_bits * tf * (k1 + 1000) * 1_000_000) // denom
         if matched:
             out[i] = (matched, s)
     return out
 
 
-def test_bm25_ln_matches_python_reference(spark, docs_df):
+def test_bm25_matches_python_reference(spark, docs_df):
     from adi_226_datawarehouse_project_spark.operators.tfidf import bm25_scores
 
     terms = ["spark", "slow", "pelican"]
     got = {
-        r["doc_id"]: (r["matched_terms"], r["score"])
+        r["doc_id"]: (r["matched_terms"], r["score_micro"])
         for r in bm25_scores(docs_df, "doc_id", "text", terms).collect()
     }
-    want = _py_bm25_ln(_DOCS, terms)
-    assert set(got) == set(want)
-    for i in want:
-        assert got[i][0] == want[i][0]
-        assert abs(got[i][1] - want[i][1]) < 1e-9, (i, got[i], want[i])
+    assert got == _py_bm25_int(_DOCS, terms)
 
 
 def test_bm25_int_mode_exact_and_rank_consistent(spark, docs_df):
-    """Integer mode: BIGINT scores, rare terms outrank common ones,
-    and re-evaluation is bit-identical (pure integer arithmetic)."""
+    """BIGINT scores, rare terms outrank common ones, and
+    re-evaluation is bit-identical (pure integer arithmetic)."""
     from adi_226_datawarehouse_project_spark.operators.tfidf import (
         bm25_scores,
         bm25_topk,
     )
 
     terms = ["spark", "slow", "pelican"]
-    out = bm25_scores(docs_df, "doc_id", "text", terms, mode="int")
+    out = bm25_scores(docs_df, "doc_id", "text", terms)
     rows = {r["doc_id"]: (r["matched_terms"], r["score_micro"]) for r in out.collect()}
     rows2 = {r["doc_id"]: (r["matched_terms"], r["score_micro"]) for r in out.collect()}
     assert rows == rows2
     assert all(isinstance(v[1], int) for v in rows.values())
     # 'pelican' appears in 1/4 docs (idf_bits=2); doc 3 must outrank
     # docs matching only the commoner terms
-    top = bm25_topk(docs_df, "doc_id", "text", terms, k=2, mode="int").collect()
+    top = bm25_topk(docs_df, "doc_id", "text", terms, k=2).collect()
     assert top[0]["doc_id"] == 3
-    # int and ln modes agree on the matched-doc set
-    ln_ids = {r["doc_id"] for r in bm25_scores(docs_df, "doc_id", "text", terms).collect()}
-    assert set(rows) == ln_ids
+    # every doc holding a query term is scored, and only those
+    assert set(rows) == {0, 1, 2, 3}
 
 
 def test_bm25_rejects_bad_inputs(spark, docs_df):
     from adi_226_datawarehouse_project_spark.operators.tfidf import bm25_scores
 
-    with pytest.raises(ValueError, match="mode"):
-        bm25_scores(docs_df, "doc_id", "text", ["x"], mode="nope")
     with pytest.raises(ValueError, match="empty"):
         bm25_scores(docs_df, "doc_id", "text", ["  ", ""])
 
@@ -180,7 +169,7 @@ def test_bm25_plan_shape(spark, docs_df):
     from adi_226_datawarehouse_project_spark.operators.tfidf import bm25_topk
 
     plan = (
-        bm25_topk(docs_df, "doc_id", "text", ["spark", "pelican"], k=5, mode="int")
+        bm25_topk(docs_df, "doc_id", "text", ["spark", "pelican"], k=5)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "TakeOrderedAndProject" in plan

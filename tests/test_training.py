@@ -4,11 +4,13 @@ plan-shape gates proving the prefix-sum machinery never plans a
 global single-partition window over the input."""
 
 import hashlib
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from adi_226_datawarehouse_project_spark.operators.dedup import near_dup_clusters
 from adi_226_datawarehouse_project_spark.operators.training import (
     distributed_prefix_sum,
     fraction_threshold,
@@ -21,6 +23,19 @@ from adi_226_datawarehouse_project_spark.operators.training import (
 
 def _md5_hex(seed: str, key, width: int = 6) -> str:
     return hashlib.md5(f"{seed}:{key}".encode()).hexdigest()[:width]
+
+
+@contextmanager
+def _shuffle_partitions(spark, n: int):
+    """Run the two-phase scans with ``n`` range partitions (they read
+    spark.sql.shuffle.partitions when called), restoring the session
+    value afterwards."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 # ---------------------------------------------------------------- sampling
@@ -50,12 +65,13 @@ def test_stratified_sample_edge_fractions_and_default(spark):
     all_kept = stratified_sample(df, "id", "stratum", {"keep": 1.0}, seed="x")
     got = {(r["id"], r["stratum"]) for r in all_kept.collect()}
     # fraction 1.0 keeps every 'keep' row (no hash-boundary loss);
-    # default_fraction=0 drops every unlisted stratum
+    # an unlisted stratum is dropped
     assert got == {(r.id, r.stratum) for r in rows if r.stratum == "keep"}
-    half_default = stratified_sample(
-        df, "id", "stratum", {"keep": 0.0}, seed="x", default_fraction=1.0
+    swapped = stratified_sample(
+        df, "id", "stratum", {"keep": 0.0, "other": 1.0}, seed="x"
     )
-    assert {r["stratum"] for r in half_default.collect()} == {"other"}
+    assert {r["stratum"] for r in swapped.collect()} == {"other"}
+    assert swapped.count() == 20
 
 
 def test_stratified_sample_is_append_stable(spark):
@@ -90,12 +106,11 @@ def test_stratified_sample_plans_no_shuffle(spark):
 def test_prefix_sum_matches_python_any_partitioning(spark, parts):
     vals = [(i, (i * 7919) % 23) for i in range(157)]
     df = spark.createDataFrame(vals, ["k", "v"]).repartition(5)
-    got = {
-        r["k"]: r["prefix_sum"]
-        for r in distributed_prefix_sum(
-            df, "k", "v", num_partitions=parts
-        ).collect()
-    }
+    with _shuffle_partitions(spark, parts):
+        got = {
+            r["k"]: r["prefix_sum"]
+            for r in distributed_prefix_sum(df, ["k"], F.col("v")).collect()
+        }
     acc, want = 0, {}
     for k, v in vals:  # exclusive scan in k order
         want[k] = acc
@@ -105,15 +120,16 @@ def test_prefix_sum_matches_python_any_partitioning(spark, parts):
 
 def test_prefix_sum_requires_no_global_window(spark):
     df = spark.createDataFrame([(i, 1) for i in range(50)], ["k", "v"])
-    plan = (
-        distributed_prefix_sum(df, "k", "v", num_partitions=4)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    with _shuffle_partitions(spark, 4):
+        plan = (
+            distributed_prefix_sum(df, ["k"], F.col("v"))
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
     # the intra window is partitioned by the physical partition id;
     # the only unpartitioned window runs over the per-partition totals
-    # (post-aggregate, ~num_partitions rows). A partitioned Window node
+    # (post-aggregate, one row per partition). A partitioned Window node
     # prints two bracket groups after the function list
     # (`], [partSpec], [orderSpec]`); an unpartitioned one prints one.
     win_lines = [l for l in plan.splitlines() if "windowspecdefinition(" in l]
@@ -143,15 +159,16 @@ def _pack_reference(docs, L):
 def test_pack_sequences_matches_sequential_reference(spark, L):
     docs = [(i, (i * 131) % 37) for i in range(200)]  # includes 0-token docs
     df = spark.createDataFrame(docs, ["doc_id", "nt"])
-    got = {
-        r["doc_id"]: (
-            r["n_tokens"],
-            r["token_offset"],
-            r["chunk_first"],
-            r["chunk_last"],
-        )
-        for r in pack_sequences(df, "doc_id", "nt", L, num_partitions=6).collect()
-    }
+    with _shuffle_partitions(spark, 6):
+        got = {
+            r["doc_id"]: (
+                r["n_tokens"],
+                r["token_offset"],
+                r["chunk_first"],
+                r["chunk_last"],
+            )
+            for r in pack_sequences(df, "doc_id", "nt", L).collect()
+        }
     assert got == _pack_reference(docs, L)
 
 
@@ -159,7 +176,8 @@ def test_pack_chunk_stats_conserves_tokens_and_fills_chunks(spark):
     L = 64
     docs = [(i, (i * 131) % 37) for i in range(200)]
     df = spark.createDataFrame(docs, ["doc_id", "nt"])
-    packed = pack_sequences(df, "doc_id", "nt", L, num_partitions=6)
+    with _shuffle_partitions(spark, 6):
+        packed = pack_sequences(df, "doc_id", "nt", L)
     stats = {
         r["chunk_id"]: (r["n_docs"], r["chunk_tokens"])
         for r in pack_chunk_stats(packed, "doc_id", L).collect()
@@ -203,16 +221,16 @@ def test_global_shuffle_rank_matches_python_md5_order(spark):
 
 def test_shuffle_rank_partition_invariance(spark):
     df = spark.createDataFrame([(i,) for i in range(120)], ["doc_id"])
-    a = {
-        r["doc_id"]: r["shuffle_rank"]
-        for r in global_shuffle_rank(df, "doc_id", "s", num_partitions=2).collect()
-    }
-    b = {
-        r["doc_id"]: r["shuffle_rank"]
-        for r in global_shuffle_rank(
-            df.repartition(7), "doc_id", "s", num_partitions=9
-        ).collect()
-    }
+    with _shuffle_partitions(spark, 2):
+        a = {
+            r["doc_id"]: r["shuffle_rank"]
+            for r in global_shuffle_rank(df, "doc_id", "s").collect()
+        }
+    with _shuffle_partitions(spark, 9):
+        b = {
+            r["doc_id"]: r["shuffle_rank"]
+            for r in global_shuffle_rank(df.repartition(7), "doc_id", "s").collect()
+        }
     assert a == b
 
 
@@ -257,7 +275,7 @@ def test_chunk_documents_rejects_bad_params(spark):
 
     docs = spark.createDataFrame([(1, "a b")], "doc_id BIGINT, text STRING")
     with _pytest.raises(ValueError):
-        chunk_documents(docs, "doc_id", "text", window=0)
+        chunk_documents(docs, "doc_id", "text", window=0, stride=1)
     with _pytest.raises(ValueError):
         chunk_documents(docs, "doc_id", "text", window=4, stride=-1)
 
@@ -407,16 +425,17 @@ def test_two_phase_scans_reliable_checkpoint_path(spark, tmp_path):
     )
 
     def scans():
-        return (
-            {
-                r["k"]: r["prefix_sum"]
-                for r in distributed_prefix_sum(df, "k", "v", num_partitions=4).collect()
-            },
-            {
-                r["k"]: r["rank"]
-                for r in global_order_rank(df, ["k"], num_partitions=4).collect()
-            },
-        )
+        with _shuffle_partitions(spark, 4):
+            return (
+                {
+                    r["k"]: r["prefix_sum"]
+                    for r in distributed_prefix_sum(df, ["k"], F.col("v")).collect()
+                },
+                {
+                    r["k"]: r["rank"]
+                    for r in global_order_rank(df, ["k"], "rank").collect()
+                },
+            )
 
     local = scans()
     with checkpoint_dir(spark, tmp_path):
@@ -501,7 +520,8 @@ def test_leakage_safe_split_no_edge_straddles(spark):
     )
 
     leakage_safe_split, docs, pairs, edges = _split_fixture(spark)
-    out = leakage_safe_split(docs, "doc_id", pairs=pairs, seed="t1")
+    comp = near_dup_clusters(docs, "doc_id", pairs)
+    out = leakage_safe_split(docs, "doc_id", comp, seed="t1")
     split_of = {r["doc_id"]: r["split"] for r in out.collect()}
     assert len(split_of) == 500  # join keeps every doc
     for a, b in edges:
@@ -519,26 +539,34 @@ def test_leakage_safe_split_no_edge_straddles(spark):
 
 
 def test_leakage_safe_split_precomputed_clusters_and_determinism(spark):
-    from adi_226_datawarehouse_project_spark.operators.dedup import (
-        near_dup_clusters,
+    """Each doc takes its cluster's id from the precomputed frame and
+    the split the md5(seed:cluster_id) scheme gives that cluster; a
+    re-run (here over a repartitioned corpus) is identical."""
+    from adi_226_datawarehouse_project_spark.operators.training import (
+        fraction_threshold,
     )
 
     leakage_safe_split, docs, pairs, _ = _split_fixture(spark)
-    via_pairs = {
-        (r["doc_id"], r["cluster_id"], r["split"])
-        for r in leakage_safe_split(docs, "doc_id", pairs=pairs, seed="t2").collect()
-    }
     comp = near_dup_clusters(docs, "doc_id", pairs)
-    via_clusters = {
+    first = {
         (r["doc_id"], r["cluster_id"], r["split"])
-        for r in leakage_safe_split(docs, "doc_id", clusters=comp, seed="t2").collect()
+        for r in leakage_safe_split(docs, "doc_id", comp, seed="t2").collect()
     }
-    assert via_pairs == via_clusters
+    cluster_of = {r["doc_id"]: r["cluster_id"] for r in comp.collect()}
+    for doc_id, cluster_id, split in first:
+        assert cluster_id == cluster_of[doc_id]
+        h = _md5_hex("t2", cluster_id)
+        assert split == (
+            "test" if h < fraction_threshold(0.1)
+            else "val" if h < fraction_threshold(0.2) else "train"
+        )
     again = {
         (r["doc_id"], r["cluster_id"], r["split"])
-        for r in leakage_safe_split(docs, "doc_id", pairs=pairs, seed="t2").collect()
+        for r in leakage_safe_split(
+            docs.repartition(7), "doc_id", comp, seed="t2"
+        ).collect()
     }
-    assert again == via_pairs
+    assert again == first
 
 
 def test_leakage_safe_split_partial_clusters_self_cluster(spark):
@@ -546,7 +574,7 @@ def test_leakage_safe_split_partial_clusters_self_cluster(spark):
     DROP them: uncovered docs self-cluster (cluster_id = own id) with
     near_dup_clusters' singleton semantics, so a partial frame and a
     full frame agree on every covered doc."""
-    leakage_safe_split, docs, pairs, _ = _split_fixture(spark)
+    leakage_safe_split, docs, _, _ = _split_fixture(spark)
     # clusters frame covering ONLY docs < 100
     partial = spark.range(100).select(
         F.col("id").alias("doc_id"),
@@ -582,10 +610,9 @@ def test_leakage_safe_split_partial_clusters_self_cluster(spark):
 
 
 def test_leakage_safe_split_validation(spark):
-    leakage_safe_split, docs, pairs, _ = _split_fixture(spark)
-    with pytest.raises(ValueError, match="exactly one"):
-        leakage_safe_split(docs, "doc_id")
-    with pytest.raises(ValueError, match="exactly one"):
-        leakage_safe_split(docs, "doc_id", pairs=pairs, clusters=pairs)
+    leakage_safe_split, docs, _, _ = _split_fixture(spark)
+    comp = docs.select("doc_id", F.col("doc_id").alias("cluster_id"))
     with pytest.raises(ValueError, match="val.*test"):
-        leakage_safe_split(docs, "doc_id", pairs=pairs, val_frac=0.5, test_frac=0.5)
+        leakage_safe_split(docs, "doc_id", comp, val_frac=0.5, test_frac=0.5)
+    with pytest.raises(ValueError, match="val.*test"):
+        leakage_safe_split(docs, "doc_id", comp, val_frac=-0.1)
