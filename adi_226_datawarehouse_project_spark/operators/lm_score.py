@@ -1,9 +1,9 @@
-"""Unigram language-model scoring over a document corpus — CCNet-style
-perplexity filtering for the training-data pipeline (Wenzek et al.,
-arXiv:1911.00359 filter web text by LM perplexity; Gopher/Rae et al.
-use the same signal). Documents whose tokens are improbable under a
-corpus-level LM (boilerplate, gibberish, lorem-ipsum, wrong-language
-residue) score a high negative log-likelihood and can be dropped.
+"""Unigram language-model scoring over a document corpus — the signal
+of CCNet-style perplexity filtering (Wenzek et al., arXiv:1911.00359
+filter web text by LM perplexity; Gopher/Rae et al. use the same
+signal). Documents whose tokens are improbable under a corpus-level LM
+(boilerplate, gibberish, lorem-ipsum, wrong-language residue) score a
+high surprisal.
 
 Distributed shape (the tfidf lesson applied):
 
@@ -79,22 +79,3 @@ def unigram_lm_scores(
         "surprisal_bits",
         F.expr("(1000 * surprisal_bits) div n_tokens").alias("bits_per_token_milli"),
     )
-
-
-def perplexity_filter(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_bits_per_token: float = 14.0,
-) -> DataFrame:
-    """Keep documents whose exact integer bit-surprisal per token is
-    at or below ``max_bits_per_token`` (CCNet keeps the low-perplexity
-    head/middle of the corpus). Deterministic on any engine. Returns
-    the input rows of the survivors; token-less documents are never
-    kept."""
-    scores = unigram_lm_scores(df, id_col, text_col)
-    keep = scores.filter(
-        F.col("bits_per_token_milli")
-        <= F.lit(int(round(max_bits_per_token * 1000)))
-    ).select(id_col)
-    return df.join(keep, id_col, "left_semi")

@@ -33,11 +33,9 @@ from ..functions import text as TX
 from ..functions.cleaning import ensure_columns
 from ..model.star import oracle_with_chain, register_star_views
 from ..multimodal.binary_ops import attach_binary_payload, decode_image_stub
-from ..operators.decontamination import decontaminate
 from ..operators.dedup import (
     dedup_exact,
     minhash_near_dup_pairs,
-    near_dup_clusters,
     ngram_jaccard_pairs,
     simhash_near_dup_pairs,
 )
@@ -54,6 +52,7 @@ from ..operators.training import (
 )
 from ..operators.upsert import incremental_upsert
 from ..pin import pin
+from ..pipelines import corpus_pipeline as CP
 from ..sources.catalog import load_table, register_base_views
 from ..sources.readers import read_csv, read_json, read_parquet
 from ..sources.writers import write_csv, write_json, write_parquet
@@ -1587,10 +1586,10 @@ def _spark_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _duck_lang_id(cols: str = "") -> str:
-    """Rows `({cols}predicted_lang)` of `documents`: functions.text.lang_id
-    as per-language stopword shares, their max, and a CASE. `cols` carries
-    columns through, e.g. "doc_id, text, "."""
+def _duck_lang_id(src: str = "documents") -> str:
+    """Rows `(doc_id, text, predicted_lang)` of relation `src`:
+    functions.text.lang_id as per-language stopword shares, their max,
+    and a CASE."""
     toks = _DUCK_TOKENS
     scores = []
     for lang in sorted(TX.LANG_STOPWORDS):
@@ -1606,8 +1605,8 @@ def _duck_lang_id(cols: str = "") -> str:
         case += f"WHEN s_{lg} = __best AND __best > 0 THEN '{lg}' "
     case += "ELSE 'und' END"
     return f"""
-  SELECT {cols}{case} AS predicted_lang FROM (
-    SELECT *, {best} AS __best FROM (SELECT {cols}{", ".join(scores)} FROM documents) s0
+  SELECT doc_id, text, {case} AS predicted_lang FROM (
+    SELECT *, {best} AS __best FROM (SELECT doc_id, text, {", ".join(scores)} FROM {src}) s0
   ) s1"""
 
 
@@ -1963,98 +1962,82 @@ FROM documents GROUP BY lang ORDER BY lang
 """
 
 
-_DECON_MOD = 7  # benchmark stratum: raw docs with doc_id % 7 == 0
 # leakage-safe split operating point (funnel stages 6-8): cluster-keyed
 # 80/10/10 via the portable md5 scheme
 _SPLIT_SEED = "split-v1"
 _SPLIT_VAL_FRAC = 0.1
 _SPLIT_TEST_FRAC = 0.1
-_DECON_MIN_OVERLAP = 2  # contaminated = >= 2 distinct shared 5-grams
-
-
-def _funnel_stages(spark: SparkSession, sf_dir: str):
-    """The funnel's shared stage chain up to the cluster components —
-    ONE definition used by both the registry query
-    (`_spark_curation_funnel`) and the 64× invariant verifier
-    (`scripts/funnel_invariants_scale.py`), so the scale check cannot
-    silently drift from the pipeline it certifies (r13 review).
-    Returns (docs, s1 lang, s2 quality, s3 exact-dedup, edges, comp)."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    s1 = docs.filter(TX.lang_id("text") == "en")
-    s2 = s1.filter(TX.quality_score("text") >= 0.75)
-    s3 = dedup_exact(s2, ["text"], order_by=["doc_id"])
-    edges = ngram_jaccard_pairs(
-        s3, "doc_id", "text", n=_NGRAM_N, min_jaccard=_LSH_TRUTH_MIN_J
-    ).select("id_a", "id_b")
-    comp = near_dup_clusters(s3.select("doc_id"), "doc_id", edges)
-    return docs, s1, s2, s3, edges, comp
 
 
 def _spark_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end training-corpus curation funnel — the composite an
-    LLM data pipeline actually runs, with per-stage survivor counts:
-    language filter (en) → quality floor (≥0.75) → exact dedup
-    (earliest doc per text) → NEAR-dup cluster collapse (connected
-    components over the exact word-5-gram Jaccard≥0.8 pair graph, keep
-    the min-id representative per component — pairwise detection alone
-    can't collapse chained duplicates A~B~C to one survivor) →
-    benchmark DECONTAMINATION (drop survivors that are benchmark
-    members or share ≥2 distinct word-5-grams with the benchmark
-    corpus — the GPT-3-style eval-overlap scrub; the benchmark is the
-    deterministic doc_id % 7 == 0 stratum of the RAW corpus, so both
-    engines derive the identical eval set with no side state). Every
-    stage is the already-oracled operator, composed; output is one row
-    per stage so the oracle checks the whole funnel's selectivity AND
-    token mass. The components stage is the alternating
-    large-star/small-star contraction (operators.dedup.near_dup_clusters); its DuckDB oracle
+    """End-to-end training-corpus curation funnel, one row per stage:
+    the corpus pipeline's own stage list (`pipelines/corpus_pipeline`
+    `STAGES`, folded lazily) — cleaned text (normalize + PII scrub) →
+    language filter (en) → quality floor (≥0.75, repeated-token
+    fraction ≤0.8) → exact dedup (earliest doc per text) → NEAR-dup
+    cluster collapse (connected components over the exact word-5-gram
+    Jaccard≥0.8 pair graph, min-id representative per component) →
+    benchmark DECONTAMINATION (drop benchmark members, the doc_id % 7 ==
+    0 stratum, and survivors sharing ≥2 distinct word-5-grams with it)
+    — then a leakage-safe split over the exact-dedup survivors. Each
+    row counts a stage's docs and tokens, so the oracle checks the
+    pipeline's whole composition: its selectivity AND token mass. The
+    components stage is the alternating large-star/small-star
+    contraction (operators.dedup.near_dup_clusters); its DuckDB oracle
     is a recursive-CTE transitive closure over the identical edge set.
     The decontamination stage is operators.decontamination (broadcast
     bench-gram inverted index); its oracle is the same distinct-gram
     overlap count in SQL."""
-    docs, s1, s2, s3, edges, comp = _funnel_stages(spark, sf_dir)
-    s4 = s3.join(
-        comp.filter(F.col("cluster_id") == F.col("doc_id")).select("doc_id"), "doc_id"
-    )
-    bench = docs.filter(F.col("doc_id") % _DECON_MOD == 0)
-    s5 = decontaminate(
-        s4.filter(F.col("doc_id") % _DECON_MOD != 0),
-        bench,
-        "doc_id",
-        "text",
-        n=_NGRAM_N,
-        min_overlap=_DECON_MIN_OVERLAP,
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    frames, run = CP.fold_stages(docs)
     # leakage-safe split: cluster-keyed train/val/test over the
     # EXACT-deduped population (near-dups still present — the regime
     # where doc-keyed splits leak eval near-copies into train). Reuses
-    # the funnel's already-computed components; same md5 determinism
+    # the fold's already-computed components; same md5 determinism
     # scheme as the sampling ops, so the DuckDB oracle recomputes the
     # identical assignment.
     splits = leakage_safe_split(
-        s3, "doc_id", clusters=comp,
+        frames["dedup"], "doc_id", clusters=run.comp,
         val_frac=_SPLIT_VAL_FRAC, test_frac=_SPLIT_TEST_FRAC, seed=_SPLIT_SEED,
     )
-
-    def _stage(df: DataFrame, idx: int, name: str) -> DataFrame:
-        return df.agg(
+    stages = [
+        ("raw", docs),
+        *frames.items(),
+        *((f"split_{s}", splits.filter(F.col("split") == s)) for s in ("train", "val", "test")),
+    ]
+    rows = [
+        df.agg(
             F.count("*").alias("n_docs"),
             F.sum(TX.token_count("text")).cast("bigint").alias("total_tokens"),
-        ).select(
-            F.lit(idx).alias("stage_idx"), F.lit(name).alias("stage"), "n_docs", "total_tokens"
-        )
+        ).select(F.lit(i).alias("stage_idx"), F.lit(name).alias("stage"), "n_docs", "total_tokens")
+        for i, (name, df) in enumerate(stages)
+    ]
+    return reduce(DataFrame.unionByName, rows).orderBy("stage_idx")
 
-    return (
-        _stage(docs, 0, "raw")
-        .unionByName(_stage(s1, 1, "lang_en"))
-        .unionByName(_stage(s2, 2, "quality"))
-        .unionByName(_stage(s3, 3, "dedup"))
-        .unionByName(_stage(s4, 4, "cluster_dedup"))
-        .unionByName(_stage(s5, 5, "decontaminated"))
-        .unionByName(_stage(splits.filter(F.col("split") == "train"), 6, "split_train"))
-        .unionByName(_stage(splits.filter(F.col("split") == "val"), 7, "split_val"))
-        .unionByName(_stage(splits.filter(F.col("split") == "test"), 8, "split_test"))
-        .orderBy("stage_idx")
+
+def _duck_clean_text() -> str:
+    """corpus_pipeline.funnel_input's text rewrite of `text` in DuckDB:
+    functions.text.normalize_text (translate the typographic quotes and
+    dashes, drop zero-width/format characters, space out exotic spaces
+    and control characters, collapse whitespace runs, trim), then the
+    scrub_pii chain email → phone → ipv4 under RE2. Character classes
+    are written as RE2 `\\x{...}` escapes (a SQL string cannot carry
+    the NUL its class starts at)."""
+
+    def re2(cls: str) -> str:
+        return "".join(c if " " < c < "\x7f" else f"\\x{{{ord(c):04x}}}" for c in cls)
+
+    src = TX._QUOTE_SRC + TX._DASH_SRC
+    dst = (TX._QUOTE_DST + TX._DASH_DST).replace("'", "''")
+    out = (
+        "trim(regexp_replace(regexp_replace(regexp_replace("
+        f"translate(text, '{src}', '{dst}'),"
+        f" '{re2(TX._ZERO_WIDTH_RE)}', '', 'g'),"
+        f" '{re2(TX._SPACE_RE)}', ' ', 'g'), '\\s+', ' ', 'g'))"
     )
+    for _, pat in TX._PII_PATTERNS:
+        out = f"regexp_replace({out}, '{pat}', '[PII]', 'g')"
+    return out
 
 
 def _funnel_oracle() -> str:
@@ -2065,33 +2048,37 @@ def _funnel_oracle() -> str:
         f" CAST(sum(len({toks})) AS BIGINT) AS total_tokens FROM {{src}}"
     )
     return f"""
-WITH RECURSIVE s1 AS (
-  SELECT doc_id, text FROM ({_duck_lang_id("doc_id, text, ")}
-  ) f2 WHERE predicted_lang = 'en'
+WITH RECURSIVE src AS (SELECT doc_id, {_duck_clean_text()} AS text FROM documents),
+s1 AS (
+  SELECT doc_id, text FROM ({_duck_lang_id("src")}
+  ) f2 WHERE predicted_lang = '{CP.LANG}'
 ),
-s2 AS (SELECT doc_id, text FROM s1 WHERE {q} >= 0.75),
+s2 AS (
+  SELECT doc_id, text FROM s1
+  WHERE {q} >= {CP.MIN_QUALITY} AND {_duck_repeat_fraction(1)} <= {CP.MAX_REPETITION}
+),
 s3 AS (SELECT min(doc_id) AS doc_id, text FROM s2 GROUP BY text),
 s4grams AS ({_duck_word_grams(f"(SELECT doc_id, {toks} AS t FROM s3) s3t")}),
-{_duck_jaccard("s4grams", "a.doc_id < b.doc_id", _LSH_TRUTH_MIN_J)},
+{_duck_jaccard("s4grams", "a.doc_id < b.doc_id", CP.MIN_JACCARD)},
 {_duck_components("s3", "doc_id", "truth")},
 s4 AS (
   SELECT s3.doc_id, s3.text FROM s3
   JOIN comp ON comp.doc_id = s3.doc_id AND comp.cluster_id = s3.doc_id
 ),
 s5bench AS ({_duck_word_grams(
-    f"(SELECT {toks} AS t FROM documents WHERE doc_id % {_DECON_MOD} = 0) bd", with_id=False
+    f"(SELECT {toks} AS t FROM src WHERE doc_id % {CP.BENCH_MOD} = 0) bd", with_id=False
 )}),
 s5traing AS ({_duck_word_grams(
-    f"(SELECT doc_id, {toks} AS t FROM s4 WHERE doc_id % {_DECON_MOD} <> 0) td"
+    f"(SELECT doc_id, {toks} AS t FROM s4 WHERE doc_id % {CP.BENCH_MOD} <> 0) td"
 )}),
 s5bad AS (
   SELECT doc_id FROM (
     SELECT doc_id, COUNT(*) AS c FROM s5traing JOIN s5bench USING (g) GROUP BY doc_id
-  ) ov WHERE c >= {_DECON_MIN_OVERLAP}
+  ) ov WHERE c >= {CP.DECON_MIN_OVERLAP}
 ),
 s5 AS (
   SELECT doc_id, text FROM s4
-  WHERE doc_id % {_DECON_MOD} <> 0 AND doc_id NOT IN (SELECT doc_id FROM s5bad)
+  WHERE doc_id % {CP.BENCH_MOD} <> 0 AND doc_id NOT IN (SELECT doc_id FROM s5bad)
 ),
 -- leakage-safe split: the same md5(seed || ':' || cluster_id)
 -- fixed-width-hex scheme operators.training._hash_hex computes —
@@ -3145,26 +3132,28 @@ def _spark_repetition(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
     )
 
 
-def _repetition_oracle(n: int) -> str:
+def _duck_repeat_fraction(n: int) -> str:
+    """functions.text.repeated_token_fraction (n=1) or
+    repeated_ngram_fraction(n) of `text`: the share of tokens (n-grams)
+    that repeat an earlier one, as a DOUBLE."""
     toks = _DUCK_TOKENS
-    if n == 1:
-        arr = toks
-        thr = 0.5
-    else:
-        arr = (
-            f"list_transform(generate_series(1, greatest(len({toks}) - {n - 1}, 1)),"
-            f" i -> array_to_string(({toks})[i:i+{n - 1}], ' '))"
-        )
-        thr = 0.2
-    frac = (
+    arr = toks if n == 1 else (
+        f"list_transform(generate_series(1, greatest(len({toks}) - {n - 1}, 1)),"
+        f" i -> array_to_string(({toks})[i:i+{n - 1}], ' '))"
+    )
+    return (
         f"(CAST(len({arr}) - len(list_distinct({arr})) AS DOUBLE)"
         f" / CAST(greatest(len({arr}), 1) AS DOUBLE))"
     )
+
+
+def _repetition_oracle(n: int) -> str:
+    thr = 0.5 if n == 1 else 0.2
     return f"""
 SELECT lang,
        sum(CASE WHEN f > {thr} THEN 1 ELSE 0 END) AS n_flagged,
        CAST(sum(CAST(round(f * 100, 0) AS BIGINT)) AS BIGINT) AS centisum
-FROM (SELECT lang, {frac} AS f FROM documents) __r
+FROM (SELECT lang, {_duck_repeat_fraction(n)} AS f FROM documents) __r
 GROUP BY lang ORDER BY lang
 """
 

@@ -1,5 +1,7 @@
 """Invariant-based 64× verification of the curation funnel's cluster
-stage (VERDICT r12 task 5).
+stage (VERDICT r12 task 5). The stage chain is the corpus pipeline's
+stage list (`pipelines.corpus_pipeline.fold_stages`), the same one the
+pipeline runs and the registry's `pipeline_curation_funnel` folds.
 
 The funnel's first-principles oracle — a DuckDB recursive-CTE
 transitive closure over the pair graph — is a FIXTURE-SCALE tool by
@@ -46,23 +48,24 @@ sys.path.insert(0, _repo)
 from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-# The stage chain comes from the REGISTRY's own builder — one
-# definition, so this verifier cannot drift from the pipeline it
-# certifies (r13 review).
-from adi_226_datawarehouse_project_spark.plans.operators_suite import (  # noqa: E402
-    _funnel_stages,
+# The stage chain is the corpus pipeline's own stage list — the one
+# definition the pipeline runs and the registry's funnel query folds,
+# so this verifier cannot drift from the pipeline it certifies.
+from adi_226_datawarehouse_project_spark.pipelines.corpus_pipeline import (  # noqa: E402
+    fold_stages,
 )
+from adi_226_datawarehouse_project_spark.sources.catalog import load_table  # noqa: E402
 
 
 def compute_invariants(spark: SparkSession, sf_dir: str) -> dict:
-    """All five invariants over the registry's own stage chain;
+    """All five invariants over the pipeline's own stage chain;
     importable so tests/test_funnel_invariants.py can run the same
     checks at fixture scale every round (rot-guard for this script)."""
     t0 = time.time()
-    _docs, _s1, _s2, s3, edges, comp = _funnel_stages(spark, sf_dir)
-    comp = comp.cache()
-    s3 = s3.select("doc_id", "text").cache()
-    edges = edges.cache()
+    frames, run = fold_stages(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
+    comp = run.comp.cache()
+    s3 = frames["dedup"].select("doc_id", "text").cache()
+    edges = run.edges.cache()
 
     out: dict = {"sf_dir": sf_dir}
     n_s3 = s3.count()
@@ -121,8 +124,7 @@ def compute_invariants(spark: SparkSession, sf_dir: str) -> dict:
         "ok": surv_pair_edges == 0 and n_surv == n_clusters,
     }
 
-    s4 = s3.join(survivors, "doc_id")
-    n_s4 = s4.count()
+    n_s4 = frames["cluster_dedup"].count()
     out["I5_downstream"] = {
         "cluster_dedup_stage": n_s4,
         "ok": n_s4 == n_surv,

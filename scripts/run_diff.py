@@ -8,6 +8,10 @@ The optional second arg restricts the sweep to queries whose name
 starts with one of the comma-separated prefixes (e.g. "dedup_,sim_"
 for the near-dup/similarity families on a replicated skew corpus —
 oracle-ing all 50 queries at 64× would take hours in DuckDB).
+
+Each PASS line carries the sha256 of the query's normalized Spark rows
+(`hash=`), so the PASS lines of two sweeps diff to nothing when the
+two trees return the same results.
 """
 import os
 import sys
@@ -45,7 +49,8 @@ for name, fn in qs.items():
     t0 = time.time()
     try:
         res = compare_query(spark, fn, oracles.get(name), sf_dir, name)
-        print(f"PASS {name}: rows={res['rows']} oracle={res['oracle']} {time.time()-t0:.1f}s", flush=True)
+        print(f"PASS {name}: rows={res['rows']} oracle={res['oracle']} hash={res['hash']} "
+              f"{time.time()-t0:.1f}s", flush=True)
         passed += 1
     except Exception as e:
         print(f"FAIL {name}: {type(e).__name__}: {e}", flush=True)

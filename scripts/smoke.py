@@ -159,10 +159,10 @@ def main() -> int:
     print("pin gate OK: only pin.py materializes frames")
 
     # reachability: every package module is imported by some non-test
-    # file; `__init__` re-exports and a module's own imports don't count
+    # file; `__init__` re-exports and a module's own imports don't count.
+    # A keep entry that becomes imported (or is gone) fails too.
     keep = {
         "plans.golden_df": "the DataFrame twin the goldens are compared against",
-        "pipelines.corpus_pipeline": "a pipeline entry point",
         "operators.skew": "salting, the candidate fix for the hot-key items",
     }
     def dotted(f: Path) -> str:
@@ -193,8 +193,15 @@ def main() -> int:
             imported.update(n for n in names if n != here)
     short = {m: m.removeprefix(f"{pkg.name}.") for m in mods}
     unreached = [short[m] for m in mods if m not in imported and short[m] not in keep]
+    stale_mods = sorted(
+        k for k in keep if f"{pkg.name}.{k}" in imported or f"{pkg.name}.{k}" not in mods
+    )
     if unreached:
         print("modules no non-test file imports:\n  " + "\n  ".join(unreached), file=sys.stderr)
+    if stale_mods:
+        print("module keep entries that are imported or gone (drop them):\n  "
+              + "\n  ".join(stale_mods), file=sys.stderr)
+    if unreached or stale_mods:
         return 1
     print(f"reachability gate OK: {len(mods) - len(keep)} modules imported outside "
           f"tests, {len(keep)} kept ({', '.join(sorted(keep))})")
@@ -220,8 +227,6 @@ def main() -> int:
         "ingest_if_absent": "K8, the idempotent-skip source check",
         "read_json_with_csv_fallback": "S5, the JSON-then-CSV source policy",
         "wait_for": "the sensor poll of SURVEY 2.12",
-        "instrument_funnel": "per-stage funnel counts, the reference's row logging",
-        "funnel_counts": "per-stage funnel counts, the reference's row logging",
         "matches": "a staging validation check",
         "in_set": "a staging validation check",
         "approx_unique": "a staging validation check",

@@ -1,6 +1,8 @@
 """Local replica of the driver's differential check: run each declared
 Spark query and its DuckDB oracle at a given SF and compare row count,
-schema (column names), and exact values order-insensitively.
+schema (column names), and exact values order-insensitively. Each
+comparison also returns the sha256 of the normalized Spark rows, so two
+sweeps (say, of two commits) can show their results are identical.
 
 Stricter than a tolerance check on purpose — the driver hash-compares,
 so we demand exact equality of the normalized string form of every
@@ -9,6 +11,7 @@ returned)."""
 
 from __future__ import annotations
 
+import hashlib
 import math
 import os
 from datetime import date, datetime
@@ -64,16 +67,14 @@ def run_duckdb(sql: str, sf_dir: str):
 
 def compare_query(spark, query_fn, oracle: str | None, sf_dir: str, name: str = "?"):
     df = query_fn(spark, sf_dir)
-    s_cols = df.columns
-    s_rows = [tuple(r) for r in df.collect()]
+    sc, sr = _norm_rows(df.columns, [tuple(r) for r in df.collect()])
+    digest = hashlib.sha256(repr((sc, sr)).encode()).hexdigest()
     if oracle is None:
-        assert len(s_rows) >= 0
-        return {"name": name, "rows": len(s_rows), "oracle": "rows-only"}
+        return {"name": name, "rows": len(sr), "oracle": "rows-only", "hash": digest}
     d_cols, d_rows = run_duckdb(oracle, sf_dir)
-    sc, sr = _norm_rows(s_cols, s_rows)
     dc, dr = _norm_rows(d_cols, d_rows)
     assert sc == dc, f"{name}: column mismatch spark={sc} duck={dc}"
     assert len(sr) == len(dr), f"{name}: rowcount spark={len(sr)} duck={len(dr)}"
     mism = [(a, b) for a, b in zip(sr, dr) if a != b]
     assert not mism, f"{name}: {len(mism)} mismatched rows; first: {mism[:3]}"
-    return {"name": name, "rows": len(sr), "oracle": "match"}
+    return {"name": name, "rows": len(sr), "oracle": "match", "hash": digest}

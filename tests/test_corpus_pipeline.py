@@ -1,16 +1,22 @@
 """End-to-end LLM corpus-curation pipeline on the DAG executor:
 zone outputs, independent count checks, shard layout, idempotent
-re-run."""
+re-run, and agreement with the registry's `pipeline_curation_funnel`
+(both are built from the pipeline's one stage list)."""
 
 from __future__ import annotations
 
 import os
 
+from conftest import SF_SMALL
 from pyspark.sql import functions as F
 
 from adi_226_datawarehouse_project_spark.functions import text as TX
 from adi_226_datawarehouse_project_spark.pipelines.corpus_pipeline import (
+    SHARD_SIZE,
     run_corpus_pipeline,
+)
+from adi_226_datawarehouse_project_spark.plans.operators_suite import (
+    _spark_curation_funnel,
 )
 from adi_226_datawarehouse_project_spark.sources.catalog import load_table
 from adi_226_datawarehouse_project_spark.sources.writers import read_run_manifest
@@ -20,13 +26,15 @@ _ZONES = ("clean", "dedup", "decontaminated", "packed", "shards")
 
 def test_corpus_pipeline_end_to_end(spark, sf_dir, tmp_path):
     out = str(tmp_path / "corpus")
-    results = run_corpus_pipeline(spark, sf_dir, out, shard_size=50)
+    results = run_corpus_pipeline(spark, sf_dir, out)
     assert all(r.state == "SUCCESS" for r in results.values()), {
         k: (v.state, v.error) for k, v in results.items()
     }
 
-    # clean zone matches an independently-derived filter + scrub
-    docs = load_table(spark, sf_dir, "documents")
+    # clean zone matches an independently-derived scrub + filter
+    docs = load_table(spark, sf_dir, "documents").withColumn(
+        "text", TX.scrub_pii(TX.normalize_text("text"))
+    )
     expect_clean = docs.filter(
         (TX.lang_id("text") == "en")
         & (TX.quality_score("text") >= 0.75)
@@ -47,7 +55,7 @@ def test_corpus_pipeline_end_to_end(spark, sf_dir, tmp_path):
     # shard layout: hive partitions, bounded size, ranks complete
     shards = spark.read.parquet(os.path.join(out, "shards"))
     sizes = {r["shard"]: r["n"] for r in shards.groupBy("shard").agg(F.count("*").alias("n")).collect()}
-    assert all(s <= 50 for s in sizes.values())
+    assert all(s <= SHARD_SIZE for s in sizes.values())
     ranks = sorted(r["shuffle_rank"] for r in shards.select("shuffle_rank").collect())
     assert ranks == list(range(n["decontaminated"]))
 
@@ -57,9 +65,31 @@ def test_corpus_pipeline_end_to_end(spark, sf_dir, tmp_path):
         assert man["stats"][z] == n[z]
 
     # idempotent re-run: every zone skipped, nothing rewritten
-    again = run_corpus_pipeline(spark, sf_dir, out, shard_size=50)
+    again = run_corpus_pipeline(spark, sf_dir, out)
     for z in _ZONES:
         assert again[z].state == "SKIPPED"
+
+
+def test_pipeline_counts_match_registry_funnel(spark, tmp_path):
+    """The pipeline's per-stage counts equal the oracle-checked registry
+    funnel's rows: the clean write's filter-stage observations (in the
+    manifest) for lang_en and quality, the dedup zone for cluster_dedup
+    and the decontaminated zone for decontaminated."""
+    out = str(tmp_path / "corpus_agree")
+    results = run_corpus_pipeline(spark, SF_SMALL, out)
+    assert all(r.state == "SUCCESS" for r in results.values())
+    stats = read_run_manifest(spark, os.path.join(out, "manifest")).collect()[0]["stats"]
+    registry = {
+        r["stage"]: r["n_docs"] for r in _spark_curation_funnel(spark, SF_SMALL).collect()
+    }
+    assert stats["input"] == registry["raw"]
+    assert stats["lang_en"] == registry["lang_en"]
+    assert stats["quality"] == registry["quality"] == results["clean"].value
+    assert results["dedup"].value == registry["cluster_dedup"]
+    assert results["decontaminated"].value == registry["decontaminated"]
+    # monotone and not vacuous (at sf0.001: 500, 466, 466, 445, 378)
+    n = [registry[k] for k in ("raw", "lang_en", "quality", "cluster_dedup", "decontaminated")]
+    assert n == sorted(n, reverse=True) and n[0] > n[-1] > 0, n
 
 
 def test_corpus_pipeline_failure_poisons_descendants_and_resumes(
@@ -93,105 +123,13 @@ def test_corpus_pipeline_failure_poisons_descendants_and_resumes(
     assert resumed["shards"].state == "SUCCESS"
     assert resumed["manifest"].state == "SUCCESS"
 
-def test_corpus_pipeline_optional_scrub_and_lm_stages(spark, sf_dir, tmp_path):
-    out = str(tmp_path / "corpus_opt")
-    results = run_corpus_pipeline(
-        spark, sf_dir, out, shard_size=50, passage_n=5, max_bits_per_token=9.0
-    )
-    assert all(r.state == "SUCCESS" for r in results.values()), {
-        k: (v.state, v.error) for k, v in results.items()
-    }
-    zones = ("clean", "scrubbed", "dedup", "decontaminated", "lm_filtered",
-             "packed", "shards")
-    n = {z: results[z].value for z in zones}
-    # funnel: scrub rewrites in place (same row count), filters shrink
-    assert n["scrubbed"] == n["clean"]
-    assert n["dedup"] >= n["decontaminated"] >= n["lm_filtered"] > 0
-    assert n["packed"] == n["lm_filtered"] == n["shards"]
-
-    # the scrubbed zone carries recomputed token counts consistent with
-    # its rewritten text
-    import os as _os
-
-    from adi_226_datawarehouse_project_spark.functions import text as TX2
-
-    scrubbed = spark.read.parquet(_os.path.join(out, "scrubbed"))
-    bad = scrubbed.filter(TX2.token_count("text") != F.col("n_tokens")).count()
-    assert bad == 0
-
-    # keep-one semantics: after the scrub no 5-gram survives in >1 doc
-    # beyond its owner, so a re-scan flags nothing new
-    from adi_226_datawarehouse_project_spark.operators.passage_dedup import (
-        repeated_passage_spans,
-    )
-
-    residual = repeated_passage_spans(scrubbed, "doc_id", "text", n=5).count()
-    assert residual == 0
-
-    # LM gate: every survivor satisfies the bits/token ceiling the
-    # operator enforces (recompute over the filtered zone's own corpus
-    # would shift the model, so check against the DECONTAMINATED model)
-    from adi_226_datawarehouse_project_spark.operators.lm_score import (
-        unigram_lm_scores,
-    )
-
-    pre = spark.read.parquet(_os.path.join(out, "decontaminated"))
-    kept_ids = {r["doc_id"] for r in spark.read.parquet(
-        _os.path.join(out, "lm_filtered")).select("doc_id").collect()}
-    scores = unigram_lm_scores(pre, "doc_id", "text").collect()
-    for r in scores:
-        assert (r["bits_per_token_milli"] <= 9000) == (r["doc_id"] in kept_ids)
-
-    # manifest includes the optional zones
-    man = read_run_manifest(spark, _os.path.join(out, "manifest")).collect()[0]
-    for z in zones:
-        assert man["stats"][z] == n[z]
-
-
-def test_corpus_pipeline_optional_fuzzy_stage(spark, sf_dir, tmp_path):
-    import os as _os
-
-    out = str(tmp_path / "corpus_fuzzy")
-    results = run_corpus_pipeline(
-        spark, sf_dir, out, shard_size=50, fuzzy_min_jaccard=0.5
-    )
-    assert all(r.state == "SUCCESS" for r in results.values()), {
-        k: (v.state, v.error) for k, v in results.items()
-    }
-    n = {z: results[z].value for z in (
-        "clean", "dedup", "decontaminated", "fuzzy_decontaminated",
-        "packed", "shards",
-    )}
-    # the fuzzy scrub only removes; pack/shard consume ITS output
-    assert n["decontaminated"] >= n["fuzzy_decontaminated"] > 0
-    assert n["packed"] == n["fuzzy_decontaminated"] == n["shards"]
-
-    # the survivor set equals applying the operator to the zone directly
-    from adi_226_datawarehouse_project_spark.operators.decontamination import (
-        fuzzy_decontaminate,
-    )
-    from adi_226_datawarehouse_project_spark.sources.catalog import load_table
-
-    pre = spark.read.parquet(_os.path.join(out, "decontaminated"))
-    bench = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % 7 == 0
-    ).select(F.col("doc_id").alias("bench_id"), "text")
-    want = {r["doc_id"] for r in fuzzy_decontaminate(
-        pre, bench, "doc_id", "text", "bench_id",
-        shingle_size=5, min_jaccard_est=0.5,
-    ).select("doc_id").collect()}
-    got = {r["doc_id"] for r in spark.read.parquet(
-        _os.path.join(out, "fuzzy_decontaminated")).select("doc_id").collect()}
-    assert got == want
-
-
 def test_clean_zone_token_counts_match_output_text(spark, sf_dir, tmp_path):
     import os as _os
 
     from adi_226_datawarehouse_project_spark.functions import text as TX2
 
     out = str(tmp_path / "corpus_ntok")
-    results = run_corpus_pipeline(spark, sf_dir, out, shard_size=50)
+    results = run_corpus_pipeline(spark, sf_dir, out)
     assert results["clean"].state == "SUCCESS"
     clean = spark.read.parquet(_os.path.join(out, "clean"))
     bad = clean.filter(
@@ -249,3 +187,35 @@ def test_decontamination_matches_on_normalized_text(spark, tmp_path):
     }
     assert 1 not in survivors  # the contaminated twin must be scrubbed
     assert {2, 3, 4} <= survivors  # unrelated docs survive
+
+
+def test_funnel_oracle_clean_text_matches_spark(spark):
+    """The fixtures hold no text the funnel's rewrite changes, so the
+    DuckDB derivation of it (`_duck_clean_text`) is checked here on text
+    it does change: typographic quotes and dashes, exotic and zero-width
+    spaces, control characters, whitespace runs and each PII class."""
+    import duckdb
+    import pandas as pd
+
+    from adi_226_datawarehouse_project_spark.pipelines.corpus_pipeline import funnel_input
+    from adi_226_datawarehouse_project_spark.plans.operators_suite import _duck_clean_text
+
+    texts = [
+        "He said \u201chi\u201d \u2014 it\u2019s \u00abfine\u00bb",
+        "a\u00a0\u00a0b\u200bc\u00add\u3000e\u2009f",
+        " \tx\x01y\n\n z\x7f ",
+        "mail bob.smith@example.org, call 555-123-4567 or ping 10.0.0.12 now",
+        "plain text stays as it is",
+    ]
+    docs = pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
+    got = {
+        r["doc_id"]: r["text"]
+        for r in funnel_input(spark.createDataFrame(docs)).collect()
+    }
+    con = duckdb.connect()
+    con.register("documents", docs)
+    want = dict(
+        con.execute(f"SELECT doc_id, {_duck_clean_text()} AS text FROM documents").fetchall()
+    )
+    assert got == want
+    assert got[4] == texts[4] and all(got[i] != texts[i] for i in range(4))

@@ -1,9 +1,9 @@
 """Fixture-scale rot-guard for the scale verifier
 (scripts/funnel_invariants_scale.py): the five closure-free cluster
 invariants must hold at sf0.001 through the SAME importable function
-the 64x/256x measurements run, and the stage chain comes from the
-registry's own builder — so neither the script nor the invariants can
-silently drift from the funnel they certify."""
+the 64x/256x measurements run, and the stage chain is the corpus
+pipeline's own stage list — so neither the script nor the invariants
+can silently drift from the funnel they certify."""
 
 import sys
 from pathlib import Path

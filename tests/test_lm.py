@@ -1,14 +1,11 @@
 """Unigram LM scoring: exact integer bit-surprisal vs a pure-Python
-reference, perplexity filter semantics, and plan-shape gates."""
+reference, and plan-shape gates."""
 
 from __future__ import annotations
 
 import pytest
 
-from adi_226_datawarehouse_project_spark.operators.lm_score import (
-    perplexity_filter,
-    unigram_lm_scores,
-)
+from adi_226_datawarehouse_project_spark.operators.lm_score import unigram_lm_scores
 
 _DOCS = [
     (0, "the cat sat on the mat"),
@@ -35,7 +32,7 @@ def _py_unigram(docs):
     for i, ts in toks.items():
         bits = sum(((T + V) // (cnt[w] + 1)).bit_length() - 1 for w in ts)
         out[i] = (len(ts), bits)
-    return out, T, V
+    return out
 
 
 @pytest.fixture(scope="module")
@@ -48,7 +45,7 @@ def test_unigram_bits_exact(spark, docs_df):
         r["doc_id"]: r
         for r in unigram_lm_scores(docs_df, "doc_id", "text").collect()
     }
-    want, _, _ = _py_unigram(_DOCS)
+    want = _py_unigram(_DOCS)
     assert set(got) == set(want)
     for i, (n, bits) in want.items():
         assert got[i]["n_tokens"] == n
@@ -64,20 +61,6 @@ def test_gibberish_scores_higher_than_common_text(spark, docs_df):
     }
     assert got[3] > got[0]  # rare-token doc beats common-token doc
     assert got[4] < got[0]  # all-stopword doc is the most predictable
-
-
-def test_perplexity_filter_keeps_low_surprisal_docs(spark, docs_df):
-    want, T, V = _py_unigram(_DOCS)
-    # pick a threshold that splits the fixture: strictly between the
-    # best and worst per-token bit rates
-    rates = {i: (1000 * b) // n for i, (n, b) in want.items()}
-    cut = sorted(rates.values())[len(rates) // 2] / 1000.0
-    kept = perplexity_filter(
-        docs_df, "doc_id", "text", max_bits_per_token=cut
-    ).collect()
-    assert {r["doc_id"] for r in kept} == {i for i, r in rates.items() if r <= cut * 1000}
-    # survivors keep their full input row
-    assert all(r["text"] for r in kept)
 
 
 def test_no_udf_and_no_cartesian(spark, docs_df):
