@@ -267,5 +267,7 @@ def run_corpus_pipeline(
     # independent consumers of the last filtering zone
     tasks += [_task("packed", _packed, [last]), _task("shards", _shards, [last])]
     zone_names = [t.name for t in tasks if t.name != "start"]
-    tasks.append(DagTask("manifest", _manifest, upstream=zone_names))
+    # the manifest skips like a zone: a re-run that skipped every zone
+    # would otherwise rewrite it from empty upstream values
+    tasks.append(_task("manifest", _manifest, zone_names))
     return run_dag(tasks)

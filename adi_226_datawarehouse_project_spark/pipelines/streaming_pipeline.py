@@ -6,12 +6,9 @@ topology a production event pipeline runs, and makes the exactly-once
 argument explicit. Exactly-once here is the standard Structured
 Streaming decomposition — none of the pieces is novel, the CONTRACT is:
 
-1. **Replayable source.** Either the SODA Python DataSource stream
-   (`sources/soda_datasource.py` — ``readBetweenOffsets`` refetches an
-   exact committed ``[start, end)`` slice, and refuses short replays)
-   or the parquet file source (files are immutable; the checkpoint
-   pins the per-batch file list). Either way a restarted query re-reads
-   EXACTLY the slice the failed epoch saw.
+1. **Replayable source.** The parquet file source: files are
+   immutable and the checkpoint pins the per-batch file list, so a
+   restarted query re-reads EXACTLY the slice the failed epoch saw.
 2. **Deterministic, checkpointed transformation.** The session-window
    aggregation's state store is versioned per epoch; a restart resumes
    from the last committed state, so the replayed epoch emits the same
@@ -44,93 +41,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..streaming.cdc_sink import apply_cdc_batch, read_cdc_snapshot
-from ..streaming.events_stream import read_events_stream, session_window_counts
+from ..streaming.cdc_sink import OP_COL, apply_cdc_batch, read_cdc_snapshot
+from ..streaming.events_stream import drain, session_window_counts
 
 SESSION_KEYS = ["user_id", "session_start"]
 SEQ_COL = "seq"
-
-# Only the unit names Spark's own trigger parser accepts (full words,
-# singular or plural — Trigger.ProcessingTime rejects 'ms'/'s'/'min'/'m'
-# with INVALID_INTERVAL_FORMAT, verified against PySpark 4.1.2).
-# Accepting abbreviations here would parse strings that can never start
-# a query — and '2 m' would silently read as milliseconds.
-_INTERVAL_UNIT_SECONDS = {
-    "microsecond": 1e-6,
-    "millisecond": 1e-3,
-    "second": 1.0,
-    "minute": 60.0,
-    "hour": 3600.0,
-}
+GAP = "30 minutes"  # a gap longer than this starts a new session
+WATERMARK = "10 minutes"  # event-time lateness the stream tolerates
 
 
-def _interval_seconds(processing_time: str) -> float:
-    """Seconds in a Spark trigger interval string ('200 milliseconds',
-    '10 seconds', '1 minute'). Accepts exactly the unit grammar
-    Spark's trigger accepts; raises on anything else — the quiesce
-    loop sizes its idleness grace from this, and guessing low silently
-    truncates snapshots."""
-    import re
-
-    m = re.fullmatch(
-        r"\s*(\d+(?:\.\d+)?)\s*([a-zA-Z]+?)s?\s*", processing_time or ""
-    )
-    unit = _INTERVAL_UNIT_SECONDS.get(m.group(2).lower()) if m else None
-    if unit is None:
-        raise ValueError(
-            f"unparseable trigger interval {processing_time!r}; "
-            "expected a Spark-accepted form, e.g. '200 milliseconds', "
-            "'10 seconds', '1 minute'"
-        )
-    return float(m.group(1)) * unit
-
-
-def _default_idle_timeout(processing_time: str) -> float:
-    """Default quiesce deadline, SCALED with the trigger: 12× the
-    interval (= 4× the 3-interval idleness grace), floored at the
-    long-standing 120s. A fixed default tripped the grace-vs-deadline
-    guard for any trigger ≥ 40s; deriving both from the same interval
-    means the guard can never fire on defaults."""
-    return max(120.0, 12.0 * _interval_seconds(processing_time))
-
-
-def soda_events_stream(
-    spark: SparkSession, url_template: str, page_size: int
-) -> DataFrame:
-    """Event stream from a SODA endpoint (or recorded ``file://``
-    pages): one micro-batch per page, string payloads cast via the
-    engine's TRY_CAST cleaning path (P15 — SODA types everything as
-    string)."""
-    from ..sources.soda_datasource import SodaDataSource
-
-    spark.dataSource.register(SodaDataSource)
-    raw = (
-        spark.readStream.format("soda")
-        .schema("event_id string, user_id string, ts string")
-        .option("url_template", url_template)
-        .option("page_size", str(page_size))
-        .load()
-    )
-    return raw.select(
-        F.expr("try_cast(event_id AS BIGINT)").alias("event_id"),
-        F.expr("try_cast(user_id AS BIGINT)").alias("user_id"),
-        F.expr("try_cast(ts AS TIMESTAMP)").alias("event_time"),
-    ).filter(F.col("user_id").isNotNull() & F.col("event_time").isNotNull())
-
-
-def file_events_stream(
-    spark: SparkSession, sf_dir: str, files_per_trigger: int = 8
-) -> DataFrame:
-    """Event stream from the events parquet (the high-throughput path:
-    columnar batches, no driver paging)."""
-    return read_events_stream(
-        spark, sf_dir, maxFilesPerTrigger=str(files_per_trigger)
-    ).select("event_id", "user_id", F.col("ts").alias("event_time"))
-
-
-def session_rows(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "10 minutes"
-) -> DataFrame:
+def session_rows(events: DataFrame) -> DataFrame:
     """Finalized gap-based sessions: append-mode ``session_window``
     aggregate — one output row per closed session, emitted exactly once
     when the watermark passes its end. The aggregation itself is the
@@ -138,25 +58,21 @@ def session_rows(
     the SAME declared shape, so the differential test pins the stream
     EXECUTION (watermark, incremental folds, crash replay), and an
     edit to the aggregation can never diverge the two sides."""
-    return session_window_counts(
-        events.withWatermark("event_time", watermark), gap
-    )
+    return session_window_counts(events.withWatermark("event_time", WATERMARK), GAP)
 
 
-def batch_session_oracle(
-    events: DataFrame, gap: str = "30 minutes"
-) -> DataFrame:
+def batch_session_oracle(events: DataFrame) -> DataFrame:
     """The same sessionization in BATCH mode (``session_window`` works
     identically over a static frame) — the ground truth the streaming
     snapshot must equal."""
-    return session_window_counts(events, gap)
+    return session_window_counts(events, GAP)
 
 
 def _as_changes(sessions: DataFrame) -> DataFrame:
     # seq = session close (micros): a re-emitted identical row folds to
     # itself; a genuinely extended session (possible only if the
     # watermark were re-wound, which Spark never does) would win by seq
-    return sessions.withColumn("op", F.lit("I")).withColumn(
+    return sessions.withColumn(OP_COL, F.lit("I")).withColumn(
         SEQ_COL, F.unix_micros(F.col("session_end"))
     )
 
@@ -166,23 +82,10 @@ def run_sessions_to_cdc(
     events: DataFrame,
     target_path: str,
     checkpoint_path: str,
-    gap: str = "30 minutes",
-    watermark: str = "10 minutes",
     fault_after_publish_epoch: int | None = None,
-    processing_time: str | None = None,
-    idle_timeout: float | None = None,
 ) -> None:
     """Drive the event stream through session windows into the CDC
-    snapshot at ``target_path``. Blocks until drained (file source:
-    availableNow; SODA source: processingTime trigger + stop-on-idle,
-    since the endpoint has no end-of-stream marker).
-
-    ``idle_timeout`` bounds the whole quiesce wait and must exceed the
-    idleness grace (3× the trigger interval). The default SCALES with
-    the trigger — ``max(120, 12 × interval)`` — so coarse triggers
-    (e.g. '1 minute') work out of the box; an explicit value that
-    doesn't clear the grace still raises up front rather than risking
-    a truncated snapshot.
+    snapshot at ``target_path``; blocks until the source is drained.
 
     ``fault_after_publish_epoch`` is the kill-and-resume test hook: the
     N-th foreachBatch call raises AFTER the CDC publish but BEFORE the
@@ -210,96 +113,12 @@ def run_sessions_to_cdc(
                 "injected crash: sink published, checkpoint NOT committed"
             )
 
-    writer = (
-        session_rows(events, gap, watermark)
+    drain(
+        session_rows(events)
         .writeStream.foreachBatch(fold)
         .outputMode("append")
         .option("checkpointLocation", checkpoint_path)
     )
-    if processing_time is not None:
-        # endpoint-style source (no end-of-stream marker): poll until
-        # the source offset stops advancing for a grace period AND no
-        # trigger is mid-flight. lastProgress only updates at batch
-        # COMPLETION, so a fold that runs longer than the grace window
-        # must not count as idleness — that was a silent-truncation
-        # bug (stop mid-batch, return success with pages unread).
-        # idle_timeout bounds the whole wait; hitting it with work
-        # still in flight raises instead of silently returning a
-        # truncated snapshot.
-        import json as _json
-        import time
-
-        # The grace window is only a valid idleness test when it spans
-        # MULTIPLE trigger intervals: with processing_time='10 seconds'
-        # a fixed 4s grace can observe offset-stable + not-busy purely
-        # BETWEEN triggers with pages still unread, stop the stream
-        # mid-feed, and return success with a truncated snapshot — the
-        # precise bug this loop exists to exclude. So derive it:
-        # >= 3 trigger intervals, floor 4s (covers source-poll jitter
-        # at sub-second triggers).
-        grace = max(4.0, 3.0 * _interval_seconds(processing_time))
-        if idle_timeout is None:
-            idle_timeout = _default_idle_timeout(processing_time)
-        if grace >= idle_timeout:
-            raise ValueError(
-                f"idle_timeout={idle_timeout}s must exceed the idleness "
-                f"grace ({grace}s = 3× the {processing_time!r} trigger): "
-                "the quiesce wait would always hit the deadline"
-            )
-        q = writer.trigger(processingTime=processing_time).start()
-        try:
-            last_off, quiet_since = None, time.time()
-            deadline = time.time() + idle_timeout
-            while time.time() - quiet_since < grace:
-                if q.exception() is not None:
-                    raise q.exception()
-                status = q.status or {}
-                busy = bool(
-                    status.get("isTriggerActive") or status.get("isDataAvailable")
-                )
-                p = q.lastProgress
-                if not p or not p.get("sources"):
-                    # startup: no batch has completed yet
-                    quiet_since = time.time()
-                else:
-                    off = _json.dumps(
-                        p["sources"][0].get("endOffset"), sort_keys=True
-                    )
-                    if off != last_off:
-                        # Offsets ADVANCED — the drain is making real
-                        # progress, so idle_timeout (an IDLENESS bound,
-                        # per its name) restarts from here: a healthy
-                        # endpoint with > idle_timeout of total pages
-                        # must not be declared stuck. A hung fold keeps
-                        # busy=true with offsets frozen, so it still
-                        # hits the deadline.
-                        deadline = time.time() + idle_timeout
-                    if off != last_off or busy:
-                        last_off, quiet_since = off, time.time()
-                if time.time() >= deadline:
-                    raise TimeoutError(
-                        f"stream made no offset progress for {idle_timeout}s "
-                        "(endpoint stuck or a fold still in flight); "
-                        "snapshot may be partial — NOT returning success"
-                    )
-                time.sleep(0.2)
-            # A failure can land in the FINAL polling gap: the while
-            # condition exits on quiet >= grace before the next
-            # iteration's exception check runs — without a re-check, a
-            # fold that raised during the last 0.2s sleep would be
-            # silently swallowed and this function would return success
-            # over an uncommitted epoch. Stop FIRST (idempotent; the
-            # finally's stop becomes a no-op) so the check races with
-            # nothing: stop() waits for termination, and any error that
-            # terminated the query is still visible in q.exception().
-            q.stop()
-            if q.exception() is not None:
-                raise q.exception()
-        finally:
-            q.stop()
-    else:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
 
 
 def read_sessions_snapshot(spark: SparkSession, target_path: str) -> DataFrame:

@@ -103,11 +103,13 @@ def run_warehouse_pipeline(
             skip_if=(None if force else lambda p=path: _done(p)),
         )
 
+    manifest_path = os.path.join(out_dir, "manifest")
+
     def _manifest(upstream: dict) -> int:
         stats = {k: v for k, v in upstream.items() if isinstance(v, int)}
         write_run_manifest(
             spark,
-            os.path.join(out_dir, "manifest"),
+            manifest_path,
             job_name="warehouse_pipeline",
             run_utc=run_utc,
             inputs={"sf_dir": sf_dir},
@@ -181,12 +183,14 @@ def run_warehouse_pipeline(
         tasks.append(task)
     # wave 4: gold publication
     tasks.extend(_golden(g) for g in goldens)
-    # wave 5: manifest with every zone's row counts
+    # wave 5: manifest with every zone's row counts; it skips like a
+    # zone, so a re-run that skipped every zone keeps the first run's row
     tasks.append(
         DagTask(
             "manifest",
             _manifest,
             upstream=[t.name for t in tasks if t.name not in ("start",)],
+            skip_if=(None if force else lambda p=manifest_path: _done(p)),
         )
     )
     return run_dag(tasks)

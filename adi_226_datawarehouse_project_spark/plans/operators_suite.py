@@ -56,7 +56,7 @@ from ..pipelines import corpus_pipeline as CP
 from ..sources.catalog import load_table, register_base_views
 from ..sources.readers import read_csv, read_json, read_parquet
 from ..sources.writers import write_csv, write_json, write_parquet
-from ..streaming.events_stream import windowed_event_counts
+from ..streaming.events_stream import run_windowed_counts_once
 
 
 @dataclass
@@ -1056,7 +1056,7 @@ def _spark_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         mt = 1_000_000 + [1, 0, 2][i] * 1_000
         os.utime(dst, (mt, mt))
 
-    from ..streaming.events_stream import _with_event_time, session_window_counts
+    from ..streaming.events_stream import _with_event_time, drain, session_window_counts
 
     stream = (
         spark.readStream.schema(ev.schema)
@@ -1068,16 +1068,7 @@ def _spark_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "30 minutes",
     )
     name = "session_window_ooo_out"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(agg.writeStream.outputMode("complete").format("memory").queryName(name))
     return spark.sql(
         f"""
         SELECT user_id,
@@ -1113,12 +1104,12 @@ ORDER BY user_id, session_start_us
 
 
 def _spark_stream_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch form of the Structured Streaming aggregation — identical
-    transformation code path (streaming/events_stream.py); stream/batch
-    equivalence is asserted in tests/test_streaming.py. Double-sum
-    columns are dropped here (order-dependent ulps); the exact-cents
-    total is checked by op_events_tumbling_window."""
-    df = windowed_event_counts(spark, sf_dir, "5 minutes")
+    """The Structured Streaming tumbling-window aggregation
+    (streaming/events_stream.py) drained over the events file source;
+    stream/batch equivalence is asserted in tests/test_streaming.py.
+    Double-sum columns are dropped here (order-dependent ulps); the
+    exact-cents total is checked by op_events_tumbling_window."""
+    df = run_windowed_counts_once(spark, sf_dir, "5 minutes")
     return df.select("window_start", "window_end", "event_type", "n_events")
 
 
@@ -2213,10 +2204,10 @@ def _suite_sql(parts: list[str]) -> str:
 
 # --- op_set_operators: UNION / UNION ALL / INTERSECT / EXCEPT (U1-U3 +
 # set ops; shared SQL text).  The distinct/dedup family (A8 + D1-D3 +
-# the streaming-dedup key-set contract, formerly the standalone
-# op_distinct_dedup query) is folded in as further parts so the
-# driver's 50-query CORRECTNESS cap covers the whole declared surface;
-# each part keeps its own independent oracle body. ---
+# the streaming-dedup key-set contract, whose Spark side drains the
+# dropDuplicatesWithinWatermark stream) is folded in as further parts
+# so the driver's 50-query CORRECTNESS cap covers the whole declared
+# surface; each part keeps its own independent oracle body. ---
 _SET_OPERATORS_BASE_PARTS = [
     _part_sql("union_distinct", _UNION_DISTINCT, k="nationkey"),
     _part_sql("union_all_counts", _UNION_ALL_COUNT, k="nationkey", n="n"),
@@ -2399,12 +2390,11 @@ _SET_OPERATORS_SQL = _suite_sql(
 
 
 def _spark_set_operators(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.dedup_stream import dedup_events, dedup_key_summary
+    from ..streaming.dedup_stream import dedup_key_summary, run_dedup_stream_once
 
     register_base_views(spark, sf_dir)
     base = spark.sql("\nUNION ALL\n".join(_SET_OPERATORS_SQL_PARTS))
-    events = load_table(spark, sf_dir, "events")
-    stream_part = dedup_key_summary(dedup_events(events)).select(
+    stream_part = dedup_key_summary(run_dedup_stream_once(spark, sf_dir)).select(
         F.lit("stream_dedup_keys").alias("part"),
         F.col("event_type").cast("string").alias("k"),
         F.col("n_keys").cast("bigint").alias("n"),

@@ -1,10 +1,8 @@
 from .catalog import TABLES, collect_stats, load_table, register_base_views
 from .observe import funnel_counts, instrument_funnel, observed_write_parquet
-from .soda_datasource import SodaDataSource
 
 __all__ = [
     "TABLES",
-    "SodaDataSource",
     "collect_stats",
     "funnel_counts",
     "instrument_funnel",

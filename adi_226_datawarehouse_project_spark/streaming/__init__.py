@@ -1,9 +1,5 @@
-from .cdc_sink import apply_cdc_batch, read_cdc_snapshot, read_cdc_stored, stream_cdc_apply
-from .events_stream import (
-    run_windowed_counts_once,
-    session_window_counts,
-    windowed_event_counts,
-)
+from .cdc_sink import apply_cdc_batch, read_cdc_snapshot
+from .events_stream import run_windowed_counts_once, session_window_counts
 from .observe_stream import collect_observed, observe_stream, progress_summary
 
 __all__ = [
@@ -12,9 +8,6 @@ __all__ = [
     "observe_stream",
     "progress_summary",
     "read_cdc_snapshot",
-    "read_cdc_stored",
     "run_windowed_counts_once",
     "session_window_counts",
-    "stream_cdc_apply",
-    "windowed_event_counts",
 ]

@@ -14,14 +14,16 @@ wrong — requires the snapshot to REMEMBER two things:
 - delete TOMBSTONES (the ``D`` row, kept in the stored snapshot):
   otherwise a stale update arriving after the delete would resurrect
   the key. Readers go through :func:`read_cdc_snapshot`, which hides
-  tombstones; compact them away only once the source can no longer
-  deliver seqs below the tombstone's (retention watermark).
+  tombstones. Nothing compacts them: dropping one is safe only once
+  the source can no longer deliver seqs below it (a retention
+  watermark), and the session pipeline writes inserts only.
 
 With those two, each batch fold is just ``latest_changes`` over
 (stored snapshot ∪ batch) — idempotent (replaying any batch, or the
 whole source, changes nothing) and order-insensitive across batches.
-Pinned in tests/test_cdc_stream.py including a full-source replay into
-an already-folded target and a stale-update-after-delete probe.
+Pinned in tests/test_cdc_stream.py including a full replay of every
+batch into an already-folded target and a stale-update-after-delete
+probe.
 
 Publication is ATOMIC-POINTER, not directory rename (the fix for the
 round-4/5 swap-race findings — directory-rename publishing has an
@@ -60,6 +62,7 @@ from pyspark.sql import functions as F
 from ..operators.cdc import latest_changes
 
 _POINTER = "_current"
+OP_COL = "op"  # change type: I / U / D (tombstone)
 _KEEP_GENERATIONS = 2
 
 
@@ -129,17 +132,7 @@ def _publish_locked(merged: DataFrame, target_path: str) -> None:
             shutil.rmtree(os.path.join(target_path, d), ignore_errors=True)
 
 
-def read_cdc_stored(spark: SparkSession, target_path: str) -> DataFrame:
-    """The RAW stored snapshot — bookkeeping columns and tombstones
-    included (operational inspection / tests). Same pointer-resolution
-    guarantees as :func:`read_cdc_snapshot`."""
-    live = _live_dir(target_path)
-    if live is None:
-        raise FileNotFoundError(f"no published CDC snapshot at {target_path}")
-    return spark.read.parquet(live)
-
-
-def read_cdc_snapshot(spark: SparkSession, target_path: str, op_col: str = "op") -> DataFrame:
+def read_cdc_snapshot(spark: SparkSession, target_path: str) -> DataFrame:
     """The live table view: stored snapshot minus tombstones and
     bookkeeping columns. Resolves the atomic pointer — side-effect-free
     and race-free against concurrent publishes (the resolved generation
@@ -148,7 +141,7 @@ def read_cdc_snapshot(spark: SparkSession, target_path: str, op_col: str = "op")
     if live is None:
         raise FileNotFoundError(f"no published CDC snapshot at {target_path}")
     snap = spark.read.parquet(live)
-    return snap.filter(F.col(op_col) != "D").drop(op_col)
+    return snap.filter(F.col(OP_COL) != "D").drop(OP_COL)
 
 
 def apply_cdc_batch(
@@ -157,12 +150,11 @@ def apply_cdc_batch(
     target_path: str,
     keys: list[str],
     seq_col: str,
-    op_col: str = "op",
 ) -> None:
     """Fold one micro-batch of change events into the stored snapshot
     at ``target_path`` (new generation + atomic pointer flip). The
     stored snapshot keeps the full change schema (incl. ``seq_col``
-    and ``op_col`` tombstones) — see module docstring for why.
+    and ``OP_COL`` tombstones) — see module docstring for why.
 
     The writer lock spans base-pointer resolution through the flip:
     resolving the base OUTSIDE the lock would let two concurrent
@@ -176,78 +168,5 @@ def apply_cdc_batch(
             everything = base.unionByName(batch_df)
         else:
             everything = batch_df
-        merged = latest_changes(everything, keys, seq_col, op_col)
+        merged = latest_changes(everything, keys, seq_col, OP_COL)
         _publish_locked(merged, target_path)
-
-
-def stream_cdc_apply(
-    spark: SparkSession,
-    changes_path: str,
-    target_path: str,
-    checkpoint_path: str,
-    keys: list[str],
-    seq_col: str,
-    op_col: str = "op",
-    max_files_per_trigger: int = 1,
-) -> None:
-    """Drive one full pass of a parquet change-event stream into the
-    CDC snapshot (blocks until the source is drained)."""
-    schema = spark.read.parquet(changes_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(changes_path)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda bdf, _epoch: apply_cdc_batch(
-                spark, bdf, target_path, keys, seq_col, op_col
-            )
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def compact_tombstones(
-    spark: SparkSession,
-    target_path: str,
-    retention_seq: int,
-    seq_col: str,
-    op_col: str = "op",
-) -> int:
-    """Drop tombstones whose seq is at or below ``retention_seq`` —
-    the retention watermark below which the source can no longer
-    deliver events (e.g. the replication slot's confirmed LSN). A
-    tombstone above the watermark must stay: a stale update for its
-    key may still arrive and needs to lose. Publishes a new generation;
-    returns the number of tombstones removed. Holds the writer lock
-    across resolve→publish — compacting against a base another writer
-    is concurrently replacing would un-fold that writer's batch."""
-    with _writer_lock(target_path):
-        live = _live_dir(target_path)
-        if live is None:
-            return 0
-        snap = spark.read.parquet(live)
-        # One aggregation scan for the removed count (two full counts
-        # held the writer lock for ~2× the necessary I/O on a large
-        # snapshot), then one more scan only when publishing.
-        removed = int(
-            snap.agg(
-                F.sum(
-                    (
-                        (F.col(op_col) == "D")
-                        & (F.col(seq_col) <= F.lit(retention_seq))
-                    ).cast("long")
-                )
-            ).collect()[0][0]
-            or 0
-        )
-        if removed:
-            keep = snap.filter(
-                (F.col(op_col) != "D") | (F.col(seq_col) > F.lit(retention_seq))
-            )
-            _publish_locked(keep, target_path)
-        return removed

@@ -1,13 +1,13 @@
 """Streaming deduplication over the events stream —
 ``dropDuplicatesWithinWatermark`` as an engine operator.
 
-Pattern mirrors events_stream.py: the TRANSFORMATION (key-dedup) has a
-batch form (``dedup_events``) the DuckDB oracle can check exactly, and
-a streaming driver (``run_dedup_stream_once``) that runs the same
-dedup with watermark-bounded state; stream/batch key-set equivalence
-is asserted in tests/test_stream_dedup.py, including a multi-file
-replay where the duplicate arrives in a LATER micro-batch (the case
-plain per-batch distinct gets wrong).
+Pattern mirrors events_stream.py: the streaming driver
+(``run_dedup_stream_once``) runs the key-dedup with watermark-bounded
+state, and the declared query drains it, so the DuckDB oracle checks
+the stream's survivors; stream/batch key-set equivalence against a
+plain ``dropDuplicates`` is asserted in tests/test_stream_dedup.py,
+including a multi-file replay where the duplicate arrives in a LATER
+micro-batch (the case plain per-batch distinct gets wrong).
 
 Scale: ``dropDuplicatesWithinWatermark`` keeps one state row per key
 seen inside the watermark horizon and evicts beyond it — bounded state
@@ -17,7 +17,7 @@ state store, so key state spills to disk instead of executor heap.
 
 Which full ROW survives per key is arrival-order-dependent in both
 engines, so only the key SET is a differential contract — the declared
-query (op_distinct_dedup's ``stream_dedup_keys`` part) therefore
+query (op_set_operators' ``stream_dedup_keys`` part) therefore
 checks per-type distinct-key counts and key checksums, which are
 identical whatever row wins.
 """
@@ -27,15 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .events_stream import _with_event_time, read_events_stream
+from .events_stream import _with_event_time, drain, read_events_stream
 
 DEDUP_KEYS = ["user_id", "event_type"]
-
-
-def dedup_events(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
-    """Batch form: one surviving row per key tuple (arbitrary winner,
-    deterministic key set)."""
-    return df.dropDuplicates(keys or DEDUP_KEYS)
 
 
 def dedup_key_summary(df: DataFrame) -> DataFrame:
@@ -72,9 +66,5 @@ def run_dedup_stream_once(
         .dropDuplicatesWithinWatermark(DEDUP_KEYS)
     )
     name = "events_dedup_out"
-    q = deduped.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(deduped.writeStream.outputMode("append").format("memory").queryName(name))
     return spark.sql(f"SELECT * FROM {name}")

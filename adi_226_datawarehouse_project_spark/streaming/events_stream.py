@@ -3,10 +3,16 @@ capability proof (the reference is batch-only, SURVEY §2.10; this is
 the beyond-reference extension the north star asks for).
 
 Pattern: file-source readStream → event-time watermark → tumbling
-window aggregation → memory/foreachBatch sink. The identical
-transformation runs in batch mode (``windowed_event_counts``), which
-is what the DuckDB oracle checks; the streaming test asserts
-stream-batch equivalence — Structured Streaming's core guarantee.
+window aggregation → memory/foreachBatch sink. The declared query
+``stream_windowed_counts`` drains the stream itself
+(``run_windowed_counts_once``), so the DuckDB oracle checks what the
+streaming query emits; tests/test_streaming.py also asserts
+stream-batch equivalence against the same ``_windowed`` builder over a
+static frame — Structured Streaming's core guarantee.
+
+Every stream in the package runs through :func:`drain`: an
+availableNow trigger (every file present at start, in
+``maxFilesPerTrigger``-sized micro-batches) and a blocking wait.
 
 Scale: watermark bounds state; tumbling (non-overlapping) windows keep
 state one-row-per-(window,type); a production deployment swaps the
@@ -21,6 +27,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
+
 
 def events_schema(sf_dir: str) -> T.StructType:
     """Explicit readStream schema matching the events file's physical
@@ -92,6 +100,13 @@ def read_events_stream(spark: SparkSession, sf_dir: str, **options: str) -> Data
     return df
 
 
+def drain(writer: DataStreamWriter) -> None:
+    """Run a stream to the end of its source: start ``writer`` with
+    the availableNow trigger and block until the query stops. A failed
+    micro-batch re-raises here."""
+    writer.trigger(availableNow=True).start().awaitTermination()
+
+
 def _with_event_time(df: DataFrame) -> DataFrame:
     """Derive a watermark-legal `event_time` via an explicit cast:
     both readers (load_table / read_events_stream) already normalize
@@ -115,13 +130,6 @@ def _windowed(df: DataFrame, window: str) -> DataFrame:
     )
 
 
-def windowed_event_counts(spark: SparkSession, sf_dir: str, window: str = "5 minutes") -> DataFrame:
-    """Batch form of the streaming aggregation (same code path)."""
-    from ..sources.catalog import load_table
-
-    return _windowed(_with_event_time(load_table(spark, sf_dir, "events")), window)
-
-
 def run_windowed_counts_once(
     spark: SparkSession, sf_dir: str, window: str = "5 minutes", watermark: str = "10 minutes"
 ) -> DataFrame:
@@ -130,16 +138,7 @@ def run_windowed_counts_once(
     stream = read_events_stream(spark, sf_dir)
     agg = _windowed(_with_event_time(stream).withWatermark("event_time", watermark), window)
     name = "events_windowed_out"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(agg.writeStream.outputMode("complete").format("memory").queryName(name))
     return spark.sql(f"SELECT * FROM {name}")
 
 

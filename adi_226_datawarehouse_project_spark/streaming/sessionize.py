@@ -50,10 +50,9 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .events_stream import read_events_stream
+from .events_stream import _with_event_time, drain, read_events_stream
 
 OUTPUT_SCHEMA = "user_id bigint, n_sessions bigint, n_disorder bigint"
 STATE_SCHEMA = "last_ts double, n_sessions bigint, n_disorder bigint"
@@ -115,9 +114,7 @@ def streaming_sessionize(
     update mode — last emitted row per user wins). Raises through the
     streaming query if a micro-batch violates the per-key ordering
     contract, unless ``allow_disorder`` (see module docstring)."""
-    stream = read_events_stream(spark, sf_dir, maxFilesPerTrigger="1").withColumn(
-        "event_time", F.col("ts")
-    )
+    stream = _with_event_time(read_events_stream(spark, sf_dir, maxFilesPerTrigger="1"))
     sessions = stream.groupBy("user_id").applyInPandasWithState(
         _sessionize_fold(gap_seconds, allow_disorder=allow_disorder),
         outputStructType=OUTPUT_SCHEMA,
@@ -125,16 +122,7 @@ def streaming_sessionize(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        sessions.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(sessions.writeStream.outputMode("update").format("memory").queryName(query_name))
     # update-mode memory sink appends every emission; the fold's total
     # is monotone, so MAX per user is the final state.
     return spark.sql(

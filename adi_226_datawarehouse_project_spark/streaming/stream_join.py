@@ -10,9 +10,10 @@ evicted) — the requirement for an unbounded 100 TB/day deployment.
 Inner-join matches emit as soon as both rows arrive (append mode);
 the watermark only governs state cleanup.
 
-The identical join runs in batch (`clicks_purchases_batch`) — that
-form carries the DuckDB oracle, and the pytest asserts the streaming
-pass produces exactly the batch result.
+The declared query ``stream_stream_join`` drains the stream itself, so
+the DuckDB oracle checks the streamed pairs; the pytest asserts the
+streaming pass produces exactly the batch result of the same builder
+(``_attribution_pairs``) over a static frame.
 """
 
 from __future__ import annotations
@@ -20,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .events_stream import read_events_stream
+from .events_stream import _with_event_time, drain, read_events_stream
 
 RANGE_SECONDS = 600
 
@@ -35,26 +36,28 @@ def _summarize(pairs: DataFrame) -> DataFrame:
     )
 
 
-def _attribution_pairs(events: DataFrame, how: str = "inner") -> DataFrame:
-    """The click→purchase attribution join, built ONCE and shared by
-    the batch oracle and the streaming run: the differential test pins
-    the stream EXECUTION (state, watermark eviction), so the declared
-    join shape must be provably identical on both sides — a copy-pasted
-    condition edited on one side would make the oracle pin stale
-    semantics instead of catching drift. ``events`` must carry
-    ``user_id``, ``event_type`` and a TIMESTAMP ``event_time`` (with
-    watermarks already applied upstream for the streaming caller — a
-    watermark set on the shared frame before the filters would apply
-    to both sides identically, which the streaming form does per-side
-    for clarity of the two retention windows)."""
-    clicks = events.filter(F.col("event_type") == "click").select(
+def _clicks(events: DataFrame) -> DataFrame:
+    return events.filter(F.col("event_type") == "click").select(
         "user_id", F.col("event_time").alias("click_time")
     )
-    purchases = events.filter(F.col("event_type") == "purchase").select(
+
+
+def _purchases(events: DataFrame) -> DataFrame:
+    return events.filter(F.col("event_type") == "purchase").select(
         F.col("user_id").alias("user_id2"),
         F.col("event_time").alias("purchase_time"),
     )
-    return _join_pairs(clicks, purchases, how=how)
+
+
+def _attribution_pairs(events: DataFrame, how: str = "inner") -> DataFrame:
+    """The click→purchase attribution join over a static ``events``
+    frame (``user_id``, ``event_type`` and a TIMESTAMP ``event_time``)
+    — the batch twin the stream is compared against. It runs the same
+    side builders and the same :func:`_join_pairs` as the streaming
+    driver, so the differential test pins the stream EXECUTION (state,
+    watermark eviction): a condition edited on one side cannot leave
+    the twin pinning stale semantics."""
+    return _join_pairs(_clicks(events), _purchases(events), how=how)
 
 
 def _join_pairs(
@@ -79,16 +82,6 @@ def _join_pairs(
     ).select("user_id", "click_time", "purchase_time")
 
 
-def clicks_purchases_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch form (oracle-checked); identical join shape."""
-    from ..sources.catalog import load_table
-
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "event_time", F.col("ts").cast("timestamp")
-    )
-    return _summarize(_attribution_pairs(ev))
-
-
 def stream_join_pairs_once(
     spark: SparkSession,
     sf_dir: str,
@@ -104,25 +97,10 @@ def stream_join_pairs_once(
     maxFilesPerTrigger='1' for per-file micro-batches)."""
 
     def _stream() -> DataFrame:
-        return read_events_stream(spark, sf_dir, **stream_options).withColumn(
-            "event_time", F.col("ts").cast("timestamp")
-        )
+        return _with_event_time(read_events_stream(spark, sf_dir, **stream_options))
 
-    clicks = (
-        _stream()
-        .filter(F.col("event_type") == "click")
-        .select("user_id", F.col("event_time").alias("click_time"))
-        .withWatermark("click_time", watermark)
-    )
-    purchases = (
-        _stream()
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("user_id2"),
-            F.col("event_time").alias("purchase_time"),
-        )
-        .withWatermark("purchase_time", watermark)
-    )
+    clicks = _clicks(_stream()).withWatermark("click_time", watermark)
+    purchases = _purchases(_stream()).withWatermark("purchase_time", watermark)
     pairs = _join_pairs(clicks, purchases, how=how)
     # A stream-stream join keeps one state store per shuffle partition
     # on EACH side; the partition count is fixed at query start (it is
@@ -133,27 +111,10 @@ def stream_join_pairs_once(
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "32")
     try:
-        q = (
-            pairs.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(pairs.writeStream.outputMode("append").format("memory").queryName(query_name))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     return spark.sql(f"SELECT * FROM {query_name}")
-
-
-def clicks_purchases_batch_left(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the LEFT OUTER attribution join (same builder)."""
-    from ..sources.catalog import load_table
-
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "event_time", F.col("ts").cast("timestamp")
-    )
-    return _attribution_pairs(ev, how="leftOuter")
 
 
 def run_stream_stream_join_once(

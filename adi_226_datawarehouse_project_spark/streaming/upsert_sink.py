@@ -26,7 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .events_stream import read_events_stream
+from .events_stream import drain, read_events_stream
 
 
 def upsert_batch(
@@ -65,12 +65,8 @@ def stream_upsert_events(
     sink (blocks until the source is drained)."""
     keys = keys or ["event_id"]
     stream = read_events_stream(spark, sf_dir, maxFilesPerTrigger="1")
-    q = (
+    drain(
         stream.writeStream.foreachBatch(
             lambda bdf, _epoch: upsert_batch(spark, bdf, target_path, keys)
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+        ).option("checkpointLocation", checkpoint_path)
     )
-    q.awaitTermination()

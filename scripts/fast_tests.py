@@ -12,12 +12,11 @@ test: a file's tests share tmp dirs and fixture state, so a file never
 splits across workers.
 
 Streaming constraint: every file that starts a StreamingQuery (name
-matches 'stream', plus test_session_window.py and
-test_soda_datasource.py) is pinned to worker 0, serial in the order
-they'd run alone. Streaming tests time out under scheduler contention
-with OTHER streaming state stores (RocksDB instances + watermark
-quiesce loops); batch queries on sibling workers only add CPU load,
-which the 32-core box absorbs.
+matches 'stream', plus test_session_window.py) is pinned to worker 0,
+serial in the order they'd run alone. Streaming tests time out under
+scheduler contention with OTHER streaming state stores (RocksDB
+instances); batch queries on sibling workers only add CPU load, which
+the 32-core box absorbs.
 
 Balance: greedy longest-processing-time over per-file durations from
 `scripts/test_durations.json` — written back after every run (parsed
@@ -43,7 +42,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parents[1]
 DURATIONS = REPO / "scripts" / "test_durations.json"
 
-STREAM_PINNED = {"test_session_window.py", "test_soda_datasource.py"}
+STREAM_PINNED = {"test_session_window.py"}
 
 
 def _is_streaming(name: str) -> bool:

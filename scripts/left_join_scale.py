@@ -37,9 +37,12 @@ from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from adi_226_datawarehouse_project_spark.sources.catalog import load_table  # noqa: E402
+from adi_226_datawarehouse_project_spark.streaming.events_stream import (  # noqa: E402
+    _with_event_time,
+)
 from adi_226_datawarehouse_project_spark.streaming.stream_join import (  # noqa: E402
     RANGE_SECONDS,
-    clicks_purchases_batch_left,
+    _attribution_pairs,
     stream_join_pairs_once,
 )
 
@@ -90,7 +93,7 @@ def main() -> None:
     )
     stream_wall = round(time.time() - t_s, 1)
     t_b = time.time()
-    batch = clicks_purchases_batch_left(spark, sf_dir)
+    batch = _attribution_pairs(_with_event_time(ev), how="leftOuter")
     cut = F.unix_micros(F.col("click_time")) <= F.lit(cutoff_us)
     s_rows = _key_set(stream.filter(cut))
     b_rows = _key_set(batch.filter(cut))

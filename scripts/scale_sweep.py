@@ -57,6 +57,10 @@ from adi_226_datawarehouse_project_spark.operators.training import (  # noqa: E4
 from adi_226_datawarehouse_project_spark.session import get_spark  # noqa: E402
 from adi_226_datawarehouse_project_spark.sources.catalog import load_table  # noqa: E402
 from adi_226_datawarehouse_project_spark.functions import text as TX  # noqa: E402
+from adi_226_datawarehouse_project_spark.streaming.events_stream import (  # noqa: E402
+    _windowed,
+    _with_event_time,
+)
 
 SCRATCH = Path("/tmp/spark_graft_scale")
 
@@ -153,10 +157,9 @@ def ops(spark: SparkSession, d: str) -> dict[str, callable]:
             min_overlap=2,
         ).count(),
         "tfidf_top2": lambda: tf_idf_terms(docs(), "doc_id", "text", top_k=2).count(),
-        "events_tumbling_window": lambda: __import__(
-            "adi_226_datawarehouse_project_spark.streaming.events_stream",
-            fromlist=["windowed_event_counts"],
-        ).windowed_event_counts(spark, d, "5 minutes").count(),
+        "events_tumbling_window": lambda: _windowed(
+            _with_event_time(load_table(spark, d, "events")), "5 minutes"
+        ).count(),
         # round-4 second-wave operators: importance scoring + selection
         # (broadcast model joins + two-phase rank), URL dedup (narrow
         # normalize + min-id agg), fuzzy cross-corpus minhash (bench

@@ -222,8 +222,6 @@ def main() -> int:
         "encode_geohash_py": "the bisection oracle geohash_sql is checked against",
         "golden_df": "the DataFrame twin the goldens are compared against",
         "run_corpus_pipeline": "a pipeline entry point",
-        "soda_events_stream": "a stream entry point (SODA source)",
-        "file_events_stream": "a stream entry point (file source)",
         "ingest_if_absent": "K8, the idempotent-skip source check",
         "read_json_with_csv_fallback": "S5, the JSON-then-CSV source policy",
         "wait_for": "the sensor poll of SURVEY 2.12",
@@ -235,12 +233,6 @@ def main() -> int:
         "write_bucketed_table": "the DISTKEY analog on the scale list",
         "collect_stats": "the planner-stats analog on the scale list",
         "compact_table": "small-file compaction on the scale list",
-        "run_windowed_counts_once": "a streaming driver",
-        "run_dedup_stream_once": "a streaming driver",
-        "clicks_purchases_batch": "the batch twin of the stream-stream join driver",
-        "stream_cdc_apply": "a streaming driver",
-        "read_cdc_stored": "a streaming driver",
-        "compact_tombstones": "a streaming driver",
         "observe_stream": "streaming telemetry",
         "collect_observed": "streaming telemetry",
     }

@@ -48,7 +48,6 @@ SF_DIR = _pos[0] if len(_pos) > 0 else "/tmp/spark_graft_sf_x64"
 N_FILES = int(_pos[1]) if len(_pos) > 1 else 32
 PER_TRIGGER = int(_pos[2]) if len(_pos) > 2 else 4
 BASE = "/tmp/spark_graft_stream_e2e"
-GAP, WM = "30 minutes", "10 minutes"
 SENTINEL_USER = 10_000_000_000
 HOT_USER_ID = 7
 
@@ -167,7 +166,7 @@ def main() -> None:
     crashed = False
     try:
         run_sessions_to_cdc(
-            spark, stream(), target, ckpt, gap=GAP, watermark=WM,
+            spark, stream(), target, ckpt,
             fault_after_publish_epoch=3,
         )
     except Exception as e:  # noqa: BLE001
@@ -175,13 +174,13 @@ def main() -> None:
     assert crashed, "fault injection did not fire"
     t_crash = time.perf_counter() - t0
     t0 = time.perf_counter()
-    run_sessions_to_cdc(spark, stream(), target, ckpt, gap=GAP, watermark=WM)
+    run_sessions_to_cdc(spark, stream(), target, ckpt)
     t_resume = time.perf_counter() - t0
     # flush: sentinel 2 arrives as new data = its own micro-batch, in
     # which every session the sentinel-1 watermark finalized emits
     _append_sentinel(1)
     t0 = time.perf_counter()
-    run_sessions_to_cdc(spark, stream(), target, ckpt, gap=GAP, watermark=WM)
+    run_sessions_to_cdc(spark, stream(), target, ckpt)
     t_resume += time.perf_counter() - t0
 
     # ---- verify: count + order-insensitive full-row hash ----
@@ -196,7 +195,7 @@ def main() -> None:
         F.col("user_id") < SENTINEL_USER
     )
     t0 = time.perf_counter()
-    oracle = batch_session_oracle(events, GAP)
+    oracle = batch_session_oracle(events)
     fp_snap, fp_oracle = fingerprint(snap), fingerprint(oracle)
     t_oracle = time.perf_counter() - t0
     ok = fp_snap == fp_oracle

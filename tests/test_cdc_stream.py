@@ -1,6 +1,6 @@
-"""Streaming CDC sink: change events stream micro-batch-wise into a
+"""Streaming CDC sink: change events fold micro-batch-wise into a
 stored snapshot that remembers seqs and tombstones — so cross-batch
-stale updates lose, deletes stay dead, and a FULL source replay into
+stale updates lose, deletes stay dead, and replaying every batch into
 the already-folded target changes nothing."""
 
 import os
@@ -10,10 +10,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from adi_226_datawarehouse_project_spark.streaming.cdc_sink import (
+    _live_dir,
     apply_cdc_batch,
     read_cdc_snapshot,
-    read_cdc_stored,
-    stream_cdc_apply,
 )
 
 BASE = "/tmp/spark_graft_io/test_cdc_stream"
@@ -42,19 +41,19 @@ def test_stream_folds_and_replay_is_noop(spark, fresh):
         (1, None, None, 4, "D"),
         (3, "carol", 300, 5, "I"),
     ]
-    spark.createDataFrame(changes, SCHEMA).repartition(3).write.parquet(
-        f"{BASE}/changes"
-    )
-    stream_cdc_apply(
-        spark, f"{BASE}/changes", f"{BASE}/target", f"{BASE}/ckpt", ["id"], "seq"
-    )
+    # three micro-batches; bob's insert and update land in different ones
+    batches = [
+        spark.createDataFrame(rows, SCHEMA)
+        for rows in (changes[:2], changes[2:4], changes[4:])
+    ]
+    for b in batches:
+        apply_cdc_batch(spark, b, f"{BASE}/target", ["id"], "seq")
     want = [(2, "bob", 250), (3, "carol", 300)]
     assert _live(spark) == want
-    # replay the WHOLE source with a fresh checkpoint (at-least-once
-    # re-delivery of everything): the snapshot must not change
-    stream_cdc_apply(
-        spark, f"{BASE}/changes", f"{BASE}/target", f"{BASE}/ckpt2", ["id"], "seq"
-    )
+    # replay EVERY batch, in reverse order (at-least-once re-delivery of
+    # everything): the snapshot must not change
+    for b in reversed(batches):
+        apply_cdc_batch(spark, b, f"{BASE}/target", ["id"], "seq")
     assert _live(spark) == want
 
 
@@ -86,38 +85,9 @@ def test_single_batch_idempotent(spark, fresh):
     apply_cdc_batch(spark, b, f"{BASE}/target", ["id"], "seq")
     assert _live(spark) == first == [(1, "a", 2)]
     # the stored snapshot keeps exactly one row per key (no growth)
-    stored = read_cdc_stored(spark, f"{BASE}/target")
+    stored = spark.read.parquet(_live_dir(f"{BASE}/target"))
     assert stored.count() == 1
     assert stored.groupBy("id").count().filter(F.col("count") > 1).count() == 0
-
-
-def test_tombstone_compaction_respects_retention(spark, fresh):
-    from adi_226_datawarehouse_project_spark.streaming.cdc_sink import (
-        compact_tombstones,
-    )
-
-    b = spark.createDataFrame(
-        [
-            (1, "a", 1, 5, "I"),
-            (2, None, None, 10, "D"),
-            (3, None, None, 30, "D"),
-        ],
-        SCHEMA,
-    )
-    apply_cdc_batch(spark, b, f"{BASE}/target", ["id"], "seq")
-    # watermark 20: the seq-10 tombstone is compactable, seq-30 is not
-    removed = compact_tombstones(spark, f"{BASE}/target", 20, "seq")
-    assert removed == 1
-    stored = {(r["id"], r["op"]) for r in read_cdc_stored(spark, f"{BASE}/target").collect()}
-    assert stored == {(1, "I"), (3, "D")}
-    # live view unchanged by compaction
-    assert _live(spark) == [(1, "a", 1)]
-    # a stale update below the kept tombstone still loses
-    late = spark.createDataFrame([(3, "zombie", 1, 25, "U")], SCHEMA)
-    apply_cdc_batch(spark, late, f"{BASE}/target", ["id"], "seq")
-    assert _live(spark) == [(1, "a", 1)]
-    # idempotent second compaction removes nothing
-    assert compact_tombstones(spark, f"{BASE}/target", 20, "seq") == 0
 
 
 def test_atomic_pointer_publish_crash_and_reader_retention(spark, fresh):
@@ -146,8 +116,6 @@ def test_atomic_pointer_publish_crash_and_reader_retention(spark, fresh):
 
     # reader retention: resolve the CURRENT generation, publish once
     # more, and the resolved directory must still be fully readable
-    from adi_226_datawarehouse_project_spark.streaming.cdc_sink import _live_dir
-
     held = _live_dir(t)
     b3 = spark.createDataFrame([(3, "c", 10, 1, "I")], schema=SCHEMA)
     apply_cdc_batch(spark, b3, t, ["id"], "seq")
@@ -169,7 +137,7 @@ def test_writer_lock_serializes_concurrent_publishers(spark, tmp_path):
     """The single-writer assumption is now ENFORCED: while one writer
     holds the target's lock, a second writer's critical section cannot
     enter (flock blocks across file descriptors). Pins the guard the
-    fold/compact paths rely on to never lose an update."""
+    fold path relies on to never lose an update."""
     import fcntl
     import threading
     import time

@@ -64,10 +64,13 @@ def test_corpus_pipeline_end_to_end(spark, sf_dir, tmp_path):
     for z in _ZONES:
         assert man["stats"][z] == n[z]
 
-    # idempotent re-run: every zone skipped, nothing rewritten
+    # idempotent re-run: every zone skipped, nothing rewritten — the
+    # manifest row included
     again = run_corpus_pipeline(spark, sf_dir, out)
     for z in _ZONES:
         assert again[z].state == "SKIPPED"
+    assert again["manifest"].state == "SKIPPED"
+    assert read_run_manifest(spark, os.path.join(out, "manifest")).collect() == [man]
 
 
 def test_pipeline_counts_match_registry_funnel(spark, tmp_path):

@@ -43,12 +43,14 @@ def test_warehouse_pipeline_end_to_end_and_idempotent(spark, tmp_path):
     assert m["stats"]["gold_g01_complaints_by_borough_pct"] == len(g1_direct)
 
     # second run: every zone already has _SUCCESS → all writer tasks
-    # skip (the reference's skip-if-S3-key-exists), manifest still runs
+    # skip (the reference's skip-if-S3-key-exists), and so does the
+    # manifest: the first run's row survives unchanged
     res2 = run_warehouse_pipeline(spark, SF_SMALL, out, run_utc="2026-08-14T01:00:00Z")
     skipped = {k for k, v in res2.items() if v.state == "SKIPPED"}
     assert "staging_311" in skipped and "fact_airbnb_listings" in skipped
     assert "gold_g01_complaints_by_borough_pct" in skipped
-    assert res2["manifest"].state == "SUCCESS"
+    assert res2["manifest"].state == "SKIPPED"
+    assert read_run_manifest(spark, f"{out}/manifest").collect() == [m]
 
 
 def test_warehouse_pipeline_failure_isolates_branch(spark, tmp_path, monkeypatch):

@@ -9,7 +9,6 @@ from pathlib import Path
 from adi_226_datawarehouse_project_spark.sources.catalog import load_table
 from adi_226_datawarehouse_project_spark.streaming.dedup_stream import (
     DEDUP_KEYS,
-    dedup_events,
     dedup_key_summary,
     run_dedup_stream_once,
 )
@@ -20,7 +19,7 @@ def _key_set(df):
 
 
 def test_stream_matches_batch_key_set(spark, sf_dir):
-    batch = dedup_events(load_table(spark, sf_dir, "events"))
+    batch = load_table(spark, sf_dir, "events").dropDuplicates(DEDUP_KEYS)
     streamed = run_dedup_stream_once(spark, sf_dir)
     assert _key_set(streamed) == _key_set(batch)
     # streaming must emit exactly one row per key (no dup survivors)
@@ -42,7 +41,7 @@ def test_cross_microbatch_duplicates_dropped(spark, sf_dir, tmp_path):
         maxFilesPerTrigger="1",
         pathGlobFilter="*.parquet",
     )
-    batch_once = dedup_events(load_table(spark, sf_dir, "events"))
+    batch_once = load_table(spark, sf_dir, "events").dropDuplicates(DEDUP_KEYS)
     assert _key_set(streamed) == _key_set(batch_once)
     assert streamed.count() == batch_once.count()
 
@@ -52,7 +51,7 @@ def test_key_summary_is_survivor_invariant(spark, sf_dir):
     identical however dropDuplicates breaks per-key ties: compare the
     operator's summary against distinct-keys-only derivation."""
     ev = load_table(spark, sf_dir, "events")
-    a = dedup_key_summary(dedup_events(ev)).collect()
+    a = dedup_key_summary(ev.dropDuplicates(DEDUP_KEYS)).collect()
     b = dedup_key_summary(ev.select(*DEDUP_KEYS).distinct()).collect()
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
 

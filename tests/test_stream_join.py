@@ -3,14 +3,24 @@ attribution join must produce exactly the batch join's summary."""
 
 from conftest import SF_SMALL
 
+from adi_226_datawarehouse_project_spark.sources.catalog import load_table
+from adi_226_datawarehouse_project_spark.streaming.events_stream import _with_event_time
 from adi_226_datawarehouse_project_spark.streaming.stream_join import (
-    clicks_purchases_batch,
+    _attribution_pairs,
+    _summarize,
     run_stream_stream_join_once,
 )
 
 
+def _batch_pairs(spark, sf_dir, how="inner"):
+    """The same attribution join over the static events frame."""
+    return _attribution_pairs(
+        _with_event_time(load_table(spark, sf_dir, "events")), how=how
+    )
+
+
 def test_stream_stream_join_matches_batch(spark):
-    batch = clicks_purchases_batch(spark, SF_SMALL).collect()[0]
+    batch = _summarize(_batch_pairs(spark, SF_SMALL)).collect()[0]
     stream = run_stream_stream_join_once(spark, SF_SMALL).collect()[0]
     assert batch["n_pairs"] > 0
     assert tuple(stream) == tuple(batch)
@@ -52,7 +62,6 @@ def test_left_outer_stream_join_emits_null_after_horizon(spark, tmp_path):
     exactly — matched pairs emit on arrival, the null row emits late
     but emits."""
     from adi_226_datawarehouse_project_spark.streaming.stream_join import (
-        clicks_purchases_batch_left,
         stream_join_pairs_once,
     )
 
@@ -81,7 +90,7 @@ def test_left_outer_stream_join_emits_null_after_horizon(spark, tmp_path):
             maxFilesPerTrigger="1",
         )
     )
-    want = _left_rows(clicks_purchases_batch_left(spark, str(tmp_path)))
+    want = _left_rows(_batch_pairs(spark, str(tmp_path), how="leftOuter"))
     assert (2, 60, None) in got  # the unmatched click DID emit
     assert got == want, (got, want)
 

@@ -5,10 +5,17 @@ guarantee)."""
 
 from conftest import SF_SMALL
 
+from adi_226_datawarehouse_project_spark.sources.catalog import load_table
 from adi_226_datawarehouse_project_spark.streaming.events_stream import (
+    _windowed,
+    _with_event_time,
     run_windowed_counts_once,
-    windowed_event_counts,
 )
+
+
+def _batch_windowed(spark, sf_dir):
+    """The same aggregation over the static events frame."""
+    return _windowed(_with_event_time(load_table(spark, sf_dir, "events")), "5 minutes")
 
 
 def _normalize(df):
@@ -18,7 +25,7 @@ def _normalize(df):
 
 
 def test_stream_matches_batch(spark):
-    batch = windowed_event_counts(spark, SF_SMALL, "5 minutes")
+    batch = _batch_windowed(spark, SF_SMALL)
     stream = run_windowed_counts_once(spark, SF_SMALL, "5 minutes")
     got_b = _normalize(batch)
     got_s = _normalize(stream)
@@ -158,7 +165,7 @@ def test_is_dir_probe_handles_uris_and_local_paths(spark, tmp_path):
     d.mkdir()
     shutil.copy(os.path.join(SF_SMALL, "events.parquet"), d / "part-0.parquet")
     got = _normalize(run_windowed_counts_once(spark, str(tmp_path), "5 minutes"))
-    assert got and got == _normalize(windowed_event_counts(spark, SF_SMALL, "5 minutes"))
+    assert got and got == _normalize(_batch_windowed(spark, SF_SMALL))
     with pytest.raises(ValueError, match="local directory"):
         read_events_stream(spark, "file:" + SF_SMALL)
 

@@ -1,9 +1,8 @@
 """End-to-end exactly-once streaming pipeline (source → session
 windows → CDC snapshot): kill-and-resume across the publish/commit
-crash window, batch-oracle equality, and the SODA-source chain.
-See pipelines/streaming_pipeline.py for the exactly-once argument."""
+crash window and batch-oracle equality. See
+pipelines/streaming_pipeline.py for the exactly-once argument."""
 
-import json
 import os
 import shutil
 import time
@@ -13,14 +12,11 @@ from pyspark.sql import functions as F
 
 from adi_226_datawarehouse_project_spark.pipelines.streaming_pipeline import (
     batch_session_oracle,
-    file_events_stream,
     read_sessions_snapshot,
     run_sessions_to_cdc,
-    soda_events_stream,
 )
 
 BASE = "/tmp/spark_graft_io/test_streaming_pipeline"
-GAP, WM = "30 minutes", "10 minutes"
 SENTINEL_USER = 999_999
 
 
@@ -98,7 +94,7 @@ def _oracle(spark, rows):
     ).select("event_id", "user_id", F.to_timestamp("ts").alias("event_time"))
     return {
         (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in batch_session_oracle(events, GAP).collect()
+        for r in batch_session_oracle(events).collect()
     }
 
 
@@ -137,128 +133,17 @@ def test_kill_and_resume_exactly_once(spark):
 
     with pytest.raises(Exception, match="injected crash"):
         run_sessions_to_cdc(
-            spark, stream(), target, ckpt, gap=GAP, watermark=WM,
+            spark, stream(), target, ckpt,
             fault_after_publish_epoch=2,
         )
     # resume on the SAME checkpoint, no fault — drains to the end
-    run_sessions_to_cdc(spark, stream(), target, ckpt, gap=GAP, watermark=WM)
+    run_sessions_to_cdc(spark, stream(), target, ckpt)
     want = _oracle(spark, rows)
     assert _snapshot_set(spark, target) == want and len(want) >= 18
 
     # a third run with no new data must be a no-op (replay idempotence)
-    run_sessions_to_cdc(spark, stream(), target, ckpt, gap=GAP, watermark=WM)
+    run_sessions_to_cdc(spark, stream(), target, ckpt)
     assert _snapshot_set(spark, target) == want
-
-
-def test_soda_source_end_to_end(spark):
-    """The same chain fed by the SODA streaming source over recorded
-    pages (one micro-batch per page): snapshot == batch oracle."""
-    base = os.path.join(BASE, "soda")
-    shutil.rmtree(base, ignore_errors=True)
-    pages_dir = os.path.join(base, "pages")
-    target = os.path.join(base, "sessions_cdc")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(pages_dir)
-    rows = _event_rows(n_users=4, per_user=20)
-    far = max(t for (_, _, t) in rows)
-    # time-ordered pages (append-only endpoints serve in row order; an
-    # out-of-order feed would watermark-drop late users — same note as
-    # the file fixture)
-    payload = [(e, u, _ts(t)) for (e, u, t) in sorted(rows, key=lambda r: r[2])] + [
-        (10_000_000, SENTINEL_USER, _ts(far + 30 * 86400)),
-        (10_000_001, SENTINEL_USER + 1, _ts(far + 31 * 86400)),
-    ]
-    page = 41  # divides len(payload): full pages only (replay contract)
-    assert len(payload) % page == 0
-    for off in range(0, len(payload) + page, page):
-        recs = [
-            {"event_id": str(e), "user_id": str(u), "ts": ts}
-            for (e, u, ts) in payload[off : off + page]
-        ]
-        with open(os.path.join(pages_dir, f"page_{off}_{page}.json"), "w") as f:
-            json.dump(recs, f)
-
-    events = soda_events_stream(
-        spark, f"file://{pages_dir}/page_{{offset}}_{{limit}}.json", page
-    )
-    run_sessions_to_cdc(
-        spark, events, target, ckpt, gap=GAP, watermark=WM,
-        processing_time="200 milliseconds", idle_timeout=90.0,
-    )
-    assert _snapshot_set(spark, target) == _oracle(spark, rows)
-
-
-def test_interval_seconds_parser_and_grace_derivation():
-    """The quiesce grace must span multiple trigger intervals — a fixed
-    4s grace with processing_time='10 seconds' could observe idle
-    BETWEEN triggers and truncate the snapshot. Pin the parser and the
-    max(4, 3x) derivation."""
-    from adi_226_datawarehouse_project_spark.pipelines.streaming_pipeline import (
-        _interval_seconds,
-    )
-
-    assert _interval_seconds("200 milliseconds") == pytest.approx(0.2)
-    assert _interval_seconds("1 second") == 1.0
-    assert _interval_seconds("10 seconds") == 10.0
-    assert _interval_seconds("2 minutes") == 120.0
-    assert _interval_seconds("1 hour") == 3600.0
-    assert _interval_seconds("500 microseconds") == pytest.approx(5e-4)
-    with pytest.raises(ValueError, match="unparseable"):
-        _interval_seconds("10 fortnights")
-    with pytest.raises(ValueError, match="unparseable"):
-        _interval_seconds("")
-    # Abbreviations Spark's trigger itself REJECTS must raise here too
-    # (Trigger.ProcessingTime throws INVALID_INTERVAL_FORMAT on all of
-    # these in PySpark 4.1.2); the old table quietly accepted them —
-    # and parsed '2 m' as milliseconds.
-    for bad in ("200 ms", "30 s", "5 min", "2 m"):
-        with pytest.raises(ValueError, match="unparseable"):
-            _interval_seconds(bad)
-    # derived grace: floor 4s at sub-second triggers, 3x above it
-    assert max(4.0, 3.0 * _interval_seconds("200 milliseconds")) == 4.0
-    assert max(4.0, 3.0 * _interval_seconds("10 seconds")) == 30.0
-
-
-def test_grace_exceeding_idle_timeout_is_a_loud_config_error(spark, tmp_path):
-    """grace = 3x trigger; if that already exceeds idle_timeout the
-    quiesce wait could only ever end in TimeoutError — reject the
-    configuration up front instead."""
-    src = str(tmp_path / "src")
-    spark.sql(
-        "SELECT CAST(1 AS bigint) event_id, CAST(1 AS bigint) user_id, "
-        "TIMESTAMP '2024-01-01' event_time"
-    ).write.parquet(src)
-    events = (
-        spark.readStream.schema("event_id bigint, user_id bigint, event_time timestamp")
-        .parquet(src)
-    )
-    with pytest.raises(ValueError, match="idle_timeout"):
-        run_sessions_to_cdc(
-            spark, events, str(tmp_path / "t"), str(tmp_path / "c"),
-            gap=GAP, watermark=WM,
-            processing_time="10 minutes", idle_timeout=60.0,
-        )
-
-
-def test_default_idle_timeout_scales_with_trigger():
-    """The DEFAULT idle_timeout derives from the trigger (max(120,
-    12×interval)) so coarse triggers don't trip the grace guard out of
-    the box; only an EXPLICIT too-small value raises (previous test)."""
-    from adi_226_datawarehouse_project_spark.pipelines.streaming_pipeline import (
-        _default_idle_timeout,
-        _interval_seconds,
-    )
-
-    for trigger, want in [
-        ("200 milliseconds", 120.0),  # floor holds at fine triggers
-        ("10 seconds", 120.0),
-        ("1 minute", 720.0),  # 12× scales past the floor
-        ("10 minutes", 7200.0),
-    ]:
-        derived = _default_idle_timeout(trigger)
-        grace = max(4.0, 3.0 * _interval_seconds(trigger))
-        assert derived == want
-        assert grace < derived  # the guard can never fire on defaults
 
 
 def test_empty_batches_do_not_publish_generations(spark, tmp_path):
@@ -286,9 +171,7 @@ def test_empty_batches_do_not_publish_generations(spark, tmp_path):
         .parquet(src)
     )
     target = str(tmp_path / "t")
-    run_sessions_to_cdc(
-        spark, events, target, str(tmp_path / "c"), gap=GAP, watermark=WM
-    )
+    run_sessions_to_cdc(spark, events, target, str(tmp_path / "c"))
     published = (
         [d for d in os.listdir(target) if d.startswith("gen-")]
         if os.path.isdir(target)
